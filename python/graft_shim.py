@@ -564,6 +564,7 @@ def connect(app_name="graft-python", root=None):
              .appName(app_name)
              .config("spark.driver.extraClassPath", classes)
              .config("spark.executor.extraClassPath", classes)
+             .config("spark.sql.extensions", "graft.plans.GraftExtensions")
              .config("spark.sql.shuffle.partitions", "4")
              .config("spark.sql.session.timeZone", "UTC")
              .config("spark.ui.enabled", "false")

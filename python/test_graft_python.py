@@ -305,6 +305,14 @@ class GraftPythonSurface(unittest.TestCase):
         self.assertEqual(rows, [(1, 10), (2, 25), (3, 35)])
         self.conn.execute("DROP TABLE pyt")
 
+    def test_connect_installs_native_functions(self):
+        # graft's operators call the native graft_* expressions only, so
+        # connect() must install GraftExtensions on the session
+        rows = self.conn.sql(
+            "SELECT graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d"
+        ).fetchall()
+        self.assertEqual(rows, [(11.0,)])
+
     def test_incremental_matview_through_cursor(self):
         cur = self.conn.cursor()
         cur.execute("CREATE TABLE imv_base (lang STRING, n BIGINT)")

@@ -134,20 +134,6 @@ object TextFunctions {
       .otherwise(array(concat_ws(" ", t)))
   }
 
-  /** k-element MinHash signature over a shingle array column. Hash family i
-    * is xxhash64(shingle, i) — seeding by a second hashed column gives k
-    * independent families without overflow-prone affine transforms (ANSI).
-    *
-    * Built as ONE nested transform so the (expensive) shingle array is
-    * evaluated once per row; a naive `array(k × array_min(...))` inlines
-    * the shingle expression k times, falls out of whole-stage codegen on
-    * tree size, and runs ~50× slower. */
-  def minHash(shinglesCol: Column, k: Int): Column =
-    bind(shinglesCol) { sh =>
-      transform(sequence(lit(0), lit(k - 1)),
-        i => array_min(transform(sh, s => xxhash64(s, i))))
-    }
-
   /** Oracle-reproducible MinHash: each DISTINCT shingle is md5-hashed
     * ONCE ([[md5Bits60]], reduced mod P = 2^31-1 — md5 being the one
     * hash both engines share, the d7 SimHash precedent), and component
@@ -159,10 +145,10 @@ object TextFunctions {
     * The r15 spelling hashed every shingle k TIMES (md5(i||':'||s)),
     * which made the d29 index build md5-bound: k=16 meant 16 md5 calls
     * per shingle where one suffices (VERDICT r16 next-round #7). Use
-    * the xxhash64 [[minHash]] when the consumer doesn't need
-    * cross-engine replay. Shingles are de-duplicated inside the bind
-    * so the min runs over the set, matching the Jaccard estimator's
-    * definition. */
+    * the xxhash64 `graft_minhash` ([[graft.plans.MinHashSig]]) when the
+    * consumer doesn't need cross-engine replay. Shingles are
+    * de-duplicated inside the bind so the min runs over the set,
+    * matching the Jaccard estimator's definition. */
   def md5MinHash(shinglesCol: Column, k: Int): Column = {
     val P = 2147483647L
     bind(transform(array_distinct(shinglesCol),

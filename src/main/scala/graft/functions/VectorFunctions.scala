@@ -4,49 +4,22 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Dense-vector column functions over `ArrayType(FloatType/DoubleType)`
-  * embedding columns. Pure Spark SQL higher-order functions — codegen'd,
-  * no UDFs, no shuffle. Elements are cast to double before arithmetic so
-  * results are bit-identical to any IEEE-754 engine folding left-to-right.
+  * embedding columns. Each one is graft's native codegen'd expression
+  * ([[graft.plans.DotProduct]], [[graft.plans.CosineSimilarity]]), so the
+  * session must have [[graft.plans.GraftExtensions]] installed. Elements
+  * are cast to double and summed left-to-right, so results are
+  * bit-identical to any IEEE-754 engine folding the same way.
   */
 object VectorFunctions {
 
-  /** True when the session has graft's native codegen'd vector expressions
-    * (registered by [[graft.plans.GraftExtensions]]). */
-  def nativeAvailable(spark: org.apache.spark.sql.SparkSession): Boolean =
-    spark.catalog.functionExists("graft_cosine")
-
-  /** Cosine via the native expression when available (≈10× on hot ANN
-    * paths), falling back to the HOF spelling. Both produce bit-identical
-    * doubles — same fold order — so plans can switch freely. */
-  def cosineAuto(spark: org.apache.spark.sql.SparkSession)(
-      a: Column, b: Column): Column =
-    if (nativeAvailable(spark)) call_function("graft_cosine", a, b)
-    else cosine(a, b)
-
-  def dotAuto(spark: org.apache.spark.sql.SparkSession)(
-      a: Column, b: Column): Column =
-    if (nativeAvailable(spark)) call_function("graft_dot", a, b)
-    else dot(a, b)
-
-  /** Dot product of two equal-length array columns (sequential fold). */
-  def dot(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
+  /** Dot product of two equal-length array columns (sequential fold);
+    * NULL on a length mismatch or a NULL element. */
+  def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   def cosine(a: Column, b: Column): Column =
-    dot(a, b) / (norm(a) * norm(b))
-
-  /** Squared L2 distance. */
-  def l2sq(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => {
-        val d = x.cast("double") - y.cast("double")
-        d * d
-      }),
-      lit(0.0), (acc, x) => acc + x)
+    call_function("graft_cosine", a, b)
 
   /** Deterministic random hyperplanes for sign-LSH, seeded so plans are
     * reproducible across runs and executors (values live in the plan as

@@ -48,11 +48,8 @@ object Dedup {
     // the text column rides under an internal alias so a caller whose
     // text column is literally named "id" (with a different idCol)
     // cannot make the projection ambiguous (ADVICE r19)
-    val sigExpr =
-      if (df.sparkSession.catalog.functionExists("graft_minhash"))
-        call_function("graft_minhash",
-          wordShingles(col("__txt"), shingleSize), lit(k))
-      else minHash(wordShingles(col("__txt"), shingleSize), k)
+    val sigExpr = call_function("graft_minhash",
+      wordShingles(col("__txt"), shingleSize), lit(k))
     // Two exchanges on purpose: the FIRST spreads the raw (id, text)
     // pair so the shingle+minhash work (k hashes per shingle — the
     // operator's dominant CPU) runs at full parallelism instead of fused
@@ -394,7 +391,7 @@ object Dedup {
     val b = bucketed.select(col("bucket"), col("id").as("b_id"), col("v").as("b_v"))
     a.join(b, Seq("bucket"))
       .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"), cosineAuto(df.sparkSession)(col("a_v"), col("b_v")).as("sim"))
+      .select(col("a_id"), col("b_id"), cosine(col("a_v"), col("b_v")).as("sim"))
       .filter(col("sim") >= threshold)
   }
 
@@ -582,7 +579,6 @@ object Dedup {
   def semDedup(corpus: DataFrame, centroids: Seq[Seq[Double]],
                threshold: Double, idCol: String = "vec_id",
                maxLiteralCells: Int = 128): DataFrame = {
-    val spark = corpus.sparkSession
     val assigned = graft.operators.Similarity
       .assignCells(corpus, centroids, maxLiteralCells)
       .select(col("cell"), col("n_id").as(idCol), col("n_emb").as("emb"))
@@ -593,7 +589,7 @@ object Dedup {
     val dominated = a.join(b, Seq("cell"))
       .filter(col("b_id") < col("a_id"))
       .filter(graft.functions.VectorFunctions
-        .cosineAuto(spark)(col("a_emb"), col("b_emb")) >= threshold)
+        .cosine(col("a_emb"), col("b_emb")) >= threshold)
       .select(col("a_id").as(idCol)).distinct()
     assigned.select(col(idCol), col("cell"))
       .join(dominated.withColumn("_drop", lit(true)), Seq(idCol), "left")

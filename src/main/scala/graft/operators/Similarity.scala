@@ -17,19 +17,14 @@ import graft.functions.VectorFunctions._
 object Similarity {
 
   /** Ranked per-query top-k over a (q_id, n_id, sim) candidate frame.
-    * With graft's extensions installed, candidates are pruned by the
-    * custom heap-based [[graft.plans.TopKPerKey]] operator (O(n log k),
-    * no sort/spill) before the tiny k-row ranking window; otherwise the
-    * plain window spelling runs. Output is identical either way. */
+    * Candidates are pruned by the custom heap-based
+    * [[graft.plans.TopKPerKey]] operator (O(n log k), no sort/spill)
+    * before the tiny k-row ranking window. */
   private def rankTopK(df: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("sim").desc, col("n_id").asc)
-    val pruned =
-      if (nativeAvailable(df.sparkSession))
-        graft.plans.TopKPerKey.topK(df, Seq("q_id"),
-          Seq("sim" -> false, "n_id" -> true), k)
-      else df
-    pruned
+    graft.plans.TopKPerKey.topK(df, Seq("q_id"),
+        Seq("sim" -> false, "n_id" -> true), k)
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
       .select(col("q_id"), col("rnk"), col("n_id"), col("sim"))
@@ -43,8 +38,7 @@ object Similarity {
     rankTopK(
       broadcast(q).crossJoin(c)
         .filter(col("q_id") =!= col("n_id"))
-        .withColumn("sim",
-          cosineAuto(corpus.sparkSession)(col("q_emb"), col("n_emb"))),
+        .withColumn("sim", cosine(col("q_emb"), col("n_emb"))),
       k)
   }
 
@@ -66,8 +60,7 @@ object Similarity {
       broadcast(q).crossJoin(c)
         .filter(col("q_id") =!= col("n_id") &&
           col("q_lab") =!= col("n_lab"))
-        .withColumn("sim",
-          cosineAuto(corpus.sparkSession)(col("q_emb"), col("n_emb"))),
+        .withColumn("sim", cosine(col("q_emb"), col("n_emb"))),
       k)
   }
 
@@ -98,8 +91,7 @@ object Similarity {
     rankTopK(
       broadcast(q).join(c, Seq("bucket"))
         .filter(col("q_id") =!= col("n_id"))
-        .withColumn("sim",
-          cosineAuto(corpus.sparkSession)(col("q_emb"), col("n_emb"))),
+        .withColumn("sim", cosine(col("q_emb"), col("n_emb"))),
       k)
   }
 
@@ -116,15 +108,13 @@ object Similarity {
   def ivfKnn(corpus: DataFrame, queries: DataFrame, k: Int,
              nCells: Int = 16, nProbe: Int = 4,
              maxLiteralCells: Int = 128): DataFrame = {
-    val spark = corpus.sparkSession
     val cents = centroidStats(corpus, nCells)
     val (assigned, probes) = cellAssignments(
       corpus, queries, cents, nProbe, maxLiteralCells)
     rankTopK(
       broadcast(probes).join(assigned, Seq("cell"))
         .filter(col("q_id") =!= col("n_id"))
-        .withColumn("sim",
-          cosineAuto(spark)(col("q_emb"), col("n_emb"))),
+        .withColumn("sim", cosine(col("q_emb"), col("n_emb"))),
       k)
   }
 
@@ -166,18 +156,11 @@ object Similarity {
         (cid, emb, emb.foldLeft(0.0)((s, v) => s + v * v))
       }
 
-  /** The IVF core shared by the one-shot [[ivfKnn]] and the persisted
-    * index ([[buildIvfIndex]]/[[queryIvfIndex]]): corpus → (cell, n_id,
-    * n_emb) assignment and queries → (cell, q_id, q_emb) probes.
-    * Per-centroid score is |c|² − 2·a·c (argmin-equivalent to L2 since
-    * |a|² is constant per row). Two physical strategies, identical
-    * output. */
   /** array of (d, c_id) structs scoring `vec` against every literal
     * centroid — d = |c|² − 2·a·c (argmin-equivalent to L2 since |a|² is
-    * constant per row), struct ordering (d asc, c_id asc). SHARED by
-    * cellAssignments' literal path and [[quantizationError]] so the score
-    * formula and tie-break can never silently diverge. */
-  private def scoredLiteral(spark: org.apache.spark.sql.SparkSession,
+    * constant per row), struct ordering (d asc, c_id asc): the query-side
+    * probe ranking of cellAssignments' literal path. */
+  private def scoredLiteral(
       cents: Seq[(Long, Seq[Double], Double)])(vec: Column): Column =
     array(cents.map { case (cid, emb, normSq) =>
       // ONE ArrayType literal node per centroid, not a CreateArray of
@@ -185,37 +168,36 @@ object Similarity {
       // would constant-fold to, but the analyzer/optimizer never walks
       // the dim-wide trees — nCells·dim expression nodes → nCells
       val cLit = typedLit(emb)
-      struct((lit(normSq) - lit(2.0) * dotAuto(spark)(vec, cLit))
+      struct((lit(normSq) - lit(2.0) * dot(vec, cLit))
         .as("d"), lit(cid).as("c_id"))
     }: _*)
 
-  /** struct<d, c_id> of the winning centroid for `vec` — the native
-    * single-node [[graft.plans.ArgminScore]] when the session has graft's
-    * extensions (r20: the declarative O(nCells·dim)-node spelling made
-    * Janino codegen compilation, not row work, the e-family's measured
-    * wall), else `array_min` over [[scoredLiteral]]. Outputs are
-    * bit-identical (spec-pinned in NativeExprSpec), so plans can switch
-    * freely — the graft_dot/cosineAuto convention. */
-  private def argminAuto(spark: org.apache.spark.sql.SparkSession,
+  /** struct<d, c_id> of the winning centroid for `vec`: the single-node
+    * native [[graft.plans.ArgminScore]] over the literal centroids, same
+    * score and (d asc, c_id asc) order as `array_min` over
+    * [[scoredLiteral]] (spec-pinned bit-identical in NativeExprSpec). */
+  private def argmin(
       cents: Seq[(Long, Seq[Double], Double)])(vec: Column): Column =
-    if (spark.catalog.functionExists("graft_argmin"))
-      call_function("graft_argmin", vec, lit(0), lit(true),
-        typedLit(cents.map(_._2)), typedLit(cents.map(_._3)),
-        typedLit(cents.map(_._1)))
-    else array_min(scoredLiteral(spark, cents)(vec))
+    call_function("graft_argmin", vec, lit(0), lit(true),
+      typedLit(cents.map(_._2)), typedLit(cents.map(_._3)),
+      typedLit(cents.map(_._1)))
 
+  /** The IVF core shared by the one-shot [[ivfKnn]] and the persisted
+    * index ([[buildIvfIndex]]/[[queryIvfIndex]]): corpus → (cell, n_id,
+    * n_emb) assignment and queries → (cell, q_id, q_emb) probes.
+    * Per-centroid score is |c|² − 2·a·c (argmin-equivalent to L2 since
+    * |a|² is constant per row). Two physical strategies, identical
+    * output. */
   private def cellAssignments(corpus: DataFrame, queries: DataFrame,
       cents: Seq[(Long, Seq[Double], Double)], nProbe: Int,
       maxLiteralCells: Int): (DataFrame, DataFrame) = {
     val spark = corpus.sparkSession
       if (cents.length <= maxLiteralCells) {
-        // Literal-tree argmin: a NARROW projection, zero shuffle, fully
-        // codegen'd. The tree is O(nCells·dim) expression nodes, so it is
-        // capped at maxLiteralCells — beyond that Janino's method-size
-        // limit forces interpreted fallback and compile time blows up.
-        // array of (score, c_id) structs; struct ordering = (score asc,
-        // c_id asc), matching the former window's ORDER BY d ASC, c_id ASC
-        def scored(vec: Column): Column = scoredLiteral(spark, cents)(vec)
+        // Literal argmin: a NARROW projection, zero shuffle, fully
+        // codegen'd. The corpus side is one graft_argmin node; the
+        // query-side probe ranking is an array of nCells scored structs
+        // (scoredLiteral, struct ordering = (d asc, c_id asc)), and that
+        // array's size is what maxLiteralCells caps.
         // r20: a Spread.ensure barrier under this argmin was tried and
         // REVERTED — with the native graft_argmin the per-row work is no
         // longer heavy enough to buy back its exchange (focused 8-round
@@ -225,13 +207,13 @@ object Similarity {
         // its spread: 3x the per-row work and a band that excludes 1.0
         // the other way (e15 0.46x).
         (corpus.select(
-          argminAuto(spark, cents)(col("embedding"))
+          argmin(cents)(col("embedding"))
             .getField("c_id").as("cell"),
           col("vec_id").as("n_id"), col("embedding").as("n_emb")),
          queries.select(col("vec_id").as("q_id"),
             col("embedding").as("q_emb"),
-            explode(slice(array_sort(scored(col("embedding"))), 1, nProbe))
-              .as("p"))
+            explode(slice(array_sort(
+              scoredLiteral(cents)(col("embedding"))), 1, nProbe)).as("p"))
           .select(col("p.c_id").as("cell"), col("q_id"), col("q_emb")))
       } else {
         // Broadcast-join + min-struct argmin: centroids ride as a
@@ -246,7 +228,7 @@ object Similarity {
         val centsDf = broadcast(
           cents.toDF("c_id", "c_emb", "c_norm").repartition(1))
         def sc(vec: Column): Column =
-          struct((col("c_norm") - lit(2.0) * dotAuto(spark)(vec, col("c_emb")))
+          struct((col("c_norm") - lit(2.0) * dot(vec, col("c_emb")))
             .as("d"), col("c_id"))
         (corpus.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"))
           .crossJoin(centsDf)
@@ -285,10 +267,9 @@ object Similarity {
     val emptyQ = corpus.limit(0)
     val (assigned, _) =
       cellAssignments(corpus, emptyQ, cents, 1, maxLiteralCells)
-    // cluster by target directory (guide §6/§8: the assignment runs
-    // spread across barrier tasks since r20; this single payload
+    // cluster by target directory (guide §6/§8): this single payload
     // exchange moves each vector once, into the cell layout it serves
-    // from, instead of one file per (cell, task) pair)
+    // from, instead of one file per (cell, task) pair
     assigned.repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$path/cells")
@@ -342,8 +323,7 @@ object Similarity {
     rankTopK(
       broadcast(probes).join(assigned, Seq("cell"))
         .filter(col("q_id") =!= col("n_id"))
-        .withColumn("sim",
-          cosineAuto(spark)(col("q_emb"), col("n_emb"))),
+        .withColumn("sim", cosine(col("q_emb"), col("n_emb"))),
       k)
   }
 
@@ -365,7 +345,6 @@ object Similarity {
   def lloydStep(corpus: DataFrame, k: Int = 8,
                 maxLiteralCells: Int = 128,
                 centroids: Option[Seq[Seq[Double]]] = None): DataFrame = {
-    val spark = corpus.sparkSession
     val cents = centroids match {
       case Some(cs) => cs.zipWithIndex.map { case (emb, i) =>
         (i.toLong, emb, emb.foldLeft(0.0)((s, v) => s + v * v)) }
@@ -433,12 +412,12 @@ object Similarity {
     * per-cell inertia is order-independent and hash-exact across engines.
     *
     * Scale shape: assignment shares cellAssignments' two strategies — the
-    * NARROW literal-tree argmin up to `maxLiteralCells` (zero shuffle
-    * between scan and assignment; beyond that Janino's method-size limit
-    * forces interpreted fallback), then the broadcast-join + min-struct
-    * argmin (centroids as broadcast DATA, one map-side-combined exchange)
-    * for the thousands-of-centroids regime a 100 TB corpus needs. The
-    * final rollup is the O(k)-row per-cell aggregate either way.
+    * NARROW single-node literal argmin up to `maxLiteralCells` (zero
+    * shuffle between scan and assignment), then the broadcast-join +
+    * min-struct argmin (centroids as broadcast DATA, one map-side-combined
+    * exchange) for the thousands-of-centroids regime a 100 TB corpus
+    * needs. The final rollup is the O(k)-row per-cell aggregate either
+    * way.
     *
     * EVERY centroid appears in the output, including empty cells as
     * (cell, 0, 0.000000) — a convergence monitor must distinguish an
@@ -453,13 +432,13 @@ object Similarity {
     import spark.implicits._
     val cents = centroids.zipWithIndex.map { case (emb, i) =>
       (i.toLong, emb, emb.foldLeft(0.0)((s, v) => s + v * v)) }
-    val anorm = dotAuto(spark)(col("embedding"), col("embedding"))
+    val anorm = dot(col("embedding"), col("embedding"))
     // (cell, err) per corpus row; b = winning (d, c_id) struct — ties on
     // d break toward the lower cell id in both strategies.
     val perRow =
       if (cents.length <= maxLiteralCells)
         corpus
-          .select(argminAuto(spark, cents)(col("embedding"))
+          .select(argmin(cents)(col("embedding"))
             .as("b"), anorm.as("anorm"))
       else {
         // the cellAssignments large-k shape: centroids ride as broadcast
@@ -475,7 +454,7 @@ object Similarity {
           .groupBy(col("rid"))
           .agg(min(struct(
               (col("c_norm") - lit(2.0) *
-                dotAuto(spark)(col("embedding"), col("c_emb"))).as("d"),
+                dot(col("embedding"), col("c_emb"))).as("d"),
               col("c_id"))).as("b"),
             first(col("anorm")).as("anorm"))
       }
@@ -513,13 +492,12 @@ object Similarity {
     * be hashed by the driver's compare harness), M rows per vector. */
   def pqCodes(corpus: DataFrame,
               codebooks: Seq[Seq[Seq[Double]]]): DataFrame = {
-    val spark = corpus.sparkSession
     // spread the narrow projection below the per-row M·k·subDim argmin
-    // folds when the source is under-split (see cellAssignments, r20)
+    // folds when the source is under-split (see ivfPqCodesWithCell, r20)
     graft.Spread.ensure(pqChecked(corpus, codebooks)
         .select(col("vec_id"), col("embedding")), col("vec_id"))
       .select(col("vec_id"),
-        explode(pqCodeArray(spark, codebooks)).as("mc"))
+        explode(pqCodeArray(codebooks)).as("mc"))
       .select(col("vec_id"), col("mc").getField("m").as("m"),
         col("mc").getField("code").as("code"))
   }
@@ -548,33 +526,17 @@ object Similarity {
     * `embedding` — the PQ encode as ONE narrow expression column, shared
     * by [[pqCodes]] and the fused IVF-ADC projection ([[ivfAdcTopK]]) so
     * the assignment fold can never silently diverge between them. */
-  private def pqCodeArray(spark: org.apache.spark.sql.SparkSession,
-                          codebooks: Seq[Seq[Seq[Double]]]): Column = {
+  private def pqCodeArray(codebooks: Seq[Seq[Seq[Double]]]): Column = {
     val subDim = codebooks.head.head.length
-    val native = spark.catalog.functionExists("graft_argmin")
     array(codebooks.zipWithIndex.map { case (cb, m) =>
-      val code =
-        if (native)
-          // per-subspace native argmin over the codeword slice (see
-          // argminAuto; strict=false pins the slice length semantics:
-          // null only when fewer than subDim elements remain)
-          call_function("graft_argmin", col("embedding"),
-            lit(m * subDim), lit(false), typedLit(cb),
-            typedLit(cb.map(_.foldLeft(0.0)((s, v) => s + v * v))),
-            typedLit(cb.indices.map(_.toLong)))
-            .getField("c_id")
-        else {
-          val sub = slice(col("embedding"), m * subDim + 1, subDim)
-          val scored = array(cb.zipWithIndex.map { case (cw, j) =>
-            val normSq = cw.foldLeft(0.0)((s, v) => s + v * v)
-            struct(
-              (lit(normSq) - lit(2.0) *
-                // one literal node per codeword (see scoredLiteral)
-                dotAuto(spark)(sub, typedLit(cw))).as("d"),
-              lit(j.toLong).as("j"))
-          }: _*)
-          array_min(scored).getField("j")
-        }
+      // per-subspace native argmin over the codeword slice (see argmin;
+      // strict=false pins the slice length semantics: null only when
+      // fewer than subDim elements remain)
+      val code = call_function("graft_argmin", col("embedding"),
+        lit(m * subDim), lit(false), typedLit(cb),
+        typedLit(cb.map(_.foldLeft(0.0)((s, v) => s + v * v))),
+        typedLit(cb.indices.map(_.toLong)))
+        .getField("c_id")
       struct(lit(m.toLong).as("m"), code.as("code"))
     }: _*)
   }
@@ -823,7 +785,6 @@ object Similarity {
   private def ivfPqCodesWithCell(corpus: DataFrame,
       cents: Seq[(Long, Seq[Double], Double)],
       codebooks: Seq[Seq[Seq[Double]]]): DataFrame = {
-    val spark = corpus.sparkSession
     // the round-20 §2.5 rescue: cell argmin + PQ encode are the corpus's
     // dominant per-row CPU; spread the narrow (id, embedding) projection
     // under them when the source is under-split. The projection stays
@@ -832,9 +793,9 @@ object Similarity {
     graft.Spread.ensure(pqChecked(corpus, codebooks)
         .select(col("vec_id"), col("embedding")), col("vec_id"))
       .select(
-        argminAuto(spark, cents)(col("embedding"))
+        argmin(cents)(col("embedding"))
           .getField("c_id").as("cell"),
-        col("vec_id"), explode(pqCodeArray(spark, codebooks)).as("mc"))
+        col("vec_id"), explode(pqCodeArray(codebooks)).as("mc"))
       .select(col("cell"), col("vec_id"), col("mc").getField("m").as("m"),
         col("mc").getField("code").as("code"))
   }

@@ -6,13 +6,16 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Session extension wiring (the Catalyst-sanctioned way to add native
   * expressions — SURVEY §4 "registered via SparkSessionExtensions").
-  * Installed by Verify/Bench/test sessions with
-  * `.withExtensions(new GraftExtensions)`; any downstream user gets the
-  * functions by adding `spark.sql.extensions=graft.plans.GraftExtensions`.
+  *
+  * REQUIRED by every session that runs graft operators or queries: the
+  * native expressions and the TopKPerKey planner strategy are their only
+  * spelling, so without the extension analysis fails on an unresolved
+  * `graft_*` routine. Verify/Bench/test sessions install it with
+  * `.withExtensions(new GraftExtensions)`, the Python `connect()` and any
+  * other session with `spark.sql.extensions=graft.plans.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule(_ => RewriteVectorFolds)
     ext.injectPlannerStrategy(_ => new TopKStrategy)
     ext.injectFunction((
       new FunctionIdentifier("graft_dot"),

@@ -6,7 +6,9 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Native vector-similarity expressions with whole-stage codegen.
+/** Native vector-similarity expressions with whole-stage codegen: the
+  * only spelling of graft's vector kernels (the declarative folds live on
+  * in NativeExprSpec as the bit-identity oracle).
   *
   * The declarative spelling — `aggregate(zip_with(a, b, _*_), 0d, _+_)` —
   * is correct but interpreted: higher-order functions allocate a lambda
@@ -53,10 +55,10 @@ abstract class VectorBinaryExpression extends BinaryExpression
     case _ => a.getDouble(i)
   }
 
-  /** Null semantics MUST match the declarative fold the optimizer rule
-    * replaces: zip_with pads length mismatches with NULL and a NULL
-    * element nullifies the product and the running sum — so mismatched
-    * lengths or any NULL element yield NULL, never a partial sum. */
+  /** Null semantics MUST match the declarative fold: zip_with pads length
+    * mismatches with NULL and a NULL element nullifies the product and
+    * the running sum — so mismatched lengths or any NULL element yield
+    * NULL, never a partial sum. */
   protected def elementsMayBeNull: Boolean =
     Seq(left, right).exists(_.dataType.asInstanceOf[ArrayType].containsNull)
 
@@ -165,6 +167,32 @@ case class ArgminScore(child: Expression, start: Int, strict: Boolean,
   require(cands.nonEmpty && cands.length == norms.length &&
     cands.length == ids.length && cands.forall(_.length == cands.head.length),
     "graft_argmin needs aligned, same-dimension candidate metadata")
+  // the length gates below compare n with subDim only, so they stay in
+  // bounds only for a non-negative start, and for start = 0 when strict
+  require(start >= 0, s"graft_argmin start must be >= 0, got $start")
+  require(!strict || start == 0,
+    s"graft_argmin start must be 0 when strict is true, got $start")
+
+  // content equality over the candidate arrays (a case class compares
+  // Array fields by reference), so two identical calls are semanticEquals
+  override def equals(o: Any): Boolean = o match {
+    case that: ArgminScore =>
+      child == that.child && start == that.start && strict == that.strict &&
+        java.util.Arrays.deepEquals(
+          cands.asInstanceOf[Array[AnyRef]],
+          that.cands.asInstanceOf[Array[AnyRef]]) &&
+        java.util.Arrays.equals(norms, that.norms) &&
+        java.util.Arrays.equals(ids, that.ids)
+    case _ => false
+  }
+  override def hashCode(): Int = java.util.Objects.hash(child,
+    Int.box(start), Boolean.box(strict),
+    Int.box(java.util.Arrays.deepHashCode(cands.asInstanceOf[Array[AnyRef]])),
+    Int.box(java.util.Arrays.hashCode(norms)),
+    Int.box(java.util.Arrays.hashCode(ids)))
+  override protected def stringArgs: Iterator[Any] = Iterator(child, start,
+    strict, s"${cands.length}x${cands.head.length} cands",
+    ids.mkString("ids[", ",", "]"))
 
   override def prettyName: String = "graft_argmin"
   override def nullIntolerant: Boolean = true

@@ -267,12 +267,8 @@ object CoreQueries {
         .select(col("l_returnflag"), col("l_orderkey"), col("l_linenumber"))
       // two-phase heap prune (custom operator) replaces the full-partition
       // window sort; the ranking window then runs over ≤3 rows per key
-      val pruned =
-        if (s.catalog.functionExists("graft_cosine"))
-          graft.plans.TopKPerKey.topK(src, Seq("l_returnflag"),
-            Seq("l_orderkey" -> true, "l_linenumber" -> true), 3)
-        else src
-      pruned
+      graft.plans.TopKPerKey.topK(src, Seq("l_returnflag"),
+          Seq("l_orderkey" -> true, "l_linenumber" -> true), 3)
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 3)
         .select(col("l_returnflag"), col("rn"), col("l_orderkey"),

@@ -325,8 +325,7 @@ object VectorQueries {
         .join(broadcast(qemb), Seq("q_id"))
         .join(e.select(col("vec_id"), col("embedding").as("d_emb")),
           Seq("vec_id"))
-        .withColumn("cos", graft.functions.VectorFunctions
-          .cosineAuto(s)(col("q_emb"), col("d_emb")))
+        .withColumn("cos", cosine(col("q_emb"), col("d_emb")))
       val w = Window.partitionBy(col("q_id"))
         .orderBy(col("cos").desc, col("vec_id"))
       scored.withColumn("rnk", row_number().over(w))
@@ -368,8 +367,7 @@ object VectorQueries {
           Seq("qv"))
         .join(e.select(col("vec_id").as("doc_id"),
           col("embedding").as("d_emb")), Seq("doc_id"))
-        .withColumn("cos", graft.functions.VectorFunctions
-          .cosineAuto(s)(col("q_emb"), col("d_emb")))
+        .withColumn("cos", cosine(col("q_emb"), col("d_emb")))
       val w = Window.partitionBy(col("q_id"))
         .orderBy(col("cos").desc, col("doc_id"))
       scored.withColumn("rnk", row_number().over(w))

@@ -65,14 +65,13 @@ class ReviewRegressionSpec extends SparkSpec {
   }
 
   test("native vector exprs match HOF semantics on null/mismatched arrays") {
-    import graft.functions.VectorFunctions
     val df = Seq(
       (Array[java.lang.Float](1.0f, 2.0f), Array[java.lang.Float](1.0f)),
       (Array[java.lang.Float](1.0f, null), Array[java.lang.Float](1.0f, 2.0f)))
       .toDF("a", "b")
     val rows = df.select(
       call_function("graft_dot", col("a"), col("b")).as("native"),
-      VectorFunctions.dot(col("a"), col("b")).as("hof")).collect()
+      Declarative.dot(col("a"), col("b")).as("hof")).collect()
     rows.foreach { r =>
       assert(r.isNullAt(0) && r.isNullAt(1),
         s"both must be NULL, got $r")
