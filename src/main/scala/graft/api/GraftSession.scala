@@ -2,6 +2,7 @@ package graft.api
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, count, hll_sketch_agg, hll_union_agg, lit, max, min, monotonically_increasing_id, raise_error, row_number, sum, when}
 import org.apache.spark.sql.expressions.Window
@@ -172,6 +173,7 @@ class GraftSession(val spark: SparkSession, val root: String) {
     * same name — dependent views must survive the swap. */
   private def dropTable(name: String, dropDependents: Boolean): Unit = {
     deleteRecursively(tableDir(name))
+    forgetBatches(name, Set.empty)
     tables.remove(name)
     // a re-created table must not inherit the dead table's constraints,
     // rename history, or stored (mat)view body — and OTHER tables' FKs
@@ -441,7 +443,9 @@ class GraftSession(val spark: SparkSession, val root: String) {
     * Every `batch_*` dir is one union arm in [[table]]'s plan and one
     * entry in every pruned-DML tag scan, so unbounded growth degrades
     * PLANNING linearly even when the data is tiny — a pathological insert
-    * loop must not be able to build a 10^4-arm plan. ≤ 0 disables. */
+    * loop must not be able to build a 10^4-arm plan. An arm costs planning
+    * only, not a job: each batch's schema is inferred once per session
+    * ([[readBatch]]). ≤ 0 disables. */
   var autoCompactThreshold: Int = 32
 
   def insert(name: String, df: DataFrame): Unit = writeLock(name).synchronized {
@@ -1012,6 +1016,7 @@ class GraftSession(val spark: SparkSession, val root: String) {
         s"${referencing.mkString(", ")} — use DELETE (fires FK actions) " +
         "or drop the referencing constraint first")
     listBatches(name).foreach(deleteRecursively)
+    forgetBatches(name, Set.empty)
     bumpGeneration(name)
     persistMeta(name)
   }
@@ -1248,7 +1253,9 @@ class GraftSession(val spark: SparkSession, val root: String) {
   // ---------------------------------------------------------------- read
 
   /** Resolved table: every ingest batch read with its own physical schema,
-    * cast + null-padded to the union schema, tombstones dropped. */
+    * cast + null-padded to the union schema, tombstones dropped. Each
+    * batch's physical schema is inferred once per session (see
+    * [[readBatch]]), so re-reading an unchanged table runs no Spark job. */
   def table(name: String): DataFrame = {
     val st = state(name)
     val visible = st.schema.fields.filterNot(f => st.tombstones(f.name))
@@ -1264,13 +1271,16 @@ class GraftSession(val spark: SparkSession, val root: String) {
   /** Each on-disk batch directory paired with its frame normalized to the
     * current visible schema (per-generation rename resolution, cast,
     * null-padding) — the per-batch half of [[table]], exposed so DML can
-    * address batches individually. */
+    * address batches individually. Every call lists the table, so it also
+    * evicts the memoized schemas of this table's dirs that are gone. */
   private def normalizedBatches(name: String): Seq[(Path, DataFrame)] = {
     val st = state(name)
     val rename = renames.getOrElse(name, Map.empty)
     val visible = st.schema.fields.filterNot(f => st.tombstones(f.name))
-    listBatches(name).map { b =>
-      val raw = spark.read.parquet(b.toString)
+    val listed = listBatches(name)
+    forgetBatches(name, listed.toSet)
+    listed.map { b =>
+      val raw = readBatch(b)
       val batchGen = b.getFileName.toString.stripPrefix("batch_").toLong
       // physical names that, IN THIS BATCH's generation, belong to a
       // renamed column — a re-added column with the old name must not
@@ -1291,6 +1301,45 @@ class GraftSession(val spark: SparkSession, val root: String) {
       b -> raw.select(cols.toSeq: _*)
     }
   }
+
+  /** Physical schema of every batch dir this session has opened, with the
+    * sorted data-file names it was inferred from — the session's stand-in
+    * for the reference's catalog-held column metadata. Batch dirs are
+    * write-once (generation-stamped, staged, moved into place), and
+    * part-file names carry the writing job's UUID, so a dir re-created at
+    * the same path (DROP + CREATE restarts numbering; another session
+    * over the same root) never matches a stale entry. */
+  private val batchSchemas =
+    new java.util.concurrent.ConcurrentHashMap[Path, (Seq[String], StructType)]()
+
+  /** Opens one `batch_*` dir; the only place a batch dir is read. Parquet
+    * schema inference runs a Spark job per call, so it runs on the first
+    * read of a batch only; later reads pass the memoized schema, which
+    * runs none. */
+  private def readBatch(dir: Path): DataFrame = {
+    // the names Spark's file index skips are not data files
+    val files = Using.resource(Files.list(dir))(_.iterator.asScala
+      .map(_.getFileName.toString)
+      .filterNot(n => n.startsWith("_") || n.startsWith("."))
+      .toVector.sorted)
+    batchSchemas.get(dir) match {
+      case (`files`, schema) => spark.read.schema(schema).parquet(dir.toString)
+      case _ =>
+        val df = spark.read.parquet(dir.toString)
+        batchSchemas.put(dir, (files, df.schema))
+        df
+    }
+  }
+
+  /** Drops the memoized schemas of `name`'s batch dirs not in `live`. */
+  private def forgetBatches(name: String, live: Set[Path]): Unit = {
+    val data = dataDir(name)
+    batchSchemas.keySet.removeIf(d => d.getParent == data && !live(d))
+  }
+
+  /** Number of memoized batch schemas (O(live batches) across DML,
+    * compaction, TRUNCATE and DROP). */
+  private[graft] def batchSchemaCount: Int = batchSchemas.size
 
   // ------------------------------------------------------- views/matviews
 
@@ -2527,7 +2576,9 @@ class GraftSession(val spark: SparkSession, val root: String) {
       .filter(p => p.getFileName.toString.startsWith("batch_")).sortBy(_.toString)
 
   /** Monotonic per-table batch-directory counter (survives restarts via
-    * the _generation file; never reset so dir names are never reused). */
+    * the _generation file; never reset while the table exists, so its dir
+    * names are never reused — DROP TABLE deletes it, and a re-created
+    * table starts again at `batch_00000000`). */
   private def bumpGeneration(name: String): Long = {
     val next = peekGeneration(name)
     Files.createDirectories(tableDir(name))

@@ -315,12 +315,11 @@ object Dedup {
     // non-increasing, so an unchanged Σcomponent means fixpoint — and
     // riding it as an observe metric removes the separate one-job-per-
     // round aggregate the loop used to pay. Empty label sets sum to 0.
+    // The wait for the metric is bounded (Materialize.observedLocal).
     def checkpointSummed(l: DataFrame): (DataFrame, java.math.BigDecimal) = {
-      val obs = org.apache.spark.sql.Observation()
-      val ck = l.observe(obs,
-        sum(col("component").cast(DecimalType(38, 0))).as("s"))
-        .localCheckpoint()
-      (ck, obs.get("s") match {
+      val (ck, s) = graft.Materialize.observedLocal(l,
+        sum(col("component").cast(DecimalType(38, 0))))
+      (ck, s match {
         case d: java.math.BigDecimal => d
         case null => java.math.BigDecimal.ZERO
         case other => sys.error(s"observed label sum came back as $other")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{count, lit}
 
 /** WITH RECURSIVE as a driver-side fixpoint loop — the Spark mapping of the
@@ -24,13 +24,13 @@ object RecursiveCte {
     * round-trip per iteration, the dominant cost of driver-cadence-bound
     * fixpoints (x1: 24 rounds over ≤25 rows). Probed on this Spark:
     * observe metrics resolve on the checkpoint action (0 for an empty
-    * frame), and Observation.get blocks until the async listener fires,
-    * so there is no race with the metric delivery. */
+    * frame). The wait for the metric is bounded; past the bound the
+    * count runs as a job on the checkpointed frame
+    * ([[graft.Materialize.observedLocal]]). */
   private[graft] def checkpointCounted(
       df: DataFrame): (DataFrame, Long) = {
-    val obs = Observation()
-    val ck = df.observe(obs, count(lit(1)).as("n")).localCheckpoint()
-    (ck, obs.get("n") match {
+    val (ck, n) = graft.Materialize.observedLocal(df, count(lit(1)))
+    (ck, n match {
       case l: java.lang.Long => l.longValue
       case other => sys.error(s"observed count came back as $other")
     })

@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.util.concurrent.TimeoutException
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampType}
 
@@ -94,6 +97,28 @@ object Materialize {
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
       df.checkpoint(eager)
     else df.localCheckpoint(eager)
+
+  /** Longest wait for an observed metric. Observed metrics reach the
+    * driver through the listener bus after the action's job ends, which
+    * normally takes milliseconds. */
+  private val metricWait: FiniteDuration = 10.seconds
+
+  /** Eager local checkpoint of `df`, with the value of the aggregate `agg`
+    * over its rows observed during the checkpoint's own action (no second
+    * job). The fixpoint loops' per-round convergence gates ride on it. */
+  def observedLocal(df: DataFrame, agg: Column): (DataFrame, Any) = {
+    val obs = Observation()
+    val ck = df.observe(obs, agg.as("v")).localCheckpoint()
+    (ck, awaitMetric(obs, metricWait)(ck.agg(agg).head().get(0)))
+  }
+
+  /** The single metric of `obs`, waited on for at most `bound`; past it,
+    * `fallback` computes the value instead. A metric that never arrives
+    * costs one extra job, never a hung driver. */
+  private[graft] def awaitMetric(obs: Observation, bound: FiniteDuration)(
+      fallback: => Any): Any =
+    try Await.result(obs.future, bound).get(0)
+    catch { case _: TimeoutException => fallback }
 }
 
 /** Table loading helpers shared by SparkEntry / Verify / Bench / tests.

@@ -188,6 +188,67 @@ class GraftSessionSpec extends SparkSpec {
     assert(arms <= 8, s"$arms plan leaves for an 8-batch ceiling")
   }
 
+  test("re-reading an unchanged table infers no batch schema again") {
+    val g = freshSession()
+    g.createTable("rr", StructType(Seq(StructField("k", LongType))))
+    (1L to 3L).foreach(i => g.insert("rr", Seq(i).toDF("k")))
+    g.table("rr").schema // the first read infers each batch's schema
+    // parquet schema inference is one Spark job per batch dir; a re-read
+    // of the same three dirs must reuse the inferred schemas
+    val jobs = jobsFor("rr-reread") { g.table("rr").schema }
+    assert(jobs == 0, s"re-reading 3 unchanged batches ran $jobs jobs")
+    assert(g.table("rr").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
+  }
+
+  test("DROP + CREATE with a new column type serves the new type") {
+    val root = graft.TmpDirs.create("graft")
+    val g = GraftSession(spark, root)
+    val batch0 = java.nio.file.Paths.get(root, "dc", "data", "batch_00000000")
+    g.execute("CREATE TABLE dc (k BIGINT, v BIGINT)")
+    g.execute("INSERT INTO dc VALUES (1, 10)")
+    assert(g.table("dc").schema("v").dataType == LongType)
+    assert(Files.isDirectory(batch0))
+    g.execute("DROP TABLE dc")
+    g.execute("CREATE TABLE dc (k BIGINT, v STRING)")
+    g.execute("INSERT INTO dc VALUES (2, 'twenty')")
+    // the re-created table reuses the dir name batch_00000000
+    assert(Files.isDirectory(batch0))
+    val t = g.table("dc")
+    assert(t.schema("v").dataType == StringType)
+    assert(t.collect().map(r => (r.getLong(0), r.getString(1))).toSeq ==
+      Seq((2L, "twenty")))
+  }
+
+  test("memoized batch schemas track the live batch dirs") {
+    import scala.jdk.CollectionConverters._
+    val root = graft.TmpDirs.create("graft")
+    val g = GraftSession(spark, root)
+    val schema = StructType(Seq(
+      StructField("k", LongType), StructField("v", LongType)))
+    g.createTable("ms", schema)
+    g.createTable("other", schema)
+    (1L to 3L).foreach(i => g.insert("ms", Seq((i, i * 10)).toDF("k", "v")))
+    g.insert("other", Seq((1L, 1L)).toDF("k", "v"))
+    g.table("other").schema
+    def live() = Files.list(java.nio.file.Paths.get(root, "ms", "data"))
+      .iterator.asScala.size
+    g.table("ms").schema
+    assert(g.batchSchemaCount == 3 + 1)
+    // pruned UPDATE replaces the one matching batch with a new one
+    g.update("ms", Map("v" -> lit(99L)), col("k") === 2L)
+    g.table("ms").schema
+    assert(live() == 3 && g.batchSchemaCount == live() + 1)
+    // compactSmall folds all three small batches into one
+    g.compactSmall("ms")
+    assert(g.table("ms").orderBy("k").as[(Long, Long)].collect().toSeq ==
+      Seq((1L, 10L), (2L, 99L), (3L, 30L)))
+    assert(live() == 1 && g.batchSchemaCount == live() + 1)
+    g.truncateTable("ms")
+    assert(g.batchSchemaCount == 1)
+    g.dropTable("other")
+    assert(g.batchSchemaCount == 0)
+  }
+
   test("3-level view chain registers topologically, adverse names included") {
     val g = freshSession()
     g.createTable("vt", StructType(Seq(StructField("k", LongType))))

@@ -47,6 +47,22 @@ class RecursiveCteSpec extends SparkSpec {
     val (ck2, n2) = RecursiveCte.checkpointCounted(shuffled)
     assert(n2 == 10 && ck2.count() == 10)
   }
+
+  test("an observed metric that never arrives falls back within the bound") {
+    import scala.concurrent.duration._
+    import org.apache.spark.sql.Observation
+    // attached to no action: its metric never fires
+    val never = Observation()
+    val t0 = System.nanoTime
+    assert(graft.Materialize.awaitMetric(never, 200.millis)(42L) == 42L)
+    assert(System.nanoTime - t0 < 5L * 1000 * 1000 * 1000,
+      "the wait must end at its bound")
+    // a metric that does arrive is returned without running the fallback
+    val fired = Observation()
+    spark.range(5).observe(fired, count(lit(1)).as("n")).collect()
+    assert(graft.Materialize.awaitMetric(fired, 10.seconds)(
+      fail("fallback ran for a delivered metric")) == 5L)
+  }
 }
 
 class TimeJoinsSpec extends SparkSpec {

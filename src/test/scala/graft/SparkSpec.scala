@@ -25,4 +25,23 @@ object SharedSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SharedSpark.spark
   lazy val sf: String = "/root/testdata/sf0.001"
+
+  /** Number of Spark jobs `body` launches, counted through a job group
+    * named `group` (use a name unique to the test). */
+  def jobsFor(group: String)(body: => Unit): Int = {
+    spark.sparkContext.setJobGroup(group, group)
+    try body finally spark.sparkContext.clearJobGroup()
+    // job-start events land on the status store asynchronously — poll
+    // until the count is stable, never a bare sleep
+    val tracker = spark.sparkContext.statusTracker
+    val deadline = System.nanoTime + 5L * 1000 * 1000 * 1000
+    var last = tracker.getJobIdsForGroup(group).length
+    var stable = 0
+    while (System.nanoTime < deadline && stable < 5) {
+      Thread.sleep(50)
+      val cur = tracker.getJobIdsForGroup(group).length
+      if (cur == last) stable += 1 else { last = cur; stable = 0 }
+    }
+    last
+  }
 }

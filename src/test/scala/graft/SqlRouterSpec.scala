@@ -475,22 +475,9 @@ class SqlRouterSpec extends SparkSpec {
     s.execute("CREATE TABLE msrc (id BIGINT)")
     s.execute("INSERT INTO msrc VALUES (1), (2), (3)")
     s.execute("INSERT INTO msrc VALUES (4), (5)")
-    def jobsFor(group: String)(body: => Unit): Int = {
-      spark.sparkContext.setJobGroup(group, group)
-      try body finally spark.sparkContext.clearJobGroup()
-      // job-start events land on the status store asynchronously — poll
-      // until the count is stable, never a bare sleep
-      val tracker = spark.sparkContext.statusTracker
-      val deadline = System.nanoTime + 5L * 1000 * 1000 * 1000
-      var last = tracker.getJobIdsForGroup(group).length
-      var stable = 0
-      while (System.nanoTime < deadline && stable < 5) {
-        Thread.sleep(50)
-        val cur = tracker.getJobIdsForGroup(group).length
-        if (cur == last) stable += 1 else { last = cur; stable = 0 }
-      }
-      last
-    }
+    // the session infers each batch's schema on its first read only; read
+    // once up front so both COPYs below start from the same state
+    s.table("msrc").schema
     var pq: org.apache.spark.sql.DataFrame = null
     var cs: org.apache.spark.sql.DataFrame = null
     val pqJobs = jobsFor("copy-pq") {
