@@ -4,7 +4,8 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{col, count, hll_sketch_agg, hll_union_agg, lit, max, min, monotonically_increasing_id, raise_error, row_number, sum, when}
+import org.apache.spark.sql.functions.{col, count, hll_sketch_agg, hll_union_agg, lit, max, min, monotonically_increasing_id, raise_error, regexp_extract, row_number, sum, when}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
 import graft.sources.DynamicSchema
@@ -32,7 +33,7 @@ class GraftSession(val spark: SparkSession, val root: String) {
   locally {
     val vd = rootPath.resolve("_views")
     if (Files.exists(vd))
-      Files.list(vd).iterator.asScala
+      children(vd)
         .filter(_.getFileName.toString.endsWith(".sql"))
         .foreach { p =>
           views(p.getFileName.toString.stripSuffix(".sql")) =
@@ -118,7 +119,7 @@ class GraftSession(val spark: SparkSession, val root: String) {
   locally {
     val td = rootPath.resolve("_types")
     if (Files.exists(td))
-      Files.list(td).iterator.asScala.foreach { p =>
+      children(td).foreach { p =>
         val fn = p.getFileName.toString
         if (fn.endsWith(".enum"))
           enumTypes(fn.stripSuffix(".enum")) =
@@ -440,12 +441,13 @@ class GraftSession(val spark: SparkSession, val root: String) {
   /** INSERT: appends a batch. Dynamic tables merge schemas
     * (NEW / SAME-TYPE / TYPE-EVOLUTION); fixed tables validate + cast. */
   /** Batch-count ceiling before an insert auto-triggers [[compactSmall]].
-    * Every `batch_*` dir is one union arm in [[table]]'s plan and one
-    * entry in every pruned-DML tag scan, so unbounded growth degrades
-    * PLANNING linearly even when the data is tiny — a pathological insert
-    * loop must not be able to build a 10^4-arm plan. An arm costs planning
-    * only, not a job: each batch's schema is inferred once per session
-    * ([[readBatch]]). ≤ 0 disables. */
+    * Every `batch_*` dir is one more root path of [[table]]'s scans, one
+    * more listing and schema check per read, and at least one more part
+    * file to open, so unbounded growth degrades every read even when the
+    * data is tiny — a pathological insert loop must not be able to build
+    * a 10^4-dir table. Dirs of one physical layout share a single scan
+    * ([[scanBatches]]), and each batch's schema is inferred once per
+    * session. ≤ 0 disables. */
   var autoCompactThreshold: Int = 32
 
   def insert(name: String, df: DataFrame): Unit = writeLock(name).synchronized {
@@ -458,7 +460,12 @@ class GraftSession(val spark: SparkSession, val root: String) {
     }
     validateInsert(name, df)
     val batch = dataDir(name).resolve(f"batch_${bumpGeneration(name)}%08d")
-    df.write.mode(SaveMode.ErrorIfExists).parquet(batch.toString)
+    // rows held on the driver (INSERT … VALUES) land as ONE part file: a
+    // local relation is split across every core, so a 5-row insert would
+    // otherwise leave one tiny file per row for every later read to open
+    val local = df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+    (if (local) df.coalesce(1) else df)
+      .write.mode(SaveMode.ErrorIfExists).parquet(batch.toString)
     persistMeta(name)
     // compaction POLICY (round-5 gap: the mechanism existed, nothing
     // called it): fold the small-batch tail once the count crosses the
@@ -881,7 +888,7 @@ class GraftSession(val spark: SparkSession, val root: String) {
   private def incViewsOver(base: String): Seq[String] = {
     val d = rootPath.resolve("_views")
     if (!Files.exists(d)) Nil
-    else Files.list(d).iterator.asScala
+    else children(d)
       .map(_.getFileName.toString).filter(_.endsWith(".inc"))
       .map(_.stripSuffix(".inc")).toSeq.sorted
       .filter(n => loadIncSpec(n).exists(_._1 == base))
@@ -907,7 +914,7 @@ class GraftSession(val spark: SparkSession, val root: String) {
     }
     // vacuum the staged RETURNING dirs of past DML statements (their lazy
     // result frames are dead after a compact — documented divergence)
-    Files.list(tableDir(name)).iterator.asScala.toSeq
+    children(tableDir(name))
       .filter(_.getFileName.toString.startsWith("_returning_"))
       .foreach(deleteRecursively)
   }
@@ -925,22 +932,21 @@ class GraftSession(val spark: SparkSession, val root: String) {
     * batches are physically dropped (a later re-add of a dropped column
     * resurfaces values only from batches never folded). */
   def compactSmall(name: String, smallBytes: Long = 128L << 20): Unit = {
-    def dirSize(p: Path): Long = Files.walk(p).iterator.asScala
-      .filter(Files.isRegularFile(_)).map(Files.size(_)).sum
-    val small = normalizedBatches(name)
-      .filter { case (p, _) => dirSize(p) < smallBytes }
+    def dirSize(p: Path): Long = Using.resource(Files.walk(p))(_.iterator
+      .asScala.filter(Files.isRegularFile(_)).map(Files.size(_)).sum)
+    val small = listBatches(name).filter(dirSize(_) < smallBytes)
     if (small.size <= 1) return // nothing worth folding
     // same ordering rule as compact(): dependent incremental matviews
     // fold their pending deltas before the delta batches disappear
     incViewsOver(name).foreach(refreshIncrementalMatView)
-    val union = clusterByIndex(name, small.map(_._2).reduce(_ union _))
+    val union = clusterByIndex(name, scanBatches(name, small))
     val staging = tableDir(name).resolve("_staging")
     deleteRecursively(staging)
     union.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    small.foreach { case (p, _) => deleteRecursively(p) }
-    val hasParts = Files.list(staging).iterator.asScala
+    small.foreach(deleteRecursively)
+    val hasParts = children(staging)
       .exists(_.getFileName.toString.startsWith("part-"))
-    val foldedNames = small.map(_._1.getFileName.toString)
+    val foldedNames = small.map(_.getFileName.toString)
     if (hasParts) {
       val dest = dataDir(name).resolve(f"batch_${bumpGeneration(name)}%08d")
       Files.move(staging, dest, StandardCopyOption.ATOMIC_MOVE)
@@ -1138,11 +1144,12 @@ class GraftSession(val spark: SparkSession, val root: String) {
     * touches one batch of a 10^4-batch table. The batch-directory layout
     * already gives file-level granularity, so instead:
     *
-    *   1. ONE job over the batch union, each batch tagged with its
-    *      directory name, finds the set of batches containing matched
-    *      rows (the predicate/join pushes into each batch's parquet scan,
-    *      so unmatched row groups are footer-skipped, and only the tag +
-    *      predicate columns are read);
+    *   1. ONE job over the table's scans ([[scanBatches]]), each row
+    *      tagged with its batch directory name from the file it was read
+    *      from (`_metadata.file_path`), finds the set of batches
+    *      containing matched rows (the predicate/join pushes into the
+    *      parquet scans, so unmatched row groups are footer-skipped, and
+    *      only the tag + predicate columns are read);
     *   2. only those batches are rewritten (merged into one new
     *      generation-stamped batch); every untouched `batch_*` dir stays
     *      in place byte-identical.
@@ -1162,25 +1169,23 @@ class GraftSession(val spark: SparkSession, val root: String) {
       matchedOf: DataFrame => DataFrame,
       survivorsOf: DataFrame => DataFrame,
       returning: DataFrame): Option[DataFrame] = {
-    val batches = normalizedBatches(name)
+    val batches = listBatches(name)
     if (batches.size <= 1) return None
     // a user column in the reserved prefix only blocks the TAG column
     // this path adds — fall back to the full rewrite, don't fail
     if (state(name).schema.fieldNames.exists(_.startsWith("__graft_")))
       return None
-    val tagged = batches.map { case (p, df) =>
-      df.withColumn("__graft_batch", lit(p.getFileName.toString))
-    }.reduce(_ union _)
     // schema-stability check FIRST (pure analysis, no job): a
     // type-evolving SET must take the full-rewrite path regardless of
     // which batches match, both to widen every batch and to avoid
     // staging the RETURNING result twice
-    val visible = table(name).schema
-    val wholeSample = survivorsOf(batches.map(_._2).reduce(_ union _))
+    val whole = scanBatches(name, batches)
+    val wholeSample = survivorsOf(whole)
     if (wholeSample.schema.fields.map(f => (f.name, f.dataType)).toSeq !=
-        visible.fields.map(f => (f.name, f.dataType)).toSeq)
+        whole.schema.fields.map(f => (f.name, f.dataType)).toSeq)
       return None
-    val hitTags = matchedOf(tagged).select("__graft_batch").distinct()
+    val hitTags = matchedOf(scanBatches(name, batches, tagged = true))
+      .select("__graft_batch").distinct()
       .collect().map(_.getString(0)).toSet
     if (hitTags.size == batches.size) return None // nothing pruned
     // stage RETURNING before any swap invalidates its input files (same
@@ -1198,16 +1203,16 @@ class GraftSession(val spark: SparkSession, val root: String) {
       bumpGeneration(name) // keep _returning_* names unique per statement
       return Some(returned)
     }
-    val matched = batches.filter { case (p, _) => hitTags(p.getFileName.toString) }
-    val survivors = survivorsOf(matched.map(_._2).reduce(_ union _))
+    val matched = batches.filter(p => hitTags(p.getFileName.toString))
+    val survivors = survivorsOf(scanBatches(name, matched))
     val staging = tableDir(name).resolve("_staging")
     deleteRecursively(staging)
     survivors.write.mode(SaveMode.Overwrite).parquet(staging.toString)
     // an all-rows-deleted batch set may write no part files; installing an
     // empty dir would break later schema inference — just drop the batches
-    val hasParts = Files.list(staging).iterator.asScala
+    val hasParts = children(staging)
       .exists(_.getFileName.toString.startsWith("part-"))
-    matched.foreach { case (p, _) => deleteRecursively(p) }
+    matched.foreach(deleteRecursively)
     if (hasParts)
       Files.move(staging, dataDir(name).resolve(f"batch_${bumpGeneration(name)}%08d"),
         StandardCopyOption.ATOMIC_MOVE)
@@ -1253,34 +1258,36 @@ class GraftSession(val spark: SparkSession, val root: String) {
   // ---------------------------------------------------------------- read
 
   /** Resolved table: every ingest batch read with its own physical schema,
-    * cast + null-padded to the union schema, tombstones dropped. Each
-    * batch's physical schema is inferred once per session (see
-    * [[readBatch]]), so re-reading an unchanged table runs no Spark job. */
-  def table(name: String): DataFrame = {
-    val st = state(name)
-    val visible = st.schema.fields.filterNot(f => st.tombstones(f.name))
-    val batches = normalizedBatches(name)
-    if (batches.isEmpty || visible.isEmpty) {
-      return spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        StructType(visible))
-    }
-    batches.map(_._2).reduce(_ union _)
-  }
+    * cast + null-padded to the union schema, tombstones dropped — one
+    * parquet scan per distinct physical layout, not one per batch
+    * ([[scanBatches]]), and each batch's schema is inferred once per
+    * session, so re-reading an unchanged table runs no Spark job. */
+  def table(name: String): DataFrame = scanBatches(name, listBatches(name))
 
-  /** Each on-disk batch directory paired with its frame normalized to the
-    * current visible schema (per-generation rename resolution, cast,
-    * null-padding) — the per-batch half of [[table]], exposed so DML can
-    * address batches individually. Every call lists the table, so it also
-    * evicts the memoized schemas of this table's dirs that are gone. */
-  private def normalizedBatches(name: String): Seq[(Path, DataFrame)] = {
+  /** The rows of `dirs` (batch dirs of `name`) in the table's current
+    * visible schema: per-generation rename resolution, cast,
+    * null-padding. Dirs that share a physical schema AND resolve every
+    * visible column the same way (a RENAME splits batches older than it
+    * from newer ones) form one group, read as ONE multi-path parquet
+    * scan with one projection — Spark packs a group's many small files
+    * into a few tasks, where a union arm per dir planned a file index,
+    * scan, codegen subtree and task per dir. Groups keep first-seen
+    * order and are unioned. With `tagged`, every row also carries its
+    * batch dir name in `__graft_batch`, taken from the file it was read
+    * from. */
+  private def scanBatches(name: String, dirs: Seq[Path],
+                          tagged: Boolean = false): DataFrame = {
     val st = state(name)
     val rename = renames.getOrElse(name, Map.empty)
     val visible = st.schema.fields.filterNot(f => st.tombstones(f.name))
-    val listed = listBatches(name)
-    forgetBatches(name, listed.toSet)
-    listed.map { b =>
-      val raw = readBatch(b)
+    if (dirs.isEmpty || visible.isEmpty)
+      return spark.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](),
+        StructType(visible))
+    // per dir: its physical schema and, per visible column, the physical
+    // column it reads (None = null-pad)
+    def layout(b: Path): (StructType, Seq[Option[String]]) = {
+      val physicalSchema = batchSchema(b)
       val batchGen = b.getFileName.toString.stripPrefix("batch_").toLong
       // physical names that, IN THIS BATCH's generation, belong to a
       // renamed column — a re-added column with the old name must not
@@ -1288,18 +1295,33 @@ class GraftSession(val spark: SparkSession, val root: String) {
       val claimed = rename.collect {
         case (_, (old, g)) if batchGen < g => old
       }.toSet
-      val cols = visible.map { f =>
+      physicalSchema -> visible.toSeq.map { f =>
         val physical = rename.get(f.name) match {
           case Some((old, renameGen)) if batchGen < renameGen => old
           case _ => f.name
         }
-        val usable = raw.schema.fieldNames.contains(physical) &&
-          !(physical == f.name && claimed(physical))
-        if (usable) col(physical).cast(f.dataType).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
+        Option.when(physicalSchema.fieldNames.contains(physical) &&
+          !(physical == f.name && claimed(physical)))(physical)
       }
-      b -> raw.select(cols.toSeq: _*)
     }
+    val groups = scala.collection.mutable.LinkedHashMap[
+      (StructType, Seq[Option[String]]), Vector[Path]]()
+    dirs.foreach { b =>
+      val key = layout(b)
+      groups(key) = groups.getOrElse(key, Vector()) :+ b
+    }
+    groups.map { case ((physicalSchema, sources), group) =>
+      val raw = spark.read.schema(physicalSchema)
+        .parquet(group.map(_.toString): _*)
+      val cols = visible.toSeq.zip(sources).map {
+        case (f, Some(physical)) => col(physical).cast(f.dataType).as(f.name)
+        case (f, None) => lit(null).cast(f.dataType).as(f.name)
+      }
+      val tag = Option.when(tagged)(regexp_extract(
+        raw.metadataColumn("_metadata").getField("file_path"),
+        "/(batch_[0-9]+)/[^/]*$", 1).as("__graft_batch"))
+      raw.select(cols ++ tag: _*)
+    }.reduce(_ union _)
   }
 
   /** Physical schema of every batch dir this session has opened, with the
@@ -1312,22 +1334,19 @@ class GraftSession(val spark: SparkSession, val root: String) {
   private val batchSchemas =
     new java.util.concurrent.ConcurrentHashMap[Path, (Seq[String], StructType)]()
 
-  /** Opens one `batch_*` dir; the only place a batch dir is read. Parquet
-    * schema inference runs a Spark job per call, so it runs on the first
-    * read of a batch only; later reads pass the memoized schema, which
-    * runs none. */
-  private def readBatch(dir: Path): DataFrame = {
+  /** Physical schema of one `batch_*` dir. Parquet schema inference runs
+    * a Spark job per call, so it runs on the first read of a batch only;
+    * later reads hit the memo, which runs none. */
+  private def batchSchema(dir: Path): StructType = {
     // the names Spark's file index skips are not data files
-    val files = Using.resource(Files.list(dir))(_.iterator.asScala
-      .map(_.getFileName.toString)
-      .filterNot(n => n.startsWith("_") || n.startsWith("."))
-      .toVector.sorted)
+    val files = children(dir).map(_.getFileName.toString)
+      .filterNot(n => n.startsWith("_") || n.startsWith(".")).sorted
     batchSchemas.get(dir) match {
-      case (`files`, schema) => spark.read.schema(schema).parquet(dir.toString)
+      case (`files`, schema) => schema
       case _ =>
-        val df = spark.read.parquet(dir.toString)
-        batchSchemas.put(dir, (files, df.schema))
-        df
+        val schema = spark.read.parquet(dir.toString).schema
+        batchSchemas.put(dir, (files, schema))
+        schema
     }
   }
 
@@ -1552,12 +1571,11 @@ class GraftSession(val spark: SparkSession, val root: String) {
         insert(name, full)
         "full"
       } else {
-        val deltaDirs = normalizedBatches(base)
-          .filterNot(p => covered(p._1.getFileName.toString))
+        val deltaDirs = listBatches(base)
+          .filterNot(p => covered(p.getFileName.toString))
         if (deltaDirs.isEmpty) "noop"
         else {
-          val delta = incAggregate(
-            deltaDirs.map(_._2).reduce(_ union _), keys, aggs)
+          val delta = incAggregate(scanBatches(base, deltaDirs), keys, aggs)
           val ms = incMergeExprs(aggs)
           // merged must be materialized BEFORE truncate deletes the
           // matview batches it reads from
@@ -1922,9 +1940,10 @@ class GraftSession(val spark: SparkSession, val root: String) {
   /** Registers ONLY the relations a statement references (transitively,
     * through stored view bodies) as temp views. Registering the whole
     * catalog per statement is O(tables x batches) driver work — fine at
-    * 10 tables, pathological at 1,000 (each registration builds the
-    * per-batch union plan in [[table]]). Falls back to register-all when
-    * the statement doesn't parse (Catalyst then reports the real error).
+    * 10 tables, pathological at 1,000 (each registration lists the
+    * table's batch dirs and builds its scan plan in [[table]]). Falls
+    * back to register-all when the statement doesn't parse (Catalyst
+    * then reports the real error).
     * Names that resolve to neither a table nor a stored view (CTE
     * aliases, pre-existing temp views) are ignored. */
   private def registerRelationsFor(stmt: String): Unit = {
@@ -2400,7 +2419,7 @@ class GraftSession(val spark: SparkSession, val root: String) {
   locally {
     val md = rootPath.resolve("_macros")
     if (Files.exists(md))
-      Files.list(md).iterator.asScala
+      children(md)
         .filter(_.getFileName.toString.endsWith(".sql")).foreach { p =>
           val Array(ps, body) = Files.readString(p).split("\n", 2)
           macros(p.getFileName.toString.stripSuffix(".sql")) =
@@ -2555,7 +2574,7 @@ class GraftSession(val spark: SparkSession, val root: String) {
   /** Loads metadata for any on-disk table this session hasn't touched yet
     * (fresh-session catalog recovery — pg_class scan analogue). */
   private def discoverTables(): Unit = {
-    Files.list(rootPath).iterator.asScala
+    children(rootPath)
       .filter(p => Files.isDirectory(p) &&
         Files.exists(p.resolve("_graft_meta").resolve("schema.ddl")))
       .map(_.getFileName.toString)
@@ -2571,9 +2590,20 @@ class GraftSession(val spark: SparkSession, val root: String) {
     rootPath.resolve(name.replace('.', '/'))
   private def dataDir(name: String): Path = tableDir(name).resolve("data")
 
-  private def listBatches(name: String): Seq[Path] =
-    Files.list(dataDir(name)).iterator.asScala.toSeq
+  /** The table's `batch_*` dirs, oldest first. Every call also evicts the
+    * memoized schemas of this table's dirs that are gone. */
+  private def listBatches(name: String): Seq[Path] = {
+    val listed = children(dataDir(name))
       .filter(p => p.getFileName.toString.startsWith("batch_")).sortBy(_.toString)
+    forgetBatches(name, listed.toSet)
+    listed
+  }
+
+  /** The entries of `dir`; the directory stream is closed before this
+    * returns (an unclosed `Files.list` holds a file descriptor until GC,
+    * which a long-lived session's per-statement listings outrun). */
+  private def children(dir: Path): Seq[Path] =
+    Using.resource(Files.list(dir))(_.iterator.asScala.toVector)
 
   /** Monotonic per-table batch-directory counter (survives restarts via
     * the _generation file; never reset while the table exists, so its dir
@@ -2641,7 +2671,8 @@ class GraftSession(val spark: SparkSession, val root: String) {
 
   private def deleteRecursively(p: Path): Unit =
     if (Files.exists(p))
-      Files.walk(p).iterator.asScala.toSeq.reverse.foreach(Files.delete)
+      Using.resource(Files.walk(p))(_.iterator.asScala.toVector)
+        .reverse.foreach(Files.delete)
 }
 
 object GraftSession {

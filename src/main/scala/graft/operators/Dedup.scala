@@ -281,10 +281,11 @@ object Dedup {
     * round is one equi-join + one min-aggregate, both hash-partitioned on
     * node id. Labels are monotonically non-increasing, so convergence is
     * detected by one narrow sum-aggregate per round (no extra join).
-    * Lineage is truncated per round with localCheckpoint — the iterative-
-    * Spark plan-growth failure mode. For graphs with long chains (not the
-    * dedup shape) a large-star/small-star variant would cut rounds to
-    * O(log n); diameter-bound propagation is the right trade here.
+    * Lineage is truncated per round with a checkpoint
+    * ([[graft.Materialize.observed]]) — the iterative-Spark plan-growth
+    * failure mode. For graphs with long chains (not the dedup shape) a
+    * large-star/small-star variant would cut rounds to O(log n);
+    * diameter-bound propagation is the right trade here.
     *
     * Returns one row per node that appears in any edge:
     * (node, component) with component = min node id in the cluster. */
@@ -315,9 +316,9 @@ object Dedup {
     // non-increasing, so an unchanged Σcomponent means fixpoint — and
     // riding it as an observe metric removes the separate one-job-per-
     // round aggregate the loop used to pay. Empty label sets sum to 0.
-    // The wait for the metric is bounded (Materialize.observedLocal).
+    // The wait for the metric is bounded (Materialize.observed).
     def checkpointSummed(l: DataFrame): (DataFrame, java.math.BigDecimal) = {
-      val (ck, s) = graft.Materialize.observedLocal(l,
+      val (ck, s) = graft.Materialize.observed(l,
         sum(col("component").cast(DecimalType(38, 0))))
       (ck, s match {
         case d: java.math.BigDecimal => d

@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions.{count, lit}
   * operator_recursive_cte.cpp; pipeline reset at operator.hpp:222-233).
   *
   * Each iteration is one distributed Spark job over the previous delta;
-  * `localCheckpoint` truncates lineage so the plan doesn't grow with the
-  * iteration count (the classic iterative-Spark failure mode), and the
+  * a checkpoint ([[graft.Materialize.once]]: local, or reliable when a
+  * checkpoint dir is set) truncates lineage so the plan doesn't grow with
+  * the iteration count (the classic iterative-Spark failure mode), and the
   * UNION-semantics variant keeps only the frontier (`delta except acc`) so
   * work per iteration is proportional to newly discovered rows — BFS-style
   * scaling, not re-derivation of the whole closure.
@@ -26,10 +27,10 @@ object RecursiveCte {
     * observe metrics resolve on the checkpoint action (0 for an empty
     * frame). The wait for the metric is bounded; past the bound the
     * count runs as a job on the checkpointed frame
-    * ([[graft.Materialize.observedLocal]]). */
+    * ([[graft.Materialize.observed]]). */
   private[graft] def checkpointCounted(
       df: DataFrame): (DataFrame, Long) = {
-    val (ck, n) = graft.Materialize.observedLocal(df, count(lit(1)))
+    val (ck, n) = graft.Materialize.observed(df, count(lit(1)))
     (ck, n match {
       case l: java.lang.Long => l.longValue
       case other => sys.error(s"observed count came back as $other")
@@ -56,7 +57,7 @@ object RecursiveCte {
       deltaCount = n
       if (deltaCount > 0) {
         acc = acc.union(delta)
-        if (i % 8 == 7) acc = acc.localCheckpoint()
+        if (i % 8 == 7) acc = graft.Materialize.once(acc)
       }
       i += 1
     }
@@ -78,7 +79,7 @@ object RecursiveCte {
       deltaCount = n
       if (deltaCount > 0) {
         acc = acc.union(delta)
-        if (i % 8 == 7) acc = acc.localCheckpoint()
+        if (i % 8 == 7) acc = graft.Materialize.once(acc)
       }
       i += 1
     }

@@ -24,7 +24,8 @@ object Bucketing {
     val loc = java.nio.file.Paths.get(warehouse, table)
     if (java.nio.file.Files.exists(loc)) {
       import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(loc).iterator.asScala.toSeq.reverse
+      scala.util.Using.resource(java.nio.file.Files.walk(loc))(
+        _.iterator.asScala.toVector).reverse
         .foreach(java.nio.file.Files.delete)
     }
     df.write

@@ -103,12 +103,13 @@ object Materialize {
     * normally takes milliseconds. */
   private val metricWait: FiniteDuration = 10.seconds
 
-  /** Eager local checkpoint of `df`, with the value of the aggregate `agg`
-    * over its rows observed during the checkpoint's own action (no second
-    * job). The fixpoint loops' per-round convergence gates ride on it. */
-  def observedLocal(df: DataFrame, agg: Column): (DataFrame, Any) = {
+  /** Eager checkpoint of `df` in [[once]]'s mode, with the value of the
+    * aggregate `agg` over its rows observed during the checkpoint's own
+    * action (no second job). The fixpoint loops' per-round convergence
+    * gates ride on it. */
+  def observed(df: DataFrame, agg: Column): (DataFrame, Any) = {
     val obs = Observation()
-    val ck = df.observe(obs, agg.as("v")).localCheckpoint()
+    val ck = once(df.observe(obs, agg.as("v")))
     (ck, awaitMetric(obs, metricWait)(ck.agg(agg).head().get(0)))
   }
 

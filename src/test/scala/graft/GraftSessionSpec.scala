@@ -183,7 +183,7 @@ class GraftSessionSpec extends SparkSpec {
     // nothing lost or duplicated by the repeated folds
     assert(g.table("ac").count() == 100)
     assert(g.table("ac").agg(sum(col("k"))).head().getLong(0) == 5050L)
-    // plan width is bounded too: one scan arm per surviving batch dir
+    // plan width is bounded too: at most one scan per surviving batch dir
     val arms = g.table("ac").queryExecution.optimizedPlan.collectLeaves().size
     assert(arms <= 8, s"$arms plan leaves for an 8-batch ceiling")
   }
@@ -247,6 +247,106 @@ class GraftSessionSpec extends SparkSpec {
     assert(g.batchSchemaCount == 1)
     g.dropTable("other")
     assert(g.batchSchemaCount == 0)
+  }
+
+  /** Parquet scan nodes in the physical plan of `df`. */
+  private def scans(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }.size
+
+  test("same-schema batches are read through one parquet scan") {
+    val g = freshSession()
+    g.createTable("one", StructType(Seq(StructField("k", LongType))))
+    (1L to 3L).foreach(i => g.insert("one", Seq(i).toDF("k")))
+    val t = g.table("one")
+    assert(scans(t) == 1, s"3 same-schema batches planned ${scans(t)} scans")
+    assert(t.as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
+  }
+
+  test("a dynamic table plans one scan per physical schema") {
+    val g = freshSession()
+    g.createDynamicTable("dyn")
+    g.insert("dyn", Seq((1L, 10L)).toDF("_id", "a"))
+    g.insert("dyn", Seq((2L, 20L, "x")).toDF("_id", "a", "b"))
+    g.insert("dyn", Seq((3L, 30L)).toDF("_id", "a"))
+    val t = g.table("dyn")
+    assert(scans(t) == 2, s"2 physical schemas planned ${scans(t)} scans")
+    assert(t.orderBy("_id").as[(Long, Long, String)].collect().toSeq ==
+      Seq((1L, 10L, null), (2L, 20L, "x"), (3L, 30L, null)))
+  }
+
+  test("a RENAME splits equal physical schemas into their own scans") {
+    val g = freshSession()
+    g.createDynamicTable("rn")
+    g.insert("rn", Seq((1L, "old")).toDF("_id", "x"))
+    g.renameColumn("rn", "x", "y")
+    g.addColumn("rn", "x", StringType)
+    // same physical schema (_id, x) as the first batch, but its `x` is the
+    // re-added column, not the renamed one's history
+    g.insert("rn", Seq((2L, "new")).toDF("_id", "x"))
+    val t = g.table("rn")
+    assert(t.columns.toSeq == Seq("_id", "y", "x"))
+    assert(scans(t) == 2, s"pre- and post-RENAME batches planned ${scans(t)} scans")
+    assert(t.orderBy("_id").as[(Long, String, String)].collect().toSeq ==
+      Seq((1L, "old", null), (2L, null, "new")))
+  }
+
+  test("pruned UPDATE across schema groups rewrites only the matched batch") {
+    import scala.jdk.CollectionConverters._
+    val root = graft.TmpDirs.create("graft")
+    val g = GraftSession(spark, root)
+    g.createDynamicTable("pu")
+    g.insert("pu", Seq((1L, 10L)).toDF("_id", "a"))
+    g.insert("pu", Seq((2L, 20L)).toDF("_id", "a"))
+    g.insert("pu", Seq((3L, 30L, "x")).toDF("_id", "a", "b"))
+    val data = java.nio.file.Paths.get(root, "pu", "data")
+    def snapshot(): Map[String, Seq[(String, Seq[Byte])]] =
+      Files.list(data).iterator.asScala.toSeq.map { d =>
+        d.getFileName.toString -> Files.list(d).iterator.asScala.toSeq
+          .map(f => f.getFileName.toString -> Files.readAllBytes(f).toSeq)
+          .sortBy(_._1)
+      }.toMap
+    val before = snapshot()
+    assert(before.size == 3)
+    g.update("pu", Map("a" -> lit(99L)), col("_id") === 2L)
+    val after = snapshot()
+    // batch_00000001 (the match) is replaced by one new batch; the other
+    // two dirs, one from each schema group, are untouched
+    assert(after.keySet == Set("batch_00000000", "batch_00000002",
+      "batch_00000003"))
+    Seq("batch_00000000", "batch_00000002").foreach { b =>
+      assert(after(b) == before(b), s"$b was rewritten")
+    }
+    assert(g.table("pu").orderBy("_id").as[(Long, Long, String)].collect()
+      .toSeq == Seq((1L, 10L, null), (2L, 99L, null), (3L, 30L, "x")))
+  }
+
+  test("a multi-row VALUES insert lands as one part file") {
+    import scala.jdk.CollectionConverters._
+    val root = graft.TmpDirs.create("graft")
+    val g = GraftSession(spark, root)
+    g.execute("CREATE TABLE vi (k BIGINT, s STRING)")
+    g.execute("INSERT INTO vi VALUES (1, 'a'), (2, 'b'), (3, 'c'), (4, 'd'), (5, 'e')")
+    val batch = java.nio.file.Paths.get(root, "vi", "data", "batch_00000000")
+    val parts = Files.list(batch).iterator.asScala
+      .map(_.getFileName.toString).filter(_.startsWith("part-")).toSeq
+    assert(parts.size == 1, s"5 VALUES rows wrote ${parts.size} part files " +
+      s"at parallelism ${spark.sparkContext.defaultParallelism}")
+    assert(g.table("vi").count() == 5)
+  }
+
+  test("reading a table holds no file descriptor open") {
+    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.UnixOperatingSystemMXBean]
+    val g = freshSession()
+    g.createTable("fd", StructType(Seq(StructField("k", LongType))))
+    (1L to 3L).foreach(i => g.insert("fd", Seq(i).toDF("k")))
+    g.table("fd").schema // first read: schema inference, lazy JVM state
+    val before = os.getOpenFileDescriptorCount
+    (1 to 200).foreach(_ => g.table("fd"))
+    val grown = os.getOpenFileDescriptorCount - before
+    assert(grown < 50, s"200 table reads left $grown more descriptors open")
   }
 
   test("3-level view chain registers topologically, adverse names included") {

@@ -841,18 +841,29 @@ class MaterializeSpec extends SparkSpec {
     assert(local.count() == 3)
     assert(local.queryExecution.optimizedPlan.toString
       .contains("LogicalRDD"), "local mode must truncate to an RDD scan")
+    val (localObs, localN) = graft.Materialize.observed(
+      Seq(1L, 2L).toDF("n"), count(lit(1)))
+    assert(localN == 2L && localObs.queryExecution.optimizedPlan.toString
+      .contains("LogicalRDD"))
     // Cluster signal: with a checkpoint dir set the SAME call must write
     // a reliable checkpoint under it.
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
     try {
-      val rel = graft.Materialize.once(Seq(4L, 5L).toDF("n"))
-      assert(rel.count() == 2)
       def filesUnder(f: java.io.File): Int =
         Option(f.listFiles).getOrElse(Array.empty)
           .map(c => if (c.isDirectory) filesUnder(c) else 1).sum
-      assert(filesUnder(new java.io.File(dir)) > 0,
+      val rel = graft.Materialize.once(Seq(4L, 5L).toDF("n"))
+      assert(rel.count() == 2)
+      val afterOnce = filesUnder(new java.io.File(dir))
+      assert(afterOnce > 0,
         s"reliable mode must write checkpoint files under $dir")
+      // the fixpoint loops' observed checkpoint follows the same mode
+      val (obs, n) = graft.Materialize.observed(
+        Seq(6L, 7L, 8L).toDF("n"), count(lit(1)))
+      assert(n == 3L && obs.count() == 3)
+      assert(filesUnder(new java.io.File(dir)) > afterOnce,
+        s"observed must write a reliable checkpoint under $dir")
     } finally {
       // Option(null) = None: cleanly unsets so parallel suites keep the
       // single-host local mode (probed on this Spark build)
