@@ -3,9 +3,10 @@ package graft.api
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import scala.util.Using
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, count, hll_sketch_agg, hll_union_agg, lit, max, min, monotonically_increasing_id, raise_error, regexp_extract, row_number, sum, when}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedRelation, UnresolvedSubqueryColumnAliases}
+import org.apache.spark.sql.catalyst.plans.logical.{Distinct, LocalRelation, LogicalPlan, SubqueryAlias, Union, UnresolvedWith}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
 import graft.sources.DynamicSchema
@@ -213,12 +214,22 @@ class GraftSession(val spark: SparkSession, val root: String) {
     * would "depend" on every body containing ORDER BY. Falls back to a
     * word-boundary textual match only if the stored body fails to parse. */
   private def referencedRelations(body: String): Option[Set[String]] =
-    try Some(spark.sessionState.sqlParser.parsePlan(body)
-      .collectWithSubqueries {
-        case r: org.apache.spark.sql.catalyst.analysis.UnresolvedRelation =>
-          r.multipartIdentifier.last.toLowerCase
-      }.toSet)
+    parsed(body).map(relationsOf)
+
+  /** Spark's parse of `stmt`, or None when it does not parse. */
+  private def parsed(stmt: String): Option[LogicalPlan] =
+    try Some(spark.sessionState.sqlParser.parsePlan(stmt))
     catch { case scala.util.control.NonFatal(_) => None }
+
+  /** Relation names a parsed plan references, subqueries and WITH bodies
+    * included: the parser keeps CTE bodies in `cteRelations`, outside the
+    * plan's children, so they are walked here. */
+  private def relationsOf(plan: LogicalPlan): Set[String] =
+    plan.collectWithSubqueries {
+      case r: UnresolvedRelation =>
+        Set(r.multipartIdentifier.last.toLowerCase)
+      case w: UnresolvedWith => w.cteRelations.flatMap(c => relationsOf(c._2))
+    }.flatten.toSet
 
   /** Drops every stored view that references `name` (reference
     * dynamic_cascade_delete's pg_depend walk), transitively. Matviews are
@@ -1732,210 +1743,88 @@ class GraftSession(val spark: SparkSession, val root: String) {
 
   /** SQL entry point: PG-dialect affordances (jsonb `->`/`->>`/`#>`/`#>>`,
     * `::?` assertions, `$n` parameters) are rewritten to Spark SQL by
-    * [[graft.functions.Jsonb.rewrite]], catalog tables and views are
-    * registered as temp views, then Catalyst takes over. */
+    * [[graft.functions.Jsonb.rewrite]], the catalog tables and views the
+    * statement references are registered as temp views, then Catalyst
+    * takes over. The statement is parsed once, for both the registration
+    * and the route: `WITH RECURSIVE … UNION ALL` runs on Spark's own
+    * recursion, and only a recursive member with UNION (dedup) semantics,
+    * which Spark rejects, lowers to the driver loop ([[unionRecursion]]). */
   def sql(query: String, params: Seq[Any] = Nil): DataFrame = {
     discoverTables()
     val stmt = expandMacros(
       graft.functions.Jsonb.rewrite(stripDbQualifiers(query), params))
-    recursiveWith(stmt).getOrElse {
-      registerRelationsFor(stmt)
-      spark.sql(stmt)
-    }
+    val plan = parsed(stmt)
+    registerRelationsFor(plan)
+    plan.flatMap(unionRecursion).getOrElse(spark.sql(stmt))
   }
 
-  private val recursiveKwRe = """(?is)^\s*WITH\s+RECURSIVE\s+""".r
-  private val cteItemRe = """(?is)^\s*(\w+)\s*(?:\(([^)]*)\))?\s*AS\s*\(""".r
-
-  /** Comment skipper shared by the CTE scanners: returns the index just
-    * past a line or block comment starting at `at`, or `at` itself. */
-  private def skipSqlComment(s: String, at: Int): Int =
-    if (s.startsWith("--", at)) {
-      val nl = s.indexOf('\n', at); if (nl < 0) s.length else nl + 1
-    } else if (s.startsWith("/*", at)) {
-      val end = s.indexOf("*/", at + 2)
-      if (end < 0) s.length else end + 2
-    } else at
-
-  /** Index just past the ')' closing the group that is open (depth 1) at
-    * `from`. Single-quote-literal aware ('' escapes double-toggle, which
-    * lands back inside the literal) and comment-aware: a ')' or
-    * apostrophe inside a line or block comment must not count. */
-  private def closeParen(s: String, from: Int): Int = {
-    var depth = 1; var i = from; var inLit = false
-    while (i < s.length && depth > 0) {
-      val c = s.charAt(i)
-      if (inLit) { if (c == '\'') inLit = false; i += 1 }
-      else {
-        val skipped = skipSqlComment(s, i)
-        if (skipped != i) i = skipped
-        else {
-          c match {
-            case '\'' => inLit = true
-            case '(' => depth += 1
-            case ')' => depth -= 1
-            case _ =>
-          }
-          i += 1
+  /** `WITH RECURSIVE name [(cols)] AS (seed UNION step)` (reference
+    * transform_select.cpp:26-58; test_subqueries.cpp:1209): the recursive
+    * form Spark refuses (UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE), lowered to
+    * the driver-side dedup fixpoint ([[graft.operators.RecursiveCte]]),
+    * which terminates on cycles. The parser gives the member as
+    * `SubqueryAlias(name, [UnresolvedSubqueryColumnAliases(cols,]
+    * Distinct(Union(seed…, step))))`. Each round binds `name` in the step
+    * to the previous delta's plan — PG's working table. CTEs before the
+    * member scope seed and step; the closure then replaces the member's
+    * body in the WITH list, so later CTEs and the outer query read it and
+    * it shadows a same-named table or view, as in PG. The column list
+    * names the seed and every step output. None for every other
+    * statement. */
+  private def unionRecursion(plan: LogicalPlan): Option[DataFrame] = {
+    val w = plan match {
+      case w: UnresolvedWith if w.allowRecursion => w
+      case _ => return None
+    }
+    val members = w.cteRelations.zipWithIndex.flatMap {
+      case ((name, member, _), i) =>
+        val (cols, body) = member.child match {
+          case UnresolvedSubqueryColumnAliases(cs, b) => (Some(cs), b)
+          case b => (None, b)
         }
-      }
-    }
-    require(depth == 0, "WITH RECURSIVE: unbalanced parentheses")
-    i
-  }
-
-  /** One parsed `name [(cols)] AS (body)` item of a WITH list. */
-  private case class CteItem(name: String, cols: Option[Seq[String]],
-                             body: String) {
-    def render: String =
-      name + cols.map(_.mkString(" (", ", ", ")")).getOrElse("") +
-        " AS (" + body + ")"
-  }
-
-  /** `WITH RECURSIVE … ctes … outer` through the SQL surface (reference
-    * transform_select.cpp:26-58 parses the RECURSIVE flag;
-    * test_subqueries.cpp:1209). Catalyst has no recursive-CTE execution,
-    * so the self-referencing member lowers to the driver-side fixpoint
-    * ([[graft.operators.RecursiveCte]]): UNION → dedup fixpoint
-    * (cycle-safe), UNION ALL → accumulate-all. Each iteration re-binds
-    * the name as a temp view over the previous delta — PG's working-table
-    * semantics.
-    *
-    * PG scoping rules honored here: the RECURSIVE flag scopes the WHOLE
-    * WITH list, so the recursive member may sit at ANY position;
-    * preceding CTEs become a plain WITH prefix on the seed/step/outer
-    * queries, trailing ones a plain WITH on the outer query. A list with
-    * NO self-referencing member is plain WITH semantics (re-rendered
-    * without the keyword, Catalyst takes it). More than one recursive
-    * member is refused with a clear error. Non-SELECT text and
-    * non-recursive WITH fall through to Catalyst untouched.
-    * `spark.graft.recursive.maxIterations` (default 100) bounds
-    * non-converging queries with a clear error. */
-  private def recursiveWith(stmt: String): Option[DataFrame] = {
-    val kw = recursiveKwRe.findPrefixMatchOf(stmt).getOrElse(return None)
-    // parse the full CTE list
-    val ctes = scala.collection.mutable.ArrayBuffer[CteItem]()
-    var pos = kw.end
-    var more = true
-    while (more) {
-      val m = cteItemRe.findPrefixMatchOf(stmt.substring(pos)).getOrElse(
-        throw new IllegalArgumentException(
-          "WITH RECURSIVE: expected `name [(cols)] AS (…)` at: " +
-            stmt.substring(pos).take(60)))
-      val bodyStart = pos + m.end
-      val end = closeParen(stmt, bodyStart)
-      ctes += CteItem(m.group(1),
-        Option(m.group(2)).map(_.split(",").map(_.trim).toSeq),
-        stmt.substring(bodyStart, end - 1))
-      // a top-level ',' after the close paren means another CTE follows
-      var k = end
-      var scanning = true
-      while (scanning) {
-        while (k < stmt.length && stmt.charAt(k).isWhitespace) k += 1
-        val sk = skipSqlComment(stmt, k)
-        if (sk != k) k = sk else scanning = false
-      }
-      if (k < stmt.length && stmt.charAt(k) == ',') pos = k + 1
-      else { pos = k; more = false }
-    }
-    val outerRemainder = stmt.substring(pos)
-    // self-reference test is parser-level (subqueries included), textual
-    // word-boundary fallback if the body alone doesn't parse
-    def selfRef(c: CteItem): Boolean =
-      referencedRelations(c.body)
-        .map(_.contains(c.name.toLowerCase))
-        .getOrElse(("(?i)\\b" + java.util.regex.Pattern.quote(c.name) +
-          "\\b").r.findFirstIn(c.body).isDefined)
-    val recIdxs = ctes.zipWithIndex.collect { case (c, i) if selfRef(c) => i }
-    if (recIdxs.size > 1) throw new IllegalArgumentException(
-      "WITH RECURSIVE: at most one recursive CTE per statement is " +
-        s"supported (found: ${recIdxs.map(ctes(_).name).mkString(", ")})")
-    if (recIdxs.isEmpty) {
-      // RECURSIVE flag present but nothing self-references: plain WITH
-      val plain =
-        "WITH " + ctes.map(_.render).mkString(", ") + " " + outerRemainder
-      registerRelationsFor(plain)
-      return Some(spark.sql(plain))
-    }
-    val recIdx = recIdxs.head
-    val CteItem(cteName, colList, body) = ctes(recIdx)
-    val leading = ctes.take(recIdx).toSeq
-    val trailing = ctes.drop(recIdx + 1).toSeq
-    val prefix =
-      if (leading.isEmpty) ""
-      else "WITH " + leading.map(_.render).mkString(", ") + " "
-    // last top-level UNION [ALL] splits seed from step (same literal- and
-    // comment-awareness as the paren scan: UNION inside a comment is text)
-    var unionPos = -1; var stepStart = -1; var unionAll = false
-    var j = 0; var depth = 0; var inLit = false
-    while (j < body.length) {
-      val c = body.charAt(j)
-      if (inLit) { if (c == '\'') inLit = false; j += 1 }
-      else {
-        val skipped = skipSqlComment(body, j)
-        if (skipped != j) j = skipped
-        else c match {
-          case '\'' => inLit = true; j += 1
-          case '(' => depth += 1; j += 1
-          case ')' => depth -= 1; j += 1
-          case 'u' | 'U' if depth == 0 &&
-              body.regionMatches(true, j, "UNION", 0, 5) &&
-              (j == 0 || !Character.isLetterOrDigit(body.charAt(j - 1))) &&
-              (j + 5 >= body.length ||
-                !Character.isLetterOrDigit(body.charAt(j + 5))) =>
-            unionPos = j
-            var k = j + 5
-            while (k < body.length && body.charAt(k).isWhitespace) k += 1
-            unionAll = body.regionMatches(true, k, "ALL", 0, 3) &&
-              (k + 3 >= body.length ||
-                !Character.isLetterOrDigit(body.charAt(k + 3)))
-            stepStart = if (unionAll) k + 3 else j + 5
-            j += 5
-          case _ => j += 1
+        body match {
+          case Distinct(u: Union)
+              if relationsOf(u).contains(name.toLowerCase) =>
+            Some((i, name, cols, u))
+          case _ => None
         }
-      }
     }
-    require(unionPos >= 0,
-      "WITH RECURSIVE: body must be 'seed UNION [ALL] step'")
-    val seedSql = prefix + body.substring(0, unionPos)
-    val stepSql = prefix + body.substring(stepStart)
-    val outerSql =
-      if (leading.nonEmpty || trailing.nonEmpty)
-        "WITH " + (leading ++ trailing).map(_.render).mkString(", ") +
-          " " + outerRemainder
-      else outerRemainder
-    // real relations register first so the CTE binding shadows any
-    // same-named catalog table (PG scoping)
-    def runWithCte(sqlText: String, cte: DataFrame): DataFrame = {
-      registerRelationsFor(sqlText)
-      cte.createOrReplaceTempView(cteName)
-      spark.sql(sqlText)
-    }
-    // a pre-existing temp view with the CTE's name gets shadowed for the
-    // statement (PG CTE scoping) and RESTORED after — snapshotting its
-    // frame now keeps the user's binding from being permanently rebound
-    // to the recursive closure
-    val preExisting =
-      if (spark.catalog.tableExists(cteName)) Some(spark.table(cteName))
-      else None
-    registerRelationsFor(seedSql)
-    val seed0 = spark.sql(seedSql)
-    val seed = colList.map(cs => seed0.toDF(cs: _*)).getOrElse(seed0)
-    val maxIter = spark.conf
-      .get("spark.graft.recursive.maxIterations", "100").toInt
-    val closure =
-      if (unionAll) graft.operators.RecursiveCte.fixpointAll(
-        seed, d => runWithCte(stepSql, d), maxIter)
-      else graft.operators.RecursiveCte.fixpoint(
-        seed, d => runWithCte(stepSql, d), maxIter)
-    val out = runWithCte(outerSql, closure)
-    // out is analyzed; the binding is no longer needed
-    preExisting match {
-      case Some(saved) => saved.createOrReplaceTempView(cteName)
-      case None => spark.catalog.dropTempView(cteName)
-    }
-    Some(out)
+    if (members.isEmpty) return None
+    require(members.size == 1, "WITH RECURSIVE: at most one recursive CTE " +
+      "per statement may use UNION (dedup) semantics (found: " +
+      members.map(_._2).mkString(", ") + ")")
+    val (i, name, cols, u) = members.head
+    val leading = w.cteRelations.take(i)
+    def frame(p: LogicalPlan): DataFrame = GraftSqlShim.ofRows(spark,
+      if (leading.isEmpty) p else UnresolvedWith(p, leading, w.allowRecursion))
+    val seedPlan = if (u.children.size == 2) u.children.head
+      else u.copy(children = u.children.init)
+    require(!relationsOf(seedPlan).contains(name.toLowerCase),
+      s"WITH RECURSIVE: the seed of $name must not reference $name")
+    val seed0 = frame(seedPlan)
+    val seed = cols.fold(seed0)(cs => seed0.toDF(cs: _*))
+    val closure = graft.operators.RecursiveCte.fixpoint(seed, d =>
+      frame(bindRelation(u.children.last, name, d.queryExecution.analyzed))
+        .toDF(seed.columns.toIndexedSeq: _*))
+    Some(GraftSqlShim.ofRows(spark, w.copy(cteRelations = w.cteRelations
+      .updated(i, w.cteRelations(i).copy(
+        _2 = SubqueryAlias(name, closure.queryExecution.analyzed))))))
   }
+
+  /** `p` with every reference to relation `name` replaced by `to`: in
+    * subqueries and inside nested WITH bodies, which the subquery-aware
+    * transforms do not descend into. */
+  private def bindRelation(p: LogicalPlan, name: String,
+                           to: LogicalPlan): LogicalPlan =
+    p.transformDownWithSubqueries {
+      case r: UnresolvedRelation
+          if r.multipartIdentifier.map(_.toLowerCase) ==
+            Seq(name.toLowerCase) => SubqueryAlias(name, to)
+      case w: UnresolvedWith => w.copy(cteRelations = w.cteRelations.map {
+        case (n, c, d) =>
+          (n, bindRelation(c, name, to).asInstanceOf[SubqueryAlias], d)
+      })
+    }
 
   /** Registers ONLY the relations a statement references (transitively,
     * through stored view bodies) as temp views. Registering the whole
@@ -1946,8 +1835,8 @@ class GraftSession(val spark: SparkSession, val root: String) {
     * then reports the real error).
     * Names that resolve to neither a table nor a stored view (CTE
     * aliases, pre-existing temp views) are ignored. */
-  private def registerRelationsFor(stmt: String): Unit = {
-    referencedRelations(stmt) match {
+  private def registerRelationsFor(stmt: Option[LogicalPlan]): Unit = {
+    stmt.map(relationsOf) match {
       case None =>
         tables.keys.foreach(n => table(n).createOrReplaceTempView(n))
         registerViewsInDependencyOrder(
@@ -2029,7 +1918,8 @@ class GraftSession(val spark: SparkSession, val root: String) {
     * (metadata-only), ALTER TABLE ADD/DROP/RENAME COLUMN,
     * CHECKPOINT/VACUUM [table] → compact, TRUNCATE [TABLE] (schema and
     * constraints survive), SHOW TABLES / DESCRIBE (pg_class-style
-    * introspection), WITH RECURSIVE (via [[sql]]'s fixpoint lowering),
+    * introspection), WITH RECURSIVE (via [[sql]]: UNION ALL on Spark's
+    * own recursion, UNION on the driver fixpoint),
     * INSERT INTO ... VALUES / SELECT,
     * UPDATE ... SET ... [FROM src] [WHERE ...] [RETURNING ...],
     * DELETE FROM ... [USING src] [WHERE ...] [RETURNING ...]. */

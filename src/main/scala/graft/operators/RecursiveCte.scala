@@ -7,14 +7,21 @@ import org.apache.spark.sql.functions.{count, lit}
   * reference's operator_recursive_cte / operator_cte_scan pipeline-restart
   * machinery (/root/reference components/physical_plan/operators/
   * operator_recursive_cte.cpp; pipeline reset at operator.hpp:222-233).
+  * The loop serves UNION (dedup) semantics only: Spark plans `WITH
+  * RECURSIVE … UNION ALL` itself (UnionLoopExec) but rejects the UNION
+  * form, which runs here for the SQL surface
+  * ([[graft.api.GraftSession.sql]]) and for the frontier-only graph
+  * queries.
   *
   * Each iteration is one distributed Spark job over the previous delta;
   * a checkpoint ([[graft.Materialize.once]]: local, or reliable when a
   * checkpoint dir is set) truncates lineage so the plan doesn't grow with
-  * the iteration count (the classic iterative-Spark failure mode), and the
-  * UNION-semantics variant keeps only the frontier (`delta except acc`) so
-  * work per iteration is proportional to newly discovered rows — BFS-style
-  * scaling, not re-derivation of the whole closure.
+  * the iteration count (the classic iterative-Spark failure mode), and
+  * only the frontier (`delta except acc`) is kept per iteration, so work
+  * is proportional to newly discovered rows — BFS-style scaling, not
+  * re-derivation of the whole closure. Spark's
+  * `spark.sql.cteRecursionLevelLimit` (-1: unlimited) bounds the rounds,
+  * the same limit that bounds Spark's own recursion.
   */
 object RecursiveCte {
 
@@ -23,7 +30,7 @@ object RecursiveCte {
     * #4): the emptiness gate previously ran a SEPARATE count job per
     * round over the just-materialized blocks — ~one extra job + driver
     * round-trip per iteration, the dominant cost of driver-cadence-bound
-    * fixpoints (x1: 24 rounds over ≤25 rows). Probed on this Spark:
+    * fixpoints (a 25-row chain takes 24 rounds). Probed on this Spark:
     * observe metrics resolve on the checkpoint action (0 for an empty
     * frame). The wait for the metric is bounded; past the bound the
     * count runs as a job on the checkpointed frame
@@ -39,8 +46,10 @@ object RecursiveCte {
 
   /** UNION semantics (dedup across iterations): seed ∪ step(seed) ∪ … until
     * no new rows. `step` must be monotone (pure function of its input). */
-  def fixpoint(seed: DataFrame, step: DataFrame => DataFrame,
-               maxIterations: Int = 100): DataFrame = {
+  def fixpoint(seed: DataFrame, step: DataFrame => DataFrame): DataFrame = {
+    val limit = seed.sparkSession.conf
+      .get("spark.sql.cteRecursionLevelLimit").toInt
+    val maxIterations = if (limit < 0) Int.MaxValue else limit
     var (acc, deltaCount) = checkpointCounted(seed.distinct())
     var delta = acc
     var i = 0
@@ -62,29 +71,8 @@ object RecursiveCte {
       i += 1
     }
     require(i < maxIterations || deltaCount == 0,
-      s"recursive CTE did not converge in $maxIterations iterations")
-    acc
-  }
-
-  /** UNION ALL semantics: accumulate every produced row; terminates when
-    * `step` yields an empty frame. */
-  def fixpointAll(seed: DataFrame, step: DataFrame => DataFrame,
-                  maxIterations: Int = 100): DataFrame = {
-    var (acc, deltaCount) = checkpointCounted(seed)
-    var delta = acc
-    var i = 0
-    while (i < maxIterations && deltaCount > 0) {
-      val (ck, n) = checkpointCounted(step(delta))
-      delta = ck
-      deltaCount = n
-      if (deltaCount > 0) {
-        acc = acc.union(delta)
-        if (i % 8 == 7) acc = graft.Materialize.once(acc)
-      }
-      i += 1
-    }
-    require(i < maxIterations || deltaCount == 0,
-      s"recursive CTE did not converge in $maxIterations iterations")
+      s"recursive CTE did not converge in $maxIterations iterations " +
+        "(spark.sql.cteRecursionLevelLimit)")
     acc
   }
 }

@@ -15,18 +15,10 @@ import graft.operators.RecursiveCte
 object ExtQueries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // --- WITH RECURSIVE via the driver-side fixpoint loop. UNION ALL
-    // semantics to match the oracle exactly: the step yields fresh rows
-    // every wave, so the accumulate-all variant is correct AND skips the
-    // per-iteration `except` anti-join the dedup fixpoint pays (the
-    // dedup path is exercised by x10's cyclic closure) ---
-    "x1_recursive_cte" -> ((s, dir) => {
-      import s.implicits._
-      RecursiveCte.fixpointAll(
-        Seq(1L).toDF("n"),
-        d => d.filter(col("n") < 25).select((col("n") + 1).as("n")))
-        .orderBy(col("n"))
-    }),
+    // --- WITH RECURSIVE … UNION ALL on Spark's own recursion
+    // (UnionLoopExec): the oracle's statement, run as is. The UNION
+    // (dedup) form, which Spark rejects, is x10's cyclic closure ---
+    "x1_recursive_cte" -> ((s, _) => s.sql(oracles("x1_recursive_cte"))),
 
     // --- WITH RECURSIVE through the SQL surface: graph reachability with
     // a cycle (0 →+5→ 5 → … → 20 → 0 mod 25), UNION semantics, so the

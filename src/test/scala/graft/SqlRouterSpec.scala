@@ -354,15 +354,94 @@ class SqlRouterSpec extends SparkSpec {
   }
 
   test("WITH RECURSIVE: two recursive CTEs are refused with a clear error") {
+    // only the UNION (dedup) form runs on the driver loop, one per statement
     val e = intercept[IllegalArgumentException] {
       g.execute("""
         WITH RECURSIVE p(n) AS (
-          SELECT CAST(1 AS BIGINT) AS n UNION ALL SELECT n + 1 FROM p WHERE n < 3),
+          SELECT CAST(1 AS BIGINT) AS n UNION SELECT n + 1 FROM p WHERE n < 3),
         q(m) AS (
-          SELECT CAST(1 AS BIGINT) AS m UNION ALL SELECT m + 1 FROM q WHERE m < 3)
+          SELECT CAST(1 AS BIGINT) AS m UNION SELECT m + 1 FROM q WHERE m < 3)
         SELECT * FROM p JOIN q ON p.n = q.m""")
     }
     assert(e.getMessage.contains("at most one recursive CTE"))
+  }
+
+  test("WITH RECURSIVE: two recursive UNION ALL CTEs run on Spark") {
+    val out = g.execute("""
+      WITH RECURSIVE p(n) AS (
+        SELECT CAST(1 AS BIGINT) AS n UNION ALL SELECT n + 1 FROM p WHERE n < 3),
+      q(m) AS (
+        SELECT CAST(1 AS BIGINT) AS m UNION ALL SELECT m + 1 FROM q WHERE m < 3)
+      SELECT * FROM p JOIN q ON p.n = q.m ORDER BY n""")
+    assert(out.as[(Long, Long)].collect().toSeq ==
+      Seq((1L, 1L), (2L, 2L), (3L, 3L)))
+  }
+
+  test("WITH RECURSIVE: the column list names the recursive term's output") {
+    val s = g
+    val series = s.sql("""
+      WITH RECURSIVE t(n) AS (
+        SELECT CAST(1 AS BIGINT)
+        UNION ALL
+        SELECT n + 1 FROM t WHERE n < 5)
+      SELECT n FROM t ORDER BY n""")
+    assert(series.as[Long].collect().toSeq == (1L to 5L))
+    s.execute("CREATE TABLE e (src BIGINT, dst BIGINT)")
+    s.execute("INSERT INTO e VALUES (0, 1), (1, 2), (2, 0), (7, 8)")
+    val reach = s.sql("""
+      WITH RECURSIVE reach(node) AS (
+        SELECT CAST(0 AS BIGINT)
+        UNION
+        SELECT e.dst FROM e JOIN reach r ON e.src = r.node)
+      SELECT node FROM reach ORDER BY node""")
+    assert(reach.as[Long].collect().toSeq == Seq(0L, 1L, 2L))
+  }
+
+  test("WITH RECURSIVE (UNION): leading CTE feeds the seed, trailing CTE reads the closure") {
+    val s = g
+    s.execute("CREATE TABLE e (src BIGINT, dst BIGINT)")
+    s.execute("INSERT INTO e VALUES (0, 1), (1, 2), (2, 0), (7, 8)")
+    val out = s.sql("""
+      WITH RECURSIVE start(s) AS (SELECT CAST(0 AS BIGINT)),
+      reach(node) AS (
+        SELECT s FROM start
+        UNION
+        SELECT e.dst FROM e JOIN reach ON e.src = reach.node),
+      cnt AS (SELECT count(*) AS c FROM reach)
+      SELECT c FROM cnt""")
+    assert(out.as[Long].collect().toSeq == Seq(3L))
+  }
+
+  test("WITH RECURSIVE (UNION): the CTE shadows a same-named table") {
+    val s = g
+    s.execute("CREATE TABLE reach (node BIGINT)")
+    s.execute("INSERT INTO reach VALUES (42)")
+    s.execute("CREATE TABLE e (src BIGINT, dst BIGINT)")
+    s.execute("INSERT INTO e VALUES (0, 1), (1, 2), (2, 0)")
+    val out = s.sql("""
+      WITH RECURSIVE reach(node) AS (
+        SELECT CAST(0 AS BIGINT)
+        UNION
+        SELECT e.dst FROM e JOIN reach r ON e.src = r.node)
+      SELECT node FROM reach ORDER BY node""")
+    assert(out.as[Long].collect().toSeq == Seq(0L, 1L, 2L))
+    assert(s.sql("SELECT node FROM reach").as[Long].collect().toSeq ==
+      Seq(42L))
+  }
+
+  test("WITH RECURSIVE (UNION) leaves a same-named temp view untouched") {
+    spark.range(3).toDF("v").createOrReplaceTempView("shadowed_u")
+    try {
+      val out = g.sql("""
+        WITH RECURSIVE shadowed_u(n) AS (
+          SELECT CAST(100 AS BIGINT)
+          UNION
+          SELECT n + 1 FROM shadowed_u WHERE n < 102)
+        SELECT n FROM shadowed_u ORDER BY n""")
+      assert(out.as[Long].collect().toSeq == Seq(100L, 101L, 102L))
+      assert(spark.table("shadowed_u").columns.toSeq == Seq("v"))
+      assert(spark.table("shadowed_u").count() == 3)
+    } finally spark.catalog.dropTempView("shadowed_u")
   }
 
   test("WITH RECURSIVE restores a shadowed pre-existing temp view") {
@@ -396,18 +475,29 @@ class SqlRouterSpec extends SparkSpec {
 
   test("WITH RECURSIVE: non-converging query fails with a clear error") {
     val s = g
-    spark.conf.set("spark.graft.recursive.maxIterations", "5")
+    spark.conf.set("spark.sql.cteRecursionLevelLimit", "5")
     try {
-      val e = intercept[IllegalArgumentException] {
+      // UNION ALL runs on Spark's recursion, which fails at execution
+      val all = s.sql("""
+        WITH RECURSIVE r(n) AS (
+          SELECT CAST(1 AS BIGINT) AS n
+          UNION ALL
+          SELECT n AS n FROM r)
+        SELECT count(*) AS c FROM r""")
+      val e1 = intercept[Exception](all.collect())
+      assert(e1.getMessage.contains("RECURSION_LEVEL_LIMIT_EXCEEDED"))
+      // UNION runs on the driver loop, which fails while it builds
+      val e2 = intercept[IllegalArgumentException] {
         s.sql("""
           WITH RECURSIVE r(n) AS (
             SELECT CAST(1 AS BIGINT) AS n
-            UNION ALL
-            SELECT n AS n FROM r)
+            UNION
+            SELECT n + 1 FROM r)
           SELECT count(*) AS c FROM r""")
       }
-      assert(e.getMessage.contains("did not converge"))
-    } finally spark.conf.unset("spark.graft.recursive.maxIterations")
+      assert(e2.getMessage.contains("did not converge"))
+      assert(e2.getMessage.contains("spark.sql.cteRecursionLevelLimit"))
+    } finally spark.conf.unset("spark.sql.cteRecursionLevelLimit")
   }
 
   test("WITH RECURSIVE: comments with parens/UNION do not confuse parsing") {
@@ -421,8 +511,8 @@ class SqlRouterSpec extends SparkSpec {
   }
 
   test("WITH RECURSIVE followed by a plain CTE and literal hazards") {
-    // the ') UNION (' tokens inside string literals must not confuse the
-    // body/union scanner; the trailing plain CTE rides on the outer query
+    // the ') UNION (' tokens inside string literals must not confuse
+    // parsing; the trailing plain CTE rides on the outer query
     val out = g.sql("""
       WITH RECURSIVE t(n, tag) AS (
         SELECT CAST(1 AS BIGINT) AS n, 'seed)union' AS tag
