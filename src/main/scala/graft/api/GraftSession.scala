@@ -168,12 +168,7 @@ class GraftSession(val spark: SparkSession, val root: String) {
     persistMeta(name)
   }
 
-  def dropTable(name: String): Unit = dropTable(name, dropDependents = true)
-
-  /** `dropDependents = false` is for internal rebuild cycles
-    * (refreshMatView) where the relation immediately comes back under the
-    * same name — dependent views must survive the swap. */
-  private def dropTable(name: String, dropDependents: Boolean): Unit = {
+  def dropTable(name: String): Unit = {
     deleteRecursively(tableDir(name))
     forgetBatches(name, Set.empty)
     tables.remove(name)
@@ -197,7 +192,7 @@ class GraftSession(val spark: SparkSession, val root: String) {
     // dependency closure (reference dynamic_cascade_delete's pg_depend
     // walk): views/matviews whose body references the dropped relation are
     // dropped too, transitively — a dangling view must not survive the drop
-    if (dropDependents) dropDependentViews(name)
+    dropDependentViews(name)
   }
 
   def dropView(name: String): Unit = {
@@ -565,7 +560,6 @@ class GraftSession(val spark: SparkSession, val root: String) {
     }.toSeq: _*)
     validateUpdate(name, returning, resolved.keySet)
     prunedRewrite(name, _.filter(where), transform, returning)
-      .getOrElse(overwrite(name, transform(current), returning))
   }
 
   /** Case-insensitive SET-key resolution; unknown columns are an error,
@@ -586,96 +580,15 @@ class GraftSession(val spark: SparkSession, val root: String) {
   /** UPDATE ... FROM (join-update; reference operator_update supports
     * UPDATE…FROM + RETURNING): rows of `name` matching `joinCond` against
     * `other` get `set` applied (expressions may reference other's columns);
-    * unmatched rows pass through. Returns the updated rows. */
+    * unmatched rows pass through. Runs as a MERGE with one unconditional
+    * `WHEN MATCHED THEN UPDATE SET` arm ([[mergeRows]]), target aliased
+    * with the table name so join conditions can qualify target columns.
+    * Returns the updated rows. */
   def updateFrom(name: String, other: DataFrame, joinCond: Column,
-                 set: Map[String, Column]): DataFrame = {
-    val wide = updateFromWide(name, other, joinCond, set)
-    wide.select(table(name).columns.map(col).toSeq: _*)
-  }
-
-  /** [[updateFrom]] whose RETURNING frame also carries the source frame's
-    * non-colliding columns — PG lets `RETURNING` reference the FROM
-    * source (items.*, src.delta, …); the SQL router needs those columns
-    * available. Colliding names keep the (post-update) target value. */
-  private[api] def updateFromWide(name: String, other: DataFrame,
-      joinCond: Column, set: Map[String, Column]): DataFrame = {
-    // aliased with the table name so SQL-surface join conditions can
-    // qualify target columns (`UPDATE items ... FROM src WHERE items.id=…`)
-    val base = table(name).as(name)
-    val resolved = resolveSetKeys(base.columns.toSeq, set)
-    // __graft_-prefixed helper columns are reserved (collision-checked)
-    require(!base.columns.exists(_.startsWith("__graft_")),
-      "column names starting with __graft_ are reserved")
-    val current = base.withColumn("__graft_rid", monotonically_increasing_id())
-    // the match flag comes from a tag column on the source side — NOT from
-    // re-evaluating joinCond post-join, which misfires for null-safe
-    // conditions (NULL <=> NULL turning unmatched rows into matches).
-    // No broadcast() hint on the source: `UPDATE … FROM big_staging` must
-    // not force-broadcast an unbounded frame; AQE broadcasts small ones.
-    val tagged = other.withColumn("__graft_hit", lit(1))
-    val matched = current.join(tagged, joinCond, "left")
-    val srcExtra = other.columns
-      .filterNot(c => base.columns.contains(c) || c.startsWith("__graft_"))
-    // simultaneous assignment from the pre-update row (matches update()).
-    // Plumbing references are dataframe-qualified (current(c)/tagged(c)) —
-    // an unqualified col(c) would be ambiguous when the source carries a
-    // column with the same name as the target (legal in PG; only the
-    // user's own unqualified SET/WHERE refs must error then, not ours)
-    val hit = tagged("__graft_hit").isNotNull
-    val updatedAll = matched.select((base.columns.map { c =>
-      resolved.get(c).map(v => when(hit, v).otherwise(current(c)).as(c))
-        .getOrElse(current(c).as(c))
-    } ++ srcExtra.map(c => tagged(c))
-      :+ hit.as("__graft_matched")
-      :+ current("__graft_rid").as("__graft_rid")).toSeq: _*)
-    val updated = updatedAll.select(base.columns.map(col).toSeq: _*)
-    // a target row matching >1 source row would be duplicated by the join
-    // and silently persisted twice — refuse, like PG's one-source-row
-    // rule. The guard is FUSED into the RETURNING frame instead of being
-    // a separate count job that re-runs the whole join: every
-    // multi-matching row is by construction a matched row, and RETURNING
-    // is always staged BEFORE any directory swap (both the pruned and the
-    // full-overwrite path), so a window join-copy count over the row id
-    // plus a raising filter fails that first write action and leaves the
-    // table untouched.
-    val nMatch = count(lit(1)).over(Window.partitionBy(col("__graft_rid")))
-    val returning = updatedAll.filter(col("__graft_matched"))
-      .withColumn("__graft_nmatch", nMatch)
-      .filter(when(col("__graft_nmatch") > 1,
-        raise_error(lit(GraftSession.MultiMatchMsg)).cast("boolean"))
-        .otherwise(lit(true)))
-      .select((base.columns ++ srcExtra).map(col).toSeq: _*)
-    try {
-      validateUpdate(name,
-        returning.select(base.columns.map(col).toSeq: _*), resolved.keySet)
-      // predicate-pruned path: only batches with join matches rewrite (the
-      // wide transform re-derives on the matched-batch union; unmatched
-      // rows of those batches pass through via the left join). The
-      // RETURNING frame stays the whole-table spelling — identical rows,
-      // since only matched rows survive its filter.
-      val baseCols = base.columns.toSeq
-      prunedRewrite(name,
-        cur => cur.as(name).join(tagged, joinCond, "left_semi"),
-        frame => {
-          val f = frame.as(name)
-          val m = f.join(tagged, joinCond, "left")
-          m.select(baseCols.map { c =>
-            resolved.get(c).map(v => when(hit, v).otherwise(f(c)).as(c))
-              .getOrElse(f(c).as(c))
-          }.toSeq: _*)
-        },
-        returning)
-        .getOrElse(overwrite(name, updated, returning))
-    } catch {
-      // surface the fused guard's executor-side raise as the API-level
-      // IllegalArgumentException contract (the raise arrives wrapped in
-      // SparkException layers from the failed write job)
-      case e: Throwable if GraftSession.causeChain(e)
-          .exists(t => Option(t.getMessage)
-            .exists(_.contains(GraftSession.MultiMatchMsg))) =>
-        throw new IllegalArgumentException(GraftSession.MultiMatchMsg, e)
-    }
-  }
+                 set: Map[String, Column]): DataFrame =
+    mergeRows(name, other, joinCond,
+      Seq(GraftSession.MergeWhen(true, None, GraftSession.MergeUpdate(set))), name)
+      .select(table(name).columns.map(col).toSeq: _*)
 
   /** MERGE INTO (SQL:2003; PG 15 brings it to the dialect the reference
     * speaks — the reference itself stops at UPDATE…FROM, so this exceeds
@@ -686,27 +599,50 @@ class GraftSession(val spark: SparkSession, val root: String) {
     * matches (pruned-DML path); the INSERT arm lands as one appended
     * batch derived from the STAGED returning frame (never re-read from
     * the already-swapped table); the one-source-row rule ("MERGE command
-    * cannot affect row a second time") is the same fused window-count
-    * guard as UPDATE…FROM — no separate guard join. When the matched arms
-    * always affect every matched row (common upsert: an unconditional
+    * cannot affect row a second time") is a window count fused into the
+    * staged affected-row frame — no separate guard join. When the matched
+    * arms always affect every matched row (common upsert: an unconditional
     * UPDATE arm last), the rewrite is a narrow select over the join with
     * NO added shuffle; only conditional/NOTHING arms need a per-rid
-    * window to collapse multi-match pass-through copies.
+    * window to collapse multi-match pass-through copies. [[updateFrom]]
+    * and the SQL `UPDATE … FROM` run on the same core ([[mergeRows]]).
     *
     * Returns the affected rows (target columns + `merge_action` ∈
     * UPDATE/DELETE/INSERT — the PG 17 `merge_action()` surface). */
   def merge(name: String, source: DataFrame, on: Column,
             whens: Seq[GraftSession.MergeWhen],
             targetAlias: Option[String] = None): DataFrame = {
+    val cols = table(name).columns :+ "merge_action"
+    mergeRows(name, source, on, whens, targetAlias.getOrElse(name))
+      .select(cols.map(col).toSeq: _*)
+  }
+
+  /** The MERGE core behind [[merge]] and [[updateFrom]]: the staged
+    * affected rows carry the target columns, the source's non-colliding
+    * columns (PG 17 lets `MERGE … RETURNING` and `UPDATE … FROM …
+    * RETURNING` name them; NULL on INSERT rows) and `merge_action`. A
+    * source column is non-colliding when no target column, other source
+    * column or `merge_action` shares its name (case-insensitively) and it
+    * is not a reserved `__graft_` helper. */
+  private def mergeRows(name: String, source: DataFrame, on: Column,
+      whens: Seq[GraftSession.MergeWhen], alias: String): DataFrame = {
     import GraftSession._
     require(whens.nonEmpty, "MERGE needs at least one WHEN clause")
-    val alias = targetAlias.getOrElse(name)
     val base = table(name).as(alias)
     val baseCols = base.columns.toSeq
     require(!baseCols.exists(_.startsWith("__graft_")),
       "column names starting with __graft_ are reserved")
     val matchedWhens = whens.filter(_.matched)
     val insertWhens = whens.filterNot(_.matched)
+    // a DELETE arm's self-FK actions would need deleteMatching's closure
+    // inside this one rewrite; applyFkDeleteActions covers other tables only
+    require(!(matchedWhens.exists(_.action == MergeDelete) &&
+      fks(name).exists(_.parent == name)),
+      s"MERGE … THEN DELETE on $name, which has a self-referential FK, is " +
+        "unsupported; use DELETE (it folds self-FK actions into one rewrite)")
+    val srcExtra = source.columns.filter(c => !c.startsWith("__graft_") &&
+      (baseCols ++ source.columns :+ "merge_action")
+        .count(_.equalsIgnoreCase(c)) == 1)
     matchedWhens.foreach(w => require(!w.action.isInstanceOf[MergeInsert],
       "WHEN MATCHED cannot INSERT"))
     insertWhens.foreach(w => require(
@@ -774,6 +710,7 @@ class GraftSession(val spark: SparkSession, val root: String) {
     val current = base.withColumn("__graft_rid", monotonically_increasing_id())
     val jFull = current.join(tagged, on, "left")
     val allRows = jFull.select((imageCols(current)
+      ++ srcExtra.map(tagged(_))
       :+ actionOf.as("__graft_action")
       :+ current("__graft_rid").as("__graft_rid")).toSeq: _*)
     val nAffected = count(lit(1)).over(Window.partitionBy(col("__graft_rid")))
@@ -782,9 +719,9 @@ class GraftSession(val spark: SparkSession, val root: String) {
         col("__graft_action") =!= "NOTHING")
       .withColumn("__graft_nmatch", nAffected)
       .filter(when(col("__graft_nmatch") > 1,
-        raise_error(lit(GraftSession.MergeMultiMsg)).cast("boolean"))
+        raise_error(lit(MultiSourceMsg)).cast("boolean"))
         .otherwise(lit(true)))
-      .select((baseCols.map(col)
+      .select(((baseCols ++ srcExtra).map(col)
         :+ col("__graft_action").as("merge_action")).toSeq: _*)
     // --- INSERT arm: source rows with no target match, first applicable
     // NOT MATCHED arm wins; values cast to the target column types ---
@@ -830,7 +767,8 @@ class GraftSession(val spark: SparkSession, val root: String) {
       }
     val returning = insArm match {
       case Some(ins) => affectedTarget.unionByName(
-        ins.withColumn("merge_action", lit("INSERT")))
+        ins.withColumn("merge_action", lit("INSERT")),
+        allowMissingColumns = true)
       case None => affectedTarget
     }
     try {
@@ -848,7 +786,6 @@ class GraftSession(val spark: SparkSession, val root: String) {
       val staged = prunedRewrite(name,
         cur => cur.as(alias).join(tagged, on, "left_semi"),
         survivorsOf, returning)
-        .getOrElse(overwrite(name, survivorsOf(table(name)), returning))
       // INSERT arm appends from the STAGED frame — the pre-swap lazy plan
       // would re-read the now-rewritten table
       if (insArm.isDefined) {
@@ -858,10 +795,11 @@ class GraftSession(val spark: SparkSession, val root: String) {
       }
       staged
     } catch {
-      case e: Throwable if GraftSession.causeChain(e)
-          .exists(t => Option(t.getMessage)
-            .exists(_.contains(GraftSession.MergeMultiMsg))) =>
-        throw new IllegalArgumentException(GraftSession.MergeMultiMsg, e)
+      // surface the fused guard's executor-side raise (wrapped in
+      // SparkException layers from the failed job) as the API contract
+      case e: Throwable if causeChain(e).exists(t =>
+          Option(t.getMessage).exists(_.contains(MultiSourceMsg))) =>
+        throw new IllegalArgumentException(MultiSourceMsg, e)
     }
   }
 
@@ -913,16 +851,14 @@ class GraftSession(val spark: SparkSession, val root: String) {
     // after the rewrite the delta batches are gone, and a fold mixing
     // seen and unseen rows is unrecoverable (forces a full rebuild)
     incViewsOver(name).foreach(refreshIncrementalMatView)
-    val olds = listBatches(name).map(_.getFileName.toString)
+    val olds = listBatches(name)
     // rewrites cluster on the indexed columns (see createIndex) — this
     // is where an index becomes physically real
     val snapshot = clusterByIndex(name, table(name))
-    overwrite(name, snapshot, spark.emptyDataFrame.limit(0))
-    listBatches(name).map(_.getFileName.toString) match {
-      case Seq(nb) => recordFold(name, nb, olds)
-      case Seq() => recordFold(name, "", olds)
-      case _ => () // unexpected layout — refresh falls back to rebuild
-    }
+    val folded = swapBatches(name, snapshot, olds)
+    state(name).schema = snapshot.schema
+    persistMeta(name)
+    recordFold(name, folded.getOrElse(""), olds.map(_.getFileName.toString))
     // vacuum the staged RETURNING dirs of past DML statements (their lazy
     // result frames are dead after a compact — documented divergence)
     children(tableDir(name))
@@ -951,22 +887,8 @@ class GraftSession(val spark: SparkSession, val root: String) {
     // fold their pending deltas before the delta batches disappear
     incViewsOver(name).foreach(refreshIncrementalMatView)
     val union = clusterByIndex(name, scanBatches(name, small))
-    val staging = tableDir(name).resolve("_staging")
-    deleteRecursively(staging)
-    union.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    small.foreach(deleteRecursively)
-    val hasParts = children(staging)
-      .exists(_.getFileName.toString.startsWith("part-"))
-    val foldedNames = small.map(_.getFileName.toString)
-    if (hasParts) {
-      val dest = dataDir(name).resolve(f"batch_${bumpGeneration(name)}%08d")
-      Files.move(staging, dest, StandardCopyOption.ATOMIC_MOVE)
-      recordFold(name, dest.getFileName.toString, foldedNames)
-    } else {
-      deleteRecursively(staging)
-      bumpGeneration(name)
-      recordFold(name, "", foldedNames)
-    }
+    val folded = swapBatches(name, union, small)
+    recordFold(name, folded.getOrElse(""), small.map(_.getFileName.toString))
     persistMeta(name)
   }
 
@@ -1083,18 +1005,18 @@ class GraftSession(val spark: SparkSession, val root: String) {
         val doomed = doomedOf(current).select(order: _*)
         applyFkDeleteActions(name, doomed)
         return prunedRewrite(name, doomedOf,
-            df => keptOf(df).select(order: _*), doomed)
-          .getOrElse(overwrite(name, keptOf(current).select(order: _*), doomed))
+          df => keptOf(df).select(order: _*), doomed)
       }
       // Self-FK path: pin row identity (rid) so the closure's set algebra is
-      // exact even under duplicate rows; localCheckpoint materializes the
-      // nondeterministic rid once. Tables WITH a self-FK pay this
-      // materialization — the closure is inherently iterative over the table.
+      // exact even under duplicate rows; Materialize.once materializes the
+      // nondeterministic rid once (a reliable checkpoint when a checkpoint
+      // dir is set). Tables WITH a self-FK pay this materialization — the
+      // closure is inherently iterative over the table.
       require(!current.columns.exists(_.startsWith("__graft_")),
         "column names starting with __graft_ are reserved")
-      val cur = current.withColumn("__graft_rid", monotonically_increasing_id())
-        .localCheckpoint()
-      var doomed = doomedOf(cur).localCheckpoint()
+      val cur = graft.Materialize.once(
+        current.withColumn("__graft_rid", monotonically_increasing_id()))
+      var doomed = graft.Materialize.once(doomedOf(cur))
       val cascades = selfFks.filter(_.onDelete == Cascade)
       if (cascades.nonEmpty) {
         // frontier-driven transitive closure (same shape as RecursiveCte):
@@ -1112,14 +1034,14 @@ class GraftSession(val spark: SparkSession, val root: String) {
               Seq(fk.column), "left_semi")
               .select(cur.columns.map(col).toSeq: _*)
           }.reduce(_ union _)
-          val fresh = hit
+          val fresh = graft.Materialize.once(hit
             .join(doomed.select("__graft_rid"), Seq("__graft_rid"), "left_anti")
-            .dropDuplicates("__graft_rid").localCheckpoint()
+            .dropDuplicates("__graft_rid"))
           growing = fresh.count() > 0
           if (growing) {
             // by name: the semi/anti joins above reorder columns (USING
             // columns come first), so a positional union would scramble rows
-            doomed = doomed.unionByName(fresh).localCheckpoint()
+            doomed = graft.Materialize.once(doomed.unionByName(fresh))
             frontier = fresh
           }
         }
@@ -1150,10 +1072,11 @@ class GraftSession(val spark: SparkSession, val root: String) {
     } finally deleting -= name
   }
 
-  /** Predicate-pruned DML rewrite. [[overwrite]] rewrites the ENTIRE
-    * surviving table on every UPDATE/DELETE — O(table) even when the WHERE
-    * touches one batch of a 10^4-batch table. The batch-directory layout
-    * already gives file-level granularity, so instead:
+  /** Predicate-pruned DML rewrite, the one path every row-level DML
+    * statement takes. A full [[overwrite]] rewrites the ENTIRE surviving
+    * table — O(table) even when the WHERE touches one batch of a
+    * 10^4-batch table. The batch-directory layout already gives
+    * file-level granularity, so instead:
     *
     *   1. ONE job over the table's scans ([[scanBatches]]), each row
     *      tagged with its batch directory name from the file it was read
@@ -1169,101 +1092,101 @@ class GraftSession(val spark: SparkSession, val root: String) {
     * O(table) — the reference's row-versioned update is the analogous
     * optimization (/root/reference components/table/row_version_manager.cpp).
     * The tag collect is bounded by the number of batch DIRECTORIES (not
-    * rows). Returns None when pruning can't apply — a single batch, every
-    * batch matched, or a transform that changes the schema — and the
-    * caller falls back to the full [[overwrite]].
+    * rows). Where pruning can't apply — a single batch, every batch
+    * matched, or a transform that changes the schema — this falls back to
+    * the full [[overwrite]] of `survivorsOf(<whole table>)`. Either way
+    * RETURNING is staged before the swap, and the staged frame is
+    * returned.
     *
     * `matchedOf` must preserve the columns of its input (filter/semi-join
-    * shaped); `survivorsOf` maps the union of the MATCHED batches to the
-    * rows that replace them, in the table's visible schema. */
+    * shaped); `survivorsOf` maps a set of batches (the matched ones, or
+    * the whole table) to the rows that replace them, in the table's
+    * visible schema. */
   private def prunedRewrite(name: String,
       matchedOf: DataFrame => DataFrame,
       survivorsOf: DataFrame => DataFrame,
-      returning: DataFrame): Option[DataFrame] = {
+      returning: DataFrame): DataFrame = {
     val batches = listBatches(name)
-    if (batches.size <= 1) return None
-    // a user column in the reserved prefix only blocks the TAG column
-    // this path adds — fall back to the full rewrite, don't fail
-    if (state(name).schema.fieldNames.exists(_.startsWith("__graft_")))
-      return None
-    // schema-stability check FIRST (pure analysis, no job): a
-    // type-evolving SET must take the full-rewrite path regardless of
-    // which batches match, both to widen every batch and to avoid
-    // staging the RETURNING result twice
     val whole = scanBatches(name, batches)
-    val wholeSample = survivorsOf(whole)
-    if (wholeSample.schema.fields.map(f => (f.name, f.dataType)).toSeq !=
-        whole.schema.fields.map(f => (f.name, f.dataType)).toSeq)
-      return None
-    val hitTags = matchedOf(scanBatches(name, batches, tagged = true))
-      .select("__graft_batch").distinct()
-      .collect().map(_.getString(0)).toSet
-    if (hitTags.size == batches.size) return None // nothing pruned
-    // stage RETURNING before any swap invalidates its input files (same
-    // contract as overwrite: distributed write, lazy scan handed back)
-    val retSchema = returning.schema
-    val retDir = tableDir(name).resolve(f"_returning_${peekGeneration(name)}%08d")
-    if (retSchema.nonEmpty) {
-      deleteRecursively(retDir)
-      returning.write.mode(SaveMode.Overwrite).parquet(retDir.toString)
-    }
-    def returned: DataFrame =
-      if (retSchema.nonEmpty) spark.read.schema(retSchema).parquet(retDir.toString)
-      else spark.emptyDataFrame
-    if (hitTags.isEmpty) { // no-op statement: no batch touched at all
-      bumpGeneration(name) // keep _returning_* names unique per statement
-      return Some(returned)
-    }
+    val wholeSurvivors = survivorsOf(whole)
+    // pruning needs several batches and a free TAG column (a user column
+    // in the reserved prefix falls back, never fails); the schema check
+    // is pure analysis, no job: a type-evolving SET must take the full
+    // rewrite regardless of which batches match, to widen every batch
+    def schemaOf(df: DataFrame) =
+      df.schema.fields.map(f => (f.name, f.dataType)).toSeq
+    val prunable = batches.size > 1 &&
+      !state(name).schema.fieldNames.exists(_.startsWith("__graft_")) &&
+      schemaOf(wholeSurvivors) == schemaOf(whole)
+    val hitTags =
+      if (!prunable) Set.empty[String]
+      else matchedOf(scanBatches(name, batches, tagged = true))
+        .select("__graft_batch").distinct()
+        .collect().map(_.getString(0)).toSet
+    if (!prunable || hitTags.size == batches.size)
+      return overwrite(name, wholeSurvivors, returning)
+    val returned = stageReturning(name, returning)
     val matched = batches.filter(p => hitTags(p.getFileName.toString))
-    val survivors = survivorsOf(scanBatches(name, matched))
-    val staging = tableDir(name).resolve("_staging")
-    deleteRecursively(staging)
-    survivors.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    // an all-rows-deleted batch set may write no part files; installing an
-    // empty dir would break later schema inference — just drop the batches
-    val hasParts = children(staging)
-      .exists(_.getFileName.toString.startsWith("part-"))
-    matched.foreach(deleteRecursively)
-    if (hasParts)
-      Files.move(staging, dataDir(name).resolve(f"batch_${bumpGeneration(name)}%08d"),
-        StandardCopyOption.ATOMIC_MOVE)
+    if (matched.isEmpty) // no-op statement: no batch touched at all
+      bumpGeneration(name) // keep _returning_* names unique per statement
     else {
-      deleteRecursively(staging)
-      bumpGeneration(name)
+      swapBatches(name, survivorsOf(scanBatches(name, matched)), matched)
+      persistMeta(name)
     }
-    persistMeta(name)
-    Some(returned)
+    returned
   }
 
+  /** Full rewrite: stages RETURNING, then replaces every batch with
+    * `newData` through [[swapBatches]]; the table's schema becomes
+    * `newData`'s. */
   private def overwrite(name: String, newData: DataFrame, returning: DataFrame): DataFrame = {
-    // RETURNING materializes DISTRIBUTED — executors write it to a
-    // generation-stamped staging dir BEFORE the swap invalidates its input
-    // files; the caller gets a lazy scan over that dir. Never a driver
-    // collect: an `UPDATE … RETURNING` matching most of a 100 TB table must
-    // not OOM the driver. Old _returning_* dirs are purged by compact().
-    val retSchema = returning.schema
-    val retDir = tableDir(name).resolve(f"_returning_${peekGeneration(name)}%08d")
-    if (retSchema.nonEmpty) {
-      deleteRecursively(retDir)
-      returning.write.mode(SaveMode.Overwrite).parquet(retDir.toString)
-    }
-    val staging = tableDir(name).resolve("_staging")
-    deleteRecursively(staging)
-    newData.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    val data = dataDir(name)
-    deleteRecursively(data)
-    Files.createDirectories(data)
-    // generation-stamped batch dir: directory names are never reused, so
-    // any FileIndex cached against a previous generation can't serve a
-    // stale listing for a new read (Spark caches listings per leaf path)
-    Files.move(staging, data.resolve(f"batch_${bumpGeneration(name)}%08d"),
-      StandardCopyOption.ATOMIC_MOVE)
+    val returned = stageReturning(name, returning)
+    swapBatches(name, newData, listBatches(name))
     state(name).schema = newData.schema
     persistMeta(name)
+    returned
+  }
+
+  /** RETURNING materializes DISTRIBUTED — executors write it to a
+    * generation-stamped `_returning_*` dir BEFORE the swap invalidates its
+    * input files; the caller gets a lazy scan over that dir. Never a
+    * driver collect: an `UPDATE … RETURNING` matching most of a 100 TB
+    * table must not OOM the driver. Old dirs are purged by compact(). */
+  private def stageReturning(name: String, returning: DataFrame): DataFrame = {
+    val retSchema = returning.schema
+    if (retSchema.isEmpty) return spark.emptyDataFrame
+    val retDir = tableDir(name).resolve(f"_returning_${peekGeneration(name)}%08d")
+    deleteRecursively(retDir)
+    returning.write.mode(SaveMode.Overwrite).parquet(retDir.toString)
     // explicit schema: a zero-row RETURNING may write no part files, and a
     // schema'd read of an empty dir is an empty frame, not an inference error
-    if (retSchema.nonEmpty) spark.read.schema(retSchema).parquet(retDir.toString)
-    else spark.emptyDataFrame
+    spark.read.schema(retSchema).parquet(retDir.toString)
+  }
+
+  /** The staged swap: writes `rows` to `_staging` (reading `replaced`
+    * before any of them goes), deletes the `replaced` batch dirs, and
+    * moves the staging dir into a fresh generation-stamped `batch_*` dir —
+    * names are never reused, so no FileIndex cached against an earlier
+    * generation can serve a stale listing. A write that left no part
+    * file (every row deleted) installs nothing: an empty dir would break
+    * later schema inference. Returns the new batch name, if any. */
+  private def swapBatches(name: String, rows: DataFrame,
+                          replaced: Seq[Path]): Option[String] = {
+    val staging = tableDir(name).resolve("_staging")
+    deleteRecursively(staging)
+    rows.write.mode(SaveMode.Overwrite).parquet(staging.toString)
+    val hasParts = children(staging)
+      .exists(_.getFileName.toString.startsWith("part-"))
+    replaced.foreach(deleteRecursively)
+    val batch = f"batch_${bumpGeneration(name)}%08d"
+    if (hasParts) {
+      Files.move(staging, dataDir(name).resolve(batch),
+        StandardCopyOption.ATOMIC_MOVE)
+      Some(batch)
+    } else {
+      deleteRecursively(staging)
+      None
+    }
   }
 
   // ---------------------------------------------------------------- read
@@ -1388,15 +1311,24 @@ class GraftSession(val spark: SparkSession, val root: String) {
     insert(name, df)
   }
 
+  /** Re-runs the stored body and swaps its rows in through the staged
+    * [[overwrite]]: validated first, so a failing refresh leaves the old
+    * rows, and never dropped, so views over the matview, its constraints
+    * and its catalog entry survive. */
   def refreshMatView(name: String): Unit = {
     if (incViews.contains(name) || loadIncSpec(name).isDefined) {
       refreshIncrementalMatView(name); return
     }
-    val body = views(name)
-    // rebuild cycle, not a user drop: views defined over this matview
-    // must survive the refresh
-    dropTable(name, dropDependents = false)
-    createMatView(name, body)
+    replaceRows(name, sql(views(name)))
+  }
+
+  /** A matview refresh's write: validates `rows` as an insert, then
+    * replaces every batch of `name` with them through [[overwrite]]. The
+    * staged write reads the old batches before the swap deletes them, so
+    * `rows` may read `name` itself. */
+  private def replaceRows(name: String, rows: DataFrame): Unit = {
+    validateInsert(name, rows)
+    overwrite(name, rows, spark.emptyDataFrame)
   }
 
   // ---------------------------------------- incremental matviews
@@ -1542,7 +1474,11 @@ class GraftSession(val spark: SparkSession, val root: String) {
     * genuine rewrite (UPDATE/DELETE replaced batch dirs with changed
     * rows — never fold-logged) or a fold that mixed seen with unseen
     * rows (can't happen via compact/compactSmall, which refresh
-    * dependents first) still forces the full rebuild. */
+    * dependents first) still forces the full rebuild.
+    *
+    * Both modes validate the new rows, then swap them in through the
+    * staged [[overwrite]] ([[replaceRows]]): a refresh that fails its
+    * checks leaves the matview's rows as they were. */
   def refreshIncrementalMatView(name: String): String = {
     val (base, keys, aggs) = loadIncSpec(name).getOrElse(
       throw new IllegalArgumentException(s"no incremental matview $name"))
@@ -1572,14 +1508,16 @@ class GraftSession(val spark: SparkSession, val root: String) {
       children.get(b).exists(_.exists(overlaps))
     val historyIntact = seen.forall(accounted) &&
       current.forall(b => covered(b) || !overlaps(b))
+    // the matview keeps the column types it was created with (merging
+    // partials widens a decimal sum by 10 digits per fold)
+    def conformed(df: DataFrame): DataFrame = df.select(table(name).schema
+      .fields.map(f => col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
     val mode =
       if (!historyIntact) {
         // UPDATE/DELETE rewrote batch dirs under us (or a fold mixed
         // seen and unseen rows) — the stored partials no longer tile
         // the table; rebuild
-        val full = incAggregate(table(base), keys, aggs).localCheckpoint()
-        truncateTable(name)
-        insert(name, full)
+        replaceRows(name, conformed(incAggregate(table(base), keys, aggs)))
         "full"
       } else {
         val deltaDirs = listBatches(base)
@@ -1588,13 +1526,8 @@ class GraftSession(val spark: SparkSession, val root: String) {
         else {
           val delta = incAggregate(scanBatches(base, deltaDirs), keys, aggs)
           val ms = incMergeExprs(aggs)
-          // merged must be materialized BEFORE truncate deletes the
-          // matview batches it reads from
-          val merged = table(name).union(delta)
-            .groupBy(keys.map(col): _*).agg(ms.head, ms.tail: _*)
-            .localCheckpoint()
-          truncateTable(name)
-          insert(name, merged)
+          replaceRows(name, conformed(table(name).union(delta)
+            .groupBy(keys.map(col): _*).agg(ms.head, ms.tail: _*)))
           s"incremental(${deltaDirs.size})"
         }
       }
@@ -2204,12 +2137,15 @@ class GraftSession(val spark: SparkSession, val root: String) {
           org.apache.spark.sql.functions.expr(cond.getOrElse("true"))
         fromSrc match {
           case Some(src) =>
-            // RETURNING may reference the FROM source's columns (legal in
-            // PG) — route through the wide frame; without RETURNING the
-            // statement yields the post-update target rows only
-            val wide = updateFromWide(name, parseTableRef(src), where, setMap)
-            retList.map(applyReturning(wide.as(name), _)).getOrElse(
-              wide.select(table(name).columns.map(col).toSeq: _*))
+            // a one-arm MERGE; RETURNING may reference the FROM source's
+            // columns (legal in PG), which the core's affected rows carry —
+            // without RETURNING the statement yields the post-update target
+            // rows only
+            val affected = mergeRows(name, parseTableRef(src), where, Seq(
+              GraftSession.MergeWhen(true, None, GraftSession.MergeUpdate(setMap))),
+              name).drop("merge_action")
+            retList.map(applyReturning(affected.as(name), _)).getOrElse(
+              affected.select(table(name).columns.map(col).toSeq: _*))
           case None =>
             val result = update(name, setMap, where)
             retList.map(applyReturning(result.as(name), _)).getOrElse(result)
@@ -2569,15 +2505,12 @@ object GraftSession {
   def apply(spark: SparkSession, root: String): GraftSession =
     new GraftSession(spark, root)
 
-  /** Marker message of the fused UPDATE…FROM multi-match guard; also the
-    * needle used to recognize it inside SparkException cause chains. */
-  private[api] val MultiMatchMsg =
-    "UPDATE...FROM: a target row matches multiple source rows"
-
-  /** Same fused-guard marker for MERGE's one-source-row rule (PG: "MERGE
-    * command cannot affect row a second time"). */
-  private[api] val MergeMultiMsg =
-    "MERGE: a target row is affected by multiple source rows"
+  /** Marker message of the fused one-source-row guard of MERGE and
+    * UPDATE…FROM (PG: "MERGE command cannot affect row a second time");
+    * also the needle used to recognize it inside SparkException cause
+    * chains. */
+  private[api] val MultiSourceMsg =
+    "a target row is affected by multiple source rows"
 
   private[api] def causeChain(t: Throwable): Seq[Throwable] =
     Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(16).toSeq

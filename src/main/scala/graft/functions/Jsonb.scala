@@ -58,10 +58,6 @@ object Jsonb {
   def rewrite(query: String, params: Seq[Any] = Nil): String = {
     import scala.util.matching.Regex
     var q = query
-    // $n parameters (highest first so $12 binds before $1)
-    params.zipWithIndex.sortBy(-_._2).foreach { case (v, i) =>
-      q = q.replace("$" + (i + 1), sqlLiteral(v))
-    }
     // Mask every complete string literal (handling '' escapes) AND every
     // SQL comment (`-- ...` / `/* ... */`) behind an indexed
     // <n> placeholder, scanning left to right so an
@@ -76,6 +72,18 @@ object Jsonb {
       lits += m.matched
       Regex.quoteReplacement("" + (lits.size - 1) + "")
     })
+    // $n parameters bind AFTER masking, in one left-to-right pass: a `$1`
+    // inside a literal or comment is text, and each bound value enters as
+    // one more opaque literal, so a `$1` inside a bound string is never
+    // re-bound (a literal still keys the operators below: `a->>$1`).
+    // Unbound indexes stay as written.
+    q = """\$(\d+)""".r.replaceAllIn(q, m =>
+      m.group(1).toIntOption.filter(i => i >= 1 && i <= params.size) match {
+        case Some(i) =>
+          lits += sqlLiteral(params(i - 1))
+          Regex.quoteReplacement("" + (lits.size - 1) + "")
+        case None => Regex.quoteReplacement(m.matched)
+      })
     // literal content with '' unescaped; None when the placeholder holds
     // a comment, not a literal (operators never take a comment as a key)
     def litContent(idx: String): Option[String] = {

@@ -23,7 +23,8 @@ import org.apache.spark.sql.functions._
   * a unique trailing key), because offsets only depend on range-partition
   * row counts, not on where boundaries fall.
   *
-  * Both the input AND the range-shuffled frame are locally checkpointed:
+  * Both the input AND the range-shuffled frame are checkpointed
+  * ([[graft.Materialize.once]]: reliable when a checkpoint dir is set):
   * the shuffled frame is scanned twice (counts + rank), and the two jobs
   * must see the SAME partitioning for the pid↔offset map to line up —
   * re-deriving the shuffle per job would re-run the range-bounds
@@ -55,7 +56,7 @@ object Ranks {
                       nCol: Option[String] = None): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val snap = df.localCheckpoint()
+    val snap = graft.Materialize.once(df)
     // The SHUFFLED frame is checkpointed, not just the input: the counts
     // job below and the rank join are two separate jobs, and
     // `repartitionByRange` draws its range boundaries from reservoir
@@ -67,12 +68,11 @@ object Ranks {
     // `parted` once pins one partitioning that both jobs read. The input
     // checkpoint stays so the range-bounds sampling pass and the shuffle
     // write read one materialized input instead of recomputing it.
-    val parted = snap.repartitionByRange(order: _*)
+    val parted = graft.Materialize.once(snap.repartitionByRange(order: _*)
       .sortWithinPartitions(order: _*)
       .withColumn("_mono", monotonically_increasing_id())
       .withColumn("_pid", shiftright(col("_mono"), 33).cast("int"))
-      .withColumn("_lrn", col("_mono").bitwiseAND(lit((1L << 33) - 1)) + 1L)
-      .localCheckpoint()
+      .withColumn("_lrn", col("_mono").bitwiseAND(lit((1L << 33) - 1)) + 1L))
     val counts = parted.groupBy(col("_pid")).agg(count(lit(1)).as("_c"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
     val n = counts.map(_._2).sum

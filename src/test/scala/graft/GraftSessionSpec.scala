@@ -322,6 +322,37 @@ class GraftSessionSpec extends SparkSpec {
       .toSeq == Seq((1L, 10L, null), (2L, 99L, null), (3L, 30L, "x")))
   }
 
+  test("UPDATE ... FROM ... RETURNING a source column rewrites only the matched batch") {
+    import scala.jdk.CollectionConverters._
+    val root = graft.TmpDirs.create("graft")
+    val g = GraftSession(spark, root)
+    g.execute("CREATE TABLE uf (k BIGINT, v BIGINT)")
+    g.execute("INSERT INTO uf VALUES (1, 10), (2, 20)") // batch 0
+    g.execute("INSERT INTO uf VALUES (3, 30), (4, 40)") // batch 1
+    g.execute("INSERT INTO uf VALUES (5, 50), (6, 60)") // batch 2
+    g.execute("CREATE TABLE ufsrc (s_k BIGINT, note STRING)")
+    g.execute("INSERT INTO ufsrc VALUES (4, 'four')")
+    val data = java.nio.file.Paths.get(root, "uf", "data")
+    def snapshot(): Map[String, Seq[(String, Seq[Byte])]] =
+      Files.list(data).iterator.asScala.toSeq.map { d =>
+        d.getFileName.toString -> Files.list(d).iterator.asScala.toSeq
+          .map(f => f.getFileName.toString -> Files.readAllBytes(f).toSeq)
+          .sortBy(_._1)
+      }.toMap
+    val before = snapshot()
+    val ret = g.execute("""UPDATE uf SET v = v + 1 FROM ufsrc
+      WHERE uf.k = ufsrc.s_k RETURNING k, v, note""")
+    assert(ret.as[(Long, Long, String)].collect().toSeq == Seq((4L, 41L, "four")))
+    val after = snapshot()
+    assert(after.keySet == Set("batch_00000000", "batch_00000002",
+      "batch_00000003"), s"unexpected batch dirs ${after.keySet}")
+    Seq("batch_00000000", "batch_00000002").foreach { b =>
+      assert(after(b) == before(b), s"$b was rewritten")
+    }
+    assert(g.table("uf").orderBy("k").as[(Long, Long)].collect().toSeq ==
+      Seq((1L, 10L), (2L, 20L), (3L, 30L), (4L, 41L), (5L, 50L), (6L, 60L)))
+  }
+
   test("a multi-row VALUES insert lands as one part file") {
     import scala.jdk.CollectionConverters._
     val root = graft.TmpDirs.create("graft")

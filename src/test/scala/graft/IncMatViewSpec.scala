@@ -35,6 +35,25 @@ class IncMatViewSpec extends SparkSpec {
       Seq(("de", 2L, 7L), ("en", 3L, 31L), ("fr", 1L, 7L)))
   }
 
+  test("a refresh that fails validation keeps the pre-refresh rows") {
+    val s = g
+    s.execute("CREATE TABLE base (lang STRING, n_chars BIGINT)")
+    s.execute("INSERT INTO base VALUES ('en', 10), ('de', 5)")
+    s.createIncrementalMatView("mv", "base", Seq("lang"),
+      Seq(("count", "*", "n"), ("sum", "n_chars", "chars")))
+    s.addCheckConstraint("mv", "small", "chars < 100")
+    s.execute("INSERT INTO base VALUES ('en', 500)")
+    intercept[IllegalStateException] {
+      s.execute("REFRESH MATERIALIZED VIEW mv")
+    }
+    assert(docs(s) == Seq(("de", 1L, 5L), ("en", 1L, 10L)),
+      "a failed incremental refresh must leave the matview as it was")
+    // the full-rebuild mode validates before its swap too
+    s.update("base", Map("n_chars" -> lit(1L)), col("lang") === "de")
+    intercept[IllegalStateException] { s.refreshIncrementalMatView("mv") }
+    assert(docs(s) == Seq(("de", 1L, 5L), ("en", 1L, 10L)))
+  }
+
   test("min/max merge correctly across delta refreshes") {
     val s = g
     s.execute("CREATE TABLE base (lang STRING, n_chars BIGINT)")

@@ -29,6 +29,26 @@ class JsonbSpec extends SparkSpec {
       Seq("x'y", 42)) == "SELECT * FROM t WHERE a = 'x''y' AND b = 42")
   }
 
+  test("rewrite: a $n inside a literal is text") {
+    assert(Jsonb.rewrite("SELECT 'costs $1' AS s, $1 AS v", Seq(5))
+      == "SELECT 'costs $1' AS s, 5 AS v")
+  }
+
+  test("rewrite: a bound value spelling $n is data, never re-bound") {
+    assert(Jsonb.rewrite("SELECT $1 AS a, $2 AS b", Seq("x", "$1"))
+      == "SELECT 'x' AS a, '$1' AS b")
+  }
+
+  test("rewrite: $n binds whole indexes and keys the jsonb operators") {
+    // two-digit indexes bind whole; unbound indexes stay as written
+    val twelve = (1 to 12).map(i => s"v$i")
+    assert(Jsonb.rewrite("SELECT $12, $1, $13", twelve)
+      == "SELECT 'v12', 'v1', $13")
+    // a bound literal still keys the jsonb operators
+    assert(Jsonb.rewrite("SELECT props->>$1 FROM t", Seq("k"))
+      == "SELECT get_json_object(props, '$.k') FROM t")
+  }
+
   test("rewrite: operator spellings inside string literals pass through") {
     // `->>` inside a literal (with '' escapes) must NOT be rewritten
     val q1 = "SELECT * FROM t WHERE note = 'a->>''k'''"

@@ -158,6 +158,28 @@ class MergeSpec extends SparkSpec {
     assert(rows(g).size == 3, "refused MERGE leaves the parent intact")
   }
 
+  test("a DELETE arm on a table with a self-referential FK is refused") {
+    // the DELETE path folds self-FK CASCADE/RESTRICT into its one rewrite;
+    // a MERGE DELETE arm would skip them and leave (2,1), (3,2) dangling
+    val g = fresh()
+    g.execute("CREATE TABLE emp (id BIGINT, boss BIGINT)")
+    g.execute("INSERT INTO emp VALUES (1, NULL), (2, 1), (3, 2)")
+    g.addForeignKey("emp", "boss", "emp", "id", g.Cascade)
+    g.execute("CREATE TABLE gone (gid BIGINT)")
+    g.execute("INSERT INTO gone VALUES (1)")
+    val e = intercept[IllegalArgumentException] {
+      g.execute("""
+        MERGE INTO emp USING gone ON emp.id = gone.gid
+        WHEN MATCHED THEN DELETE
+      """).collect()
+    }
+    assert(e.getMessage.contains("emp") && e.getMessage.contains("use DELETE"))
+    assert(g.table("emp").count() == 3, "a refused MERGE leaves emp intact")
+    // the DELETE spelling runs the cascade closure
+    g.execute("DELETE FROM emp WHERE id = 1")
+    assert(g.table("emp").count() == 0)
+  }
+
   test("MERGE through the cursor-style execute is len()-able (affected)") {
     val g = fresh(); seed(g)
     val src = Seq((1L, 1L), (5L, 5L)).toDF("sid", "delta")

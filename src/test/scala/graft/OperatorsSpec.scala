@@ -871,4 +871,27 @@ class MaterializeSpec extends SparkSpec {
       graft.TmpDirs.deleteRec(new java.io.File(dir))
     }
   }
+
+  test("a self-FK CASCADE delete checkpoints under a set checkpoint dir") {
+    val g = graft.api.GraftSession(spark, graft.TmpDirs.create("graft_ckfk"))
+    g.execute("CREATE TABLE emp (id BIGINT, boss BIGINT)")
+    g.execute("INSERT INTO emp VALUES (1, NULL), (2, 1), (3, 2), (9, NULL)")
+    g.addForeignKey("emp", "boss", "emp", "id", g.Cascade)
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    spark.sparkContext.setCheckpointDir(dir)
+    try {
+      def filesUnder(f: java.io.File): Int =
+        Option(f.listFiles).getOrElse(Array.empty)
+          .map(c => if (c.isDirectory) filesUnder(c) else 1).sum
+      val gone = g.delete("emp", col("id") === 1L)
+      assert(gone.select("id").as[Long].collect().sorted.toSeq
+        == Seq(1L, 2L, 3L))
+      assert(g.table("emp").select("id").as[Long].collect().toSeq == Seq(9L))
+      assert(filesUnder(new java.io.File(dir)) > 0,
+        s"the cascade closure must checkpoint reliably under $dir")
+    } finally {
+      spark.sparkContext.setCheckpointDir(null)
+      graft.TmpDirs.deleteRec(new java.io.File(dir))
+    }
+  }
 }
