@@ -587,8 +587,8 @@ class GraftSession(val spark: SparkSession, val root: String) {
   def updateFrom(name: String, other: DataFrame, joinCond: Column,
                  set: Map[String, Column]): DataFrame =
     mergeRows(name, other, joinCond,
-      Seq(GraftSession.MergeWhen(true, None, GraftSession.MergeUpdate(set))), name)
-      .select(table(name).columns.map(col).toSeq: _*)
+      Seq(GraftSession.MergeWhen(true, None, GraftSession.MergeUpdate(set))),
+      name, carrySource = false).drop("merge_action")
 
   /** MERGE INTO (SQL:2003; PG 15 brings it to the dialect the reference
     * speaks — the reference itself stops at UPDATE…FROM, so this exceeds
@@ -611,21 +611,22 @@ class GraftSession(val spark: SparkSession, val root: String) {
     * UPDATE/DELETE/INSERT — the PG 17 `merge_action()` surface). */
   def merge(name: String, source: DataFrame, on: Column,
             whens: Seq[GraftSession.MergeWhen],
-            targetAlias: Option[String] = None): DataFrame = {
-    val cols = table(name).columns :+ "merge_action"
-    mergeRows(name, source, on, whens, targetAlias.getOrElse(name))
-      .select(cols.map(col).toSeq: _*)
-  }
+            targetAlias: Option[String] = None): DataFrame =
+    mergeRows(name, source, on, whens, targetAlias.getOrElse(name),
+      carrySource = false)
 
   /** The MERGE core behind [[merge]] and [[updateFrom]]: the staged
-    * affected rows carry the target columns, the source's non-colliding
-    * columns (PG 17 lets `MERGE … RETURNING` and `UPDATE … FROM …
-    * RETURNING` name them; NULL on INSERT rows) and `merge_action`. A
+    * affected rows carry the target columns and `merge_action`, and with
+    * `carrySource` also the source's non-colliding columns (PG lets
+    * `UPDATE … FROM … RETURNING` name them; NULL on INSERT rows). A
     * source column is non-colliding when no target column, other source
     * column or `merge_action` shares its name (case-insensitively) and it
-    * is not a reserved `__graft_` helper. */
+    * is not a reserved `__graft_` helper. Only a RETURNING that reads them
+    * should carry them: they are written with the staged rows, and a
+    * column parquet cannot store (an untyped NULL) fails that write. */
   private def mergeRows(name: String, source: DataFrame, on: Column,
-      whens: Seq[GraftSession.MergeWhen], alias: String): DataFrame = {
+      whens: Seq[GraftSession.MergeWhen], alias: String,
+      carrySource: Boolean): DataFrame = {
     import GraftSession._
     require(whens.nonEmpty, "MERGE needs at least one WHEN clause")
     val base = table(name).as(alias)
@@ -640,9 +641,10 @@ class GraftSession(val spark: SparkSession, val root: String) {
       fks(name).exists(_.parent == name)),
       s"MERGE … THEN DELETE on $name, which has a self-referential FK, is " +
         "unsupported; use DELETE (it folds self-FK actions into one rewrite)")
-    val srcExtra = source.columns.filter(c => !c.startsWith("__graft_") &&
-      (baseCols ++ source.columns :+ "merge_action")
-        .count(_.equalsIgnoreCase(c)) == 1)
+    val srcExtra = if (!carrySource) Seq.empty[String]
+      else source.columns.toSeq.filter(c => !c.startsWith("__graft_") &&
+        (baseCols ++ source.columns :+ "merge_action")
+          .count(_.equalsIgnoreCase(c)) == 1)
     matchedWhens.foreach(w => require(!w.action.isInstanceOf[MergeInsert],
       "WHEN MATCHED cannot INSERT"))
     insertWhens.foreach(w => require(
@@ -854,10 +856,7 @@ class GraftSession(val spark: SparkSession, val root: String) {
     val olds = listBatches(name)
     // rewrites cluster on the indexed columns (see createIndex) — this
     // is where an index becomes physically real
-    val snapshot = clusterByIndex(name, table(name))
-    val folded = swapBatches(name, snapshot, olds)
-    state(name).schema = snapshot.schema
-    persistMeta(name)
+    val folded = swapAll(name, clusterByIndex(name, table(name)))
     recordFold(name, folded.getOrElse(""), olds.map(_.getFileName.toString))
     // vacuum the staged RETURNING dirs of past DML statements (their lazy
     // result frames are dead after a compact — documented divergence)
@@ -1137,14 +1136,20 @@ class GraftSession(val spark: SparkSession, val root: String) {
   }
 
   /** Full rewrite: stages RETURNING, then replaces every batch with
-    * `newData` through [[swapBatches]]; the table's schema becomes
-    * `newData`'s. */
+    * `newData` ([[swapAll]]). */
   private def overwrite(name: String, newData: DataFrame, returning: DataFrame): DataFrame = {
     val returned = stageReturning(name, returning)
-    swapBatches(name, newData, listBatches(name))
-    state(name).schema = newData.schema
-    persistMeta(name)
+    swapAll(name, newData)
     returned
+  }
+
+  /** Replaces every batch of `name` with `rows` through [[swapBatches]];
+    * the table's schema becomes `rows`'. Returns the new batch name. */
+  private def swapAll(name: String, rows: DataFrame): Option[String] = {
+    val batch = swapBatches(name, rows, listBatches(name))
+    state(name).schema = rows.schema
+    persistMeta(name)
+    batch
   }
 
   /** RETURNING materializes DISTRIBUTED — executors write it to a
@@ -1322,12 +1327,32 @@ class GraftSession(val spark: SparkSession, val root: String) {
     replaceRows(name, sql(views(name)))
   }
 
-  /** A matview refresh's write: validates `rows` as an insert, then
-    * replaces every batch of `name` with them through [[overwrite]]. The
-    * staged write reads the old batches before the swap deletes them, so
-    * `rows` may read `name` itself. */
+  /** A matview refresh's write: validates `rows` as an insert, fires the
+    * delete actions of other tables' FKs that reference `name` for the
+    * keys the refresh drops (values of a referenced column that no new row
+    * carries; RESTRICT refuses before any swap), then replaces every batch
+    * of `name` with `rows` through [[overwrite]]. The staged write reads
+    * the old batches before the swap deletes them, so `rows` may read
+    * `name` itself. */
   private def replaceRows(name: String, rows: DataFrame): Unit = {
     validateInsert(name, rows)
+    val refCols = fks.toSeq.flatMap { case (child, childFks) =>
+      childFks.filter(fk => fk.parent == name && child != name)
+        .map(_.parentCol)
+    }.distinctBy(_.toLowerCase)
+    if (refCols.nonEmpty) {
+      // one branch per referenced column, carrying its dropped keys and
+      // NULL in the others: each FK action reads its own column and
+      // skips NULLs
+      val old = table(name).select(refCols.map(col): _*)
+      val fields = old.schema.fields.toSeq
+      applyFkDeleteActions(name, fields.indices.map { i =>
+        old.select(fields(i).name).except(rows.select(fields(i).name))
+          .select(fields.indices.map(j =>
+            if (j == i) col(fields(j).name)
+            else lit(null).cast(fields(j).dataType).as(fields(j).name)): _*)
+      }.reduce(_ union _))
+    }
     overwrite(name, rows, spark.emptyDataFrame)
   }
 
@@ -2138,14 +2163,13 @@ class GraftSession(val spark: SparkSession, val root: String) {
         fromSrc match {
           case Some(src) =>
             // a one-arm MERGE; RETURNING may reference the FROM source's
-            // columns (legal in PG), which the core's affected rows carry —
-            // without RETURNING the statement yields the post-update target
-            // rows only
+            // columns (legal in PG), which the core's affected rows then
+            // carry — without RETURNING the statement yields the
+            // post-update target rows only
             val affected = mergeRows(name, parseTableRef(src), where, Seq(
               GraftSession.MergeWhen(true, None, GraftSession.MergeUpdate(setMap))),
-              name).drop("merge_action")
-            retList.map(applyReturning(affected.as(name), _)).getOrElse(
-              affected.select(table(name).columns.map(col).toSeq: _*))
+              name, carrySource = retList.isDefined).drop("merge_action")
+            retList.map(applyReturning(affected.as(name), _)).getOrElse(affected)
           case None =>
             val result = update(name, setMap, where)
             retList.map(applyReturning(result.as(name), _)).getOrElse(result)

@@ -54,6 +54,35 @@ class IncMatViewSpec extends SparkSpec {
     assert(docs(s) == Seq(("de", 1L, 5L), ("en", 1L, 10L)))
   }
 
+  test("a refresh that drops a key fires the FKs referencing the matview") {
+    val s = g
+    s.execute("CREATE TABLE base (lang STRING, n_chars BIGINT)")
+    s.execute("INSERT INTO base VALUES ('en', 10), ('de', 5), ('fr', 7)")
+    s.createIncrementalMatView("mv", "base", Seq("lang"),
+      Seq(("count", "*", "n"), ("sum", "n_chars", "chars")))
+    s.createMatView("langs", "SELECT DISTINCT lang FROM base")
+    s.execute("CREATE TABLE keep (lang STRING)")
+    s.execute("INSERT INTO keep VALUES ('de')")
+    s.addForeignKey("keep", "lang", "mv", "lang")
+    s.execute("CREATE TABLE pin (lang STRING, tag STRING)")
+    s.execute("INSERT INTO pin VALUES ('de', 'x'), ('en', 'y')")
+    s.addForeignKey("pin", "lang", "langs", "lang", s.Cascade)
+    s.execute("DELETE FROM base WHERE lang = 'de'")
+    // incremental matview (full-rebuild mode): RESTRICT refuses the
+    // refresh before its swap
+    val e = intercept[IllegalStateException] { s.refreshMatView("mv") }
+    assert(e.getMessage.contains("keep"))
+    assert(docs(s) == Seq(("de", 1L, 5L), ("en", 1L, 10L), ("fr", 1L, 7L)))
+    s.execute("DELETE FROM keep WHERE lang = 'de'")
+    s.refreshMatView("mv")
+    assert(docs(s) == Seq(("en", 1L, 10L), ("fr", 1L, 7L)))
+    // plain matview: CASCADE removes the rows of the dropped key only
+    s.refreshMatView("langs")
+    assert(s.table("langs").as[String].collect().sorted.toSeq == Seq("en", "fr"))
+    assert(s.table("pin").as[(String, String)].collect().toSeq ==
+      Seq(("en", "y")))
+  }
+
   test("min/max merge correctly across delta refreshes") {
     val s = g
     s.execute("CREATE TABLE base (lang STRING, n_chars BIGINT)")

@@ -180,6 +180,23 @@ class MergeSpec extends SparkSpec {
     assert(g.table("emp").count() == 0)
   }
 
+  test("a source column parquet cannot store leaves MERGE unaffected") {
+    // the staged affected rows hold only target columns (and
+    // merge_action), so a CalendarInterval source column is read by the
+    // arms, never written; updateFrom likewise
+    val g = fresh(); seed(g)
+    val res = g.execute("""
+      MERGE INTO t USING (SELECT 2 AS sid, make_interval(0, 1) AS gap) s
+      ON t.id = s.sid
+      WHEN MATCHED THEN UPDATE SET name = cast(gap AS STRING)
+    """)
+    assert(res.columns.toSeq == Seq("id", "name", "qty", "merge_action"))
+    g.updateFrom("t", g.sql("SELECT 2 AS sid, make_interval(0, 1) AS gap"),
+      col("t.id") === col("sid"), Map("qty" -> expr("qty + 1")))
+    assert(rows(g) ==
+      Seq((1L, "a", 10L), (2L, "1 months", 21L), (3L, "c", 30L)))
+  }
+
   test("MERGE through the cursor-style execute is len()-able (affected)") {
     val g = fresh(); seed(g)
     val src = Seq((1L, 1L), (5L, 5L)).toDF("sid", "delta")

@@ -61,16 +61,6 @@ class SqlRouterSpec extends SparkSpec {
       .as[Long].head() == 2)
   }
 
-  test("a $n inside a string literal is text, not a parameter") {
-    val r = g.sql("SELECT 'costs $1' AS s, $1 AS v", Seq(5)).head()
-    assert(r.getString(0) == "costs $1" && r.getInt(1) == 5)
-  }
-
-  test("a bound value spelling $n is not bound again") {
-    val r = g.sql("SELECT $1 AS a, $2 AS b", Seq("x", "$1")).head()
-    assert(r.getString(0) == "x" && r.getString(1) == "$1")
-  }
-
   test("jsonb operators ride through execute") {
     val s = g
     s.execute("CREATE TABLE ev (id BIGINT, props STRING)")
