@@ -6,9 +6,11 @@ import scala.util.Using
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, count, hll_sketch_agg, hll_union_agg, lit, max, min, monotonically_increasing_id, raise_error, regexp_extract, row_number, sum, when}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedRelation, UnresolvedSubqueryColumnAliases}
+import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
 import org.apache.spark.sql.catalyst.plans.logical.{Distinct, LocalRelation, LogicalPlan, SubqueryAlias, Union, UnresolvedWith}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
+import graft.functions.Jsonb.Masked
 import graft.sources.DynamicSchema
 
 /** Session + catalog facade — the Spark-native equivalent of the
@@ -26,6 +28,7 @@ import graft.sources.DynamicSchema
   * from the reference's OLTP half).
   */
 class GraftSession(val spark: SparkSession, val root: String) {
+  import GraftSession._
   private val rootPath = Paths.get(root)
   Files.createDirectories(rootPath)
 
@@ -131,11 +134,11 @@ class GraftSession(val spark: SparkSession, val root: String) {
       }
   }
 
-  /** CREATE TABLE column DDL with enum-typed columns rewritten to STRING;
-    * returns the schema plus the membership CHECKs to attach. A NULL value
-    * still passes the CHECK (PG enum columns are nullable). */
-  private def resolveEnumDdl(colsDdl: String): (StructType, Seq[(String, String)]) = {
-    val entries = splitTopLevel(colsDdl).map(_.trim).filter(_.nonEmpty)
+  /** CREATE TABLE column DDL entries with enum-typed columns rewritten to
+    * STRING; returns the schema plus the membership CHECKs to attach. A
+    * NULL value still passes the CHECK (PG enum columns are nullable). */
+  private def resolveEnumDdl(columns: Seq[String]): (StructType, Seq[(String, String)]) = {
+    val entries = columns.map(_.trim).filter(_.nonEmpty)
     val rewritten = scala.collection.mutable.Buffer[String]()
     val checksOut = scala.collection.mutable.Buffer[(String, String)]()
     entries.foreach { e =>
@@ -204,12 +207,12 @@ class GraftSession(val spark: SparkSession, val root: String) {
   }
 
   /** Relations a view body actually references: UnresolvedRelation names
-    * from the parsed (not analyzed) plan, subqueries included. Parser-level
-    * resolution avoids the textual-match trap where a table named `order`
-    * would "depend" on every body containing ORDER BY. Falls back to a
-    * word-boundary textual match only if the stored body fails to parse. */
+    * from the parsed (not analyzed) plan of the prepared body, subqueries
+    * included. Parser-level resolution avoids the textual-match trap where
+    * a table named `order` would "depend" on every body containing ORDER
+    * BY. None when the body does not parse. */
   private def referencedRelations(body: String): Option[Set[String]] =
-    parsed(body).map(relationsOf)
+    parsed(prepare(body).restored).map(relationsOf)
 
   /** Spark's parse of `stmt`, or None when it does not parse. */
   private def parsed(stmt: String): Option[LogicalPlan] =
@@ -1632,36 +1635,14 @@ class GraftSession(val spark: SparkSession, val root: String) {
     * a qualifier that [[sql]] strips from `db.table` references. */
   private val databases = scala.collection.mutable.Set[String]()
 
-  private def stripDbQualifiers(query: String): String =
-    if (databases.isEmpty) query
-    else {
-      def strip(seg: String): String = databases.foldLeft(seg) { (q, db) =>
-        ("(?i)\\b" + java.util.regex.Pattern.quote(db) + "\\.(\\w)").r
-          .replaceAllIn(q, m => m.group(1))
-      }
-      // rewrite only OUTSIDE single-quoted literals and comments — a
-      // string containing 'bench.events' (or a comment naming it) must
-      // pass through untouched; left-to-right scan keeps an apostrophe
-      // inside a comment from mis-pairing with a later quote
-      val out = new StringBuilder
-      var last = 0
-      opaqueRe.findAllMatchIn(query).foreach { m =>
-        out.append(strip(query.substring(last, m.start)))
-        out.append(m.matched)
-        last = m.end
-      }
-      out.append(strip(query.substring(last)))
-      out.toString
+  /** `text` without the `db.` qualifier of any recorded database. Runs on
+    * masked text, so a literal or comment naming `bench.events` stays as
+    * written. */
+  private def stripDbQualifiers(text: String): String =
+    databases.foldLeft(text) { (q, db) =>
+      ("(?i)\\b" + java.util.regex.Pattern.quote(db) + "\\.(?=\\w)").r
+        .replaceAllIn(q, "")
     }
-
-  /** String literals (with '' escapes) and SQL comments — the regions the
-    * textual affordance layer must never rewrite. Alternation order plus
-    * left-to-right scanning makes an apostrophe inside `-- …` inert. */
-  private val opaqueRe = "(?s)'(?:[^']|'')*'|--[^\n]*|/\\*.*?\\*/".r
-
-  /** True when index `at` of `s` falls inside a literal or comment. */
-  private def inOpaque(s: String, at: Int): Boolean =
-    opaqueRe.findAllMatchIn(s).exists(m => m.start <= at && at < m.end)
 
   /** Monotonic sequence (reference node_sequence): file-backed counter
     * with PG START/INCREMENT options (reference `CREATE SEQUENCE ... START
@@ -1690,29 +1671,48 @@ class GraftSession(val spark: SparkSession, val root: String) {
     next
   }
 
-  /** Replaces each `nextval('seq')` in a VALUES literal list with the next
-    * sequence value, left to right — one call per occurrence, like PG's
-    * per-row volatile evaluation over literal rows. */
-  private def substituteNextval(values: String): String =
-    """(?i)nextval\(\s*'(\w+)'\s*\)""".r
-      .replaceAllIn(values, m => nextSequence(m.group(1)).toString)
+  /** Replaces each `nextval('seq')` in a masked VALUES literal list with
+    * the next sequence value, left to right: one call per occurrence, like
+    * PG's per-row volatile evaluation over literal rows. */
+  private def substituteNextval(m: Masked, values: String): String =
+    nextvalRe.replaceAllIn(values, c =>
+      scala.util.matching.Regex.quoteReplacement(m.literalOf(c.group(1))
+        .filter(_.matches("\\w+")).fold(c.matched)(nextSequence(_).toString)))
 
   // ---------------------------------------------------------------- SQL
 
-  /** SQL entry point: PG-dialect affordances (jsonb `->`/`->>`/`#>`/`#>>`,
-    * `::?` assertions, `$n` parameters) are rewritten to Spark SQL by
-    * [[graft.functions.Jsonb.rewrite]], the catalog tables and views the
-    * statement references are registered as temp views, then Catalyst
-    * takes over. The statement is parsed once, for both the registration
-    * and the route: `WITH RECURSIVE … UNION ALL` runs on Spark's own
-    * recursion, and only a recursive member with UNION (dedup) semantics,
-    * which Spark rejects, lowers to the driver loop ([[unionRecursion]]). */
-  def sql(query: String, params: Seq[Any] = Nil): DataFrame = {
-    discoverTables()
-    val stmt = expandMacros(
-      graft.functions.Jsonb.rewrite(stripDbQualifiers(query), params))
+  /** SQL entry point: the statement takes the text pass ([[prepare]]),
+    * then [[run]] registers the catalog tables and views it references as
+    * temp views and hands it to Catalyst. */
+  def sql(query: String, params: Seq[Any] = Nil): DataFrame =
+    run(prepare(query, params).restored)
+
+  /** The text pass every statement takes once, before any parse, on one
+    * mask of its literals and comments ([[graft.functions.Jsonb.Masked]]):
+    * db qualifiers stripped, `$n` bound and jsonb operators rewritten
+    * ([[graft.functions.Jsonb.rewrite]]), comments blanked, macros
+    * expanded. Literals stay masked, so [[execute]] routes and carves
+    * without looking inside one; each carved piece is restored alone. */
+  private def prepare(statement: String, params: Seq[Any] = Nil): Masked = {
+    val m = new Masked(statement.trim)
+    m.text = stripDbQualifiers(m.text)
+    graft.functions.Jsonb.rewrite(m, params)
+    m.blankComments()
+    // a CREATE MACRO's own head is a definition, not a call site; its body
+    // expands where it is called
+    if (!macroRe.matches(m.text)) expandMacros(m)
+    m
+  }
+
+  /** Runs a prepared query: parsed once, for both the registration of the
+    * relations it reads and the route (a statement that does not parse
+    * registers nothing; spark.sql reports the parse error). `WITH
+    * RECURSIVE … UNION ALL` runs on Spark's own recursion, and only a
+    * recursive member with UNION (dedup) semantics, which Spark rejects,
+    * lowers to the driver loop ([[unionRecursion]]). */
+  private def run(stmt: String): DataFrame = {
     val plan = parsed(stmt)
-    registerRelationsFor(plan)
+    plan.foreach(p => registerRelationsFor(relationsOf(p)))
     plan.flatMap(unionRecursion).getOrElse(spark.sql(stmt))
   }
 
@@ -1785,38 +1785,29 @@ class GraftSession(val spark: SparkSession, val root: String) {
     }
 
   /** Registers ONLY the relations a statement references (transitively,
-    * through stored view bodies) as temp views. Registering the whole
-    * catalog per statement is O(tables x batches) driver work — fine at
-    * 10 tables, pathological at 1,000 (each registration lists the
-    * table's batch dirs and builds its scan plan in [[table]]). Falls
-    * back to register-all when the statement doesn't parse (Catalyst
-    * then reports the real error).
+    * through stored view bodies) as temp views, fresh: each registration
+    * lists the table's batches now. Registering the whole catalog per
+    * statement is O(tables x batches) driver work — fine at 10 tables,
+    * pathological at 1,000 (each registration lists the table's batch
+    * dirs and builds its scan plan in [[table]]).
     * Names that resolve to neither a table nor a stored view (CTE
     * aliases, pre-existing temp views) are ignored. */
-  private def registerRelationsFor(stmt: Option[LogicalPlan]): Unit = {
-    stmt.map(relationsOf) match {
-      case None =>
-        tables.keys.foreach(n => table(n).createOrReplaceTempView(n))
-        registerViewsInDependencyOrder(
-          views.toSeq.filterNot { case (n, _) => tables.contains(n) },
-          strict = false)
-      case Some(names) =>
-        // transitive closure: a referenced view pulls in its own references
-        val needed = scala.collection.mutable.Set[String]()
-        def visit(n: String): Unit = if (needed.add(n)) {
-          if (!tables.keys.exists(_.equalsIgnoreCase(n)))
-            views.collectFirst {
-              case (v, body) if v.equalsIgnoreCase(n) => body
-            }.foreach(body => referencedRelations(body)
-              .getOrElse(Set.empty).foreach(visit))
-        }
-        names.foreach(visit)
-        def hit(n: String) = needed.exists(_.equalsIgnoreCase(n))
-        tables.keys.filter(hit)
-          .foreach(n => table(n).createOrReplaceTempView(n))
-        registerViewsInDependencyOrder(views.toSeq.filter { case (n, _) =>
-          hit(n) && !tables.contains(n) })
+  private def registerRelationsFor(names: Set[String]): Unit = {
+    discoverTables()
+    // transitive closure: a referenced view pulls in its own references
+    val needed = scala.collection.mutable.Set[String]()
+    def visit(n: String): Unit = if (needed.add(n)) {
+      if (!tables.keys.exists(_.equalsIgnoreCase(n)))
+        views.collectFirst {
+          case (v, body) if v.equalsIgnoreCase(n) => body
+        }.foreach(body => referencedRelations(body)
+          .getOrElse(Set.empty).foreach(visit))
     }
+    names.foreach(visit)
+    def hit(n: String) = needed.exists(_.equalsIgnoreCase(n))
+    tables.keys.filter(hit).foreach(n => table(n).createOrReplaceTempView(n))
+    registerViewsInDependencyOrder(views.toSeq.filter { case (n, _) =>
+      hit(n) && !tables.contains(n) })
   }
 
   /** View bodies are analyzed eagerly at registration, so a view over
@@ -1824,15 +1815,12 @@ class GraftSession(val spark: SparkSession, val root: String) {
     * TOPOLOGICAL, computed from the parsed bodies ([[referencedRelations]]
     * already does the parse) — one pass, O(V+E), instead of the previous
     * O(V²) exception-driven retry. A registration that still fails did so
-    * for a real (non-ordering) reason: in `strict` mode — the referenced-
-    * only path, where every pending view is needed by the statement — the
-    * failure is rethrown annotated with the view's name, so the user sees
-    * the body's actual analysis error instead of a generic "table or view
-    * not found". The register-all fallback (statement didn't parse) stays
-    * lenient: an unrelated broken view must not mask the main statement's
-    * own error. */
+    * for a real (non-ordering) reason; every pending view is needed by the
+    * statement, so the failure is rethrown annotated with the view's name,
+    * and the user sees the body's actual analysis error instead of a
+    * generic "table or view not found". */
   private def registerViewsInDependencyOrder(
-      pending0: Seq[(String, String)], strict: Boolean = true): Unit = {
+      pending0: Seq[(String, String)]): Unit = {
     if (pending0.isEmpty) return
     val byName = pending0.map(p => p._1.toLowerCase -> p).toMap
     val done = scala.collection.mutable.Set[String]()
@@ -1850,22 +1838,23 @@ class GraftSession(val spark: SparkSession, val root: String) {
         }
     byName.keys.toSeq.sorted.foreach(visit)
     order.foreach { case (n, body) =>
-      try spark.sql(body).createOrReplaceTempView(n)
-      catch {
-        case scala.util.control.NonFatal(e) if strict =>
-          throw new IllegalStateException(
-            s"view $n failed to register: ${e.getMessage}", e)
-        case scala.util.control.NonFatal(_) => // lenient: see scaladoc
+      try spark.sql(prepare(body).restored).createOrReplaceTempView(n)
+      catch { case scala.util.control.NonFatal(e) =>
+        throw new IllegalStateException(
+          s"view $n failed to register: ${e.getMessage}", e)
       }
     }
   }
 
   /** Statement router — the reference's `execute_sql` entry point
     * (integration/cpp/wrapper_dispatcher.cpp:91: parse → route DDL / DML /
-    * query). DDL+DML forms are parsed with small regexes and routed to the
-    * session APIs (so dynamic tables, constraints and staged overwrites
-    * apply); everything else goes through [[sql]] (PG-dialect rewrite +
-    * Catalyst). Returns the affected/returned rows (empty frame for DDL).
+    * query). The statement takes [[sql]]'s text pass ([[prepare]]) once;
+    * DDL+DML forms are matched with small regexes on the still-masked text
+    * and routed to the session APIs (so dynamic tables, constraints and
+    * staged overwrites apply); everything else runs as a query ([[run]]).
+    * DML clauses are carved on the masked text and each expression piece
+    * becomes a Column through [[dmlExpr]]. Returns the affected/returned
+    * rows (empty frame for DDL).
     * Supported DML/DDL surface: CREATE [DYNAMIC] TABLE (enum-typed columns
     * resolve via CREATE TYPE), DROP TABLE, CREATE/DROP TYPE ... AS ENUM,
     * CREATE TYPE ... AS (composite) → struct columns, CREATE SEQUENCE
@@ -1876,89 +1865,28 @@ class GraftSession(val spark: SparkSession, val root: String) {
     * (metadata-only), ALTER TABLE ADD/DROP/RENAME COLUMN,
     * CHECKPOINT/VACUUM [table] → compact, TRUNCATE [TABLE] (schema and
     * constraints survive), SHOW TABLES / DESCRIBE (pg_class-style
-    * introspection), WITH RECURSIVE (via [[sql]]: UNION ALL on Spark's
+    * introspection), WITH RECURSIVE (via [[run]]: UNION ALL on Spark's
     * own recursion, UNION on the driver fixpoint),
     * INSERT INTO ... VALUES / SELECT,
     * UPDATE ... SET ... [FROM src] [WHERE ...] [RETURNING ...],
-    * DELETE FROM ... [USING src] [WHERE ...] [RETURNING ...]. */
+    * DELETE FROM ... [USING src] [WHERE ...] [RETURNING ...],
+    * MERGE INTO ... USING ... ON ... WHEN .... */
   def execute(statement: String, params: Seq[Any] = Nil): DataFrame = {
-    // recorded-database qualifiers are stripped up front, so qualified
-    // names work in every clause (FROM/USING sources, conditions,
-    // RETURNING lists) — the per-regex qualifier below additionally
+    // recorded-database qualifiers are stripped by the text pass, so
+    // qualified names work in every clause (FROM/USING sources,
+    // conditions, RETURNING lists) — the per-regex qualifier additionally
     // tolerates unrecorded ones in statement-head position
-    val stmt = graft.functions.Jsonb.rewrite(
-      stripDbQualifiers(statement.trim), params)
-    val Q = """(?:\w+\.)?"""  // optional db qualifier on object names —
-    // the reference addresses everything as db.table (CREATE DATABASE
-    // below); this session is single-namespace, so the qualifier is
-    // accepted and dropped
-    val createTableRe =
-      ("""(?is)^CREATE\s+TABLE\s+""" + Q + """(\w+)\s*(?:\((.*)\))?\s*;?$""").r
-    val ctasRe =
-      ("""(?is)^CREATE\s+TABLE\s+""" + Q + """(\w+)\s+AS\s+(\(?\s*SELECT\s+.*?)\s*;?$""").r
-    val refreshMvRe =
-      ("""(?is)^REFRESH\s+MATERIALIZED\s+VIEW\s+""" + Q + """(\w+)\s*;?$""").r
-    val createDynRe =
-      ("""(?is)^CREATE\s+DYNAMIC\s+TABLE\s+""" + Q + """(\w+)\s*;?$""").r
-    val dropRe = ("""(?is)^DROP\s+TABLE\s+""" + Q + """(\w+)\s*;?$""").r
-    val insertValuesRe =
-      ("""(?is)^INSERT\s+INTO\s+""" + Q + """(\w+)\s*\(([^)]*)\)\s*VALUES\s*(.*?);?$""").r
-    val insertValuesNoColsRe =
-      ("""(?is)^INSERT\s+INTO\s+""" + Q + """(\w+)\s+VALUES\s*(.*?);?$""").r
-    val insertSelectRe =
-      ("""(?is)^INSERT\s+INTO\s+""" + Q + """(\w+)\s+(SELECT\s+.*?);?$""").r
-    val updateRe =
-      ("""(?is)^UPDATE\s+""" + Q + """(\w+)\s+SET\s+(.*?)\s*;?$""").r
-    val mergeRe =
-      ("""(?is)^MERGE\s+INTO\s+""" + Q + """(\w+)(?:\s+(?:AS\s+)?(\w+))?\s+USING\s+(.+?)\s*;?$""").r
-    val deleteRe =
-      ("""(?is)^DELETE\s+FROM\s+""" + Q + """(\w+)\s*(.*?)\s*;?$""").r
-    val createTypeRe =
-      ("""(?is)^CREATE\s+TYPE\s+""" + Q + """(\w+)\s+AS\s+ENUM\s*\(([^)]*)\)\s*;?$""").r
-    val createCompositeRe =
-      ("""(?is)^CREATE\s+TYPE\s+""" + Q + """(\w+)\s+AS\s*\(([^)]*)\)\s*;?$""").r
-    val dropTypeRe = ("""(?is)^DROP\s+TYPE\s+""" + Q + """(\w+)\s*;?$""").r
-    val macroRe =
-      ("""(?is)^CREATE\s+(?:MACRO|FUNCTION)\s+""" + Q + """(\w+)\s*\(([^)]*)\)\s*(?:AS|RETURN)\s+(.*?);?$""").r
-    val setTzRe =
-      """(?is)^SET\s+TIME\s*ZONE\s+(?:TO\s+)?'?([\w/+-:]+)'?\s*;?$""".r
-    val showTablesRe = """(?is)^SHOW\s+TABLES\s*;?$""".r
-    val truncateRe =
-      ("""(?is)^TRUNCATE\s+(?:TABLE\s+)?""" + Q + """(\w+)\s*;?$""").r
-    val describeRe =
-      ("""(?is)^DESC(?:RIBE)?\s+(?:TABLE\s+)?""" + Q + """(\w+)\s*;?$""").r
-    val createSeqRe =
-      ("""(?is)^CREATE\s+SEQUENCE\s+""" + Q + """(\w+)(?:\s+START\s+(?:WITH\s+)?(-?\d+))?(?:\s+INCREMENT\s+(?:BY\s+)?(-?\d+))?\s*;?$""").r
-    val dropSeqRe = ("""(?is)^DROP\s+SEQUENCE\s+""" + Q + """(\w+)\s*;?$""").r
-    val createIncMvRe =
-      ("""(?is)^CREATE\s+INCREMENTAL\s+MATERIALIZED\s+VIEW\s+""" + Q + """(\w+)\s+AS\s+SELECT\s+(.*?)\s+FROM\s+""" + Q + """(\w+)\s+GROUP\s+BY\s+(.*?)\s*;?$""").r
-    val createMatViewRe =
-      ("""(?is)^CREATE\s+MATERIALIZED\s+VIEW\s+""" + Q + """(\w+)\s+AS\s+(.*?);?$""").r
-    val createViewRe =
-      ("""(?is)^CREATE\s+VIEW\s+""" + Q + """(\w+)\s+AS\s+(.*?);?$""").r
-    val dropViewRe = ("""(?is)^DROP\s+VIEW\s+""" + Q + """(\w+)\s*;?$""").r
-    val createDbRe = """(?is)^CREATE\s+DATABASE\s+(\w+)\s*;?$""".r
-    val dropDbRe = """(?is)^DROP\s+DATABASE\s+(\w+)\s*;?$""".r
-    val createIndexRe =
-      ("""(?is)^CREATE\s+INDEX\s+(\w+)\s+ON\s+""" + Q + """(\w+)\s*\(([^)]*)\)\s*;?$""").r
-    val dropIndexRe = """(?is)^DROP\s+INDEX\s+(\w+)\s*;?$""".r
-    val checkpointRe =
-      ("""(?is)^(?:CHECKPOINT|VACUUM)(?:\s+""" + Q + """(\w+))?\s*;?$""").r
-    val explainRe =
-      """(?is)^EXPLAIN\s+(?:(ANALYZE|FORMATTED|EXTENDED)\s+)?(SELECT\s+.*|WITH\s+.*)\s*;?$""".r
-    val copyToRe =
-      ("""(?is)^COPY\s+(\(.+\)|""" + Q + """\w+)\s+TO\s+'([^']+)'\s*(?:(?:WITH\s*)?\(\s*FORMAT\s+'?(\w+)'?\s*\))?\s*;?$""").r
-    val copyFromRe =
-      ("""(?is)^COPY\s+""" + Q + """(\w+)\s+FROM\s+'([^']+)'\s*(?:(?:WITH\s*)?\(\s*FORMAT\s+'?(\w+)'?\s*\))?\s*;?$""").r
-    val alterAddRe =
-      ("""(?is)^ALTER\s+TABLE\s+""" + Q + """(\w+)\s+ADD\s+(?:COLUMN\s+)?(\w+)\s+([\w()<>, ]+?)\s*;?$""").r
-    val alterDropRe =
-      ("""(?is)^ALTER\s+TABLE\s+""" + Q + """(\w+)\s+DROP\s+(?:COLUMN\s+)?(\w+)\s*;?$""").r
-    val alterRenameRe =
-      ("""(?is)^ALTER\s+TABLE\s+""" + Q + """(\w+)\s+RENAME\s+(?:COLUMN\s+)?(\w+)\s+TO\s+(\w+)\s*;?$""").r
+    val m = prepare(statement, params)
+    def expr(piece: String): Column = dmlExpr(m.restore(piece.trim))
+    def exprs(list: String): Seq[Column] = splitTopLevel(list).map(expr)
+    def setList(sets: String): Map[String, Column] =
+      splitTopLevel(sets).map { kv =>
+        val Array(c, e) = kv.split("=", 2)
+        c.trim -> expr(e)
+      }.toMap
     def empty = spark.emptyDataFrame
-    stmt match {
-      case setTzRe(tz) => setTimezone(tz); empty
+    m.text match {
+      case setTzRe(tz) => setTimezone(m.unquote(tz)); empty
       // catalog introspection (the reference's pg_class/pg_attribute
       // system-table surface — catalog_oids.hpp well-known OIDs —
       // exposed in the relkind vocabulary: r/g/v/m)
@@ -1985,7 +1913,7 @@ class GraftSession(val spark: SparkSession, val root: String) {
             .map(f => (f.name, f.dataType.sql.toLowerCase)).toSeq,
             "column_name", "data_type")
         }
-      case s if s.matches("(?is)^(?:BEGIN|COMMIT|ROLLBACK|ABORT)\\b.*") =>
+      case txnRe() =>
         // MVCC/transactions are dropped by design (SURVEY §1.3): fail with
         // the documented reason instead of a Spark parse error
         throw new UnsupportedOperationException(
@@ -2007,7 +1935,7 @@ class GraftSession(val spark: SparkSession, val root: String) {
       // default (physical plan + node details); ANALYZE executes and
       // reports observed metrics via Spark's cost mode.
       case explainRe(modeOrNull, body) =>
-        val df = sql(body)
+        val df = run(m.restore(body))
         val text = Option(modeOrNull).map(_.toUpperCase) match {
           case Some("EXTENDED") =>
             df.queryExecution.toString
@@ -2026,28 +1954,28 @@ class GraftSession(val spark: SparkSession, val root: String) {
       // distributed write (one file per partition), not a driver funnel;
       // COPY FROM reads with the target table's declared schema so
       // CSV/JSON round-trips don't depend on inference.
-      case copyToRe(src, path, fmtOrNull) =>
+      case copyToRe(src, pathLit, fmtOrNull) =>
+        val path = m.unquote(pathLit)
+        val fmt = Option(fmtOrNull).map(m.unquote)
         val df = {
           val t = src.trim
-          if (t.startsWith("(")) sql(t.substring(1, t.length - 1))
-          else table(stripDbQualifiers(t))
+          if (t.startsWith("(")) run(m.restore(t.substring(1, t.length - 1)))
+          else table(t)
         }
         // write ONCE, then count the written output: a count() before
         // the write would execute the source twice (double scan) and
         // could disagree with the written data for a non-deterministic
         // query. Parquet answers the count from footer metadata alone;
         // formats without in-file stats re-read what was written.
-        copyWrite(df, path, Option(fmtOrNull))
-        val n = Option(fmtOrNull).map(_.toLowerCase)
-          .getOrElse("parquet") match {
+        copyWrite(df, path, fmt)
+        val n = fmt.map(_.toLowerCase).getOrElse("parquet") match {
           case "parquet" => parquetFooterRowCount(path)
-          case _ =>
-            copyRead(path, Option(fmtOrNull), Some(df.schema)).count()
+          case _ => copyRead(path, fmt, Some(df.schema)).count()
         }
         catalogDf(Seq((path, n.toString)), "path", "rows")
-      case copyFromRe(tbl, path, fmtOrNull) =>
+      case copyFromRe(tbl, pathLit, fmtOrNull) =>
         val declared = state(tbl).schema
-        val df = copyRead(path, Option(fmtOrNull),
+        val df = copyRead(m.unquote(pathLit), Option(fmtOrNull).map(m.unquote),
           if (declared.fields.nonEmpty) Some(declared) else None)
         insert(tbl, df)
         empty
@@ -2066,24 +1994,21 @@ class GraftSession(val spark: SparkSession, val root: String) {
       // — select list restricted to bare group columns + algebraic
       // aggregates with mandatory aliases (the merge needs stable names)
       case createIncMvRe(name, selectList, base, groupList) =>
-        val aggRe =
-          """(?i)^(count|sum|min|max|approx_distinct)\s*\(\s*(\*|\w+)\s*\)\s+AS\s+(\w+)$""".r
-        val colRe = """^(\w+)$""".r
         val (keys, aggs) = splitTopLevel(selectList).map(_.trim).foldLeft(
           (Seq.empty[String], Seq.empty[(String, String, String)])) {
-          case ((ks, as), aggRe(f, c, alias)) =>
+          case ((ks, as), incAggRe(f, c, alias)) =>
             (ks, as :+ (f.toLowerCase, c, alias))
-          case ((ks, as), colRe(k)) => (ks :+ k, as)
+          case ((ks, as), incColRe(k)) => (ks :+ k, as)
           case (_, item) => throw new IllegalArgumentException(
             "INCREMENTAL MATERIALIZED VIEW select items must be bare " +
               "group columns or count/sum/min/max/approx_distinct(...) " +
-              s"AS alias — got: $item")
+              s"AS alias — got: ${m.restore(item)}")
         }
         // group keys come from the bare select columns; a GROUP BY list
         // that differs must error, not silently compute another
         // grouping. Grouping is order-insensitive, so compare as sets —
         // `SELECT a, b ... GROUP BY b, a` is the same view.
-        val declared = splitTopLevel(groupList).map(_.trim)
+        val declared = splitTopLevel(groupList).map(g => m.restore(g.trim))
         require(declared.map(_.toLowerCase).toSet ==
             keys.map(_.toLowerCase).toSet,
           "INCREMENTAL MATERIALIZED VIEW: GROUP BY list " +
@@ -2091,12 +2016,14 @@ class GraftSession(val spark: SparkSession, val root: String) {
             s"columns (${keys.mkString(", ")})")
         createIncrementalMatView(name, base, keys, aggs)
         empty
-      case createMatViewRe(name, body) => createMatView(name, body); empty
-      case createViewRe(name, body) => createView(name, body); empty
+      case createMatViewRe(name, body) =>
+        createMatView(name, m.restore(body)); empty
+      case createViewRe(name, body) => createView(name, m.restore(body)); empty
       case dropViewRe(name) => dropView(name); empty
       case macroRe(name, ps, body) =>
         createMacro(name,
-          ps.split(",").map(_.trim).filter(_.nonEmpty).toSeq, body); empty
+          ps.split(",").map(_.trim).filter(_.nonEmpty).toSeq,
+          m.restore(body)); empty
       case createDynRe(name) => createDynamicTable(name); empty
       // CTAS (reference T_CreateTableAsStmt): schema from the analyzed
       // query, rows through the catalog insert path
@@ -2104,7 +2031,7 @@ class GraftSession(val spark: SparkSession, val root: String) {
         val b = body0.trim
         val body = if (b.startsWith("(") && b.endsWith(")"))
           b.substring(1, b.length - 1) else b
-        val df = sql(body)
+        val df = run(m.restore(body))
         createTable(name, df.schema)
         insert(name, df)
         empty
@@ -2115,65 +2042,56 @@ class GraftSession(val spark: SparkSession, val root: String) {
           if colsDdl == null || colsDdl.trim.isEmpty =>
         createDynamicTable(name); empty
       case createTableRe(name, colsDdl) =>
-        val (schema, enumChecks) = resolveEnumDdl(colsDdl)
+        val (schema, enumChecks) =
+          resolveEnumDdl(splitTopLevel(colsDdl).map(m.restore))
         createTable(name, schema)
         enumChecks.foreach { case (cn, ce) => addCheckConstraint(name, cn, ce) }
         empty
       case dropRe(name) => dropTable(name); empty
-      case insertValuesRe(name, cols, values) =>
-        insert(name, spark.sql(
-          s"SELECT * FROM VALUES ${substituteNextval(values)} AS _ins($cols)"))
-        empty
-      case insertValuesNoColsRe(name, values) =>
+      case insertValuesRe(name, colsOrNull, values) =>
         // PG-style INSERT without a column list: positional against the
         // table's declared column order (dynamic tables with no schema yet
         // have no positional meaning — require the explicit list there)
-        val declared = state(name).schema.fieldNames
-        require(declared.nonEmpty,
-          s"INSERT INTO $name VALUES without a column list needs a " +
-            "declared schema; name the columns")
-        insert(name, spark.sql(
-          s"SELECT * FROM VALUES ${substituteNextval(values)} " +
-            s"AS _ins(${declared.mkString(", ")})"))
+        val cols = Option(colsOrNull).getOrElse {
+          val declared = state(name).schema.fieldNames
+          require(declared.nonEmpty,
+            s"INSERT INTO $name VALUES without a column list needs a " +
+              "declared schema; name the columns")
+          declared.mkString(", ")
+        }
+        insert(name, spark.sql("SELECT * FROM VALUES " +
+          s"${m.restore(substituteNextval(m, values))} AS _ins($cols)"))
         empty
-      case insertSelectRe(name, select) => insert(name, sql(select)); empty
+      case insertSelectRe(name, select) =>
+        insert(name, run(m.restore(select))); empty
       case createTypeRe(name, values) =>
         // '' inside a quoted value is an escaped quote — store unescaped,
         // the CHECK generator re-escapes exactly once
-        createEnumType(name, splitTopLevel(values)
-          .map(_.trim.stripPrefix("'").stripSuffix("'").replace("''", "'")))
+        createEnumType(name, splitTopLevel(values).map(m.unquote))
         empty
       // composite AFTER enum: the ENUM pattern is strictly more specific
       case createCompositeRe(name, fields) =>
-        createCompositeType(name, fields); empty
+        createCompositeType(name, m.restore(fields)); empty
       case dropTypeRe(name) => dropEnumType(name); empty
       case updateRe(name, rest) =>
-        // carve at top-level keywords only (outside string literals /
-        // parens) — ' where ' inside a SET string literal must not split;
         // UPDATE t SET ... [FROM src [alias]] [WHERE cond] [RETURNING list]
         val (beforeRet, retList) = splitAtTopLevelKeyword(rest, "RETURNING")
         val (beforeWhere, cond) = splitAtTopLevelKeyword(beforeRet, "WHERE")
         val (sets, fromSrc) = splitAtTopLevelKeyword(beforeWhere, "FROM")
-        val setMap = splitTopLevel(sets).map { kv =>
-          val Array(c, e) = kv.split("=", 2)
-          c.trim -> org.apache.spark.sql.functions.expr(e.trim)
-        }.toMap
-        val where =
-          org.apache.spark.sql.functions.expr(cond.getOrElse("true"))
-        fromSrc match {
+        val setMap = setList(sets)
+        val where = cond.map(expr).getOrElse(lit(true))
+        val result = fromSrc match {
           case Some(src) =>
             // a one-arm MERGE; RETURNING may reference the FROM source's
             // columns (legal in PG), which the core's affected rows then
             // carry — without RETURNING the statement yields the
             // post-update target rows only
-            val affected = mergeRows(name, parseTableRef(src), where, Seq(
-              GraftSession.MergeWhen(true, None, GraftSession.MergeUpdate(setMap))),
+            mergeRows(name, parseTableRef(src), where, Seq(
+              MergeWhen(true, None, MergeUpdate(setMap))),
               name, carrySource = retList.isDefined).drop("merge_action")
-            retList.map(applyReturning(affected.as(name), _)).getOrElse(affected)
-          case None =>
-            val result = update(name, setMap, where)
-            retList.map(applyReturning(result.as(name), _)).getOrElse(result)
+          case None => update(name, setMap, where)
         }
+        retList.map(l => result.as(name).select(exprs(l): _*)).getOrElse(result)
       case mergeRe(name, aliasOrNull, rest) =>
         // MERGE INTO t [AS a] USING src [AS s] ON cond WHEN ... [WHEN ...]
         val (srcSpec, afterOn) = splitAtTopLevelKeyword(rest, "ON")
@@ -2185,11 +2103,10 @@ class GraftSession(val spark: SparkSession, val root: String) {
           if (t0.startsWith("(")) {
             // (SELECT ...) [AS] alias — subquery source
             val close = t0.lastIndexOf(')')
-            val inner = t0.substring(1, close)
             val aliasToks = t0.substring(close + 1).trim.split("\\s+")
               .filterNot(t => t.isEmpty || t.equalsIgnoreCase("AS"))
             require(aliasToks.nonEmpty, "MERGE: subquery source needs an alias")
-            sql(inner).as(aliasToks(0))
+            run(m.restore(t0.substring(1, close))).as(aliasToks(0))
           } else parseTableRef(t0)
         }
         def splitWhens(s: String): Seq[String] =
@@ -2197,61 +2114,64 @@ class GraftSession(val spark: SparkSession, val root: String) {
             case (head, Some(tail)) => head +: splitWhens(tail)
             case (head, None) => Seq(head)
           }
-        import org.apache.spark.sql.functions.expr
         val whens = splitWhens(whenText.get).map { clause =>
           val (condPart, thenPart) = splitAtTopLevelKeyword(clause, "THEN")
-          require(thenPart.isDefined, s"MERGE: WHEN without THEN: $clause")
+          require(thenPart.isDefined,
+            s"MERGE: WHEN without THEN: ${m.restore(clause)}")
           val (matchWord, predText) = splitAtTopLevelKeyword(condPart, "AND")
           val isMatched = matchWord.trim match {
             case w if w.matches("(?i)MATCHED") => true
             case w if w.matches("(?i)NOT\\s+MATCHED") => false
             case w => throw new IllegalArgumentException(
-              s"MERGE: expected [NOT] MATCHED, got '$w'")
+              s"MERGE: expected [NOT] MATCHED, got '${m.restore(w)}'")
           }
-          val updateActRe = """(?is)^UPDATE\s+SET\s+(.*)$""".r
-          val insertActRe =
-            """(?is)^INSERT\s*(?:\(([^)]*)\))?\s*VALUES\s*\((.*)\)$""".r
           val action = thenPart.get.trim match {
-            case updateActRe(sets) =>
-              GraftSession.MergeUpdate(splitTopLevel(sets).map { kv =>
-                val Array(c, e) = kv.split("=", 2)
-                c.trim -> expr(e.trim)
-              }.toMap)
-            case a if a.matches("(?is)^DELETE$") => GraftSession.MergeDelete
-            case a if a.matches("(?is)^DO\\s+NOTHING$") =>
-              GraftSession.MergeNothing
-            case insertActRe(colsOrNull, values) =>
-              GraftSession.MergeInsert(
+            case mergeUpdateRe(sets) => MergeUpdate(setList(sets))
+            case mergeDeleteRe() => MergeDelete
+            case mergeNothingRe() => MergeNothing
+            case mergeInsertRe(colsOrNull, values) =>
+              MergeInsert(
                 Option(colsOrNull).map(_.split(",").map(_.trim)
                   .filter(_.nonEmpty).toSeq).getOrElse(Nil),
-                splitTopLevel(values).map(v => expr(v.trim)))
+                exprs(values))
             case a => throw new IllegalArgumentException(
-              s"MERGE: unsupported action '$a' (UPDATE SET / DELETE / " +
-                "INSERT ... VALUES / DO NOTHING)")
+              s"MERGE: unsupported action '${m.restore(a)}' (UPDATE SET / " +
+                "DELETE / INSERT ... VALUES / DO NOTHING)")
           }
-          GraftSession.MergeWhen(isMatched, predText.map(p => expr(p)), action)
+          MergeWhen(isMatched, predText.map(expr), action)
         }
-        merge(name, srcDf, expr(onCond), whens,
-          Option(aliasOrNull))
+        merge(name, srcDf, expr(onCond), whens, Option(aliasOrNull))
       case deleteRe(name, rest) =>
         // DELETE FROM t [USING src [alias]] [WHERE cond] [RETURNING list]
         val (beforeRet, retList) = splitAtTopLevelKeyword(rest, "RETURNING")
         val (beforeWhere, cond) = splitAtTopLevelKeyword(beforeRet, "WHERE")
         val (_, usingSrc) = splitAtTopLevelKeyword(beforeWhere, "USING")
-        val where =
-          org.apache.spark.sql.functions.expr(cond.getOrElse("true"))
+        val where = cond.map(expr).getOrElse(lit(true))
         usingSrc match {
           case Some(src) =>
             val srcDf = parseTableRef(src)
             val result = deleteUsing(name, srcDf, where)
-            retList.map(applyReturningUsing(name, result, srcDf, where, _))
-              .getOrElse(result)
+            retList.map(l => applyReturningUsing(name, result, srcDf, where,
+              exprs(l))).getOrElse(result)
           case None =>
             val result = delete(name, where)
-            retList.map(applyReturning(result, _)).getOrElse(result)
+            retList.map(l => result.select(exprs(l): _*)).getOrElse(result)
         }
-      case other => sql(other)
+      case _ => run(m.restored)
     }
+  }
+
+  /** One expression piece of a DML statement (a SET value, a WHERE / ON /
+    * WHEN condition, an INSERT value or a RETURNING item), carved from
+    * prepared text and restored: parsed by Spark's expression parser, and
+    * the relations its subqueries read are registered fresh, as [[run]]
+    * registers a query's, so a subquery sees the tables as they are now.
+    * A piece without a subquery registers nothing. */
+  private def dmlExpr(piece: String): Column = {
+    val read = spark.sessionState.sqlParser.parseExpression(piece)
+      .collect { case s: SubqueryExpression => relationsOf(s.plan) }.flatten
+    if (read.nonEmpty) registerRelationsFor(read.toSet)
+    org.apache.spark.sql.functions.expr(piece)
   }
 
   /** SQL macro (reference CREATE FUNCTION → pg_rewrite macro, expanded at
@@ -2277,80 +2197,52 @@ class GraftSession(val spark: SparkSession, val root: String) {
         }
   }
 
-  /** Expands macro call sites `name(arg1, arg2)` by parameter
-    * substitution (innermost-args only; nested parens in args supported
-    * via depth counting). */
-  private def expandMacros(q: String): String = {
-    var out = q
-    var changed = true
-    var guard = 0
-    while (changed && guard < 10) {
-      changed = false
-      guard += 1
-      macros.foreach { case (name, (params, body)) =>
-        def isIdentChar(c: Char) = c.isLetterOrDigit || c == '_'
-        // advance past occurrences embedded in longer identifiers
-        // (net_price must not block a later bare price(...) call) and
-        // past occurrences inside literals/comments (macro spellings in
-        // data must stay data)
-        var idx = out.indexOf(name + "(")
-        while (idx > 0 && (isIdentChar(out.charAt(idx - 1)) ||
-            inOpaque(out, idx)))
-          idx = out.indexOf(name + "(", idx + 1)
-        if (idx >= 0) {
-          var depth = 0
-          var end = idx + name.length
-          var done = false
-          while (end < out.length && !done) {
-            out.charAt(end) match {
-              case '(' => depth += 1
-              case ')' => depth -= 1; if (depth == 0) done = true
-              case _ =>
-            }
-            end += 1
-          }
-          val argStr = out.substring(idx + name.length + 1, end - 1)
-          val args = splitTopLevel(argStr).map(_.trim)
-          var expanded = body
-          params.zip(args).foreach { case (p, a) =>
-            expanded = expanded.replaceAll(s"\\b$p\\b",
-              scala.util.matching.Regex.quoteReplacement(s"($a)"))
-          }
-          out = out.substring(0, idx) + s"($expanded)" + out.substring(end)
-          changed = true
-        }
+  /** Expands macro call sites `name(arg1, arg2)` in masked text, leftmost
+    * first, so a macro spelling inside a literal or a comment stays data.
+    * A call site is the name at a word start followed by `(` (net_price(…)
+    * does not call price); its args end at the matching paren and bind
+    * every parameter in one pass over the body. An expansion may call
+    * macros itself; a recursive one stops when `steps` run out. */
+  @scala.annotation.tailrec
+  private def expandMacros(m: Masked, steps: Int = 1000): Unit =
+    if (macros.nonEmpty && steps > 0) {
+      import java.util.regex.Pattern.quote
+      val (t, d) = (m.text, parenDepths(m.text))
+      val call = ("(?<!\\w)(" + macros.keys.map(quote).mkString("|") + ")\\(").r
+      call.findAllMatchIn(t).flatMap(c => (c.end until t.length)
+          .find(i => d(i + 1) == d(c.end - 1)).map(c -> _)).nextOption() match {
+        case Some((c, close)) =>
+          val (params, body) = macros(c.group(1))
+          val args = params.zip(splitTopLevel(t.substring(c.end, close))
+            .map(_.trim)).toMap
+          val bound = if (args.isEmpty) m.mask(body)
+            else ("\\b(" + args.keys.map(quote).mkString("|") + ")\\b").r
+              .replaceAllIn(m.mask(body), p =>
+                scala.util.matching.Regex.quoteReplacement(s"(${args(p.group(1))})"))
+          m.text = t.substring(0, c.start) + s"($bound)" + t.substring(close + 1)
+          expandMacros(m, steps - 1)
+        case None =>
       }
     }
-    out
-  }
 
-  /** Finds the first occurrence of `kw` outside string literals and parens,
-    * returning (before, Some(after)) or (all, None). Used to carve UPDATE /
-    * DELETE statements into SET / FROM / USING / WHERE / RETURNING parts
-    * without a full SQL parser — a keyword inside a string literal or a
-    * parenthesized subquery never splits. */
+  /** Paren depth of masked text before each of its characters (and after
+    * the last). Literals are masked and comments are spaces, so every
+    * paren counted is the statement's own. */
+  private def parenDepths(s: String): IndexedSeq[Int] =
+    s.scanLeft(0)((d, c) => if (c == '(') d + 1 else if (c == ')') d - 1 else d)
+
+  /** Finds the first occurrence of keyword `kw` outside parens in masked
+    * text, returning (before, Some(after)) or (all, None). Carves DML
+    * statements into SET / FROM / USING / WHERE / RETURNING / ON / WHEN /
+    * THEN / AND parts without a full SQL parser. */
   private def splitAtTopLevelKeyword(s: String, kw: String): (String, Option[String]) = {
-    val k = kw.length
-    var inQuote = false
-    var depth = 0
-    var i = 0
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '\'' => inQuote = !inQuote
-        case '(' if !inQuote => depth += 1
-        case ')' if !inQuote => depth -= 1
-        case c if !inQuote && depth == 0 &&
-            c.toUpper == kw.charAt(0).toUpper && i + k <= s.length &&
-            s.substring(i, i + k).equalsIgnoreCase(kw) &&
-            (i == 0 || s.charAt(i - 1).isWhitespace) &&
-            (i + k == s.length || s.charAt(i + k).isWhitespace ||
-              s.charAt(i + k) == '(') =>
-          return (s.substring(0, i).trim, Some(s.substring(i + k).trim))
-        case _ =>
-      }
-      i += 1
+    val (d, k) = (parenDepths(s), kw.length)
+    def gap(j: Int) = j < 0 || j >= s.length || s(j).isWhitespace
+    s.indices.find(i => d(i) == 0 && s.regionMatches(true, i, kw, 0, k) &&
+        gap(i - 1) && (gap(i + k) || s(i + k) == '(')) match {
+      case Some(i) => (s.substring(0, i).trim, Some(s.substring(i + k).trim))
+      case None => (s.trim, None)
     }
-    (s.trim, None)
   }
 
   /** `tbl [AS] [alias]` source spec of UPDATE…FROM / DELETE…USING. */
@@ -2360,48 +2252,32 @@ class GraftSession(val spark: SparkSession, val root: String) {
     if (toks.length > 1) df.as(toks(1)) else df.as(toks(0))
   }
 
-  /** RETURNING list applied to the full-row frame DML calls return. */
-  private def applyReturning(df: DataFrame, list: String): DataFrame =
-    if (list.trim == "*") df
-    else df.selectExpr(splitTopLevel(list).map(_.trim): _*)
-
   /** DELETE … USING … RETURNING: the deleted-row snapshot carries only the
     * target's columns; if the list references the USING source (legal in
     * PG), re-join the snapshot against the source on the same condition —
     * one output row per deleted row (an arbitrary match when several
     * source rows match, same as PG). */
   private def applyReturningUsing(name: String, deleted: DataFrame,
-      src: DataFrame, cond: Column, list: String): DataFrame =
-    try applyReturning(deleted.as(name), list)
+      src: DataFrame, cond: Column, list: Seq[Column]): DataFrame =
+    try deleted.as(name).select(list: _*)
     catch { case _: org.apache.spark.sql.AnalysisException =>
       // rid is deterministic here: the deleted snapshot is a stable scan
       // of the statement's _returning_* dir
-      val wide = deleted
+      deleted
         .withColumn("__graft_rid", monotonically_increasing_id()).as(name)
         .join(src, cond).dropDuplicates("__graft_rid")
         .drop("__graft_rid")
-      applyReturning(wide, list)
+        .select(list: _*)
     }
 
-  /** Splits a SET-clause list on commas at paren/quote depth 0 only, so
-    * `a = greatest(x, y), b = ','` parses correctly. */
+  /** Splits a masked list on commas outside parens, so
+    * `a = greatest(x, y), b = ','` splits in two. */
   private def splitTopLevel(s: String): Seq[String] = {
-    val out = scala.collection.mutable.Buffer[String]()
-    val cur = new StringBuilder
-    var depth = 0
-    var inQuote = false
-    s.foreach { ch =>
-      ch match {
-        case '\'' => inQuote = !inQuote; cur += ch
-        case '(' if !inQuote => depth += 1; cur += ch
-        case ')' if !inQuote => depth -= 1; cur += ch
-        case ',' if !inQuote && depth == 0 =>
-          out += cur.toString; cur.clear()
-        case _ => cur += ch
-      }
-    }
-    if (cur.nonEmpty) out += cur.toString
-    out.toSeq
+    val d = parenDepths(s)
+    val cuts = s.indices.filter(i => s(i) == ',' && d(i) == 0)
+    val pieces = (-1 +: cuts).zip(cuts :+ s.length)
+      .map { case (a, b) => s.substring(a + 1, b) }
+    pieces.init ++ pieces.lastOption.filter(_.nonEmpty)
   }
 
   /** UDF registration surface (reference register_udf /
@@ -2538,6 +2414,85 @@ object GraftSession {
 
   private[api] def causeChain(t: Throwable): Seq[Throwable] =
     Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(16).toSeq
+
+  // ---- the statement patterns execute() matches on prepared text ----
+
+  // optional db qualifier on object names, accepted and dropped
+  private val Q = """(?:\w+\.)?"""
+  private val createTableRe =
+    ("""(?is)^CREATE\s+TABLE\s+""" + Q + """(\w+)\s*(?:\((.*)\))?\s*;?$""").r
+  private val ctasRe =
+    ("""(?is)^CREATE\s+TABLE\s+""" + Q + """(\w+)\s+AS\s+(\(?\s*SELECT\s+.*?)\s*;?$""").r
+  private val refreshMvRe =
+    ("""(?is)^REFRESH\s+MATERIALIZED\s+VIEW\s+""" + Q + """(\w+)\s*;?$""").r
+  private val createDynRe =
+    ("""(?is)^CREATE\s+DYNAMIC\s+TABLE\s+""" + Q + """(\w+)\s*;?$""").r
+  private val dropRe = ("""(?is)^DROP\s+TABLE\s+""" + Q + """(\w+)\s*;?$""").r
+  private val insertValuesRe =
+    ("""(?is)^INSERT\s+INTO\s+""" + Q + """(\w+)\s*(?:\(([^)]*)\))?\s*VALUES\s*(.*?);?$""").r
+  private val insertSelectRe =
+    ("""(?is)^INSERT\s+INTO\s+""" + Q + """(\w+)\s+(SELECT\s+.*?);?$""").r
+  private val updateRe =
+    ("""(?is)^UPDATE\s+""" + Q + """(\w+)\s+SET\s+(.*?)\s*;?$""").r
+  private val mergeRe =
+    ("""(?is)^MERGE\s+INTO\s+""" + Q + """(\w+)(?:\s+(?:AS\s+)?(\w+))?\s+USING\s+(.+?)\s*;?$""").r
+  private val deleteRe =
+    ("""(?is)^DELETE\s+FROM\s+""" + Q + """(\w+)\s*(.*?)\s*;?$""").r
+  private val createTypeRe =
+    ("""(?is)^CREATE\s+TYPE\s+""" + Q + """(\w+)\s+AS\s+ENUM\s*\(([^)]*)\)\s*;?$""").r
+  private val createCompositeRe =
+    ("""(?is)^CREATE\s+TYPE\s+""" + Q + """(\w+)\s+AS\s*\(([^)]*)\)\s*;?$""").r
+  private val dropTypeRe = ("""(?is)^DROP\s+TYPE\s+""" + Q + """(\w+)\s*;?$""").r
+  private val macroRe =
+    ("""(?is)^CREATE\s+(?:MACRO|FUNCTION)\s+""" + Q + """(\w+)\s*\(([^)]*)\)\s*(?:AS|RETURN)\s+(.*?);?$""").r
+  private val setTzRe =
+    """(?is)^SET\s+TIME\s*ZONE\s+(?:TO\s+)?([^\s;]+)\s*;?$""".r
+  private val showTablesRe = """(?is)^SHOW\s+TABLES\s*;?$""".r
+  private val truncateRe =
+    ("""(?is)^TRUNCATE\s+(?:TABLE\s+)?""" + Q + """(\w+)\s*;?$""").r
+  private val describeRe =
+    ("""(?is)^DESC(?:RIBE)?\s+(?:TABLE\s+)?""" + Q + """(\w+)\s*;?$""").r
+  private val createSeqRe =
+    ("""(?is)^CREATE\s+SEQUENCE\s+""" + Q + """(\w+)(?:\s+START\s+(?:WITH\s+)?(-?\d+))?(?:\s+INCREMENT\s+(?:BY\s+)?(-?\d+))?\s*;?$""").r
+  private val dropSeqRe = ("""(?is)^DROP\s+SEQUENCE\s+""" + Q + """(\w+)\s*;?$""").r
+  private val createIncMvRe =
+    ("""(?is)^CREATE\s+INCREMENTAL\s+MATERIALIZED\s+VIEW\s+""" + Q + """(\w+)\s+AS\s+SELECT\s+(.*?)\s+FROM\s+""" + Q + """(\w+)\s+GROUP\s+BY\s+(.*?)\s*;?$""").r
+  private val createMatViewRe =
+    ("""(?is)^CREATE\s+MATERIALIZED\s+VIEW\s+""" + Q + """(\w+)\s+AS\s+(.*?);?$""").r
+  private val createViewRe =
+    ("""(?is)^CREATE\s+VIEW\s+""" + Q + """(\w+)\s+AS\s+(.*?);?$""").r
+  private val dropViewRe = ("""(?is)^DROP\s+VIEW\s+""" + Q + """(\w+)\s*;?$""").r
+  private val createDbRe = """(?is)^CREATE\s+DATABASE\s+(\w+)\s*;?$""".r
+  private val dropDbRe = """(?is)^DROP\s+DATABASE\s+(\w+)\s*;?$""".r
+  private val createIndexRe =
+    ("""(?is)^CREATE\s+INDEX\s+(\w+)\s+ON\s+""" + Q + """(\w+)\s*\(([^)]*)\)\s*;?$""").r
+  private val dropIndexRe = """(?is)^DROP\s+INDEX\s+(\w+)\s*;?$""".r
+  private val checkpointRe =
+    ("""(?is)^(?:CHECKPOINT|VACUUM)(?:\s+""" + Q + """(\w+))?\s*;?$""").r
+  private val explainRe =
+    """(?is)^EXPLAIN\s+(?:(ANALYZE|FORMATTED|EXTENDED)\s+)?(SELECT\s+.*|WITH\s+.*)\s*;?$""".r
+  // a path or format is a literal, which the masked text holds as one
+  // placeholder token
+  private val copyToRe =
+    ("""(?is)^COPY\s+(\(.+\)|""" + Q + """\w+)\s+TO\s+([^\s;]+)\s*(?:(?:WITH\s*)?\(\s*FORMAT\s+([^\s)]+)\s*\))?\s*;?$""").r
+  private val copyFromRe =
+    ("""(?is)^COPY\s+""" + Q + """(\w+)\s+FROM\s+([^\s;]+)\s*(?:(?:WITH\s*)?\(\s*FORMAT\s+([^\s)]+)\s*\))?\s*;?$""").r
+  private val alterAddRe =
+    ("""(?is)^ALTER\s+TABLE\s+""" + Q + """(\w+)\s+ADD\s+(?:COLUMN\s+)?(\w+)\s+([\w()<>, ]+?)\s*;?$""").r
+  private val alterDropRe =
+    ("""(?is)^ALTER\s+TABLE\s+""" + Q + """(\w+)\s+DROP\s+(?:COLUMN\s+)?(\w+)\s*;?$""").r
+  private val alterRenameRe =
+    ("""(?is)^ALTER\s+TABLE\s+""" + Q + """(\w+)\s+RENAME\s+(?:COLUMN\s+)?(\w+)\s+TO\s+(\w+)\s*;?$""").r
+  private val txnRe = """(?is)^(?:BEGIN|COMMIT|ROLLBACK|ABORT)\b.*""".r
+  private val incAggRe =
+    """(?i)^(count|sum|min|max|approx_distinct)\s*\(\s*(\*|\w+)\s*\)\s+AS\s+(\w+)$""".r
+  private val incColRe = """^(\w+)$""".r
+  private val mergeUpdateRe = """(?is)^UPDATE\s+SET\s+(.*)$""".r
+  private val mergeDeleteRe = """(?is)^DELETE$""".r
+  private val mergeNothingRe = """(?is)^DO\s+NOTHING$""".r
+  private val mergeInsertRe =
+    """(?is)^INSERT\s*(?:\(([^)]*)\))?\s*VALUES\s*\((.*)\)$""".r
+  private val nextvalRe = """(?i)\bnextval\(([^()]*)\)""".r
 
   // ---- MERGE WHEN-clause model (SQL:2003 / PG 15 MERGE) ----
   sealed trait MergeAction

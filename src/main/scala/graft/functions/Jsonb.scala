@@ -1,5 +1,6 @@
 package graft.functions
 
+import scala.util.matching.Regex
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -54,54 +55,94 @@ object Jsonb {
     * Plain `::` casts parse natively in Spark ≥3.4 and pass through.
     * Purely textual (regex) by design: the affordance layer stays thin and
     * everything after it is Catalyst — mirroring SURVEY §3's lifecycle
-    * mapping where our "transformer" stage is this one function. */
+    * mapping where our "transformer" stage is this one function. Literals
+    * and comments come back verbatim. */
   def rewrite(query: String, params: Seq[Any] = Nil): String = {
-    import scala.util.matching.Regex
-    var q = query
-    // Mask every complete string literal (handling '' escapes) AND every
-    // SQL comment (`-- ...` / `/* ... */`) behind an indexed
-    // <n> placeholder, scanning left to right so an
-    // apostrophe inside a comment (`-- can't`) cannot mis-pair with a
-    // later quote. The operator keys ARE literals, so the patterns below
-    // reference them BY placeholder -- a `->>`/`#>` spelled INSIDE a
-    // larger literal (say 'a->>k' with escaped quotes) or a comment can
-    // never fire: the whole token is opaque. Unconsumed placeholders are
-    // restored verbatim at the end.
-    val lits = scala.collection.mutable.ArrayBuffer.empty[String]
-    q = "(?s)'(?:[^']|'')*'|--[^\n]*|/\\*.*?\\*/".r.replaceAllIn(q, m => {
-      lits += m.matched
-      Regex.quoteReplacement("" + (lits.size - 1) + "")
-    })
-    // $n parameters bind AFTER masking, in one left-to-right pass: a `$1`
-    // inside a literal or comment is text, and each bound value enters as
-    // one more opaque literal, so a `$1` inside a bound string is never
-    // re-bound (a literal still keys the operators below: `a->>$1`).
-    // Unbound indexes stay as written.
-    q = """\$(\d+)""".r.replaceAllIn(q, m =>
-      m.group(1).toIntOption.filter(i => i >= 1 && i <= params.size) match {
-        case Some(i) =>
-          lits += sqlLiteral(params(i - 1))
-          Regex.quoteReplacement("" + (lits.size - 1) + "")
-        case None => Regex.quoteReplacement(m.matched)
-      })
-    // literal content with '' unescaped; None when the placeholder holds
-    // a comment, not a literal (operators never take a comment as a key)
-    def litContent(idx: String): Option[String] = {
-      val raw = lits(idx.toInt)
-      if (raw.startsWith("'"))
+    val m = new Masked(query)
+    rewrite(m, params)
+    m.restored
+  }
+
+  /** SQL text with every string literal ('' escapes included) and every
+    * comment (`-- …`, `/* … */`) behind an indexed placeholder: the one
+    * scan that decides which parts of a statement are data. It runs left
+    * to right, so an apostrophe inside a comment (`-- can't`) never pairs
+    * with a later quote. Text stages rewrite `text` and never see inside a
+    * literal or a comment; [[restore]] puts back what they left. */
+  private[graft] final class Masked(sql: String) {
+    private val opaque = scala.collection.mutable.ArrayBuffer.empty[String]
+
+    /** `s` with its literals and comments masked into this text's
+      * placeholders (how a macro body joins a statement). */
+    def mask(s: String): String =
+      Opaque.replaceAllIn(s, m => Regex.quoteReplacement(hide(m.matched)))
+
+    var text: String = mask(sql)
+
+    /** Puts `raw` behind a fresh placeholder and returns the placeholder. */
+    def hide(raw: String): String = { opaque += raw; s"$Mark${opaque.size - 1}$Mark" }
+
+    /** The content of `piece` ('' unescaped) when it is one string
+      * literal; None for anything else (a comment, a bound number). */
+    def literalOf(piece: String): Option[String] = piece.trim match {
+      case Placeholder(i) if opaque(i.toInt).startsWith("'") =>
+        val raw = opaque(i.toInt)
         Some(raw.substring(1, raw.length - 1).replace("''", "'"))
-      else None
+      case _ => None
     }
+
+    /** `piece` as one value: a lone literal's content, else restored. */
+    def unquote(piece: String): String =
+      literalOf(piece).getOrElse(restore(piece.trim))
+
+    /** Turns every comment still masked in `text` into one space. */
+    def blankComments(): Unit = text = Placeholder.replaceAllIn(text, m => {
+      val raw = opaque(m.group(1).toInt)
+      if (raw.startsWith("--") || raw.startsWith("/*")) " " else m.matched
+    })
+
+    /** `piece` (a part of `text`) with its placeholders restored verbatim. */
+    def restore(piece: String): String = Placeholder.replaceAllIn(piece, m =>
+      Regex.quoteReplacement(opaque(m.group(1).toInt)))
+
+    def restored: String = restore(text)
+  }
+
+  private val Opaque = "(?s)'(?:[^']|'')*'|--[^\n]*|/\\*.*?\\*/".r
+  // a private-use character: never whitespace (trim keeps it), never a
+  // word character (\b and \w treat it as punctuation)
+  private val Mark = "\uE000"
+  private val Placeholder = (Mark + "(\\d+)" + Mark).r
+  private val P = "(" + Mark + "\\d+" + Mark + ")"
+
+  /** [[rewrite]]'s stages on an already masked statement: `$n` binding,
+    * then the operator rewrites. The operator keys ARE literals, so the
+    * patterns reference them BY placeholder: a `->>`/`#>` spelled INSIDE a
+    * larger literal (say 'a->>k' with escaped quotes) or a comment can
+    * never fire, the whole token is opaque. */
+  private[graft] def rewrite(masked: Masked, params: Seq[Any]): Unit = {
+    var q = masked.text
+    // $n parameters bind in one left-to-right pass; each bound value
+    // enters as one more masked literal, so a `$1` inside it is never
+    // re-bound (it still keys the operators below: `a->>$1`). Unbound
+    // indexes stay as written.
+    q = """\$(\d+)""".r.replaceAllIn(q, mm =>
+      mm.group(1).toIntOption.filter(i => i >= 1 && i <= params.size) match {
+        case Some(i) =>
+          Regex.quoteReplacement(masked.hide(sqlLiteral(params(i - 1))))
+        case None => Regex.quoteReplacement(mm.matched)
+      })
     // re-escape for splicing into a generated single-quoted literal
     def esc(s: String): String = s.replace("'", "''")
-    val P = "(\\d+)"
     // ident->'k1'->'k2'->>'k3' chains (any mix; last op decides nothing
     // here -- get_json_object always returns text, matching ->> semantics;
     // -> midway through a chain is pure navigation either way)
     val chain = ("""([A-Za-z_][\w.]*)((?:\s*->>?\s*""" + P + ")+)").r
     q = chain.replaceAllIn(q, m => {
+      // None when a key's placeholder holds a comment, not a literal
+      // (operators never take a comment as a key)
       val keys = P.r.findAllMatchIn(m.group(2))
-        .map(mm => litContent(mm.group(1))).toSeq
+        .map(mm => masked.literalOf(mm.group(1))).toSeq
       if (keys.forall(_.isDefined))
         Regex.quoteReplacement(s"get_json_object(${m.group(1)}, " +
           s"'$$.${esc(keys.flatten.mkString("."))}')")
@@ -111,7 +152,7 @@ object Jsonb {
     // any other content restores untouched)
     val hashPath = ("""([A-Za-z_][\w.]*)\s*#>>?\s*""" + P).r
     q = hashPath.replaceAllIn(q, m => {
-      litContent(m.group(2)) match {
+      masked.literalOf(m.group(2)) match {
         case Some(c) if c.startsWith("{") && c.endsWith("}") =>
           val path = c.substring(1, c.length - 1)
             .split(",").map(_.trim).mkString(".")
@@ -127,7 +168,7 @@ object Jsonb {
     // (deleteField) where the type is known.
     val del = ("""([A-Za-z_][\w.]*)\s*#-\s*""" + P).r
     q = del.replaceAllIn(q, m => {
-      litContent(m.group(2)) match {
+      masked.literalOf(m.group(2)) match {
         case Some(c) =>
           val key = c.stripPrefix("{").stripSuffix("}")
           Regex.quoteReplacement(
@@ -140,14 +181,13 @@ object Jsonb {
     val assertCast = ("""::\?\s*(?:""" + P + """|([A-Za-z ()0-9,]+))""").r
     q = assertCast.replaceAllIn(q, m => {
       val t =
-        if (m.group(1) != null) litContent(m.group(1)) else Option(m.group(2))
+        if (m.group(1) != null) masked.literalOf(m.group(1)) else Option(m.group(2))
       t match {
         case Some(tt) => Regex.quoteReplacement(s"::$tt")
         case None => Regex.quoteReplacement(m.matched)
       }
     })
-    // restore the literals/comments the operators did not consume
-    P.r.replaceAllIn(q, m => Regex.quoteReplacement(lits(m.group(1).toInt)))
+    masked.text = q
   }
 
   private def sqlLiteral(v: Any): String = v match {

@@ -482,4 +482,50 @@ class RandomizedPropertySpec extends SparkSpec {
       assert(got == want.toMap, s"seed=$seed")
     }
   }
+
+  test("comments at random gaps do not change what a DML statement does") {
+    // each statement runs twice, on two sessions holding the same rows:
+    // as written, and with a comment at four seeded whitespace gaps. The
+    // comments carry an apostrophe, a paren or a clause keyword, which a
+    // literal-blind carve would read as SQL.
+    val stmts = Seq(
+      "UPDATE t SET a = a + 1 WHERE id >= 2 RETURNING id, a",
+      "DELETE FROM t USING k WHERE t.id = k.kid RETURNING t.id, reason",
+      "MERGE INTO t USING (SELECT * FROM VALUES (1, 5), (3, 500), (9, 9) " +
+        "AS v(sid, sa)) AS s ON t.id = s.sid WHEN MATCHED AND s.sa > 100 " +
+        "THEN DO NOTHING WHEN MATCHED THEN UPDATE SET a = s.sa " +
+        "WHEN NOT MATCHED THEN INSERT (id, a) VALUES (s.sid, s.sa)")
+    val comments = Seq("/* it's WHERE ( */", "-- don't WHEN\n")
+    def commented(stmt: String, seed: Int): String = {
+      val r = new scala.util.Random(seed)
+      val gaps = r.shuffle(stmt.indices.filter(stmt(_) == ' ').toList)
+        .take(4).toSet
+      stmt.indices.map { i =>
+        if (gaps(i)) s" ${comments(r.nextInt(comments.size))} "
+        else stmt(i).toString
+      }.mkString
+    }
+    def session(): graft.api.GraftSession = {
+      val g = graft.api.GraftSession(spark, graft.TmpDirs.create("graft"))
+      g.createTable("t", new org.apache.spark.sql.types.StructType()
+        .add("id", "bigint").add("a", "bigint"))
+      g.insert("t", Seq((1L, 10L), (2L, 20L), (3L, 30L), (4L, 40L))
+        .toDF("id", "a"))
+      g.createTable("k", new org.apache.spark.sql.types.StructType()
+        .add("kid", "bigint").add("reason", "string"))
+      g.insert("k", Seq((4L, "dup")).toDF("kid", "reason"))
+      g
+    }
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    val (plain, noisy) = (session(), session())
+    stmts.zipWithIndex.foreach { case (stmt, i) =>
+      val seed = 900 + i
+      val c = commented(stmt, seed)
+      assert(rows(noisy.execute(c)) == rows(plain.execute(stmt)),
+        s"seed=$seed: $c")
+      assert(rows(noisy.table("t")) == rows(plain.table("t")),
+        s"seed=$seed: $c")
+    }
+  }
 }

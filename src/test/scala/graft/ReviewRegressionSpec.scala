@@ -164,6 +164,33 @@ class ReviewRegressionSpec extends SparkSpec {
     assert(c.getDouble(0) == 1.8)
   }
 
+  test("macros expand in DML statements") {
+    val g = freshSession()
+    g.execute("CREATE TABLE md (id BIGINT, a BIGINT)")
+    g.execute("INSERT INTO md (id, a) VALUES (1, 1), (2, 2)")
+    g.execute("CREATE MACRO bump(x) AS x + 100")
+    g.execute("UPDATE md SET a = bump(a) WHERE id = 1")
+    g.execute("INSERT INTO md (id, a) VALUES (3, bump(3))")
+    // a macro's own name in CREATE MACRO is its definition, not a call
+    g.execute("CREATE MACRO bump(x) AS x + 1000")
+    g.execute("DELETE FROM md WHERE a = bump(2) - 1000")
+    assert(g.table("md").as[(Long, Long)].collect().sorted.toSeq ==
+      Seq((1L, 101L), (3L, 103L)))
+  }
+
+  test("macros expand in view bodies") {
+    val g = freshSession()
+    g.execute("CREATE TABLE mb (id BIGINT, a BIGINT)")
+    g.execute("INSERT INTO mb (id, a) VALUES (1, 1), (2, 2)")
+    g.execute("CREATE MACRO bump(x) AS x + 100")
+    g.execute("CREATE VIEW mbv AS SELECT id, bump(a) AS b FROM mb")
+    assert(g.execute("SELECT b FROM mbv ORDER BY id").as[Long].collect()
+      .toSeq == Seq(101L, 102L))
+    g.createView("mbw", "SELECT bump(b) AS c FROM mbv")
+    assert(g.sql("SELECT c FROM mbw ORDER BY c").as[Long].collect()
+      .toSeq == Seq(201L, 202L))
+  }
+
   test("db-qualifier stripping skips comments (apostrophes inert)") {
     val g = freshSession()
     g.execute("CREATE DATABASE bench")

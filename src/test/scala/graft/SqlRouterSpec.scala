@@ -600,4 +600,71 @@ class SqlRouterSpec extends SparkSpec {
     assert(analyzed.nonEmpty)
     s.execute("DROP TABLE ex")
   }
+
+  /** A session holding `name`(id, a) = (1,10), (2,20), (3,30). */
+  private def threeRows(name: String): GraftSession = {
+    val s = g
+    s.execute(s"CREATE TABLE $name (id BIGINT, a BIGINT)")
+    s.execute(s"INSERT INTO $name (id, a) VALUES (1, 10), (2, 20), (3, 30)")
+    s
+  }
+  private def rowsOf(s: GraftSession, name: String): Seq[(Long, Long)] =
+    s.table(name).as[(Long, Long)].collect().sorted.toSeq
+
+  test("a comment inside DELETE or UPDATE does not move the carve") {
+    Seq("DELETE FROM cm /* it's gone */ WHERE id = 1",
+        "DELETE FROM cm -- don't touch the others\nWHERE id = 1")
+      .foreach { stmt =>
+        val s = threeRows("cm")
+        assert(s.execute(stmt).count() == 1, stmt)
+        assert(rowsOf(s, "cm") == Seq((2L, 20L), (3L, 30L)), stmt)
+      }
+    Seq("UPDATE cm SET a = 0 -- where needed\nWHERE id = 1",
+        "UPDATE cm SET a = 0 /* what's this */ WHERE id = 1")
+      .foreach { stmt =>
+        val s = threeRows("cm")
+        assert(s.execute(stmt).count() == 1, stmt)
+        assert(rowsOf(s, "cm") == Seq((1L, 0L), (2L, 20L), (3L, 30L)), stmt)
+      }
+  }
+
+  test("a DML subquery reads a relation no earlier statement read") {
+    val s = threeRows("sq1_t")
+    s.execute("CREATE TABLE sq1_u (k BIGINT)")
+    s.execute("INSERT INTO sq1_u (k) VALUES (2)")
+    s.execute("DELETE FROM sq1_t WHERE id IN (SELECT k FROM sq1_u)")
+    assert(rowsOf(s, "sq1_t") == Seq((1L, 10L), (3L, 30L)))
+  }
+
+  test("a DML subquery sees rows written after an earlier read") {
+    val s = threeRows("sq2_t")
+    s.execute("CREATE TABLE sq2_u (k BIGINT)")
+    s.execute("INSERT INTO sq2_u (k) VALUES (2)")
+    s.execute("SELECT * FROM sq2_u").collect()
+    s.execute("INSERT INTO sq2_u (k) VALUES (3)")
+    s.execute("UPDATE sq2_t SET a = (SELECT max(k) FROM sq2_u) WHERE id = 1")
+    assert(rowsOf(s, "sq2_t") == Seq((1L, 3L), (2L, 20L), (3L, 30L)))
+    s.execute("DELETE FROM sq2_t WHERE id IN (SELECT k FROM sq2_u)")
+    assert(rowsOf(s, "sq2_t") == Seq((1L, 3L)))
+  }
+
+  test("a DML subquery reads a relation whose batches were swapped") {
+    val s = threeRows("sq3_t")
+    s.execute("CREATE TABLE sq3_u (k BIGINT)")
+    s.execute("INSERT INTO sq3_u (k) VALUES (1)")
+    s.execute("SELECT * FROM sq3_u").collect()
+    s.execute("UPDATE sq3_u SET k = k + 1")
+    s.execute("DELETE FROM sq3_t WHERE id IN (SELECT k FROM sq3_u)")
+    assert(rowsOf(s, "sq3_t") == Seq((1L, 10L), (3L, 30L)))
+  }
+
+  test("a trailing comment after INSERT ... VALUES is not part of the values") {
+    val s = g
+    s.execute("CREATE TABLE nv (id BIGINT, a BIGINT)")
+    s.execute("CREATE SEQUENCE nvq")
+    s.execute(
+      "INSERT INTO nv (id, a) VALUES (nextval('nvq'), 1) -- not nextval('nvq')")
+    assert(rowsOf(s, "nv") == Seq((1L, 1L)))
+    assert(s.nextSequence("nvq") == 2L)
+  }
 }
