@@ -2166,7 +2166,8 @@ class GraftSession(val spark: SparkSession, val root: String) {
     * prepared text and restored: parsed by Spark's expression parser, and
     * the relations its subqueries read are registered fresh, as [[run]]
     * registers a query's, so a subquery sees the tables as they are now.
-    * A piece without a subquery registers nothing. */
+    * A piece without a subquery registers nothing. The returned Column
+    * holds the text, which Spark parses again when the plan is built. */
   private def dmlExpr(piece: String): Column = {
     val read = spark.sessionState.sqlParser.parseExpression(piece)
       .collect { case s: SubqueryExpression => relationsOf(s.plan) }.flatten
