@@ -26,28 +26,52 @@ import graft.sources.DynamicSchema
   * refresh. Transactions/WAL/MVCC are intentionally absent: batch
   * overwrite semantics with staged directory swaps (documented divergence
   * from the reference's OLTP half).
+  *
+  * The catalog is one JSON record per durable object, written through
+  * [[GraftSession.writeRecord]] (temp file, then an atomic move) and read
+  * through [[GraftSession.readRecord]]:
+  *   - `<table>/_table.json`: kind, schema, tombstones, renames, CHECKs
+  *     and FKs ([[GraftSession.TableRecord]]), beside the table's
+  *     `data/batch_*` dirs;
+  *   - `_catalog/<kind>/<name>.json`, one file per view or matview body,
+  *     incremental matview (spec plus the base batches it has folded),
+  *     enum or composite type, macro, index, sequence and database, so two
+  *     sessions over one root never rewrite each other's objects.
+  * Only two files per table keep their own format: `_generation`, the
+  * batch-name counter, and `_stream_commits`, the append-only epoch log
+  * of [[insertIfNew]].
   */
 class GraftSession(val spark: SparkSession, val root: String) {
   import GraftSession._
   private val rootPath = Paths.get(root)
   Files.createDirectories(rootPath)
 
-  private val views = scala.collection.mutable.Map[String, String]()
-  // stored views survive restarts (body SQL re-expanded at reference time)
-  locally {
-    val vd = rootPath.resolve("_views")
-    if (Files.exists(vd))
-      children(vd)
-        .filter(_.getFileName.toString.endsWith(".sql"))
-        .foreach { p =>
-          views(p.getFileName.toString.stripSuffix(".sql")) =
-            Files.readString(p)
-        }
+  /** The record of catalog object `name` of `kind`. */
+  private def catalogFile(kind: String, name: String): Path =
+    rootPath.resolve("_catalog").resolve(kind).resolve(s"$name.json")
+
+  /** Every record of `kind`, by object name. */
+  private def catalog[T: scala.reflect.ClassTag](kind: String): Seq[(String, T)] = {
+    val d = rootPath.resolve("_catalog").resolve(kind)
+    if (!Files.isDirectory(d)) Nil
+    else children(d).map(_.getFileName.toString).filter(_.endsWith(".json"))
+      .sorted.flatMap(f => readRecord[T](d.resolve(f)).map(f.stripSuffix(".json") -> _))
   }
+
+  private def dropRecord(kind: String, name: String): Unit =
+    Files.deleteIfExists(catalogFile(kind, name))
+
+  // stored views survive restarts (body SQL re-expanded at reference time)
+  private val views = scala.collection.mutable.Map[String, String]() ++
+    catalog[ViewRecord]("view").map { case (n, r) => n -> r.body }
   private case class TableState(
     dynamic: Boolean,
     var schema: StructType,
-    var tombstones: Set[String])
+    var tombstones: Set[String] = Set.empty,
+    // by the renamed column's visible name
+    var renames: Map[String, Rename] = Map.empty,
+    var checks: Seq[Check] = Nil,
+    var fks: Seq[Fk] = Nil)
   private val tables = scala.collection.mutable.Map[String, TableState]()
 
   /** Per-table write locks. Streaming sinks run each query's
@@ -63,13 +87,23 @@ class GraftSession(val spark: SparkSession, val root: String) {
 
   // ---------------------------------------------------------------- DDL
 
-  def createDatabase(name: String): Unit =
-    Files.createDirectories(rootPath.resolve(name))
+  /** CREATE DATABASE: records `name` as a qualifier that [[sql]] strips
+    * from `name.table` references, in this session and every later one. */
+  def createDatabase(name: String): Unit = {
+    databases += name.toLowerCase
+    writeRecord(catalogFile("database", name.toLowerCase),
+      DatabaseRecord(name.toLowerCase))
+  }
+
+  def dropDatabase(name: String): Unit = {
+    databases -= name.toLowerCase
+    dropRecord("database", name.toLowerCase)
+  }
 
   /** Fixed-schema table (`relkind='r'`). */
   def createTable(name: String, schema: StructType): Unit = {
     Files.createDirectories(dataDir(name))
-    tables(name) = TableState(dynamic = false, schema, Set.empty)
+    tables(name) = TableState(dynamic = false, schema)
     persistMeta(name)
   }
 
@@ -79,22 +113,18 @@ class GraftSession(val spark: SparkSession, val root: String) {
     * T_CreateEnumStmt), per SURVEY §1.2's mapping: an enum is a STRING
     * column plus an automatic membership CHECK — Spark has no native enum
     * type, and a dictionary-encoded parquet string column gives the same
-    * storage behavior at scale. Persisted under `_types/`. */
+    * storage behavior at scale. */
   def createEnumType(name: String, values: Seq[String]): Unit = {
     require(values.nonEmpty, s"CREATE TYPE $name AS ENUM: empty value list")
     enumTypes(name.toLowerCase) = values
-    val td = rootPath.resolve("_types")
-    Files.createDirectories(td)
-    Files.writeString(td.resolve(s"${name.toLowerCase}.enum"),
-      values.mkString("\n"))
+    writeRecord(catalogFile("enum", name.toLowerCase), EnumRecord(values))
   }
 
   def dropEnumType(name: String): Unit = {
     enumTypes.remove(name.toLowerCase)
     compositeTypes.remove(name.toLowerCase)
-    val td = rootPath.resolve("_types")
-    Seq(s"${name.toLowerCase}.enum", s"${name.toLowerCase}.struct")
-      .map(td.resolve).filter(Files.exists(_)).foreach(Files.delete(_))
+    dropRecord("enum", name.toLowerCase)
+    dropRecord("composite", name.toLowerCase)
   }
 
   def enumValues(name: String): Option[Seq[String]] =
@@ -104,35 +134,22 @@ class GraftSession(val spark: SparkSession, val root: String) {
     * test_sql_features "CREATE TYPE (composite)"): a composite type is a
     * Spark struct — columns declared with it become struct columns, which
     * parquet stores columnar per field (so field pruning still works, see
-    * PLANS.md jb1). Persisted under `_types/` as struct DDL. */
+    * PLANS.md jb1). Recorded as its field DDL. */
   def createCompositeType(name: String, fieldsDdl: String): Unit = {
     val struct = StructType.fromDDL(fieldsDdl) // validates eagerly
     compositeTypes(name.toLowerCase) = struct
-    val td = rootPath.resolve("_types")
-    Files.createDirectories(td)
-    Files.writeString(td.resolve(s"${name.toLowerCase}.struct"), fieldsDdl)
+    writeRecord(catalogFile("composite", name.toLowerCase),
+      CompositeRecord(fieldsDdl))
   }
 
   def compositeType(name: String): Option[StructType] =
     compositeTypes.get(name.toLowerCase)
 
-  private val enumTypes =
-    scala.collection.mutable.Map[String, Seq[String]]()
-  private val compositeTypes =
-    scala.collection.mutable.Map[String, StructType]()
-  locally {
-    val td = rootPath.resolve("_types")
-    if (Files.exists(td))
-      children(td).foreach { p =>
-        val fn = p.getFileName.toString
-        if (fn.endsWith(".enum"))
-          enumTypes(fn.stripSuffix(".enum")) =
-            Files.readString(p).split("\n").toSeq
-        else if (fn.endsWith(".struct"))
-          compositeTypes(fn.stripSuffix(".struct")) =
-            StructType.fromDDL(Files.readString(p))
-      }
-  }
+  private val enumTypes = scala.collection.mutable.Map[String, Seq[String]]() ++
+    catalog[EnumRecord]("enum").map { case (n, r) => n -> r.values }
+  private val compositeTypes = scala.collection.mutable.Map[String, StructType]() ++
+    catalog[CompositeRecord]("composite").map { case (n, r) =>
+      n -> StructType.fromDDL(r.fields) }
 
   /** CREATE TABLE column DDL entries with enum-typed columns rewritten to
     * STRING; returns the schema plus the membership CHECKs to attach. A
@@ -167,41 +184,32 @@ class GraftSession(val spark: SparkSession, val root: String) {
   /** Dynamic/computing table (`relkind='g'`) — columns appear on insert. */
   def createDynamicTable(name: String): Unit = {
     Files.createDirectories(dataDir(name))
-    tables(name) = TableState(dynamic = true, new StructType(), Set.empty)
+    tables(name) = TableState(dynamic = true, new StructType())
     persistMeta(name)
   }
 
   def dropTable(name: String): Unit = {
+    // OTHER tables' FKs referencing this one must not dangle
+    allFks.collect { case (child, fk) if child != name && fk.parent == name =>
+      child }.distinct.foreach { child =>
+      tables(child).fks = tables(child).fks.filterNot(_.parent == name)
+      persistMeta(child)
+    }
+    // the table record (constraints, rename history) goes with its dir; a
+    // re-created table must not inherit a dead (mat)view body or spec
     deleteRecursively(tableDir(name))
     forgetBatches(name, Set.empty)
     tables.remove(name)
-    // a re-created table must not inherit the dead table's constraints,
-    // rename history, or stored (mat)view body — and OTHER tables' FKs
-    // referencing this one must not dangle
-    checks.remove(name)
-    fks.remove(name)
-    fks.keys.toSeq.foreach { child =>
-      val kept = fks(child).filterNot(_.parent == name)
-      if (kept.size != fks(child).size) {
-        fks(child) = kept
-        persistConstraints(child)
-      }
-    }
-    renames.remove(name)
-    views.remove(name)
-    val vf = rootPath.resolve("_views").resolve(s"$name.sql")
-    if (Files.exists(vf)) Files.delete(vf)
-    spark.catalog.dropTempView(name)
-    // dependency closure (reference dynamic_cascade_delete's pg_depend
-    // walk): views/matviews whose body references the dropped relation are
-    // dropped too, transitively — a dangling view must not survive the drop
-    dropDependentViews(name)
+    dropRecord("incview", name)
+    dropView(name)
   }
 
+  /** Drops the view `name` and, transitively, every view and matview that
+    * reads it (reference dynamic_cascade_delete's pg_depend walk) — a
+    * dangling view must not survive the drop. */
   def dropView(name: String): Unit = {
     views.remove(name)
-    val vf = rootPath.resolve("_views").resolve(s"$name.sql")
-    if (Files.exists(vf)) Files.delete(vf)
+    dropRecord("view", name)
     spark.catalog.dropTempView(name)
     dropDependentViews(name)
   }
@@ -229,9 +237,9 @@ class GraftSession(val spark: SparkSession, val root: String) {
       case w: UnresolvedWith => w.cteRelations.flatMap(c => relationsOf(c._2))
     }.flatten.toSet
 
-  /** Drops every stored view that references `name` (reference
-    * dynamic_cascade_delete's pg_depend walk), transitively. Matviews are
-    * backed by a table and take the table-drop path. */
+  /** Drops every stored view that references `name`, and every
+    * incremental matview over it. Matviews are backed by a table and take
+    * the table-drop path. */
   private def dropDependentViews(name: String): Unit = {
     val target = name.toLowerCase
     val pattern = ("(?i)\\b" + java.util.regex.Pattern.quote(name) + "\\b").r
@@ -240,6 +248,7 @@ class GraftSession(val spark: SparkSession, val root: String) {
           .map(_.contains(target))
           .getOrElse(pattern.findFirstIn(body).isDefined) => v }
       .foreach(v => if (tables.contains(v)) dropTable(v) else dropView(v))
+    incViewsOver(name).foreach { case (v, _) => dropTable(v) }
   }
 
   def addColumn(name: String, column: String, dt: DataType): Unit = {
@@ -266,16 +275,11 @@ class GraftSession(val spark: SparkSession, val root: String) {
     // the rename (generation < renameGen) resolve the old physical name,
     // later batches already carry the new one — so neither chained
     // renames nor a later re-added column with the old name can shadow.
-    val renameGen = peekGeneration(name)
-    renames(name) = renames.getOrElse(name, Map.empty) +
-      (to -> (from, renameGen))
+    st.renames += to -> Rename(from, peekGeneration(name))
     st.schema = StructType(st.schema.fields.map(f =>
       if (f.name == from) f.copy(name = to) else f))
     persistMeta(name)
   }
-  // visible name -> (old physical name, first generation with the new name)
-  private val renames =
-    scala.collection.mutable.Map[String, Map[String, (String, Long)]]()
 
   // ----------------------------------------------------------- constraints
 
@@ -284,21 +288,13 @@ class GraftSession(val spark: SparkSession, val root: String) {
   case object Cascade extends FkAction
   case object SetNull extends FkAction
 
-  private case class Check(name: String, expr: String)
-  private case class Fk(column: String, parent: String, parentCol: String,
-                        onDelete: FkAction)
-  private val checks = scala.collection.mutable.Map[String, Seq[Check]]()
-    .withDefaultValue(Nil)
-  private val fks = scala.collection.mutable.Map[String, Seq[Fk]]()
-    .withDefaultValue(Nil)
-
   /** CHECK constraint enforced on the write path (the reference planner
     * wraps DML with check_constraint operators —
     * components/planner/planner.cpp:54-87). Validation is one distributed
     * count over the incoming batch only, never the whole table. */
   def addCheckConstraint(table: String, name: String, sqlExpr: String): Unit = {
-    checks(table) = checks(table) :+ Check(name, sqlExpr)
-    persistConstraints(table)
+    state(table).checks :+= Check(name, sqlExpr)
+    persistMeta(table)
   }
 
   /** FOREIGN KEY with RESTRICT / CASCADE / SET NULL delete semantics
@@ -307,52 +303,26 @@ class GraftSession(val spark: SparkSession, val root: String) {
     * against the distinct parent keys (AQE broadcasts small parents). */
   def addForeignKey(child: String, column: String, parent: String,
                     parentCol: String, onDelete: FkAction = Restrict): Unit = {
-    fks(child) = fks(child) :+ Fk(column, parent, parentCol, onDelete)
-    persistConstraints(child)
+    // the record stores the action by name: restrict, cascade or setnull
+    state(child).fks :+= Fk(column, parent, parentCol, onDelete.toString.toLowerCase)
+    persistMeta(child)
   }
 
-  /** Constraints survive session restarts alongside the schema metadata
-    * (a fresh session must keep enforcing them — reference pg_constraint). */
-  private def persistConstraints(table: String): Unit = {
-    val meta = tableDir(table).resolve("_graft_meta")
-    Files.createDirectories(meta)
-    Files.writeString(meta.resolve("checks.txt"),
-      checks(table).map(c => s"${c.name}\t${c.expr}").mkString("\n"))
-    Files.writeString(meta.resolve("fks.txt"),
-      fks(table).map(f =>
-        s"${f.column}\t${f.parent}\t${f.parentCol}\t${f.onDelete match {
-          case Restrict => "restrict"
-          case Cascade => "cascade"
-          case SetNull => "setnull"
-        }}").mkString("\n"))
-  }
-
-  private def loadConstraints(table: String): Unit = {
-    val meta = tableDir(table).resolve("_graft_meta")
-    val cf = meta.resolve("checks.txt")
-    if (Files.exists(cf))
-      checks(table) = Files.readString(cf).split("\n").filter(_.contains("\t"))
-        .toSeq.map { l => val Array(n, e) = l.split("\t", 2); Check(n, e) }
-    val ff = meta.resolve("fks.txt")
-    if (Files.exists(ff))
-      fks(table) = Files.readString(ff).split("\n")
-        .filter(_.count(_ == '\t') == 3).toSeq.map { l =>
-          val Array(c, p, pc, act) = l.split("\t", 4)
-          Fk(c, p, pc, act match {
-            case "cascade" => Cascade
-            case "setnull" => SetNull
-            case _ => Restrict
-          })
-        }
+  /** (child table, FK) for every FK of every table under the root, tables
+    * this session has not read yet included: a delete must fire the FK
+    * actions a fresh session has not loaded. */
+  private def allFks: Seq[(String, Fk)] = {
+    discoverTables()
+    tables.toSeq.flatMap { case (t, st) => st.fks.map(t -> _) }
   }
 
   private def validateInsert(name: String, df: DataFrame): Unit = {
     validateChecks(name, df)
-    fks(name).foreach(fk => validateFkRef(name, df, fk))
+    state(name).fks.foreach(fk => validateFkRef(name, df, fk))
   }
 
   private def validateChecks(name: String, df: DataFrame): Unit =
-    checks(name).foreach { c =>
+    state(name).checks.foreach { c =>
       // SQL-standard / PG CHECK semantics: only FALSE violates — a NULL
       // (unknown) predicate result passes, so nullable columns under
       // `CHECK (v > 0)` accept NULL rows exactly as PostgreSQL does
@@ -385,7 +355,7 @@ class GraftSession(val spark: SparkSession, val root: String) {
   private def validateUpdate(name: String, updatedRows: DataFrame,
                              setCols: Set[String]): Unit = {
     validateChecks(name, updatedRows)
-    fks(name).filter(fk => setCols.contains(fk.column))
+    state(name).fks.filter(fk => setCols.contains(fk.column))
       .foreach(fk => validateFkRef(name, updatedRows, fk))
   }
 
@@ -399,10 +369,8 @@ class GraftSession(val spark: SparkSession, val root: String) {
     * Self-referential FKs (child == parent) are handled inside
     * [[deleteMatching]]'s single rewrite, not here. */
   private def applyFkDeleteActions(parent: String, deletedKeys: DataFrame): Unit = {
-    val affected = fks.toSeq.flatMap { case (child, childFks) =>
-      childFks.filter(fk => fk.parent == parent && child != parent)
-        .map(fk => (child, fk))
-    }
+    val affected = allFks.filter { case (child, fk) =>
+      fk.parent == parent && child != parent }
     def keysFor(fk: Fk) = deletedKeys.select(col(fk.parentCol).as(fk.column))
       .filter(col(fk.column).isNotNull).distinct()
     // All RESTRICT checks run FIRST (read-only counts): a statement that is
@@ -410,7 +378,7 @@ class GraftSession(val spark: SparkSession, val root: String) {
     // commits — otherwise the outcome of a doomed delete would depend on
     // hash-map iteration order, with cascaded children already gone.
     affected.foreach { case (child, fk) =>
-      if (fk.onDelete == Restrict) {
+      if (fk.onDelete == "restrict") {
         val n = table(child).join(keysFor(fk), Seq(fk.column), "left_semi").count()
         if (n > 0) throw new IllegalStateException(
           s"FK RESTRICT: $n row(s) in $child still reference $parent")
@@ -418,15 +386,15 @@ class GraftSession(val spark: SparkSession, val root: String) {
     }
     affected.foreach { case (child, fk) =>
       fk.onDelete match {
-        case Restrict => // already checked above
-        case Cascade =>
+        case "cascade" =>
           deleteMatching(child,
             cur => cur.join(keysFor(fk), Seq(fk.column), "left_semi"),
             cur => cur.join(keysFor(fk), Seq(fk.column), "left_anti"))
-        case SetNull =>
+        case "setnull" =>
           val cur = table(child)
           overwrite(child, nullOutReferences(cur, fk.column, keysFor(fk)),
             spark.emptyDataFrame)
+        case _ => // restrict: checked above
       }
     }
   }
@@ -498,7 +466,7 @@ class GraftSession(val spark: SparkSession, val root: String) {
     * keeps a single-writer table working unchanged.
     *
     * Concurrency: the log is APPEND-ONLY — one `queryId:epochId` line per
-    * committed epoch (the [[recordFold]] pattern), so concurrent commits
+    * committed epoch, so concurrent commits
     * are commutative: neither writer can un-record the other's epoch, the
     * failure mode of the earlier read-modify-rewrite log. The
     * check + insert + append sequence additionally holds the per-table
@@ -641,7 +609,7 @@ class GraftSession(val spark: SparkSession, val root: String) {
     // a DELETE arm's self-FK actions would need deleteMatching's closure
     // inside this one rewrite; applyFkDeleteActions covers other tables only
     require(!(matchedWhens.exists(_.action == MergeDelete) &&
-      fks(name).exists(_.parent == name)),
+      state(name).fks.exists(_.parent == name)),
       s"MERGE … THEN DELETE on $name, which has a self-referential FK, is " +
         "unsupported; use DELETE (it folds self-FK actions into one rewrite)")
     val srcExtra = if (!carrySource) Seq.empty[String]
@@ -808,44 +776,26 @@ class GraftSession(val spark: SparkSession, val root: String) {
     }
   }
 
-  // ------------------------------------------------ compaction fold log
-  // Append-only record of PURE batch folds (compaction only — DML
-  // rewrites change rows and must NOT be recorded): one line per fold,
-  // `new|old1,old2,...`, empty `new` when the folded batches held no
-  // rows and produced no dir. Incremental matview refresh resolves seen
-  // batches through this log, so routine compaction no longer downgrades
-  // an O(delta) refresh to a full rebuild. O(compactions) metadata.
+  /** Incremental matviews whose base is `base`, with their records —
+    * read from the root, so a dependent another session created is not
+    * forgotten. */
+  private def incViewsOver(base: String): Seq[(String, IncViewRecord)] =
+    catalog[IncViewRecord]("incview").filter(_._2.base == base)
 
-  private def foldLogFile(name: String): Path =
-    tableDir(name).resolve("_fold_log")
-
-  private def recordFold(name: String, newBatch: String,
-                         olds: Seq[String]): Unit =
-    if (olds.nonEmpty)
-      Files.writeString(foldLogFile(name),
-        s"$newBatch|${olds.mkString(",")}\n",
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-
-  /** (newBatch, foldedBatches) pairs, oldest first. */
-  private def readFoldLog(name: String): Seq[(String, Seq[String])] = {
-    val f = foldLogFile(name)
-    if (!Files.exists(f)) Nil
-    else Files.readString(f).split("\n").filter(_.nonEmpty).toSeq.map { l =>
-      val Array(n, olds) = l.split("\\|", 2)
-      (n, olds.split(",").filter(_.nonEmpty).toSeq)
+  /** After a pure fold of `folded` (batch dirs of `base`) into `product`
+    * (None: the fold kept no rows), an incremental matview over `base`
+    * that had seen every folded batch sees the product in their place: it
+    * holds exactly the rows it already folded. One that had not keeps its
+    * seen set, which now names a batch that is gone, so its next refresh
+    * rebuilds. */
+  private def foldSeen(base: String, folded: Seq[Path],
+                       product: Option[String]): Unit = {
+    val olds = folded.map(_.getFileName.toString).toSet
+    incViewsOver(base).foreach { case (v, r) =>
+      if (olds.subsetOf(r.seen.toSet))
+        writeRecord(catalogFile("incview", v),
+          r.copy(seen = r.seen.filterNot(olds) ++ product))
     }
-  }
-
-  /** Names of incremental matviews whose base is `base` (persisted specs
-    * included — a restart must not forget a dependent). */
-  private def incViewsOver(base: String): Seq[String] = {
-    val d = rootPath.resolve("_views")
-    if (!Files.exists(d)) Nil
-    else children(d)
-      .map(_.getFileName.toString).filter(_.endsWith(".inc"))
-      .map(_.stripSuffix(".inc")).toSeq.sorted
-      .filter(n => loadIncSpec(n).exists(_._1 == base))
   }
 
   /** Compacts all ingest batches into one (the reference's vacuum/
@@ -855,12 +805,11 @@ class GraftSession(val spark: SparkSession, val root: String) {
     // fold pending deltas into dependent incremental matviews FIRST:
     // after the rewrite the delta batches are gone, and a fold mixing
     // seen and unseen rows is unrecoverable (forces a full rebuild)
-    incViewsOver(name).foreach(refreshIncrementalMatView)
+    incViewsOver(name).foreach { case (v, _) => refreshIncrementalMatView(v) }
     val olds = listBatches(name)
     // rewrites cluster on the indexed columns (see createIndex) — this
     // is where an index becomes physically real
-    val folded = swapAll(name, clusterByIndex(name, table(name)))
-    recordFold(name, folded.getOrElse(""), olds.map(_.getFileName.toString))
+    foldSeen(name, olds, swapAll(name, clusterByIndex(name, table(name))))
     // vacuum the staged RETURNING dirs of past DML statements (their lazy
     // result frames are dead after a compact — documented divergence)
     children(tableDir(name))
@@ -887,10 +836,9 @@ class GraftSession(val spark: SparkSession, val root: String) {
     if (small.size <= 1) return // nothing worth folding
     // same ordering rule as compact(): dependent incremental matviews
     // fold their pending deltas before the delta batches disappear
-    incViewsOver(name).foreach(refreshIncrementalMatView)
+    incViewsOver(name).foreach { case (v, _) => refreshIncrementalMatView(v) }
     val union = clusterByIndex(name, scanBatches(name, small))
-    val folded = swapBatches(name, union, small)
-    recordFold(name, folded.getOrElse(""), small.map(_.getFileName.toString))
+    foldSeen(name, small, swapBatches(name, union, small))
     persistMeta(name)
   }
 
@@ -948,10 +896,9 @@ class GraftSession(val spark: SparkSession, val root: String) {
     * Self-referential FKs don't block: all rows vanish together. */
   def truncateTable(name: String): Unit = {
     state(name) // unknown table errors before anything is deleted
-    val referencing = fks.toSeq.collect {
-      case (child, childFks)
-          if child != name && childFks.exists(_.parent == name) => child
-    }.sorted
+    val referencing = allFks.collect {
+      case (child, fk) if child != name && fk.parent == name => child
+    }.distinct.sorted
     if (referencing.nonEmpty) throw new IllegalStateException(
       s"cannot TRUNCATE $name: referenced by foreign key(s) from " +
         s"${referencing.mkString(", ")} — use DELETE (fires FK actions) " +
@@ -996,7 +943,7 @@ class GraftSession(val spark: SparkSession, val root: String) {
         "tables are unsupported (self-referential FKs on one table are)")
     deleting += name
     try {
-      val selfFks = fks(name).filter(_.parent == name)
+      val selfFks = state(name).fks.filter(_.parent == name)
       val current = table(name)
       if (selfFks.isEmpty) {
         // re-project to the original column order: doomedOf/keptOf may be
@@ -1019,7 +966,7 @@ class GraftSession(val spark: SparkSession, val root: String) {
       val cur = graft.Materialize.once(
         current.withColumn("__graft_rid", monotonically_increasing_id()))
       var doomed = graft.Materialize.once(doomedOf(cur))
-      val cascades = selfFks.filter(_.onDelete == Cascade)
+      val cascades = selfFks.filter(_.onDelete == "cascade")
       if (cascades.nonEmpty) {
         // frontier-driven transitive closure (same shape as RecursiveCte):
         // each wave semi-joins the table against the newly-doomed keys only
@@ -1052,7 +999,7 @@ class GraftSession(val spark: SparkSession, val root: String) {
       val doomedOut = doomed.select(outCols.map(col): _*)
       var kept = cur
         .join(doomed.select("__graft_rid"), Seq("__graft_rid"), "left_anti")
-      selfFks.filter(_.onDelete == SetNull).foreach { fk =>
+      selfFks.filter(_.onDelete == "setnull").foreach { fk =>
         val keys = doomed.select(col(fk.parentCol).as(fk.column))
           .filter(col(fk.column).isNotNull).distinct()
         kept = nullOutReferences(kept, fk.column, keys)
@@ -1061,7 +1008,7 @@ class GraftSession(val spark: SparkSession, val root: String) {
       // surviving the statement must not reference a key it deleted.
       // Runs BEFORE other-table FK actions so a failing statement aborts
       // without having committed any child-table overwrite.
-      selfFks.filter(_.onDelete == Restrict).foreach { fk =>
+      selfFks.filter(_.onDelete == "restrict").foreach { fk =>
         val keys = doomed.select(col(fk.parentCol).as(fk.column))
           .filter(col(fk.column).isNotNull).distinct()
         val n = kept.join(keys, Seq(fk.column), "left_semi").count()
@@ -1220,7 +1167,7 @@ class GraftSession(val spark: SparkSession, val root: String) {
   private def scanBatches(name: String, dirs: Seq[Path],
                           tagged: Boolean = false): DataFrame = {
     val st = state(name)
-    val rename = renames.getOrElse(name, Map.empty)
+    val rename = st.renames
     val visible = st.schema.fields.filterNot(f => st.tombstones(f.name))
     if (dirs.isEmpty || visible.isEmpty)
       return spark.createDataFrame(
@@ -1235,11 +1182,11 @@ class GraftSession(val spark: SparkSession, val root: String) {
       // renamed column — a re-added column with the old name must not
       // read them (they are the renamed column's historical data)
       val claimed = rename.collect {
-        case (_, (old, g)) if batchGen < g => old
+        case (_, Rename(old, g)) if batchGen < g => old
       }.toSet
       physicalSchema -> visible.toSeq.map { f =>
         val physical = rename.get(f.name) match {
-          case Some((old, renameGen)) if batchGen < renameGen => old
+          case Some(Rename(old, renameGen)) if batchGen < renameGen => old
           case _ => f.name
         }
         Option.when(physicalSchema.fieldNames.contains(physical) &&
@@ -1306,9 +1253,7 @@ class GraftSession(val spark: SparkSession, val root: String) {
 
   def createView(name: String, sql: String): Unit = {
     views(name) = sql
-    val vd = rootPath.resolve("_views")
-    Files.createDirectories(vd)
-    Files.writeString(vd.resolve(s"$name.sql"), sql)
+    writeRecord(catalogFile("view", name), ViewRecord(sql))
   }
 
   /** Materialized view = CTAS; refresh re-runs the stored body. */
@@ -1324,10 +1269,11 @@ class GraftSession(val spark: SparkSession, val root: String) {
     * rows, and never dropped, so views over the matview, its constraints
     * and its catalog entry survive. */
   def refreshMatView(name: String): Unit = {
-    if (incViews.contains(name) || loadIncSpec(name).isDefined) {
+    if (Files.exists(catalogFile("incview", name))) {
       refreshIncrementalMatView(name); return
     }
-    replaceRows(name, sql(views(name)))
+    replaceRows(name, sql(views.getOrElse(name,
+      throw new IllegalArgumentException(s"no materialized view $name"))))
   }
 
   /** A matview refresh's write: validates `rows` as an insert, fires the
@@ -1339,9 +1285,8 @@ class GraftSession(val spark: SparkSession, val root: String) {
     * `name` itself. */
   private def replaceRows(name: String, rows: DataFrame): Unit = {
     validateInsert(name, rows)
-    val refCols = fks.toSeq.flatMap { case (child, childFks) =>
-      childFks.filter(fk => fk.parent == name && child != name)
-        .map(_.parentCol)
+    val refCols = allFks.collect {
+      case (child, fk) if fk.parent == name && child != name => fk.parentCol
     }.distinctBy(_.toLowerCase)
     if (refCols.nonEmpty) {
       // one branch per referenced column, carrying its dropped keys and
@@ -1365,73 +1310,11 @@ class GraftSession(val spark: SparkSession, val root: String) {
   // At 100 TB a full re-aggregation per refresh is the difference
   // between rescanning the lake and scanning the day's partition. Only
   // algebraic aggregates participate (count/sum/min/max — each merges
-  // batch-locally); avg = sum/count in a view over the matview.
-  // Non-append history changes (UPDATE/DELETE rewrote batches,
-  // compaction folded them) are detected by batch-set mismatch and fall
-  // back to a full rebuild — still correct, just not incremental.
-
-  /** (base, groupCols, (func, col, alias)*) per incremental matview. */
-  private val incViews = scala.collection.mutable.Map[
-    String, (String, Seq[String], Seq[(String, String, String)])]()
-
-  private def incDir = { val d = rootPath.resolve("_views")
-    Files.createDirectories(d); d }
-
-  /** Spec-format version marker. v2 = count(col) partials follow SQL
-    * skip-NULLs semantics (round 7 change). A spec file WITHOUT the
-    * marker predates that change: its persisted partials counted every
-    * row, and merging them with skip-NULLs deltas would silently mix two
-    * count definitions — loading such a spec with a non-* count column
-    * forces one full rebuild, then upgrades the file. */
-  private val IncSpecVersion = "#v2"
-
-  private def persistIncSpec(name: String): Unit = {
-    val (base, keys, aggs) = incViews(name)
-    Files.writeString(incDir.resolve(s"$name.inc"),
-      (Seq(IncSpecVersion, base, keys.mkString(",")) ++
-        aggs.map { case (f, c, a) => s"$f:$c:$a" }).mkString("\n"))
-  }
-
-  private def loadIncSpec(name: String)
-      : Option[(String, Seq[String], Seq[(String, String, String)])] =
-    incViews.get(name).orElse {
-      val f = incDir.resolve(s"$name.inc")
-      if (!Files.exists(f)) None
-      else {
-        val all = Files.readString(f).split("\n").toSeq
-        val versioned = all.head == IncSpecVersion
-        val lines = if (versioned) all.tail else all
-        val spec = (lines.head,
-          lines(1).split(",").filter(_.nonEmpty).toSeq,
-          lines.drop(2).map { l =>
-            val Array(fn, c, a) = l.split(":", 3); (fn, c, a) })
-        incViews(name) = spec
-        if (!versioned) {
-          // stored partials and new deltas must agree on count(col)
-          // semantics: poison the seen set so the NEXT refresh takes the
-          // full-rebuild path (an unknown seen batch fails `accounted`),
-          // then upgrade the spec so this happens exactly once
-          if (spec._3.exists { case (fn, c, _) => fn == "count" && c != "*" })
-            Files.writeString(seenFile(name),
-              "__legacy_count_semantics_rebuild__\n",
-              java.nio.file.StandardOpenOption.CREATE,
-              java.nio.file.StandardOpenOption.APPEND)
-          persistIncSpec(name)
-        }
-        Some(spec)
-      }
-    }
-
-  private def seenFile(name: String) = incDir.resolve(s"$name.seen")
-
-  private def recordSeen(name: String, base: String): Unit =
-    Files.writeString(seenFile(name),
-      listBatches(base).map(_.getFileName.toString).mkString("\n"))
-
-  private def readSeen(name: String): Set[String] =
-    if (!Files.exists(seenFile(name))) Set.empty
-    else Files.readString(seenFile(name)).split("\n")
-      .filter(_.nonEmpty).toSet
+  // batch-locally); avg = sum/count in a view over the matview. Each
+  // matview's record holds its spec and the base batches its rows fold
+  // (`seen`). Non-append history changes (UPDATE/DELETE rewrote batches)
+  // remove a seen batch, and the refresh falls back to a full rebuild —
+  // still correct, just not incremental.
 
   /** First-pass aggregate of raw rows (count counts, sum sums…).
     * COUNT(*) counts rows; COUNT(col) follows SQL and skips NULLs —
@@ -1483,73 +1366,49 @@ class GraftSession(val spark: SparkSession, val root: String) {
       aggs: Seq[(String, String, String)]): Unit = {
     state(base) // must exist
     incAggExprs(aggs) // validate funcs up front
-    incViews(name) = (base, groupCols, aggs)
-    persistIncSpec(name)
-    val full = incAggregate(table(base), groupCols, aggs)
+    val batches = listBatches(base)
+    val full = incAggregate(scanBatches(base, batches), groupCols, aggs)
     createTable(name, full.schema)
     insert(name, full)
-    recordSeen(name, base)
+    writeRecord(catalogFile("incview", name), IncViewRecord(base, groupCols,
+      aggs, batches.map(_.getFileName.toString)))
   }
 
   /** Refresh by folding only appended batches; returns the mode taken:
     * "noop" (nothing new), "incremental(n)" (n new batches folded), or
     * "full" (history rewritten — rebuilt from scratch).
     *
-    * Compaction-aware: a seen batch that disappeared because compaction
-    * FOLDED it (recorded in the fold log) is not history rewriting — the
-    * fold product carries exactly the seen rows, so it counts as seen
-    * and routine auto-compaction keeps refreshes O(delta). Only a
-    * genuine rewrite (UPDATE/DELETE replaced batch dirs with changed
-    * rows — never fold-logged) or a fold that mixed seen with unseen
-    * rows (can't happen via compact/compactSmall, which refresh
-    * dependents first) still forces the full rebuild.
+    * History is intact while every seen batch is still live: appends add
+    * batches, and [[compact]] / [[compactSmall]] refresh dependents before
+    * they fold, then put the fold product in place of the folded batches
+    * ([[foldSeen]]), so routine auto-compaction keeps refreshes O(delta).
+    * A genuine rewrite (UPDATE/DELETE replaced batch dirs with changed
+    * rows) removes a seen batch and forces the full rebuild.
     *
     * Both modes validate the new rows, then swap them in through the
     * staged [[overwrite]] ([[replaceRows]]): a refresh that fails its
     * checks leaves the matview's rows as they were. */
   def refreshIncrementalMatView(name: String): String = {
-    val (base, keys, aggs) = loadIncSpec(name).getOrElse(
-      throw new IllegalArgumentException(s"no incremental matview $name"))
-    val current = listBatches(base).map(_.getFileName.toString)
-    val currentSet = current.toSet
-    val seen = readSeen(name)
-    val folds = readFoldLog(base)
-    // children: fold product -> batches it folded; parent: the inverse
-    val children: Map[String, Seq[String]] =
-      folds.filter(_._1.nonEmpty).toMap
-    val parent: Map[String, String] =
-      folds.flatMap { case (n, olds) => olds.map(_ -> n) }.toMap
-    // a seen batch is accounted for if it still exists or its fold chain
-    // ends in a live batch (or in an empty fold, "" — zero rows lost)
-    @annotation.tailrec
-    def accounted(b: String): Boolean =
-      if (b.isEmpty || currentSet(b)) true
-      else parent.get(b) match {
-        case Some(p) => accounted(p)
-        case None => false
-      }
-    // a live batch is fully seen if recorded directly or a fold of
-    // exclusively seen batches; it overlaps seen if ANY origin was seen
-    def covered(b: String): Boolean = seen(b) ||
-      children.get(b).exists(olds => olds.nonEmpty && olds.forall(covered))
-    def overlaps(b: String): Boolean = seen(b) ||
-      children.get(b).exists(_.exists(overlaps))
-    val historyIntact = seen.forall(accounted) &&
-      current.forall(b => covered(b) || !overlaps(b))
+    val spec = readRecord[IncViewRecord](catalogFile("incview", name))
+      .getOrElse(throw new IllegalArgumentException(
+        s"no incremental matview $name"))
+    val IncViewRecord(base, keys, aggs, seenList) = spec
+    val seen = seenList.toSet
+    val live = listBatches(base)
     // the matview keeps the column types it was created with (merging
     // partials widens a decimal sum by 10 digits per fold)
     def conformed(df: DataFrame): DataFrame = df.select(table(name).schema
       .fields.map(f => col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
     val mode =
-      if (!historyIntact) {
+      if (!seen.subsetOf(live.map(_.getFileName.toString).toSet)) {
         // UPDATE/DELETE rewrote batch dirs under us (or a fold mixed
         // seen and unseen rows) — the stored partials no longer tile
         // the table; rebuild
-        replaceRows(name, conformed(incAggregate(table(base), keys, aggs)))
+        replaceRows(name,
+          conformed(incAggregate(scanBatches(base, live), keys, aggs)))
         "full"
       } else {
-        val deltaDirs = listBatches(base)
-          .filterNot(p => covered(p.getFileName.toString))
+        val deltaDirs = live.filterNot(p => seen(p.getFileName.toString))
         if (deltaDirs.isEmpty) "noop"
         else {
           val delta = incAggregate(scanBatches(base, deltaDirs), keys, aggs)
@@ -1559,7 +1418,8 @@ class GraftSession(val spark: SparkSession, val root: String) {
           s"incremental(${deltaDirs.size})"
         }
       }
-    recordSeen(name, base)
+    writeRecord(catalogFile("incview", name),
+      spec.copy(seen = live.map(_.getFileName.toString)))
     mode
   }
 
@@ -1580,30 +1440,19 @@ class GraftSession(val spark: SparkSession, val root: String) {
     * range-clustered and sorted on the indexed columns, so parquet
     * min/max column statistics let pushed equality/range predicates skip
     * whole row groups — the Spark-native index_scan. No separate index
-    * structure exists to maintain or go stale. Persisted (survives
+    * structure exists to maintain or go stale. Recorded (survives
     * restarts) so maintenance keeps clustering long after CREATE. */
   def createIndex(index: String, table: String, columns: Seq[String]): Unit = {
-    indexes(index) = (table, columns)
-    persistIndexes()
+    indexes(index) = IndexRecord(table, columns)
+    writeRecord(catalogFile("index", index), indexes(index))
   }
   def dropIndex(index: String): Unit = {
-    indexes.remove(index); persistIndexes()
+    indexes.remove(index); dropRecord("index", index)
   }
-  def listIndexes: Map[String, (String, Seq[String])] = indexes.toMap
-  private val indexes =
-    scala.collection.mutable.Map[String, (String, Seq[String])]()
-  locally {
-    val f = rootPath.resolve("_indexes")
-    if (Files.exists(f))
-      Files.readString(f).split("\n").filter(_.nonEmpty).foreach { l =>
-        val Array(ix, t, cols) = l.split("\\|", 3)
-        indexes(ix) = (t, cols.split(",").filter(_.nonEmpty).toSeq)
-      }
-  }
-  private def persistIndexes(): Unit =
-    Files.writeString(rootPath.resolve("_indexes"),
-      indexes.map { case (ix, (t, cs)) => s"$ix|$t|${cs.mkString(",")}" }
-        .mkString("\n"))
+  def listIndexes: Map[String, (String, Seq[String])] =
+    indexes.map { case (ix, r) => ix -> (r.table, r.columns) }.toMap
+  private val indexes = scala.collection.mutable.Map[String, IndexRecord]() ++
+    catalog[IndexRecord]("index")
 
   /** Range-cluster + sort a frame on `name`'s indexed columns (identity
     * when no index covers the table). A COMPOSITE index over z-orderable
@@ -1614,7 +1463,7 @@ class GraftSession(val spark: SparkSession, val root: String) {
     * .ZOrder]]; proven read-side in ZOrderSpec). */
   private def clusterByIndex(name: String, df: DataFrame): DataFrame =
     indexes.values.collectFirst {
-      case (t, cols) if t == name && cols.forall(df.columns.contains) =>
+      case IndexRecord(t, cols) if t == name && cols.forall(df.columns.contains) =>
         cols
     } match {
       case Some(cols)
@@ -1633,7 +1482,8 @@ class GraftSession(val spark: SparkSession, val root: String) {
     * db.table addressing everywhere, e.g. jsonbench's `bench.events`).
     * The session itself is single-namespace: a recorded database name is
     * a qualifier that [[sql]] strips from `db.table` references. */
-  private val databases = scala.collection.mutable.Set[String]()
+  private val databases = scala.collection.mutable.Set[String]() ++
+    catalog[DatabaseRecord]("database").map(_._2.name)
 
   /** `text` without the `db.` qualifier of any recorded database. Runs on
     * masked text, so a literal or comment naming `bench.events` stays as
@@ -1644,30 +1494,24 @@ class GraftSession(val spark: SparkSession, val root: String) {
         .replaceAllIn(q, "")
     }
 
-  /** Monotonic sequence (reference node_sequence): file-backed counter
+  /** Monotonic sequence (reference node_sequence): a recorded counter
     * with PG START/INCREMENT options (reference `CREATE SEQUENCE ... START
-    * 10 INCREMENT 2`, test_sql_features.cpp DDL section). File format is
-    * `current:increment`; a bare long (pre-options format) reads as
-    * increment 1. */
+    * 10 INCREMENT 2`, test_sql_features.cpp DDL section). An unknown
+    * sequence starts at 1. */
   def createSequence(name: String, start: Long = 1L,
                      increment: Long = 1L): Unit = {
     require(increment != 0, "sequence increment must be non-zero")
-    Files.writeString(rootPath.resolve(s"_seq_$name"),
-      s"${start - increment}:$increment")
+    writeRecord(catalogFile("sequence", name),
+      SequenceRecord(start - increment, increment))
   }
 
-  def dropSequence(name: String): Unit =
-    Files.deleteIfExists(rootPath.resolve(s"_seq_$name"))
+  def dropSequence(name: String): Unit = dropRecord("sequence", name)
 
   def nextSequence(name: String): Long = {
-    val f = rootPath.resolve(s"_seq_$name")
-    val (cur, inc) =
-      if (Files.exists(f)) Files.readString(f).trim.split(":") match {
-        case Array(c, i) => (c.toLong, i.toLong)
-        case Array(c) => (c.toLong, 1L)
-      } else (0L, 1L)
-    val next = cur + inc
-    Files.writeString(f, s"$next:$inc")
+    val f = catalogFile("sequence", name)
+    val sq = readRecord[SequenceRecord](f).getOrElse(SequenceRecord(0L, 1L))
+    val next = sq.last + sq.increment
+    writeRecord(f, sq.copy(last = next))
     next
   }
 
@@ -1893,7 +1737,8 @@ class GraftSession(val spark: SparkSession, val root: String) {
       case showTablesRe() =>
         discoverTables()
         val rels = tables.toSeq.map { case (n, st) =>
-          (n, if (views.contains(n)) "m" else if (st.dynamic) "g" else "r")
+          (n, if (views.contains(n) || Files.exists(catalogFile("incview", n))) "m"
+            else if (st.dynamic) "g" else "r")
         } ++ views.keys.filterNot(tables.contains).toSeq.map(v => (v, "v"))
         catalogDf(rels.sortBy(_._1), "relname", "relkind")
       case describeRe(tbl) if tables.contains(tbl) ||
@@ -1920,8 +1765,8 @@ class GraftSession(val spark: SparkSession, val root: String) {
           "transactions are not supported: each DML statement is " +
             "individually atomic (staged directory swap); see README " +
             "'Known gaps'")
-      case createDbRe(db) => databases += db.toLowerCase; empty
-      case dropDbRe(db) => databases -= db.toLowerCase; empty
+      case createDbRe(db) => createDatabase(db); empty
+      case dropDbRe(db) => dropDatabase(db); empty
       case createIndexRe(index, tbl, cols) =>
         createIndex(index, tbl,
           cols.split(",").map(_.trim).filter(_.nonEmpty).toSeq); empty
@@ -2177,26 +2022,13 @@ class GraftSession(val spark: SparkSession, val root: String) {
 
   /** SQL macro (reference CREATE FUNCTION → pg_rewrite macro, expanded at
     * plan time — transform_macro.cpp): body is substituted textually at
-    * call sites before Catalyst parses. Persisted like views. */
+    * call sites before Catalyst parses. Recorded like views. */
   def createMacro(name: String, params: Seq[String], body: String): Unit = {
-    macros(name) = (params, body)
-    val md = rootPath.resolve("_macros")
-    Files.createDirectories(md)
-    Files.writeString(md.resolve(s"$name.sql"),
-      params.mkString(",") + "\n" + body)
+    macros(name) = MacroRecord(params, body)
+    writeRecord(catalogFile("macro", name), macros(name))
   }
-  private val macros =
-    scala.collection.mutable.Map[String, (Seq[String], String)]()
-  locally {
-    val md = rootPath.resolve("_macros")
-    if (Files.exists(md))
-      children(md)
-        .filter(_.getFileName.toString.endsWith(".sql")).foreach { p =>
-          val Array(ps, body) = Files.readString(p).split("\n", 2)
-          macros(p.getFileName.toString.stripSuffix(".sql")) =
-            (ps.split(",").map(_.trim).filter(_.nonEmpty).toSeq, body)
-        }
-  }
+  private val macros = scala.collection.mutable.Map[String, MacroRecord]() ++
+    catalog[MacroRecord]("macro")
 
   /** Expands macro call sites `name(arg1, arg2)` in masked text, leftmost
     * first, so a macro spelling inside a literal or a comment stays data.
@@ -2213,7 +2045,7 @@ class GraftSession(val spark: SparkSession, val root: String) {
       call.findAllMatchIn(t).flatMap(c => (c.end until t.length)
           .find(i => d(i + 1) == d(c.end - 1)).map(c -> _)).nextOption() match {
         case Some((c, close)) =>
-          val (params, body) = macros(c.group(1))
+          val MacroRecord(params, body) = macros(c.group(1))
           val args = params.zip(splitTopLevel(t.substring(c.end, close))
             .map(_.trim)).toMap
           val bound = if (args.isEmpty) m.mask(body)
@@ -2302,8 +2134,7 @@ class GraftSession(val spark: SparkSession, val root: String) {
     * (fresh-session catalog recovery — pg_class scan analogue). */
   private def discoverTables(): Unit = {
     children(rootPath)
-      .filter(p => Files.isDirectory(p) &&
-        Files.exists(p.resolve("_graft_meta").resolve("schema.ddl")))
+      .filter(p => Files.exists(p.resolve(TableRecordFile)))
       .map(_.getFileName.toString)
       .filterNot(tables.contains)
       .foreach(loadMeta)
@@ -2349,42 +2180,21 @@ class GraftSession(val spark: SparkSession, val root: String) {
     (if (Files.exists(f)) Files.readString(f).trim.toLong else -1L) + 1
   }
 
-  /** Metadata = union schema DDL + tombstones + flags; schema round-trips
-    * through StructType.toDDL/fromDDL (no hand-rolled JSON). */
   private def persistMeta(name: String): Unit = {
     val st = tables(name)
-    val meta = tableDir(name).resolve("_graft_meta")
-    Files.createDirectories(meta)
-    Files.writeString(meta.resolve("schema.ddl"), st.schema.toDDL)
-    Files.writeString(meta.resolve("tombstones.txt"),
-      st.tombstones.mkString("\n"))
-    Files.writeString(meta.resolve("kind.txt"), if (st.dynamic) "g" else "r")
-    Files.writeString(meta.resolve("renames.txt"),
-      renames.getOrElse(name, Map.empty)
-        .map { case (k, (old, gen)) => s"$k=$old@$gen" }.mkString("\n"))
+    writeRecord(tableDir(name).resolve(TableRecordFile), TableRecord(
+      if (st.dynamic) "g" else "r", RecordJson.readTree(st.schema.json),
+      st.tombstones, st.renames, st.checks, st.fks))
   }
 
-  private def loadMeta(name: String): Option[TableState] = {
-    val meta = tableDir(name).resolve("_graft_meta")
-    if (!Files.exists(meta.resolve("schema.ddl"))) return None
-    val ddl = Files.readString(meta.resolve("schema.ddl"))
-    val schema = if (ddl.trim.isEmpty) new StructType()
-                 else StructType.fromDDL(ddl)
-    val tomb = Files.readString(meta.resolve("tombstones.txt"))
-      .split("\n").filter(_.nonEmpty).toSet
-    val dynamic = Files.readString(meta.resolve("kind.txt")).trim == "g"
-    val rn = Files.readString(meta.resolve("renames.txt"))
-      .split("\n").filter(l => l.contains("=") && l.contains("@")).map { l =>
-        val Array(k, v) = l.split("=", 2)
-        val Array(old, gen) = v.split("@", 2)
-        k -> (old, gen.toLong)
-      }.toMap
-    if (rn.nonEmpty) renames(name) = rn
-    val st = TableState(dynamic, schema, tomb)
-    tables(name) = st
-    loadConstraints(name)
-    Some(st)
-  }
+  private def loadMeta(name: String): Option[TableState] =
+    readRecord[TableRecord](tableDir(name).resolve(TableRecordFile)).map { r =>
+      val st = TableState(r.kind == "g",
+        DataType.fromJson(r.schema.toString).asInstanceOf[StructType],
+        r.tombstones, r.renames, r.checks, r.fks)
+      tables(name) = st
+      st
+    }
 
   /** Two-string-column local frame for catalog introspection results. */
   private def catalogDf(rows: Seq[(String, String)], c1: String,
@@ -2415,6 +2225,61 @@ object GraftSession {
 
   private[api] def causeChain(t: Throwable): Seq[Throwable] =
     Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(16).toSeq
+
+  // ---- catalog records: one JSON file per durable object ----
+
+  private val RecordJson = com.fasterxml.jackson.databind.json.JsonMapper
+    .builder().addModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
+    .build()
+
+  /** Writes `record` as JSON to `file`: to a temp file beside it, then an
+    * atomic move over it, so a reader sees the old record or the new one,
+    * never a torn one. */
+  private[api] def writeRecord(file: Path, record: AnyRef): Unit = {
+    Files.createDirectories(file.getParent)
+    val tmp = file.resolveSibling(
+      s".${file.getFileName}.${java.util.UUID.randomUUID}.tmp")
+    Files.write(tmp, RecordJson.writeValueAsBytes(record))
+    Files.move(tmp, file, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** The record in `file`, or None when there is none. */
+  private[api] def readRecord[T](file: Path)(
+      implicit t: scala.reflect.ClassTag[T]): Option[T] =
+    try Some(RecordJson.readValue(file.toFile,
+      t.runtimeClass.asInstanceOf[Class[T]]))
+    catch { case _: java.io.FileNotFoundException => None }
+
+  private val TableRecordFile = "_table.json"
+
+  /** A table: kind `r` (fixed schema) or `g` (dynamic), the union schema
+    * as Spark's `StructType.json`, tombstoned columns, renames by visible
+    * name, CHECKs and FKs. */
+  private[api] final case class TableRecord(kind: String,
+    schema: com.fasterxml.jackson.databind.JsonNode, tombstones: Set[String],
+    renames: Map[String, Rename], checks: Seq[Check], fks: Seq[Fk])
+  /** A renamed column's old physical name and the first batch generation
+    * written with the new one. */
+  private[api] final case class Rename(from: String, generation: Long)
+  private[api] final case class Check(name: String, expr: String)
+  /** `onDelete` is restrict, cascade or setnull. */
+  private[api] final case class Fk(column: String, parent: String,
+    parentCol: String, onDelete: String)
+  /** A view's or plain matview's body. */
+  private[api] final case class ViewRecord(body: String)
+  /** An incremental matview: its spec and the `batch_*` dirs of `base`
+    * whose rows its stored partials fold. */
+  private[api] final case class IncViewRecord(base: String, keys: Seq[String],
+    aggs: Seq[(String, String, String)], seen: Seq[String])
+  private[api] final case class EnumRecord(values: Seq[String])
+  private[api] final case class CompositeRecord(fields: String)
+  private[api] final case class MacroRecord(params: Seq[String], body: String)
+  private[api] final case class IndexRecord(table: String, columns: Seq[String])
+  /** `last` is the value nextval returned last (start − increment before
+    * the first call). */
+  private[api] final case class SequenceRecord(last: Long, increment: Long)
+  private[api] final case class DatabaseRecord(name: String)
 
   // ---- the statement patterns execute() matches on prepared text ----
 

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.api.GraftSession
 
@@ -165,8 +164,8 @@ class IncMatViewSpec extends SparkSpec {
     s.createIncrementalMatView("mv", "base", Seq("lang"),
       Seq(("count", "*", "n"), ("sum", "n_chars", "chars")))
     // 40 sequential inserts cross autoCompactThreshold (32) at least
-    // once — compaction folds the small-batch tail, and the fold log +
-    // refresh-before-compact must keep every refresh incremental/noop
+    // once — compaction folds the small-batch tail, and refreshing
+    // dependents before the fold must keep every refresh incremental/noop
     var total = 1L
     (1 to 40).foreach { i =>
       s.execute(s"INSERT INTO base VALUES ('en', $i)")
@@ -176,7 +175,7 @@ class IncMatViewSpec extends SparkSpec {
         s"insert $i downgraded refresh to $mode")
     }
     assert(docs(s) == Seq(("en", 41L, total)))
-    // explicit full compaction is also fold-logged: still no rebuild
+    // explicit full compaction hands the fold product on: still no rebuild
     s.execute("INSERT INTO base VALUES ('de', 5)")
     s.compact("base")
     val afterCompact = s.refreshIncrementalMatView("mv")
@@ -189,7 +188,7 @@ class IncMatViewSpec extends SparkSpec {
     assert(docs(s) == Seq(("de", 1L, 6L), ("en", 41L, total)))
   }
 
-  test("fold log and seen-set persist: refresh stays incremental across restart") {
+  test("seen set persists through a fold: refresh stays incremental across restart") {
     val root = graft.TmpDirs.create("graft_inc_rs")
     val s1 = GraftSession(spark, root)
     s1.execute("CREATE TABLE base (lang STRING, n_chars BIGINT)")
@@ -199,8 +198,8 @@ class IncMatViewSpec extends SparkSpec {
     s1.execute("INSERT INTO base VALUES ('en', 2)")
     s1.execute("INSERT INTO base VALUES ('en', 3)")
     s1.compactSmall("base", smallBytes = Long.MaxValue) // folds all three
-    // a FRESH session must resolve the folded batches through the
-    // persisted fold log — not fall back to a full rebuild
+    // a FRESH session must read the fold product as seen from the
+    // matview's record — not fall back to a full rebuild
     val s2 = GraftSession(spark, root)
     val mode = s2.refreshIncrementalMatView("mv")
     assert(mode == "noop" || mode.startsWith("incremental"),
@@ -224,35 +223,6 @@ class IncMatViewSpec extends SparkSpec {
     val rows2 = s.table("mv").orderBy(col("lang")).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
     assert(rows2 == Seq(("de", 1L, 1L), ("en", 4L, 2L)))
-  }
-
-  test("pre-versioned count(col) spec forces one full rebuild on load") {
-    // a .inc spec persisted before the skip-NULLs count(col) change
-    // holds partials that counted every row; merging skip-NULLs deltas
-    // into them would silently mix two count definitions. Loading a
-    // version-markerless spec with a non-* count column must rebuild
-    // once, then upgrade the file so later refreshes stay incremental.
-    val root = graft.TmpDirs.create("graft_inc_v1")
-    val s1 = GraftSession(spark, root)
-    s1.execute("CREATE TABLE base (lang STRING, n_chars BIGINT)")
-    s1.execute("INSERT INTO base VALUES ('en', 10), ('en', NULL)")
-    s1.createIncrementalMatView("mv", "base", Seq("lang"),
-      Seq(("count", "n_chars", "n_vals")))
-    // strip the version marker = simulate a pre-upgrade spec file
-    val spec = java.nio.file.Paths.get(root, "_views", "mv.inc")
-    Files.writeString(spec, Files.readString(spec)
-      .split("\n").filter(!_.startsWith("#")).mkString("\n"))
-    val s2 = GraftSession(spark, root)
-    s2.execute("INSERT INTO base VALUES ('en', 3)")
-    assert(s2.refreshIncrementalMatView("mv") == "full",
-      "legacy count(col) spec must force a one-time full rebuild")
-    val r = s2.table("mv").collect().head
-    assert((r.getString(0), r.getLong(1)) == ("en", 2L))
-    // one-time: the upgraded spec refreshes incrementally from here
-    s2.execute("INSERT INTO base VALUES ('en', 4)")
-    assert(s2.refreshIncrementalMatView("mv").startsWith("incremental"))
-    val r2 = s2.table("mv").collect().head
-    assert((r2.getString(0), r2.getLong(1)) == ("en", 3L))
   }
 
   test("GROUP BY list must match the bare select columns") {
@@ -284,5 +254,53 @@ class IncMatViewSpec extends SparkSpec {
         Seq(("avg", "n_chars", "a")))
     }
     assert(e.getMessage.contains("avg"))
+  }
+
+  test("DROP TABLE of an incremental matview forgets it") {
+    val s = g
+    s.execute("CREATE TABLE base (lang STRING, n_chars BIGINT)")
+    s.execute("INSERT INTO base VALUES ('en', 10), ('de', 5)")
+    s.execute("""CREATE INCREMENTAL MATERIALIZED VIEW mv AS
+      SELECT lang, count(*) AS n, sum(n_chars) AS chars
+      FROM base GROUP BY lang""")
+    s.execute("DROP TABLE mv")
+    // compaction refreshes the dependents of base first: the dropped
+    // matview must not be one of them
+    s.execute("INSERT INTO base VALUES ('fr', 7)")
+    s.compact("base")
+    // so must INSERT's auto-compaction, after its rows have landed
+    s.autoCompactThreshold = 2
+    (1 to 3).foreach(i => s.execute(s"INSERT INTO base VALUES ('en', $i)"))
+    assert(s.table("base").count() == 6)
+    intercept[IllegalArgumentException] { s.refreshIncrementalMatView("mv") }
+    // the name is free again, for a plain table
+    s.execute("CREATE TABLE mv (x BIGINT)")
+    assert(s.execute("SHOW TABLES").collect()
+      .map(r => (r.getString(0), r.getString(1))).toMap.get("mv") == Some("r"))
+  }
+
+  test("DROP TABLE of a base drops the incremental matviews over it") {
+    val s = g
+    s.execute("CREATE TABLE base (lang STRING, n_chars BIGINT)")
+    s.execute("INSERT INTO base VALUES ('en', 1)")
+    s.execute("""CREATE INCREMENTAL MATERIALIZED VIEW mv AS
+      SELECT lang, count(*) AS n, sum(n_chars) AS chars
+      FROM base GROUP BY lang""")
+    def rels = s.execute("SHOW TABLES").collect()
+      .map(r => (r.getString(0), r.getString(1))).toMap
+    assert(rels == Map("base" -> "r", "mv" -> "m"))
+    s.execute("DROP TABLE base")
+    assert(rels.isEmpty)
+    intercept[IllegalArgumentException] {
+      s.execute("REFRESH MATERIALIZED VIEW mv")
+    }
+    // a re-created base restarts its batch names at batch_00000000; a
+    // surviving matview would take them for batches it had already seen
+    s.execute("CREATE TABLE base (lang STRING, n_chars BIGINT)")
+    s.execute("INSERT INTO base VALUES ('de', 2), ('de', 3)")
+    s.execute("""CREATE INCREMENTAL MATERIALIZED VIEW mv AS
+      SELECT lang, count(*) AS n, sum(n_chars) AS chars
+      FROM base GROUP BY lang""")
+    assert(docs(s) == Seq(("de", 2L, 5L)))
   }
 }
