@@ -571,16 +571,15 @@ object Dedup {
     * corpus cross product; at 100 TB the cell count scales with the
     * corpus so per-cell membership stays bounded. Assignment is the
     * shared [[Similarity.assignCells]] path (narrow literal argmin up to
-    * maxLiteralCells, broadcast-join beyond). Determinism: cosine is the
+    * 128 cells, broadcast-join beyond). Determinism: cosine is the
     * same left-to-right double fold both engines compute bit-identically
     * (e1/e2-proven), so the ≥-threshold set is exact.
     *
     * Output: (vec_id, cell, keep BOOLEAN) — every input row appears. */
   def semDedup(corpus: DataFrame, centroids: Seq[Seq[Double]],
-               threshold: Double, idCol: String = "vec_id",
-               maxLiteralCells: Int = 128): DataFrame = {
+               threshold: Double, idCol: String = "vec_id"): DataFrame = {
     val assigned = graft.operators.Similarity
-      .assignCells(corpus, centroids, maxLiteralCells)
+      .assignCells(corpus, centroids)
       .select(col("cell"), col("n_id").as(idCol), col("n_emb").as("emb"))
     val a = assigned.select(col("cell"), col(idCol).as("a_id"),
       col("emb").as("a_emb"))

@@ -47,8 +47,7 @@ object Retrieval {
     * since r20), skipping this exchange on a well-split input would
     * re-run tokenize once per consumer AND reintroduce the postings
     * exchange on the exploded (doc_id, term) rows — strictly more bytes
-    * than the raw text this exchange carries. Width is tunable via
-    * spark.graft.spread.partitions. */
+    * than the raw text this exchange carries. */
   private def tokenize(docs: DataFrame, textCol: String,
                        idCol: String): DataFrame =
     graft.Spread.by(docs.select(col(idCol).as("doc_id"), col(textCol)),

@@ -106,11 +106,10 @@ object Similarity {
     * constant and the dot runs on the native codegen'd expression, so
     * assignment is nCells tight loops per row inside whole-stage codegen. */
   def ivfKnn(corpus: DataFrame, queries: DataFrame, k: Int,
-             nCells: Int = 16, nProbe: Int = 4,
-             maxLiteralCells: Int = 128): DataFrame = {
+             nCells: Int = 16, nProbe: Int = 4): DataFrame = {
     val cents = centroidStats(corpus, nCells)
-    val (assigned, probes) = cellAssignments(
-      corpus, queries, cents, nProbe, maxLiteralCells)
+    val (assigned, probes) =
+      cellAssignments(corpus, queries, cents, nProbe)
     rankTopK(
       broadcast(probes).join(assigned, Seq("cell"))
         .filter(col("q_id") =!= col("n_id"))
@@ -124,13 +123,12 @@ object Similarity {
     * [[Dedup.semDedup]]). Cells are centroid indices 0..k−1; same
     * narrow-literal / broadcast-join strategy split as every other
     * centroid path. */
-  def assignCells(corpus: DataFrame, centroids: Seq[Seq[Double]],
-                  maxLiteralCells: Int = 128): DataFrame = {
+  def assignCells(corpus: DataFrame,
+                  centroids: Seq[Seq[Double]]): DataFrame = {
     require(centroids.nonEmpty, "assignCells needs centroids")
     val cents = centroids.zipWithIndex.map { case (emb, i) =>
       (i.toLong, emb, emb.foldLeft(0.0)((s, v) => s + v * v)) }
-    val (assigned, _) = cellAssignments(
-      corpus, corpus.limit(0), cents, 1, maxLiteralCells)
+    val (assigned, _) = cellAssignments(corpus, corpus.limit(0), cents, 1)
     assigned
   }
 
@@ -182,22 +180,27 @@ object Similarity {
       typedLit(cents.map(_._2)), typedLit(cents.map(_._3)),
       typedLit(cents.map(_._1)))
 
+  /** Centroid count up to which cell assignment is the narrow literal
+    * argmin; past it, centroids ride as a broadcast join. IVF-ADC fuses
+    * the literal argmin into its PQ encode, so it refuses more cells. */
+  private val literalCells = 128
+
   /** The IVF core shared by the one-shot [[ivfKnn]] and the persisted
     * index ([[buildIvfIndex]]/[[queryIvfIndex]]): corpus → (cell, n_id,
     * n_emb) assignment and queries → (cell, q_id, q_emb) probes.
     * Per-centroid score is |c|² − 2·a·c (argmin-equivalent to L2 since
     * |a|² is constant per row). Two physical strategies, identical
-    * output. */
+    * output, picked by the centroid count against [[literalCells]]. */
   private def cellAssignments(corpus: DataFrame, queries: DataFrame,
-      cents: Seq[(Long, Seq[Double], Double)], nProbe: Int,
-      maxLiteralCells: Int): (DataFrame, DataFrame) = {
+      cents: Seq[(Long, Seq[Double], Double)],
+      nProbe: Int): (DataFrame, DataFrame) = {
     val spark = corpus.sparkSession
-      if (cents.length <= maxLiteralCells) {
+      if (cents.length <= literalCells) {
         // Literal argmin: a NARROW projection, zero shuffle, fully
         // codegen'd. The corpus side is one graft_argmin node; the
         // query-side probe ranking is an array of nCells scored structs
         // (scoredLiteral, struct ordering = (d asc, c_id asc)), and that
-        // array's size is what maxLiteralCells caps.
+        // array's size is what literalCells caps.
         // r20: a Spread.ensure barrier under this argmin was tried and
         // REVERTED — with the native graft_argmin the per-row work is no
         // longer heavy enough to buy back its exchange (focused 8-round
@@ -257,16 +260,14 @@ object Similarity {
     * joining on it after [[queryIvfIndex]]'s probe selection reads only
     * the probed cells' directories (partition pruning) — per-query I/O is
     * ~ |corpus| · nProbe / nCells, not a full scan. Build is one pass. */
-  def buildIvfIndex(corpus: DataFrame, path: String, nCells: Int = 16,
-                    maxLiteralCells: Int = 128): Unit = {
+  def buildIvfIndex(corpus: DataFrame, path: String,
+                    nCells: Int = 16): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
     val cents = centroidStats(corpus, nCells)
     cents.toDF("c_id", "c_emb", "c_norm").repartition(1)
       .write.mode("overwrite").parquet(s"$path/centroids")
-    val emptyQ = corpus.limit(0)
-    val (assigned, _) =
-      cellAssignments(corpus, emptyQ, cents, 1, maxLiteralCells)
+    val (assigned, _) = cellAssignments(corpus, corpus.limit(0), cents, 1)
     // cluster by target directory (guide §6/§8): this single payload
     // exchange moves each vector once, into the cell layout it serves
     // from, instead of one file per (cell, task) pair
@@ -283,19 +284,17 @@ object Similarity {
     * unchanged against a trained index. Training cost: `rounds` one-pass
     * Lloyd steps (each O(corpus·nCells) dots, no extra shuffles). */
   def buildIvfIndexTrained(corpus: DataFrame, path: String, nCells: Int = 16,
-                           rounds: Int = 3,
-                           maxLiteralCells: Int = 128): Unit = {
+                           rounds: Int = 3): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
     // kmeansFitCentroids ALWAYS returns nCells entries (an empty cell
     // keeps its previous centroid), so the persisted index never silently
     // shrinks its probe space
     val cents: Seq[(Long, Seq[Double], Double)] =
-      kmeansFitCentroids(corpus, nCells, rounds, maxLiteralCells)
+      kmeansFitCentroids(corpus, nCells, rounds)
     cents.toDF("c_id", "c_emb", "c_norm").repartition(1)
       .write.mode("overwrite").parquet(s"$path/centroids")
-    val (assigned, _) =
-      cellAssignments(corpus, corpus.limit(0), cents, 1, maxLiteralCells)
+    val (assigned, _) = cellAssignments(corpus, corpus.limit(0), cents, 1)
     // see buildIvfIndex: one payload exchange into the serving layout
     assigned.repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell")
@@ -308,8 +307,8 @@ object Similarity {
     * those partitions. Results are identical to [[ivfKnn]] with the same
     * parameters (same centroids, same probe order). */
   def queryIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                    queries: DataFrame, k: Int, nProbe: Int = 4,
-                    maxLiteralCells: Int = 128): DataFrame = {
+                    queries: DataFrame, k: Int,
+                    nProbe: Int = 4): DataFrame = {
     val cents: Seq[(Long, Seq[Double], Double)] =
       spark.read.parquet(s"$path/centroids")
         .select(col("c_id"), col("c_emb"), col("c_norm"))
@@ -318,8 +317,7 @@ object Similarity {
     val assigned = spark.read.parquet(s"$path/cells")
     val emptyCorpus = assigned.select(col("n_id").as("vec_id"),
       col("n_emb").as("embedding")).limit(0)
-    val (_, probes) =
-      cellAssignments(emptyCorpus, queries, cents, nProbe, maxLiteralCells)
+    val (_, probes) = cellAssignments(emptyCorpus, queries, cents, nProbe)
     rankTopK(
       broadcast(probes).join(assigned, Seq("cell"))
         .filter(col("q_id") =!= col("n_id"))
@@ -343,15 +341,13 @@ object Similarity {
     *
     * Output: (cell, dim, mean, n_members) ordered by (cell, dim). */
   def lloydStep(corpus: DataFrame, k: Int = 8,
-                maxLiteralCells: Int = 128,
                 centroids: Option[Seq[Seq[Double]]] = None): DataFrame = {
     val cents = centroids match {
       case Some(cs) => cs.zipWithIndex.map { case (emb, i) =>
         (i.toLong, emb, emb.foldLeft(0.0)((s, v) => s + v * v)) }
       case None => centroidStats(corpus, k)
     }
-    val (assigned, _) = cellAssignments(
-      corpus, corpus.limit(0), cents, 1, maxLiteralCells)
+    val (assigned, _) = cellAssignments(corpus, corpus.limit(0), cents, 1)
     assigned
       .select(col("cell"), posexplode(col("n_emb")).as(Seq("dim", "v")))
       .groupBy(col("cell"), col("dim"))
@@ -372,12 +368,12 @@ object Similarity {
     * round is one [[lloydStep]] pass whose k·dim means (cluster
     * metadata, O(k·dim) driver rows like the IVF centroid collect) feed
     * the next round's literal argmin. */
-  def kmeansFitCentroids(corpus: DataFrame, k: Int = 8, rounds: Int = 5,
-      maxLiteralCells: Int = 128): Seq[(Long, Seq[Double], Double)] = {
+  def kmeansFitCentroids(corpus: DataFrame, k: Int = 8,
+      rounds: Int = 5): Seq[(Long, Seq[Double], Double)] = {
     require(rounds >= 0, "kmeansFitCentroids needs rounds >= 0")
     var cents: Seq[Seq[Double]] = centroidStats(corpus, k).map(_._2)
     for (_ <- 0 until rounds) {
-      val byCell = lloydStep(corpus, k, maxLiteralCells, Some(cents))
+      val byCell = lloydStep(corpus, k, Some(cents))
         .collect().groupBy(_.getLong(0)).map { case (c, rs) =>
           c -> rs.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq
         }
@@ -394,11 +390,10 @@ object Similarity {
     * first rounds−1 iterations run through [[kmeansFitCentroids]]; the
     * last round is returned LAZILY — no duplicate execution when the
     * caller materializes it. */
-  def kmeansFit(corpus: DataFrame, k: Int = 8, rounds: Int = 5,
-                maxLiteralCells: Int = 128): DataFrame = {
+  def kmeansFit(corpus: DataFrame, k: Int = 8, rounds: Int = 5): DataFrame = {
     require(rounds >= 1, "kmeansFit needs at least one round")
-    val cents = kmeansFitCentroids(corpus, k, rounds - 1, maxLiteralCells)
-    lloydStep(corpus, k, maxLiteralCells, Some(cents.map(_._2)))
+    val cents = kmeansFitCentroids(corpus, k, rounds - 1)
+    lloydStep(corpus, k, Some(cents.map(_._2)))
   }
 
   /** Clustering-quality evaluation: per-cell member count and inertia
@@ -412,7 +407,7 @@ object Similarity {
     * per-cell inertia is order-independent and hash-exact across engines.
     *
     * Scale shape: assignment shares cellAssignments' two strategies — the
-    * NARROW single-node literal argmin up to `maxLiteralCells` (zero
+    * NARROW single-node literal argmin up to [[literalCells]] (zero
     * shuffle between scan and assignment), then the broadcast-join +
     * min-struct argmin (centroids as broadcast DATA, one map-side-combined
     * exchange) for the thousands-of-centroids regime a 100 TB corpus
@@ -425,8 +420,8 @@ object Similarity {
     * k-row shape (same always-k posture as [[kmeansFitCentroids]]).
     *
     * Output: (cell, n_members, inertia DECIMAL(38,6)) ordered by cell. */
-  def quantizationError(corpus: DataFrame, centroids: Seq[Seq[Double]],
-                        maxLiteralCells: Int = 128): DataFrame = {
+  def quantizationError(corpus: DataFrame,
+                        centroids: Seq[Seq[Double]]): DataFrame = {
     require(centroids.nonEmpty, "quantizationError needs centroids")
     val spark = corpus.sparkSession
     import spark.implicits._
@@ -436,7 +431,7 @@ object Similarity {
     // (cell, err) per corpus row; b = winning (d, c_id) struct — ties on
     // d break toward the lower cell id in both strategies.
     val perRow =
-      if (cents.length <= maxLiteralCells)
+      if (cents.length <= literalCells)
         corpus
           .select(argmin(cents)(col("embedding"))
             .as("b"), anorm.as("anorm"))
@@ -758,16 +753,14 @@ object Similarity {
   def ivfAdcTopK(corpus: DataFrame, queries: Seq[(Long, Seq[Double])],
                  codebooks: Seq[Seq[Seq[Double]]], k: Int,
                  nCells: Int = 16, nProbe: Int = 4,
-                 maxLiteralCells: Int = 128,
                  onLut: Seq[(Long, Long, Long, Long)] => Unit = _ => (),
                  onProbes: Seq[(Long, Long)] => Unit = _ => ())
       : DataFrame = {
     require(queries.nonEmpty, "ivfAdcTopK needs at least one query")
     val cents = centroidStats(corpus, nCells)
-    require(cents.length <= maxLiteralCells,
-      s"ivfAdcTopK: nCells=${cents.length} exceeds the literal-argmin " +
-        s"cap $maxLiteralCells — persist the index and use the " +
-        "broadcast-join assignment instead")
+    require(cents.length <= literalCells,
+      s"ivfAdcTopK: nCells=${cents.length} exceeds IVF-ADC's limit of " +
+        s"$literalCells cells")
     val probes = ivfProbeCells(queries, cents, nProbe)
     onProbes(probes)
     val lut = adcLut(queries, codebooks)
@@ -849,14 +842,14 @@ object Similarity {
     * ~ |codes| · nProbe / nCells of an already ~D·8/subDim×-compressed
     * code table; the float corpus is never read again. */
   def buildIvfAdcIndex(corpus: DataFrame, path: String,
-                       codebooks: Seq[Seq[Seq[Double]]], nCells: Int = 16,
-                       maxLiteralCells: Int = 128): Unit = {
+                       codebooks: Seq[Seq[Seq[Double]]],
+                       nCells: Int = 16): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
     val cents = centroidStats(corpus, nCells)
-    require(cents.length <= maxLiteralCells,
-      s"buildIvfAdcIndex: nCells=${cents.length} exceeds the " +
-        s"literal-argmin cap $maxLiteralCells")
+    require(cents.length <= literalCells,
+      s"buildIvfAdcIndex: nCells=${cents.length} exceeds IVF-ADC's " +
+        s"limit of $literalCells cells")
     cents.toDF("c_id", "c_emb", "c_norm").repartition(1)
       .write.mode("overwrite").parquet(s"$path/centroids")
     ivfPqCodesWithCell(corpus, cents, codebooks)

@@ -1600,29 +1600,11 @@ object ExtQueries {
       // PARITY at smoke scale (the band straddles 1.0 — ADVICE r19), so
       // the r16 default is kept, not because the barrier variant was
       // refuted but because nothing justified changing it.
-      val loProj = Tables.load(s, dir, "lineitem")
+      val lo = Tables.load(s, dir, "lineitem")
         .join(Tables.load(s, dir, "orders"),
           col("l_orderkey") === col("o_orderkey"))
         .select(col("l_partkey"), col("l_orderkey"), col("o_custkey"),
           col("o_orderdate"))
-      // 100 TB deployment switch (VERDICT r16 #7): at smoke scale the
-      // default 8× pruned re-scan wins, but when the base scan itself
-      // dominates (the real-cluster regime) the documented answer is to
-      // materialize the projected base ONCE and share it. The conf
-      // spells that variant without changing the driver-gated default;
-      // MEMORY_AND_DISK because at deployment the frame outgrows heap.
-      // Safe parse (ADVICE r17): a malformed value degrades to the
-      // default path instead of throwing at plan-build time. The
-      // persisted base is intentionally never unpersisted here: the
-      // flag targets one-corpus-per-JVM deployments (the Verify/Bench
-      // shape); a multi-corpus long-lived driver should manage the
-      // cache externally or leave the flag off.
-      val lo =
-        if (s.conf.getOption("spark.graft.ldbc29.persistBase")
-            .exists(_.equalsIgnoreCase("true")))
-          loProj.persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else loProj
       val membership = lo
         .select(col("l_partkey").as("forum"), col("o_custkey").as("person"))
         .distinct()

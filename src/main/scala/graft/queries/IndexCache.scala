@@ -27,58 +27,17 @@ object IndexCache {
       ()
     })
 
-  /** Tmpdir location for a persisted index over the corpus at `dir`:
-    * `prefix` + collision-free corpus key. The key is the SHA-256 of
-    * the resolved absolute path (a 32-bit String.hashCode could
-    * silently alias two corpora onto one persisted index — ADVICE
-    * r13), suffixed with this JVM's pid: the registry above is
-    * per-JVM, so a path shared ACROSS JVMs would let a second process
-    * overwrite-build the index while the first is scanning it (ADVICE
-    * r14 — a latent flake whenever bench/verify runs overlap).
-    * Pid-scoping makes the on-disk lifetime match the registry's, at
-    * the cost of one rebuild per process — exactly the per-JVM
-    * build-once contract already claimed.
-    *
-    * Pid-scoping also means every exited JVM strands its directories,
-    * and a signature-family bump (lsh v1→v2, r16) strands the whole
-    * old family (ADVICE r16) — so each `path` call first sweeps the
-    * prefix's sibling directories whose owning JVM is dead (any
-    * version: a dead pid's directory is unreachable by construction).
-    * Directories owned by LIVE other JVMs are never touched, so a
-    * concurrent bench/verify at an older HEAD keeps its index. */
-  def path(prefix: String, dir: String): String = {
-    built.computeIfAbsent("sweep:" + prefix, _ => sweepStale(prefix))
-    val p = new java.io.File(sys.props("java.io.tmpdir"),
-      prefix + "_" + corpusKey(dir)).getPath
-    // primary cleanup: this JVM removes its own indexes at exit (the
-    // dead-pid sweep above remains the backstop for crashed JVMs)
-    graft.TmpDirs.register(java.nio.file.Paths.get(p))
-    p
-  }
+  private val paths = new java.util.concurrent.ConcurrentHashMap[
+    (String, String), String]()
 
-  /** Delete tmpdir siblings of `prefix` (same family stem, any
-    * version suffix) owned by a pid that no longer exists. Names
-    * without a parseable `_p<pid>` tail are left alone. */
-  private def sweepStale(prefix: String): Unit = {
-    val stem = prefix.replaceAll("_v\\d+$", "")
-    val me = ProcessHandle.current().pid()
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    Option(tmp.listFiles()).getOrElse(Array.empty[java.io.File])
-      .foreach { f =>
-        val n = f.getName
-        val pid = "_p(\\d+)$".r.findFirstMatchIn(n)
-          .flatMap(m => m.group(1).toLongOption)
-        val dead = pid.exists(p =>
-          p != me && !ProcessHandle.of(p).isPresent)
-        if (n.startsWith(stem + "_") && dead) graft.TmpDirs.deleteRec(f)
-      }
-  }
-
-  private def corpusKey(dir: String): String = {
-    val abs = new java.io.File(dir).getAbsolutePath
-    val d = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(abs.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    d.take(16).map(b => f"$b%02x").mkString +
-      "_p" + ProcessHandle.current().pid()
-  }
+  /** Tmpdir for a persisted index over the corpus at `dir`: one
+    * [[graft.TmpDirs.create]] directory per JVM, `prefix` and resolved
+    * corpus path. Per-JVM like the registry above, so a second process
+    * never overwrite-builds an index the first is scanning (ADVICE r14);
+    * TmpDirs removes the directory at exit and sweeps those of dead
+    * JVMs. */
+  def path(prefix: String, dir: String): String =
+    paths.computeIfAbsent(
+      (prefix, new java.io.File(dir).getAbsolutePath),
+      _ => graft.TmpDirs.create(prefix))
 }

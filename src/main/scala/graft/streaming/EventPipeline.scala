@@ -119,14 +119,13 @@ object EventPipeline {
 
   /** Native session-window aggregation: Spark's built-in `session_window`
     * merges gap-based sessions inside the state store itself — the
-    * declarative alternative to [[sessionizeStream]] whenever the
-    * per-session output is plain aggregates (no custom state
-    * transitions). Prefer this form: it stays whole-stage-codegen'd in
-    * batch mode and uses the purpose-built merging session store in
-    * streaming mode, where custom flatMapGroupsWithState state is opaque
-    * to the engine. Window end is last-event-time + gap (Spark
-    * semantics). Same plan works on batch and `readStream` frames;
-    * watermark bounds streaming state. */
+    * streaming form of [[sessionize]] (per-session output is plain
+    * aggregates, no custom state transitions). Prefer this form: it
+    * stays whole-stage-codegen'd in batch mode and uses the
+    * purpose-built merging session store in streaming mode, where custom
+    * flatMapGroupsWithState state is opaque to the engine. Window end
+    * is last-event-time + gap (Spark semantics). Same plan works on
+    * batch and `readStream` frames; watermark bounds streaming state. */
   def sessionWindowAgg(events: DataFrame, gap: String = "30 minutes",
                        watermark: String = "1 hour"): DataFrame =
     events
@@ -166,9 +165,8 @@ object EventPipeline {
   /** Batch sessionization via flatMapGroupsWithState: groups per user,
     * closes a session after `gapMinutes` of inactivity, and FLUSHES the
     * still-open trailing session so batch results are complete. For
-    * unbounded streams use [[sessionizeStream]], which emits only closed
-    * sessions (append-safe) and evicts idle state via event-time timeout —
-    * this batch variant re-emits the open session every trigger. */
+    * unbounded streams use [[sessionWindowAgg]] — this batch variant
+    * re-emits the open session every trigger. */
   def sessionize(events: Dataset[Event], gapMinutes: Int = 30): Dataset[Session] = {
     import events.sparkSession.implicits._
     val gapMs = gapMinutes * 60 * 1000L
@@ -198,49 +196,6 @@ object EventPipeline {
           // In true streaming, open sessions stay in state until timeout;
           // batch runs flush them so results are complete.
           (out ++ cur).iterator
-      }
-  }
-
-  /** Streaming sessionization: append-mode safe (only CLOSED sessions are
-    * emitted — either by a gap-exceeding event or by event-time timeout
-    * once the watermark passes the gap), state evicted on timeout.
-    * Requires a watermark on the event time column upstream. */
-  def sessionizeStream(events: Dataset[Event],
-                       gapMinutes: Int = 30): Dataset[Session] = {
-    import events.sparkSession.implicits._
-    val gapMs = gapMinutes * 60 * 1000L
-    events
-      .withWatermark("t", s"$gapMinutes minutes")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[Session, Session](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (user: Long, rows: Iterator[Event], state: GroupState[Session]) =>
-          if (rows.isEmpty && state.hasTimedOut) {
-            val closed = state.getOption
-            state.remove()
-            closed.iterator
-          } else {
-            val sorted = rows.toSeq.sortBy(_.t.getTime)
-            val out = scala.collection.mutable.Buffer[Session]()
-            var cur = state.getOption
-            sorted.foreach { e =>
-              cur match {
-                case Some(s) if e.t.getTime - s.end.getTime <= gapMs =>
-                  cur = Some(s.copy(n_events = s.n_events + 1,
-                    total = s.total + e.value, end = e.t))
-                case Some(s) =>
-                  out += s
-                  cur = Some(Session(user, 1, e.value, e.t, e.t))
-                case None =>
-                  cur = Some(Session(user, 1, e.value, e.t, e.t))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              state.setTimeoutTimestamp(s.end.getTime + gapMs)
-            }
-            out.iterator
-          }
       }
   }
 }

@@ -9,16 +9,9 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
 
 /** Shared physical-layout helpers for the operator library. */
 object Spread {
-  /** The pinned barrier width: `spark.graft.spread.partitions` when set
-    * (VERDICT r19 #6 — a cluster conf sized for big relational shuffles,
-    * e.g. thousands of `spark.sql.shuffle.partitions`, should not also
-    * pin thousands of tiny tasks under every small-corpus CPU barrier),
-    * else the session's shuffle parallelism. Malformed / non-positive
-    * values degrade to the default. */
+  /** The pinned barrier width: the session's shuffle parallelism. */
   private[graft] def count(df: DataFrame): Int =
-    df.sparkSession.conf.getOption("spark.graft.spread.partitions")
-      .flatMap(_.toIntOption).filter(_ > 0)
-      .getOrElse(df.sparkSession.sessionState.conf.numShufflePartitions)
+    df.sparkSession.sessionState.conf.numShufflePartitions
 
   /** Hash-repartition on `key` at [[count]] partitions, with the count
     * PINNED (passing it explicitly opts the exchange out of AQE partition
@@ -30,9 +23,8 @@ object Spread {
     * serial. The count stays conf-driven, so cluster deployments scale it
     * with the cluster and low-core local runs stay at their core count.
     * Caller contract (ADVICE r19): sessions must size
-    * spark.sql.shuffle.partitions (or spark.graft.spread.partitions) to
-    * their core count, as Bench/Verify do — a default-200 session pins
-    * 200 tasks under every barrier. */
+    * spark.sql.shuffle.partitions to their core count, as Bench/Verify
+    * do — a default-200 session pins 200 tasks under every barrier. */
   def by(df: DataFrame, key: Column): DataFrame =
     df.repartition(count(df), key)
 
@@ -78,8 +70,7 @@ object Spread {
   * `localCheckpoint` stores blocks on executors: under executor loss /
   * decommissioning the lineage is gone and the job dies — the wrong
   * trade for the cluster regime. The mode is therefore picked by session
-  * state, exactly as [[graft.operators.Graphs]]' per-round truncation
-  * already does: with `SparkContext.setCheckpointDir` set (the cluster
+  * state: with `SparkContext.setCheckpointDir` set (the cluster
   * deployment signal) this is a RELIABLE checkpoint; otherwise an
   * executor-local one (the single-host smoke default — no FS round
   * trip). Results are identical either way; only fault tolerance and
@@ -91,12 +82,12 @@ object Spread {
   * accumulates at most one RDD per query invocation until the frame is
   * collected; reliable-mode files additionally need
   * `spark.cleaner.referenceTracking.cleanCheckpoints=true` or a swept
-  * checkpoint dir (see the Graphs scaladoc). */
+  * checkpoint dir. */
 object Materialize {
-  def once(df: DataFrame, eager: Boolean = true): DataFrame =
+  def once(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      df.checkpoint(eager)
-    else df.localCheckpoint(eager)
+      df.checkpoint()
+    else df.localCheckpoint()
 
   /** Longest wait for an observed metric. Observed metrics reach the
     * driver through the listener bus after the action's job ends, which

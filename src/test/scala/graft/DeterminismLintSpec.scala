@@ -196,4 +196,22 @@ class DeterminismLintSpec extends SparkSpec {
           "arithmetic (BIGINT micro-units), found round()")
     }
   }
+
+  // Operators pick their own physical path from their inputs; a
+  // `spark.graft.*` setting would add a second path that only a test
+  // ever takes. Any such key in the library source fails here.
+  test("src/main reads no spark.graft.* conf") {
+    import scala.jdk.CollectionConverters._
+    val files = scala.util.Using.resource(
+        java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")))(
+      _.iterator.asScala.filter(_.toString.endsWith(".scala")).toList)
+    assert(files.nonEmpty)
+    val offenders = files.flatMap { f =>
+      java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (l, i) if l.contains("spark.graft.") => s"$f:${i + 1}"
+      }
+    }
+    assert(offenders.isEmpty,
+      s"spark.graft.* conf in library source: ${offenders.mkString(", ")}")
+  }
 }

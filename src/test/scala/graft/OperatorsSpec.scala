@@ -428,25 +428,46 @@ class SimilaritySpec extends SparkSpec {
     assert(n > 1, "index must be partitioned by cell")
   }
 
+  /** 140 seeded array<double> vectors with int ids — more than the 128
+    * cells up to which assignment is the literal argmin, so nCells > 128
+    * takes the broadcast-join path. */
+  private lazy val wide = {
+    val rnd = new scala.util.Random(7)
+    (0 until 140).map(i => (i, Array.fill(8)(rnd.nextGaussian())))
+      .toDF("vec_id", "embedding")
+  }
+
   test("ivf knn: join-based path (nCells > maxLiteralCells) is identical") {
-    val q = emb.filter(col("vec_id") < 2)
-    val literal = Similarity.ivfKnn(emb, q, k = 4, nCells = 16)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
-    val joined = Similarity.ivfKnn(emb, q, k = 4, nCells = 16,
-        maxLiteralCells = 0)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
-    assert(literal.sorted == joined.sorted)
+    val vecs = wide.orderBy("vec_id").as[(Int, Array[Double])].collect()
+      .map { case (i, v) => (i.toLong, v.toSeq) }.toSeq
+    // 130 centroids, the last a copy of centroid 3: a vector nearest to
+    // it ties, and the tie goes to the lower cell id
+    val cents = vecs.take(129).map(_._2) :+ vecs(3)._2
+    def fold(a: Seq[Double], c: Seq[Double]): Double =
+      a.zip(c).foldLeft(0.0)((s, p) => s + p._1 * p._2)
+    // the engine's score, |c|² − 2·a·c, each dot folded left to right
+    val want = vecs.map { case (id, a) =>
+      id -> cents.indices.minBy(i =>
+          (fold(cents(i), cents(i)) - 2.0 * fold(a, cents(i)), i))(
+        Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int)).toLong
+    }.toMap
+    val got = Similarity.assignCells(wide, cents)
+      .select("n_id", "cell").as[(Long, Long)].collect().toMap
+    assert(got == want)
+    assert(got(3L) == 3L)
+    // probing every cell sees every candidate: exact brute force
+    val q = wide.filter(col("vec_id") < 2)
+    def rows(df: org.apache.spark.sql.DataFrame) = df
+      .select("q_id", "rnk", "n_id").as[(Long, Int, Long)].collect().toSeq
+    assert(rows(Similarity.ivfKnn(wide, q, k = 4, nCells = 130,
+      nProbe = 130)).sorted == rows(Similarity.bruteForceKnn(wide, q,
+      k = 4)).sorted)
   }
 
   test("ivf knn: array<double> embeddings and int ids work on both paths") {
-    val rnd = new scala.util.Random(7)
-    val vecs = (0 until 40).map(i =>
-      (i, Array.fill(8)(rnd.nextGaussian())))
-    val df = vecs.toDF("vec_id", "embedding")
-    val q = df.filter(col("vec_id") < 2)
-    for (mlc <- Seq(0, 128)) {
-      val out = Similarity.ivfKnn(df, q, k = 3, nCells = 8,
-        maxLiteralCells = mlc).collect()
+    val q = wide.filter(col("vec_id") < 2)
+    for (nCells <- Seq(8, 130)) {
+      val out = Similarity.ivfKnn(wide, q, k = 3, nCells = nCells).collect()
       assert(out.nonEmpty)
       assert(out.forall(r => math.abs(r.getDouble(3)) <= 1.0 + 1e-9))
     }
@@ -580,10 +601,15 @@ class SimilaritySpec extends SparkSpec {
     val cents = emb.filter(col("vec_id") < 4).orderBy("vec_id")
       .select("embedding").as[Array[Float]].collect()
       .map(_.map(_.toDouble).toSeq).toSeq
-    def run(cap: Int) = Similarity.quantizationError(emb, cents, cap)
+    // 126 far-away centroids push the count past 128 (the broadcast
+    // join) without winning a single row
+    val far = (0 until 126).map(i => Seq.fill(cents.head.size)(1e6 + i))
+    def run(cs: Seq[Seq[Double]]) = Similarity.quantizationError(emb, cs)
       .collect().map(r => (r.getLong(0), r.getLong(1),
         r.getDecimal(2).toPlainString)).toSeq
-    assert(run(128) == run(1))
+    val joined = run(cents ++ far)
+    assert(joined.take(4) == run(cents))
+    assert(joined.drop(4).forall(r => r._2 == 0L && r._3 == "0.000000"))
   }
 
   test("hardNegatives: only different-label neighbors, ranked like knn") {
@@ -742,7 +768,7 @@ class GraphsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out.forall { case (v, l) => v == l } && out.size == 7)
     intercept[IllegalArgumentException] {
-      graft.operators.Graphs.labelPropagation(nodes, und, 17)
+      graft.operators.Graphs.labelPropagation(nodes, und, -1)
     }
   }
 }

@@ -1048,31 +1048,4 @@ class PlanGuardSpec extends SparkSpec {
         s"$q must contain no cartesian/nested-loop join:\n$p")
     }
   }
-
-  test("ldbc29 persistBase actually removes the repeated lineitem scans") {
-    // the r17 deployment knob's whole claim is plan-level: with the flag
-    // on, every membership/tagged/replies consumer reads the CACHED
-    // 4-column base and the fact table is scanned at most once (inside
-    // the cached plan), instead of the default's 8 pruned re-scans
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    def lineitemScans(q: org.apache.spark.sql.DataFrame): Int =
-      q.queryExecution.sparkPlan.collect {
-        case s: FileSourceScanExec if s.relation.location.rootPaths
-          .exists(_.toString.contains("lineitem")) => s
-      }.size
-    val run = SparkEntry.queries("ldbc29_info_propagation")
-    assert(lineitemScans(run(spark, sf)) >= 2,
-      "default plan should re-scan lineitem per consumer")
-    spark.conf.set("spark.graft.ldbc29.persistBase", "true")
-    try {
-      // InMemoryTableScan subtrees are separate cached plans, so any
-      // lineitem FileSourceScan left in the TOP-LEVEL plan would mean a
-      // consumer bypassed the cache
-      assert(lineitemScans(run(spark, sf)) == 0,
-        "persistBase plan must read lineitem only through the cache")
-    } finally {
-      spark.conf.unset("spark.graft.ldbc29.persistBase")
-      spark.catalog.clearCache()
-    }
-  }
 }

@@ -316,49 +316,16 @@ class ReviewRegressionSpec extends SparkSpec {
 
   // ---- round-17 pins ----
 
-  test("ldbc29 persistBase variant returns the default plan's rows") {
-    // the 100 TB deployment switch (VERDICT r16 #7) must be a pure
-    // physical choice: same rows, same order, flag on or off
-    // (ADVICE r17: use the spec-wide `sf` fixture like every sibling)
-    val run = SparkEntry.queries("ldbc29_info_propagation")
-    val base = run(spark, sf).collect().toSeq
-    spark.conf.set("spark.graft.ldbc29.persistBase", "true")
-    try {
-      val persisted = run(spark, sf).collect().toSeq
-      assert(persisted == base)
-    } finally {
-      spark.conf.unset("spark.graft.ldbc29.persistBase")
-      spark.catalog.clearCache()
-    }
-  }
-
-  test("IndexCache.path sweeps dead-owner siblings, keeps live ones") {
-    // ADVICE r16: superseded/orphaned index directories leaked in
-    // tmpdir forever. The sweep must remove any same-family directory
-    // (old OR current version) whose owning pid is gone, and never
-    // touch this JVM's own directories or names without a pid tail.
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    val me = ProcessHandle.current().pid()
-    def mk(name: String): java.io.File = {
-      val d = new java.io.File(tmp, name)
-      d.mkdirs()
-      Files.write(d.toPath.resolve("part-0"), Array[Byte](1))
-      d
-    }
-    val deadOld = mk("graft_swtest_index_v1_aaaa_p999999999")
-    val deadNew = mk("graft_swtest_index_v2_bbbb_p999999998")
-    val mine = mk(s"graft_swtest_index_v2_cccc_p$me")
-    val noPid = mk("graft_swtest_index_v2_manual")
-    try {
-      queries.IndexCache.path("graft_swtest_index_v2", sf)
-      assert(!deadOld.exists(), "superseded dead-pid dir must be swept")
-      assert(!deadNew.exists(), "orphaned same-version dir must be swept")
-      assert(mine.exists(), "this JVM's directory must survive")
-      assert(noPid.exists(), "names without a pid tail must survive")
-    } finally Seq(deadOld, deadNew, mine, noPid).foreach { d =>
-      Option(d.listFiles()).getOrElse(Array.empty[java.io.File])
-        .foreach(_.delete()); d.delete()
-    }
+  test("IndexCache.path: one directory per corpus and prefix") {
+    val ic = queries.IndexCache
+    val a = ic.path("graft_pathtest_index", sf)
+    assert(ic.path("graft_pathtest_index", sf) == a)
+    assert(ic.path("graft_pathtest_index",
+      new java.io.File(sf).getAbsolutePath) == a, "keyed by resolved path")
+    val other = graft.TmpDirs.create("graft_pathtest_corpus")
+    assert(ic.path("graft_pathtest_index", other) != a)
+    assert(ic.path("graft_pathtest_other", sf) != a)
+    assert(new java.io.File(a).getName.startsWith("graft_pathtest_index"))
   }
 
   test("TmpDirs dead-pid sweep removes crash remnants, keeps the rest") {
@@ -427,49 +394,52 @@ class ReviewRegressionSpec extends SparkSpec {
     } finally graft.TmpDirs.deleteRec(tmp)
   }
 
-  test("graph kernels: checkpointEvery truncation is row-identical") {
-    // spark.graft.graph.checkpointEvery must be a pure physical choice
-    // (VERDICT r17 Next #5): the exact RecursiveCte lineage-truncation
-    // discipline, behind a conf, with identical results flag on or off.
-    val nodes = (1L to 8L).toDF("node")
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (2L, 5L),
-      (5L, 6L), (6L, 7L), (7L, 8L), (8L, 5L)).toDF("src", "dst")
+  test("graph kernels: 17 rounds truncate themselves, rows unchanged") {
+    // the kernels materialize their iterate every 8th round, with no
+    // conf: past 16 rounds they still run, and the rows match results
+    // computed without truncation
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (2L, 5L),
+      (5L, 6L), (6L, 7L), (7L, 8L), (8L, 5L))
+    val ids = 1L to 8L
+    val nodes = ids.toDF("node")
+    val edges = pairs.toDF("src", "dst")
     val wedges = edges.select(col("src"), col("dst"),
       (col("src") + col("dst")).as("w"))
-    val und = edges.unionByName(
-      edges.select(col("dst").as("src"), col("src").as("dst")))
-      .select(col("src").as("v"), col("dst").as("w"))
-    def all(): (Seq[Row], Seq[Row], Seq[Row]) = (
-      graft.operators.Graphs.pageRankInt(nodes, edges, iters = 6)
-        .orderBy("node").collect().toSeq,
-      graft.operators.Graphs.minPlusDistances(nodes.limit(2), wedges,
-        rounds = 7).orderBy("seed", "node").collect().toSeq,
-      graft.operators.Graphs.labelPropagation(nodes, und, rounds = 5)
-        .orderBy("node").collect().toSeq)
-    val (pr0, mp0, lp0) = all()
-    spark.conf.set("spark.graft.graph.checkpointEvery", "2")
-    try {
-      val (pr1, mp1, lp1) = all()
-      assert(pr1 == pr0); assert(mp1 == mp0); assert(lp1 == lp0)
-    } finally spark.conf.unset("spark.graft.graph.checkpointEvery")
-    // malformed values degrade to off, never throw
-    spark.conf.set("spark.graft.graph.checkpointEvery", "yes")
-    try assert(graft.operators.Graphs
-      .pageRankInt(nodes, edges, iters = 2).count() == 8)
-    finally spark.conf.unset("spark.graft.graph.checkpointEvery")
-    // the 16-round ceiling exists because the analyzed plan doubles per
-    // round (PLANS.md r18) — it lifts only under truncation
-    intercept[IllegalArgumentException] {
-      graft.operators.Graphs.minPlusDistances(nodes.limit(2), wedges, 17)
+    val und = (pairs ++ pairs.map(_.swap)).toDF("v", "w")
+    def truncatedPlan(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.logical.collectLeaves()
+        .exists(_.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
+    // min-plus: 8 nodes, so every shortest path has ≤ 7 edges and the
+    // 7-round (untruncated) result is already final
+    val seeds = nodes.filter(col("node") <= 2L)
+    val mp17 = graft.operators.Graphs.minPlusDistances(seeds, wedges, 17)
+    val mp7 = graft.operators.Graphs.minPlusDistances(seeds, wedges, 7)
+    assert(truncatedPlan(mp17) && !truncatedPlan(mp7))
+    assert(mp17.orderBy("seed", "node").collect().toSeq ==
+      mp7.orderBy("seed", "node").collect().toSeq)
+    // label propagation against a driver-side synchronous run: most
+    // frequent neighbor label, ties to the smallest
+    val adj = (pairs ++ pairs.map(_.swap)).groupMap(_._1)(_._2)
+    var want = ids.map(n => n -> n).toMap
+    for (_ <- 0 until 17) want = want.map { case (n, l) =>
+      n -> adj.get(n).fold(l)(ws => ws.groupBy(want).toSeq
+        .map { case (lab, xs) => (-xs.size, lab) }.min._2)
     }
-    spark.conf.set("spark.graft.graph.checkpointEvery", "4")
-    try {
-      assert(graft.operators.Graphs
-        .minPlusDistances(nodes.limit(1), wedges, rounds = 17)
-        .count() == 8)
-      assert(graft.operators.Graphs
-        .labelPropagation(nodes, und, rounds = 17).count() == 8)
-    } finally spark.conf.unset("spark.graft.graph.checkpointEvery")
+    val lp = graft.operators.Graphs.labelPropagation(nodes, und, 17)
+    assert(truncatedPlan(lp))
+    assert(lp.as[(Long, Long)].collect().toMap == want)
+    // pagerank: 9 iterations cross the round-8 truncation; the driver
+    // run is the same BIGINT recurrence
+    val outdeg = pairs.groupMapReduce(_._1)(_ => 1L)(_ + _)
+    var p = ids.map(_ -> 1024L).toMap
+    for (i <- 0 until 9) {
+      val tele = 3L * BigInt(20).pow(i).toLong * 1024L
+      p = ids.map(v => v -> (tele + 17L * pairs.collect {
+        case (u, `v`) => p(u) / outdeg(u) }.sum)).toMap
+    }
+    val pr = graft.operators.Graphs.pageRankInt(nodes, edges, iters = 9)
+    assert(truncatedPlan(pr))
+    assert(pr.as[(Long, Long)].collect().toMap == p)
   }
 
   // ---- round-19 pins ----

@@ -314,25 +314,6 @@ class StreamingSpec extends SparkSpec {
     assert(g.table("landed").count() == 4)
   }
 
-  test("insertIfNew grandfathers pre-keyed-format bare-epoch log lines") {
-    // a table written before the keyed log holds bare epoch longs from a
-    // single anonymous writer; after upgrading, that stream passes its
-    // real query.id — replays of its OLD epochs must stay no-ops
-    import java.nio.file.{Files, Paths}
-    import graft.api.GraftSession
-    val g = GraftSession(spark,
-      graft.TmpDirs.create("graft_legacy"))
-    g.execute("CREATE TABLE landed (id BIGINT)")
-    Files.writeString(
-      Paths.get(g.root, "landed", "_stream_commits"), "0\n1\n")
-    val b = Seq(9L).toDF("id")
-    assert(!g.insertIfNew("landed", 0L, b, "query-a")) // grandfathered
-    assert(!g.insertIfNew("landed", 1L, b))            // anonymous too
-    assert(g.insertIfNew("landed", 2L, b, "query-a"))  // new epoch lands
-    assert(!g.insertIfNew("landed", 2L, b, "query-a"))
-    assert(g.table("landed").count() == 1)
-  }
-
   test("streaming ingest keeps an incremental matview fresh per batch") {
     import java.nio.file.Files
     import org.apache.spark.sql.DataFrame
