@@ -423,8 +423,8 @@ class GraftSession(val spark: SparkSession, val root: String) {
     * file to open, so unbounded growth degrades every read even when the
     * data is tiny — a pathological insert loop must not be able to build
     * a 10^4-dir table. Dirs of one physical layout share a single scan
-    * ([[scanBatches]]), and each batch's schema is inferred once per
-    * session. ≤ 0 disables. */
+    * ([[scanBatches]]), and each batch's schema is inferred once
+    * ([[graft.ParquetSchemas]]). ≤ 0 disables. */
   var autoCompactThreshold: Int = 32
 
   def insert(name: String, df: DataFrame): Unit = writeLock(name).synchronized {
@@ -1133,8 +1133,10 @@ class GraftSession(val spark: SparkSession, val root: String) {
   /** Resolved table: every ingest batch read with its own physical schema,
     * cast + null-padded to the union schema, tombstones dropped — one
     * parquet scan per distinct physical layout, not one per batch
-    * ([[scanBatches]]), and each batch's schema is inferred once per
-    * session, so re-reading an unchanged table runs no Spark job. */
+    * ([[scanBatches]]). Each batch's schema comes from the program's one
+    * parquet schema memo ([[graft.ParquetSchemas]]): inferred on the
+    * batch's first read, so re-reading an unchanged table runs no Spark
+    * job. */
   def table(name: String): DataFrame = scanBatches(name, listBatches(name))
 
   /** The rows of `dirs` (batch dirs of `name`) in the table's current
@@ -1145,7 +1147,9 @@ class GraftSession(val spark: SparkSession, val root: String) {
     * scan with one projection — Spark packs a group's many small files
     * into a few tasks, where a union arm per dir planned a file index,
     * scan, codegen subtree and task per dir. Groups keep first-seen
-    * order and are unioned. With `tagged`, every row also carries its
+    * order and are unioned. A dir's physical schema comes from
+    * [[batchSchema]], so building the scan runs no Spark job once every
+    * dir has been read. With `tagged`, every row also carries its
     * batch dir name in `__graft_batch`, taken from the file it was read
     * from. */
   private def scanBatches(name: String, dirs: Seq[Path],
@@ -1197,41 +1201,26 @@ class GraftSession(val spark: SparkSession, val root: String) {
     }.reduce(_ union _)
   }
 
-  /** Physical schema of every batch dir this session has opened, with the
-    * sorted data-file names it was inferred from — the session's stand-in
-    * for the reference's catalog-held column metadata. Batch dirs are
-    * write-once (generation-stamped, staged, moved into place), and
-    * part-file names carry the writing job's UUID, so a dir re-created at
-    * the same path (DROP + CREATE restarts numbering; another session
-    * over the same root) never matches a stale entry. */
-  private val batchSchemas =
-    new java.util.concurrent.ConcurrentHashMap[Path, (Seq[String], StructType)]()
-
-  /** Physical schema of one `batch_*` dir. Parquet schema inference runs
-    * a Spark job per call, so it runs on the first read of a batch only;
-    * later reads hit the memo, which runs none. */
-  private def batchSchema(dir: Path): StructType = {
-    // the names Spark's file index skips are not data files
-    val files = children(dir).map(_.getFileName.toString)
-      .filterNot(n => n.startsWith("_") || n.startsWith(".")).sorted
-    batchSchemas.get(dir) match {
-      case (`files`, schema) => schema
-      case _ =>
-        val schema = spark.read.parquet(dir.toString).schema
-        batchSchemas.put(dir, (files, schema))
-        schema
-    }
-  }
+  /** Physical schema of one `batch_*` dir, from the program's one parquet
+    * schema memo ([[graft.ParquetSchemas]]) — the session's stand-in for
+    * the reference's catalog-held column metadata. The first read of a
+    * batch infers it (one Spark job); later reads hit the memo and run
+    * none. Batch dirs are write-once (generation-stamped, staged, moved
+    * into place) and part-file names carry the writing job's UUID, so a
+    * dir re-created at the same path (DROP + CREATE restarts numbering;
+    * another session over the same root) never matches a stale entry. */
+  private def batchSchema(dir: Path): StructType =
+    graft.ParquetSchemas.schema(spark, dir.toString)
 
   /** Drops the memoized schemas of `name`'s batch dirs not in `live`. */
-  private def forgetBatches(name: String, live: Set[Path]): Unit = {
-    val data = dataDir(name)
-    batchSchemas.keySet.removeIf(d => d.getParent == data && !live(d))
-  }
+  private def forgetBatches(name: String, live: Set[Path]): Unit =
+    graft.ParquetSchemas.forget(spark, dataDir(name).toString,
+      live.map(_.toString))
 
-  /** Number of memoized batch schemas (O(live batches) across DML,
-    * compaction, TRUNCATE and DROP). */
-  private[graft] def batchSchemaCount: Int = batchSchemas.size
+  /** Number of memoized schemas under this session's root (O(live
+    * batches) across DML, compaction, TRUNCATE and DROP). */
+  private[graft] def batchSchemaCount: Int =
+    graft.ParquetSchemas.count(spark, rootPath.toString)
 
   // ------------------------------------------------------- views/matviews
 

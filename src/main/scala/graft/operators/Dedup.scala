@@ -192,7 +192,7 @@ object Dedup {
       .select((col("band") * nBuckets +
         pmod(col("bh"), lit(nBuckets.toLong))).cast("long").as("pk"))
       .distinct().collect().map(_.getLong(0)).sorted.toSeq
-    val idx = spark.read.parquet(s"$path/buckets")
+    val idx = graft.ParquetSchemas.read(spark, s"$path/buckets")
       .filter((col("band") * nBuckets + col("bucket")).cast("long")
         .isin(probeKeys: _*))
     probes.join(idx, Seq("band", "bh"))

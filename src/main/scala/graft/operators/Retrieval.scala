@@ -222,7 +222,7 @@ object Retrieval {
     // it gets the same distributed range-sorted layout as postings/
     // (globally ordered files → tight per-row-group term min/max for the
     // query-term In() pushdown), never a repartition(1) single-task write
-    spark.read.parquet(s"$path/postings")
+    graft.ParquetSchemas.read(spark, s"$path/postings")
       .groupBy(col("term")).agg(count(lit(1)).as("df"))
       .repartitionByRange(col("term")).sortWithinPartitions(col("term"))
       .write.mode("overwrite").parquet(s"$path/df")
@@ -244,11 +244,11 @@ object Retrieval {
     val qt = queries.flatMap { case (q, ts) => ts.distinct.map(t => (q, t)) }
       .toDF("q_id", "term")
     val terms = queries.flatMap(_._2).distinct
-    val tfq = spark.read.parquet(s"$path/postings")
+    val tfq = graft.ParquetSchemas.read(spark, s"$path/postings")
       .filter(col("term").isin(terms: _*))
-    val dfq = spark.read.parquet(s"$path/df")
+    val dfq = graft.ParquetSchemas.read(spark, s"$path/df")
       .filter(col("term").isin(terms: _*))
-    val stats = spark.read.parquet(s"$path/stats")
+    val stats = graft.ParquetSchemas.read(spark, s"$path/stats")
     val model = collectModel(dfq, stats)
     onModel(model)
     scoreAndRank(tfq, qt, model, k, k1, b)
@@ -319,7 +319,7 @@ object Retrieval {
   def queryPhraseIndex(spark: org.apache.spark.sql.SparkSession,
                        path: String, phrase: Seq[String]): DataFrame = {
     require(phrase.nonEmpty, "phrase must have at least one term")
-    val toks = spark.read.parquet(s"$path/postings")
+    val toks = graft.ParquetSchemas.read(spark, s"$path/postings")
       .filter(col("term").isin(phrase.distinct: _*))
     phraseFold(toks, phrase)
   }

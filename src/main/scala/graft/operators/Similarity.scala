@@ -310,11 +310,11 @@ object Similarity {
                     queries: DataFrame, k: Int,
                     nProbe: Int = 4): DataFrame = {
     val cents: Seq[(Long, Seq[Double], Double)] =
-      spark.read.parquet(s"$path/centroids")
+      graft.ParquetSchemas.read(spark, s"$path/centroids")
         .select(col("c_id"), col("c_emb"), col("c_norm"))
         .collect().toSeq.map(r => (r.getLong(0),
           r.getSeq[Double](1).toSeq, r.getDouble(2)))
-    val assigned = spark.read.parquet(s"$path/cells")
+    val assigned = graft.ParquetSchemas.read(spark, s"$path/cells")
     val emptyCorpus = assigned.select(col("n_id").as("vec_id"),
       col("n_emb").as("embedding")).limit(0)
     val (_, probes) = cellAssignments(emptyCorpus, queries, cents, nProbe)
@@ -717,10 +717,10 @@ object Similarity {
                     queries: Seq[(Long, Seq[Double])], k: Int): DataFrame = {
     require(queries.nonEmpty, "querySq8Index needs at least one query")
     val stats: Seq[(Int, Double, Double)] =
-      spark.read.parquet(s"$path/stats")
+      graft.ParquetSchemas.read(spark, s"$path/stats")
         .orderBy(col("pos")).collect().toSeq
         .map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
-    sq8Rank(spark.read.parquet(s"$path/codes"),
+    sq8Rank(graft.ParquetSchemas.read(spark, s"$path/codes"),
       sq8QueryCodes(stats, queries), k)
   }
 
@@ -880,7 +880,7 @@ object Similarity {
       : DataFrame = {
     require(queries.nonEmpty, "queryIvfAdcIndex needs at least one query")
     val cents: Seq[(Long, Seq[Double], Double)] =
-      spark.read.parquet(s"$path/centroids")
+      graft.ParquetSchemas.read(spark, s"$path/centroids")
         .select(col("c_id"), col("c_emb"), col("c_norm"))
         .collect().toSeq.map(r => (r.getLong(0),
           r.getSeq[Double](1).toSeq, r.getDouble(2)))
@@ -889,7 +889,7 @@ object Similarity {
     val lut = adcLut(queries, codebooks)
     onLut(lut)
     val probedCells = probes.map(_._2).distinct.sorted
-    val codes = spark.read.parquet(s"$path/codes")
+    val codes = graft.ParquetSchemas.read(spark, s"$path/codes")
       // static partition filter → directory-level pruning (the broadcast
       // probe join alone would rely on runtime DPP; this is plan-time)
       .filter(col("cell").isin(probedCells: _*))

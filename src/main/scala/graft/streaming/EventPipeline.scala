@@ -37,8 +37,8 @@ object EventPipeline {
     // event files, or a testdata scale-factor dir where events.parquet
     // sits next to other tables
     val probe = new java.io.File(dir, "events.parquet")
-    val schema =
-      spark.read.parquet(if (probe.exists()) probe.getPath else dir).schema
+    val schema = graft.ParquetSchemas.schema(spark,
+      if (probe.exists()) probe.getPath else dir)
     graft.Tables.withEventTime(
       spark.readStream.schema(schema).parquet(dir))
   }

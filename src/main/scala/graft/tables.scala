@@ -113,6 +113,103 @@ object Materialize {
     catch { case _: TimeoutException => fallback }
 }
 
+/** The one parquet read of the program: each path's schema is inferred
+  * once per JVM and kept, the way a catalog keeps column metadata, so
+  * building a query never runs a Spark job to learn a schema. Parquet
+  * schema inference runs one job per `spark.read.parquet` call; a read
+  * with the kept schema (`spark.read.schema(s).parquet(path)`) runs none.
+  *
+  * Memo key: the qualified path plus the session's values of the confs
+  * that change what inference returns ([[InferenceConfs]]). Each entry
+  * also holds the fingerprint of the data it was inferred from: name,
+  * length and mtime of the path itself when it is a file, or of each
+  * entry directly under it when it is a directory, skipping the `_` and
+  * `.` names that Spark's file index skips. A read whose fingerprint
+  * differs infers again and replaces the entry, so a file rewritten in
+  * place, a directory rewritten with `mode("overwrite")` (new part-file
+  * names) or a conf flip never gets a stale schema. Only the top level
+  * of a directory is fingerprinted: a partitioned tree is tracked through
+  * its top-level entries, which every overwrite of the tree replaces.
+  * Paths that do not exist are read plainly, so their error is Spark's.
+  */
+object ParquetSchemas {
+  import org.apache.hadoop.fs.{FileStatus, Path}
+  import org.apache.spark.sql.types.StructType
+
+  /** The session confs that change the schema parquet inference returns. */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp")
+
+  private case class Key(path: Path, confs: Seq[Option[String]])
+  private case class Entry(fingerprint: Seq[(String, Long, Long)],
+                           schema: StructType)
+
+  private val memo = new java.util.concurrent.ConcurrentHashMap[Key, Entry]()
+
+  /** `path` read as parquet with its memoized schema. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(schema(spark, path)).parquet(path)
+
+  /** The parquet schema of `path`: inferred on the first call for a key
+    * and whenever the fingerprint moved, memoized otherwise. */
+  def schema(spark: SparkSession, path: String): StructType = {
+    val p = qualify(spark, path)
+    val key = Key(p, InferenceConfs.map(spark.conf.getOption))
+    def inferred = spark.read.parquet(path).schema
+    // fingerprint BEFORE inferring: a write racing the inference leaves
+    // an entry whose fingerprint no longer matches, never a stale hit
+    fingerprint(spark, p).fold(inferred) { fp =>
+      memo.get(key) match {
+        case Entry(`fp`, s) => s
+        case _ =>
+          val s = inferred
+          memo.put(key, Entry(fp, s))
+          s
+      }
+    }
+  }
+
+  /** Drops the entries of the paths directly under `dir` not in `live`. */
+  private[graft] def forget(spark: SparkSession, dir: String,
+                            live: Set[String]): Unit = {
+    val parent = qualify(spark, dir)
+    val keep = live.map(qualify(spark, _))
+    memo.keySet.removeIf(k => k.path.getParent == parent && !keep(k.path))
+  }
+
+  /** Number of entries at or under `dir`. */
+  private[graft] def count(spark: SparkSession, dir: String): Int = {
+    val root = qualify(spark, dir)
+    def under(p: Path): Boolean =
+      p != null && (p == root || under(p.getParent))
+    memo.keySet.stream.filter(k => under(k.path)).count.toInt
+  }
+
+  private def qualify(spark: SparkSession, path: String): Path = {
+    val p = new Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p)
+  }
+
+  private def fingerprint(spark: SparkSession,
+                          p: Path): Option[Seq[(String, Long, Long)]] = {
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def entry(s: FileStatus) =
+      (s.getPath.getName, s.getLen, s.getModificationTime)
+    try {
+      val st = fs.getFileStatus(p)
+      Some(
+        if (!st.isDirectory) Seq(entry(st))
+        else fs.listStatus(p).toSeq.map(entry)
+          .filterNot { case (n, _, _) =>
+            n.startsWith("_") || n.startsWith(".") }
+          .sortBy(_._1))
+    } catch { case _: java.io.FileNotFoundException => None }
+  }
+}
+
 /** Table loading helpers shared by SparkEntry / Verify / Bench / tests.
   *
   * All driver test tables are single parquet files under a scale-factor
@@ -121,6 +218,9 @@ object Materialize {
   * agnostic; filter pushdown + column pruning happen in Catalyst either way.
   */
 object Tables {
+  /** Table `name` of the scale-factor dir `dir`, read through
+    * [[ParquetSchemas.read]]: the first load of a table infers its
+    * schema, every later one reuses it and runs no Spark job. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     // Timestamp physical-type tolerance (the driver has regenerated
     // events.parquet with different encodings across rounds):
@@ -133,7 +233,7 @@ object Tables {
     //    UTC, so this matches DuckDB's naive-timestamp oracle semantics.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    spark.read.parquet(s"$dir/$name.parquet")
+    ParquetSchemas.read(spark, s"$dir/$name.parquet")
   }
 
   /** Adds the canonical microsecond event-time column `t` (TimestampType)

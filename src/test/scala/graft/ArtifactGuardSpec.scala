@@ -33,6 +33,20 @@ class ArtifactGuardSpec extends SparkSpec {
     assert(Bench.bestTime(3, "boom")(() => sys.error("no")) == -1.0)
   }
 
+  test("Bench records -1 for a query whose projected column throws") {
+    spark.udf.register("artifact_guard_fail", (x: Long) => {
+      if (x >= 0) throw new IllegalStateException("projected column failed")
+      x
+    })
+    val broken = spark.range(10).selectExpr("id", "artifact_guard_fail(id) AS broken")
+    // count() prunes the throwing column out of its plan and succeeds …
+    assert(broken.count() == 10)
+    // … the timed sink evaluates it, so the failure is recorded
+    assert(Bench.bestTime(1, "projected")(() => Bench.sink(broken)) == -1.0)
+    assert(Bench.bestTime(1, "fine")(
+      () => Bench.sink(spark.range(10).toDF())) >= 0.0)
+  }
+
   test("Bench.bestTime records a nonnegative duration when any attempt works") {
     var first = true
     val t = Bench.bestTime(2, "flaky") { () =>

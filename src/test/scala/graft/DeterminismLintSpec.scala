@@ -214,4 +214,39 @@ class DeterminismLintSpec extends SparkSpec {
     assert(offenders.isEmpty,
       s"spark.graft.* conf in library source: ${offenders.mkString(", ")}")
   }
+
+  // A bare parquet read infers the schema with a Spark job on every call;
+  // program reads go through ParquetSchemas, whose memo runs it once.
+  // Bare reads that remain, per file and source line, with the reason.
+  private val bareParquetReads: Map[(String, String), String] = Map(
+    ("graft/tables.scala", "def inferred = spark.read.parquet(path).schema")
+      -> "ParquetSchemas' own inference on a memo miss",
+    ("graft/api/GraftSession.scala",
+      """case "parquet" => spark.read.parquet(path)""")
+      -> "COPY FROM reads a user path once per statement",
+    ("graft/sources/Ingest.scala", "spark.read.parquet(path)")
+      -> ("one-shot reads of a user path, whose partition tree may nest " +
+        "deeper than the memo's one-level fingerprint"))
+
+  test("src/main reads parquet only through ParquetSchemas") {
+    import scala.jdk.CollectionConverters._
+    val main = java.nio.file.Paths.get("src/main/scala")
+    val files = scala.util.Using.resource(java.nio.file.Files.walk(main))(
+      _.iterator.asScala.filter(_.toString.endsWith(".scala")).toList)
+    assert(files.nonEmpty)
+    val found = files.flatMap { f =>
+      val rel = main.relativize(f).toString
+      java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (l, i) if l.contains("read.parquet(") =>
+          (rel, l.trim, s"$rel:${i + 1}")
+      }
+    }
+    val offenders = found.collect {
+      case (rel, l, at) if !bareParquetReads.contains((rel, l)) => s"$at: $l"
+    }
+    assert(offenders.isEmpty, "bare spark.read.parquet in library source " +
+      s"(use graft.ParquetSchemas.read):\n${offenders.mkString("\n")}")
+    // every allowlist entry still names a live read
+    assert(bareParquetReads.keySet == found.map(f => (f._1, f._2)).toSet)
+  }
 }
