@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: measure the LSH index build's directory-cost model.
@@ -15,7 +14,8 @@ import org.apache.spark.sql.functions._
   * corpus index once per requested nBuckets (bands=8, so directory
   * count = 8·nBuckets), times each build twice (cold + warm-JIT), and
   * prints the implied per-directory cost between consecutive configs.
-  * Same session shape as graft.Verify so timings match the gate's.
+  * Runs on [[LocalSession]], the session Verify runs on, so timings
+  * match the gate's.
   */
 object LshBuildCost {
   def main(args: Array[String]): Unit = {
@@ -23,14 +23,7 @@ object LshBuildCost {
       "usage: graft.LshBuildCost <sfDir> <nBuckets> [more...]")
     val sfDir = args.head
     val cfgs = args.tail.map(_.toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val spark = LocalSession(defaultCpus = 4)
     spark.sparkContext.setLogLevel("ERROR")
 
     // the exact d29 corpus frame (TextQueries: every doc_id % 20 != 0)

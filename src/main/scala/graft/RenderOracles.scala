@@ -4,12 +4,11 @@ package graft
   * query — the cold-stash path a driver-side harness may take
   * (CORRECTNESS_r09 failed exactly the stash-dependent oracles because
   * of it). The literals come from the COMPILED-IN
-  * [[OracleLiteralsSnapshot]] (committed source — present on any
-  * classpath that can run this main, unlike the resource file, which a
-  * bare `sbt compile` does not copy; CORRECTNESS_r10), so the SQL
-  * rendered here is byte-identical to what [[Verify]] renders after a
-  * full run; `tools/check.py --render-first --no-resource` pins that
-  * property against the whole registry with the resource deleted.
+  * [[OracleLiteralsSnapshot]] (committed source, so present on any
+  * classpath that can run this main), so the SQL rendered here is
+  * byte-identical to what [[Verify]] renders after a full run;
+  * `tools/check.py --render-first` pins that property against the whole
+  * registry.
   *
   * Usage: `java -cp ... graft.RenderOracles /path/to/oracle_sql.json
   *         [intended_sf_dir]`
@@ -41,6 +40,6 @@ object RenderOracles {
     Verify.writeOracleSql(p)
     println(s"[render-oracles] wrote ${SparkEntry.oracleSql.size} oracle " +
       s"SQL entries to $outPath (stash cold — literals came from the " +
-      "persisted classpath snapshot where present)")
+      "compiled-in snapshot)")
   }
 }

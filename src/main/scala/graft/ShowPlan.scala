@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan for registry queries.
   *
   * Usage (CP = target/scala-2.13/classes plus the /opt/spark jars):
@@ -9,23 +7,16 @@ import org.apache.spark.sql.SparkSession
   *
   * Every `.explain("formatted")` quoted in PLANS.md should be
   * reproducible through this main, so plan evidence never depends on
-  * an ad-hoc scratch file. Same session shape as graft.Verify
-  * (UTC, GraftExtensions, SPARK_GRAFT_CPUS), so the printed plan is
-  * the one Verify/Bench would execute.
+  * an ad-hoc scratch file. Runs on [[LocalSession]], the session
+  * Verify and Bench run on, so the printed plan is the one they would
+  * execute.
   */
 object ShowPlan {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: graft.ShowPlan <sfDir> <querySubstring> [more...]")
     val sfDir = args.head
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val spark = LocalSession(defaultCpus = 4)
     spark.sparkContext.setLogLevel("ERROR")
     val wanted = args.tail
     val names = SparkEntry.queries.keys.toSeq.sorted

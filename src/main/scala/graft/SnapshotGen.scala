@@ -1,18 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Regenerates the committed oracle-literal snapshot (the compiled-in
-  * [[OracleLiteralsSnapshot]] source AND the classpath resource) from
-  * fresh sf0.01 models: builds exactly the stash-dependent queries —
-  * building a query runs its bounded driver-side model jobs, which stash
-  * the literal fragments — then [[OracleLiterals.persist]] writes every
-  * channel. Deterministic on any host: the models are exact integer
-  * counts + StrictMath.log (fdlibm) + BigDecimal HALF_UP, so the
-  * regenerated constant is bit-identical wherever the parquet is.
+/** The only writer of the committed oracle-literal snapshot, the
+  * compiled-in [[OracleLiteralsSnapshot]] source: builds exactly the
+  * stash-dependent queries on fresh sf0.01 models — building a query runs
+  * its bounded driver-side model jobs, which stash the literal fragments
+  * — then [[OracleLiterals.persist]] writes the stash. Deterministic on
+  * any host and at any core count: the models are exact integer counts +
+  * StrictMath.log (fdlibm) + BigDecimal HALF_UP, so the regenerated
+  * constant is bit-identical wherever the parquet is.
   *
-  * Usage: `sbt "runMain graft.SnapshotGen [/root/testdata/sf0.01]"`,
-  * then recompile and commit the regenerated
+  * Usage, from the repo root: `sbt "runMain graft.SnapshotGen
+  * [/root/testdata/sf0.01]"` (any other corpus is refused), then
+  * recompile and commit the regenerated
   * `src/main/scala/graft/OracleLiteralsSnapshot.scala`.
   */
 object SnapshotGen {
@@ -34,15 +33,8 @@ object SnapshotGen {
         "e18_lut", "e18_probes", "e19_lut", "e19_probes")
 
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = args.headOption.getOrElse(OracleLiterals.CanonicalDir)
+    val spark = LocalSession(defaultCpus = 4)
     StashQueries.foreach(q => SparkEntry.queries(q)(spark, sfDir))
     val missing = StashKeys.filter(OracleLiterals.stashed(_).isEmpty)
     require(missing.isEmpty,

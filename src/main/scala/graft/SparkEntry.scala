@@ -39,15 +39,15 @@ object SparkEntry {
     * valid at ANY scale, since the stash carries that run's values),
     * OR (b) cold, in any JVM that can call this method at all: the
     * sf0.01 literal snapshot is a COMPILED-IN constant
-    * ([[OracleLiteralsSnapshot]], generated source committed in-repo),
-    * so it is present wherever these classes are — no resource-copy
-    * step involved (CORRECTNESS_r10 failed exactly because a resource
-    * file missed the driver's render classpath). Cold renders are only
-    * valid at the snapshot's scale (sf0.01); if a hash-checked literal
-    * is somehow absent, the rendered SQL FAILS LOUDLY in the oracle
-    * engine naming the missing key instead of silently recomputing a
-    * boundary-fragile `round(ln(...))`. `tools/check.py --render-first
-    * --no-resource` gates all of this end to end. */
+    * ([[OracleLiteralsSnapshot]], generated source committed in-repo and
+    * written only by [[SnapshotGen]]), so it is present wherever these
+    * classes are (CORRECTNESS_r10 failed because a resource-file copy
+    * missed the driver's render classpath). Cold renders are only valid
+    * at the snapshot's scale (sf0.01); if a hash-checked literal is
+    * somehow absent, the rendered SQL FAILS LOUDLY in the oracle engine
+    * naming the missing key instead of silently recomputing a
+    * boundary-fragile `round(ln(...))`. `tools/check.py --render-first`
+    * gates all of this end to end. */
   def oracleSql: Map[String, String] =
     graft.queries.CoreQueries.oracles ++
     graft.queries.TextQueries.oracles ++

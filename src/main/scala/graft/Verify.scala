@@ -2,7 +2,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Writes only
+  * under its outDir; the committed literal snapshot is regenerated by
+  * [[SnapshotGen]] alone. */
 object Verify {
   /** Dumps one query result; on ANY failure writes a 1-row
     * (error STRING) parquet in its place and returns false. The sentinel
@@ -53,24 +55,13 @@ object Verify {
   def main(args: Array[String]): Unit = {
     // Optional third arg: substring filter over query names — dump only
     // the matching subset (iteration aid; the driver always passes 2
-    // args and gets the full registry). With a filter active the
-    // literal-stash persist is skipped: a partial run must never
-    // overwrite the canonical snapshot with a stash that only the
-    // filtered queries warmed.
+    // args and gets the full registry).
     val (sfDir, outDir, filt) = args match {
       case Array(a, b)    => (a, b, "")
       case Array(a, b, f) => (a, b, f)
       case _ => sys.error("usage: graft.Verify <sfDir> <outDir> [filter]")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(defaultCpus = 4)
     new java.io.File(outDir).mkdirs()
     val failed = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => filt.isEmpty || name.contains(filt) }
@@ -80,12 +71,6 @@ object Verify {
     if (failed.nonEmpty)
       System.err.println(
         s"[verify] ${failed.size} queries FAILED: ${failed.mkString(", ")}")
-    // Persist the now-warm literal stash BEFORE rendering: a later fresh
-    // JVM (e.g. a harness that renders SparkEntry.oracleSql without
-    // running queries) reads the snapshot instead of boundary-fragile
-    // in-SQL fallbacks (see graft.OracleLiterals). Skipped on filtered
-    // runs — a partial stash must never shadow the canonical snapshot.
-    if (filt.isEmpty) OracleLiterals.persist(sfDir, extraDir = Some(outDir))
     // Rendered AFTER the queries run above: oracle text may embed
     // driver-stashed literals (graft.OracleLiterals).
     writeOracleSql(Paths.get(s"$outDir/oracle_sql.json"))

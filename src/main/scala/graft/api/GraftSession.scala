@@ -239,14 +239,14 @@ class GraftSession(val spark: SparkSession, val root: String) {
 
   /** Drops every stored view that references `name`, and every
     * incremental matview over it. Matviews are backed by a table and take
-    * the table-drop path. */
+    * the table-drop path. A body that does not parse references nothing:
+    * `spark.sql` rejects what `parsePlan` rejects, so no such view was
+    * ever registered. */
   private def dropDependentViews(name: String): Unit = {
     val target = name.toLowerCase
-    val pattern = ("(?i)\\b" + java.util.regex.Pattern.quote(name) + "\\b").r
     views.toSeq
-      .collect { case (v, body) if referencedRelations(body)
-          .map(_.contains(target))
-          .getOrElse(pattern.findFirstIn(body).isDefined) => v }
+      .collect { case (v, body)
+          if referencedRelations(body).exists(_.contains(target)) => v }
       .foreach(v => if (tables.contains(v)) dropTable(v) else dropView(v))
     incViewsOver(name).foreach { case (v, _) => dropTable(v) }
   }

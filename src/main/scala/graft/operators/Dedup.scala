@@ -283,15 +283,16 @@ object Dedup {
     * detected by one narrow sum-aggregate per round (no extra join).
     * Lineage is truncated per round with a checkpoint
     * ([[graft.Materialize.observed]]) — the iterative-Spark plan-growth
-    * failure mode. For graphs with long chains (not the dedup shape) a
+    * failure mode. Rounds are bounded by
+    * `spark.sql.cteRecursionLevelLimit` (-1: unlimited), the limit
+    * [[RecursiveCte.fixpoint]] reads. For graphs with long chains (not the dedup shape) a
     * large-star/small-star variant would cut rounds to O(log n);
     * diameter-bound propagation is the right trade here.
     *
     * Returns one row per node that appears in any edge:
     * (node, component) with component = min node id in the cluster. */
   def connectedComponents(edges: DataFrame, srcCol: String = "src",
-                          dstCol: String = "dst",
-                          maxIterations: Int = 50): DataFrame = {
+                          dstCol: String = "dst"): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val adj = edges
       .select(col(srcCol).cast("long").as("node"),
@@ -330,9 +331,10 @@ object Dedup {
     // be the whole first propagation round into the node-list aggregate
     var (labels, prev) = checkpointSummed(adj.groupBy(col("node"))
       .agg(least(col("node"), min(col("nbr"))).as("component")))
+    val maxRounds = RecursiveCte.maxRounds(edges.sparkSession)
     var i = 0
     var converged = false
-    while (i < maxIterations && !converged) {
+    while (i < maxRounds && !converged) {
       val pushed = adj.join(labels, "node")
         .select(col("nbr").as("node"), col("component"))
       val minNext = labels.union(pushed)
@@ -353,8 +355,8 @@ object Dedup {
       prev = cur
       i += 1
     }
-    require(converged, s"connectedComponents did not converge in " +
-      s"$maxIterations rounds — pathological chain graph? " +
+    require(converged, s"connectedComponents did not converge in $i " +
+      s"rounds (${RecursiveCte.LevelLimit}) — pathological chain graph? " +
       "(dup clusters converge in O(diameter))")
     labels
   }

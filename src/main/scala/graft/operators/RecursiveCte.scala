@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 
 /** WITH RECURSIVE as a driver-side fixpoint loop — the Spark mapping of the
@@ -25,6 +25,15 @@ import org.apache.spark.sql.functions.{count, lit}
   */
 object RecursiveCte {
 
+  /** The conf bounding every driver-side fixpoint loop's rounds. */
+  val LevelLimit = "spark.sql.cteRecursionLevelLimit"
+
+  /** Round bound read from [[LevelLimit]]; -1 there means unlimited. */
+  private[graft] def maxRounds(spark: SparkSession): Int = {
+    val limit = spark.conf.get(LevelLimit).toInt
+    if (limit < 0) Int.MaxValue else limit
+  }
+
   /** Eagerly checkpoint `df` and return it with its row count, observed
     * DURING the checkpoint's own materializing action (r20, VERDICT r19
     * #4): the emptiness gate previously ran a SEPARATE count job per
@@ -47,9 +56,7 @@ object RecursiveCte {
   /** UNION semantics (dedup across iterations): seed ∪ step(seed) ∪ … until
     * no new rows. `step` must be monotone (pure function of its input). */
   def fixpoint(seed: DataFrame, step: DataFrame => DataFrame): DataFrame = {
-    val limit = seed.sparkSession.conf
-      .get("spark.sql.cteRecursionLevelLimit").toInt
-    val maxIterations = if (limit < 0) Int.MaxValue else limit
+    val maxIterations = maxRounds(seed.sparkSession)
     var (acc, deltaCount) = checkpointCounted(seed.distinct())
     var delta = acc
     var i = 0
@@ -72,7 +79,7 @@ object RecursiveCte {
     }
     require(i < maxIterations || deltaCount == 0,
       s"recursive CTE did not converge in $maxIterations iterations " +
-        "(spark.sql.cteRecursionLevelLimit)")
+        s"($LevelLimit)")
     acc
   }
 }

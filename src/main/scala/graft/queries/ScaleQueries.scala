@@ -10,7 +10,7 @@ import graft.operators.Skew
 
 /** Scale-pattern queries: skew-salted aggregation (oracle = the unsalted
   * SQL, proving algebraic equivalence), window-function sessionization
-  * (the shuffle-native batch twin of streaming/EventPipeline.sessionize),
+  * (the gaps-and-islands twin of streaming/EventPipeline.sessionWindowAgg),
   * and subword tokenization stats. */
 object ScaleQueries {
   private val D = DecimalType(28, 6)

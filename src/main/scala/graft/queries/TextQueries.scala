@@ -1001,8 +1001,7 @@ object TextQueries {
         WHERE t.term IN (SELECT DISTINCT term FROM q)),
       stats AS (SELECT COUNT(*) AS n_docs,
                   CAST(SUM(dl) AS BIGINT) AS sum_dl FROM dls),
-      ${graft.OracleLiterals.get("bm25_idf", graft.OracleLiterals.missingCte(
-        "bm25_idf", "idfl", Seq("term", "idf_micro")))},
+      ${graft.OracleLiterals.get("bm25_idf", "idfl", Seq("term", "idf_micro"))},
       sc AS (
         SELECT q.q_id, t.doc_id,
           CAST((CAST(i.idf_micro AS HUGEINT) * 880 * t.tf * s.sum_dl) //
@@ -1087,8 +1086,7 @@ object TextQueries {
         SELECT doc_id,
           CAST('0x' || substr(md5(b), 1, 15) AS BIGINT) % 512 AS bk
         FROM bg),
-      ${graft.OracleLiterals.get("g3_lp",
-        graft.OracleLiterals.missingCte("g3_lp", "lp", Seq("bk", "lp_micro")))},
+      ${graft.OracleLiterals.get("g3_lp", "lp", Seq("bk", "lp_micro"))},
       per AS (
         SELECT doc_id, bk, COUNT(*) AS c
         FROM occ GROUP BY doc_id, bk)
@@ -1314,8 +1312,7 @@ object TextQueries {
         SELECT doc_id, is_t,
                CAST('0x' || substr(md5(f), 1, 15) AS BIGINT) % 64 AS b
         FROM feats),
-      ${graft.OracleLiterals.get("d18_w",
-        graft.OracleLiterals.missingCte("d18_w", "w", Seq("b", "w_micro")))},
+      ${graft.OracleLiterals.get("d18_w", "w", Seq("b", "w_micro"))},
       pd AS (SELECT doc_id, b, COUNT(*) AS c FROM occ GROUP BY doc_id, b),
       agg AS (
         SELECT doc_id,

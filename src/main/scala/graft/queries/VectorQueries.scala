@@ -526,8 +526,8 @@ object VectorQueries {
 
   private def e12Oracle: String = s"""
     WITH $pqCodesSql,
-    ${graft.OracleLiterals.get("e12_lut", graft.OracleLiterals.missingCte(
-      "e12_lut", "lut", Seq("q_id", "m", "code", "dq_micro")))},
+    ${graft.OracleLiterals.get("e12_lut",
+      "lut", Seq("q_id", "m", "code", "dq_micro"))},
     scored AS (
       SELECT l.q_id, c.vec_id, CAST(SUM(l.dq_micro) AS BIGINT)
         AS adist_micro
@@ -574,11 +574,9 @@ object VectorQueries {
       FROM csc),
     cellof AS (SELECT vec_id, cell FROM casg WHERE r = 1),
     ${graft.OracleLiterals.get(s"${prefix}_probes",
-      graft.OracleLiterals.missingCte(
-        s"${prefix}_probes", "probes", Seq("q_id", "cell")))},
+      "probes", Seq("q_id", "cell"))},
     ${graft.OracleLiterals.get(s"${prefix}_lut",
-      graft.OracleLiterals.missingCte(
-        s"${prefix}_lut", "lut", Seq("q_id", "m", "code", "dq_micro")))},
+      "lut", Seq("q_id", "m", "code", "dq_micro"))},
     cand AS (
       SELECT p.q_id, a.vec_id
       FROM probes p JOIN cellof a ON a.cell = p.cell),

@@ -1,15 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured Streaming surface. The reference's "streaming" is its
   * push-based intra-query batch pipeline (SURVEY §2.9 — no event time, no
   * watermarks); Spark's normal execution already is that, so this module
   * is the *additive* unbounded-stream capability: windowed aggregation
-  * with watermarks and custom sessionization state — the operators a
-  * production event pipeline needs.
+  * and gap-based sessions with watermarks — the operators a production
+  * event pipeline needs.
   *
   * Every transform here works identically on a batch DataFrame and a
   * `readStream` DataFrame (Structured Streaming's core contract), which is
@@ -20,8 +19,6 @@ object EventPipeline {
 
   case class Event(user_id: Long, event_type: String, t: java.sql.Timestamp,
                    value: Double)
-  case class Session(user_id: Long, n_events: Int, total: Double,
-                     start: java.sql.Timestamp, end: java.sql.Timestamp)
 
   /** Unbounded source over a directory of event parquet (schema fixed up
     * front — streaming requires it). The schema is taken from a batch read
@@ -118,13 +115,11 @@ object EventPipeline {
   }
 
   /** Native session-window aggregation: Spark's built-in `session_window`
-    * merges gap-based sessions inside the state store itself — the
-    * streaming form of [[sessionize]] (per-session output is plain
-    * aggregates, no custom state transitions). Prefer this form: it
-    * stays whole-stage-codegen'd in batch mode and uses the
-    * purpose-built merging session store in streaming mode, where custom
-    * flatMapGroupsWithState state is opaque to the engine. Window end
-    * is last-event-time + gap (Spark semantics). Same plan works on
+    * merges gap-based sessions inside the state store itself
+    * (per-session output is plain aggregates, no custom state
+    * transitions). It stays whole-stage-codegen'd in batch mode and uses
+    * the purpose-built merging session store in streaming mode. Window
+    * end is last-event-time + gap (Spark semantics). Same plan works on
     * batch and `readStream` frames; watermark bounds streaming state. */
   def sessionWindowAgg(events: DataFrame, gap: String = "30 minutes",
                        watermark: String = "1 hour"): DataFrame =
@@ -160,42 +155,5 @@ object EventPipeline {
     counts.withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
       .select(col("h"), col("rnk"), col(keyCol), col("n"))
-  }
-
-  /** Batch sessionization via flatMapGroupsWithState: groups per user,
-    * closes a session after `gapMinutes` of inactivity, and FLUSHES the
-    * still-open trailing session so batch results are complete. For
-    * unbounded streams use [[sessionWindowAgg]] — this batch variant
-    * re-emits the open session every trigger. */
-  def sessionize(events: Dataset[Event], gapMinutes: Int = 30): Dataset[Session] = {
-    import events.sparkSession.implicits._
-    val gapMs = gapMinutes * 60 * 1000L
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[Session, Session](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (user: Long, rows: Iterator[Event], state: GroupState[Session]) =>
-          val sorted = rows.toSeq.sortBy(_.t.getTime)
-          val out = scala.collection.mutable.Buffer[Session]()
-          var cur = state.getOption
-          sorted.foreach { e =>
-            cur match {
-              case Some(s) if e.t.getTime - s.end.getTime <= gapMs =>
-                cur = Some(s.copy(n_events = s.n_events + 1,
-                  total = s.total + e.value, end = e.t))
-              case Some(s) =>
-                out += s
-                cur = Some(Session(user, 1, e.value, e.t, e.t))
-              case None =>
-                cur = Some(Session(user, 1, e.value, e.t, e.t))
-            }
-          }
-          cur match {
-            case Some(s) => state.update(s)
-            case None => ()
-          }
-          // In true streaming, open sessions stay in state until timeout;
-          // batch runs flush them so results are complete.
-          (out ++ cur).iterator
-      }
   }
 }

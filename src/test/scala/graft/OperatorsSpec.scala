@@ -794,6 +794,18 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(cc.length == n && cc.forall(_._2 == 1L))
   }
 
+  test("rounds are bounded by spark.sql.cteRecursionLevelLimit") {
+    // a 12-node chain needs several rounds; a limit of 1 cuts it short
+    val edges = (1L until 12L).map(i => i -> (i + 1)).toDF("src", "dst")
+    spark.conf.set("spark.sql.cteRecursionLevelLimit", "1")
+    try {
+      val e = intercept[IllegalArgumentException] {
+        Dedup.connectedComponents(edges)
+      }
+      assert(e.getMessage.contains("spark.sql.cteRecursionLevelLimit"))
+    } finally spark.conf.unset("spark.sql.cteRecursionLevelLimit")
+  }
+
   test("keepCanonical drops every cluster member but the min id") {
     val df = Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d"), (9L, "z"))
       .toDF("doc_id", "text")

@@ -1,14 +1,9 @@
 package graft
 
-/** Pins the COMMITTED literal snapshot against freshly computed models
-  * at sf0.01, the driver's verify scale — across BOTH channels:
-  *
-  *   - the COMPILED-IN [[OracleLiteralsSnapshot]] (what a cold oracle
-  *     render consumes on ANY classpath that can call
-  *     `SparkEntry.oracleSql` — the primary channel since VERDICT r10
-  *     proved a resource file can miss the driver's render classpath);
-  *   - the committed resource `src/main/resources/graft/
-  *     oracle_literals.b64` (the secondary refresh channel).
+/** Pins the COMMITTED literal snapshot — the COMPILED-IN
+  * [[OracleLiteralsSnapshot]], what a cold oracle render consumes on ANY
+  * classpath that can call `SparkEntry.oracleSql` — against freshly
+  * computed models at sf0.01, the driver's verify scale.
   *
   * If a model definition, the corpus hashing, or the literal rendering
   * ever changes without regenerating the snapshot, a cold render would
@@ -16,7 +11,7 @@ package graft
   * this spec turns that into a red test instead. Regeneration is
   * deterministic on any host (exact integer counts + StrictMath.log +
   * BigDecimal HALF_UP): `sbt "runMain graft.SnapshotGen"` then commit
-  * the regenerated source + resource.
+  * the regenerated source.
   */
 class OracleLiteralsResourceSpec extends SparkSpec {
 
@@ -114,14 +109,20 @@ class OracleLiteralsResourceSpec extends SparkSpec {
     }
   }
 
-  test("committed resource (secondary channel) matches the compiled snapshot") {
-    val p = java.nio.file.Paths.get(
-      "src/main/resources/graft/oracle_literals.b64")
-    assert(java.nio.file.Files.exists(p),
-      s"committed literal snapshot missing: $p")
-    assert(java.nio.file.Files.readString(p) == compiledText,
-      "src/main/resources/graft/oracle_literals.b64 drifted from the " +
-        "compiled OracleLiteralsSnapshot — run graft.SnapshotGen and " +
-        "commit both")
+  test("the snapshot writer refuses a non-canonical corpus before writing") {
+    // a foreign corpus whose dir merely shares the canonical basename
+    val foreign = java.nio.file.Files.createDirectories(
+      TmpDirs.createPath("graft_foreign").resolve("sf0.01"))
+    val src = java.nio.file.Paths.get(OracleLiterals.SourcePath)
+    val before = java.nio.file.Files.readString(src)
+    val mtime = java.nio.file.Files.getLastModifiedTime(src)
+    // an entry no committed snapshot has, so any write would change bytes
+    OracleLiterals.put("refusal_probe", "probe AS (SELECT 1 AS x)")
+    val e = intercept[IllegalArgumentException] {
+      OracleLiterals.persist(foreign.toString)
+    }
+    assert(e.getMessage.contains(OracleLiterals.CanonicalDir))
+    assert(java.nio.file.Files.readString(src) == before)
+    assert(java.nio.file.Files.getLastModifiedTime(src) == mtime)
   }
 }

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.streaming.EventPipeline
-import graft.streaming.EventPipeline.{Event, Session}
+import graft.streaming.EventPipeline.Event
 
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
@@ -24,28 +24,17 @@ class StreamingSpec extends SparkSpec {
     assert(out.map(_.getLong(2)).sum == 4)
   }
 
-  test("sessionize splits on inactivity gap (batch mode)") {
-    val sessions = EventPipeline.sessionize(batch.toDS(), gapMinutes = 30)
-      .collect().sortBy(s => (s.user_id, s.start.getTime))
-    assert(sessions.length == 3)
-    assert(sessions(0) == Session(1L, 2, 3.0, ts(0), ts(5)))
-    assert(sessions(1).n_events == 1 && sessions(1).total == 4.0)
-    assert(sessions(2).user_id == 2L)
-  }
-
-  test("native session_window agrees with the custom sessionizer (batch)") {
-    val sw = EventPipeline.sessionWindowAgg(batch.toDF(), "30 minutes")
-      .collect().sortBy(r => (r.getLong(0), r.getTimestamp(1).getTime))
-    val custom = EventPipeline.sessionize(batch.toDS(), gapMinutes = 30)
-      .collect().sortBy(s => (s.user_id, s.start.getTime))
-    assert(sw.length == custom.length)
-    sw.zip(custom).foreach { case (r, s) =>
-      assert(r.getLong(0) == s.user_id && r.getTimestamp(1) == s.start)
-      // session_window end = last event + gap; the sessionizer records
-      // the last event time itself
-      assert(r.getTimestamp(2).getTime == s.end.getTime + 30 * 60 * 1000L)
-      assert(r.getLong(3) == s.n_events && r.getDouble(4) == s.total)
-    }
+  test("session_window splits on inactivity gap: exact sessions (batch)") {
+    val sessions = EventPipeline.sessionWindowAgg(batch.toDF(), "30 minutes")
+      .collect().map(r => (r.getLong(0), r.getTimestamp(1),
+        r.getTimestamp(2), r.getLong(3), r.getDouble(4)))
+      .sortBy(s => (s._1, s._2.getTime))
+    // end = last event + gap (Spark's session_window semantics)
+    def plusGap(t: Timestamp) = new Timestamp(t.getTime + 30 * 60 * 1000L)
+    assert(sessions.toSeq == Seq(
+      (1L, ts(0), plusGap(ts(5)), 2L, 3.0),
+      (1L, ts(50), plusGap(ts(50)), 1L, 4.0),
+      (2L, ts(10), plusGap(ts(10)), 1L, 8.0)))
   }
 
   test("session_window aggregation over an unbounded stream") {

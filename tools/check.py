@@ -9,7 +9,7 @@ row counts, and values (exact for ints/strings; exact-or-report for
 doubles). Strictly stricter than the driver's hash compare — if this
 passes, the driver's gate passes.
 
-Usage: python3 tools/check.py [--render-first] [--no-resource] [--asym] \
+Usage: python3 tools/check.py [--render-first] [--asym] \
            [sf_dir] [out_dir] [filter]
 
 --asym additionally replays the ASYMMETRIC read-path compare that burned
@@ -27,21 +27,19 @@ duckdb no longer reproduces the mechanism).
 --render-first pins render-order independence (the CORRECTNESS_r09
 failure mode): it renders ALL oracle SQL in a FRESH JVM — no query has
 run, the literal stash is cold, so literals must come from the committed
-snapshot (the compiled-in graft.OracleLiteralsSnapshot, with the
-graft/oracle_literals.b64 resource as secondary) — and then compares
-every query against THAT cold-rendered SQL. Green here means a driver
-harness may render SparkEntry.oracleSql in any process, in any order,
-and still get the exact literals the Spark plans use.
+snapshot, the compiled-in graft.OracleLiteralsSnapshot (the only literal
+channel; graft.SnapshotGen regenerates it) — and then compares every
+query against THAT cold-rendered SQL. Green here means a driver harness
+may render SparkEntry.oracleSql in any process, in any order, and still
+get the exact literals the Spark plans use.
 
---no-resource additionally DELETES the classpath resource copy from
-target/scala-2.13/classes before the cold render, proving the
-compiled-in constant alone carries the literals (VERDICT r10 #1: the
-driver's render classpath demonstrably lacked the resource).
+graft.Verify writes only under out_dir, so a run leaves the checkout
+untouched.
 """
 import json, math, subprocess, sys, glob, os
 
-USAGE = ("usage: python3 tools/check.py [--render-first] [--no-resource] "
-         "[--asym] [sf_dir] [out_dir] [filter]")
+USAGE = ("usage: python3 tools/check.py [--render-first] [--asym] "
+         "[sf_dir] [out_dir] [filter]")
 
 # Reject unknown flags instead of binding them to positionals: `check.py
 # --help` used to launch a full Spark Verify against a dir literally named
@@ -51,7 +49,7 @@ if any(a in ("--help", "-h") for a in sys.argv[1:]):
     print(USAGE)
     print(__doc__)
     sys.exit(0)
-FLAGS = ("--render-first", "--no-resource", "--asym")
+FLAGS = ("--render-first", "--asym")
 unknown = [a for a in sys.argv[1:]
            if a.startswith("-") and a not in FLAGS]
 if unknown:
@@ -61,14 +59,7 @@ if unknown:
 
 args = [a for a in sys.argv[1:] if a not in FLAGS]
 RENDER_FIRST = "--render-first" in sys.argv[1:]
-NO_RESOURCE = "--no-resource" in sys.argv[1:]
 ASYM = "--asym" in sys.argv[1:]
-# --no-resource only has meaning for the cold render; alone it would be a
-# silent no-op that reports green without testing anything — imply the mode
-# it parameterizes instead.
-if NO_RESOURCE and not RENDER_FIRST:
-    RENDER_FIRST = True
-    print("no-resource implies render-first: enabling cold render")
 SF = args[0] if len(args) > 0 else "/root/testdata/sf0.01"
 OUT = args[1] if len(args) > 1 else "/tmp/graft_verify"
 FILT = args[2] if len(args) > 2 else ""
@@ -126,12 +117,6 @@ def render_cold():
     construction. A WARNING line from OracleLiterals means a fallback was
     emitted: that is exactly the render-order bug, so fail loudly."""
     cold = f"{OUT}/oracle_sql_cold.json"
-    if NO_RESOURCE:
-        res = "/root/repo/target/scala-2.13/classes/graft/oracle_literals.b64"
-        if os.path.exists(res):
-            os.remove(res)
-            print(f"no-resource: deleted {res} — compiled-in snapshot "
-                  "must carry the literals alone")
     # pass the intended verify scale: a persisted serve at a different
     # snapshot scale then WARNs (caught just below) instead of slipping
     # through to a misleading cold-vs-warm diff
@@ -154,8 +139,8 @@ def render_cold():
             print("  ", l[:220])
         sys.exit(1)
     # structural: grep the rendered SQL itself for the loud-fail marker —
-    # independent of stderr wording, this is the exact text missingCte
-    # embeds (graft.OracleLiterals.MissingMarker)
+    # independent of stderr wording, this is the exact text the loud-fail
+    # CTE of OracleLiterals.get embeds (graft.OracleLiterals.MissingMarker)
     rendered = json.load(open(cold))
     bad = sorted(k for k, v in rendered.items()
                  if "graft literal snapshot missing" in v)

@@ -108,9 +108,8 @@ def main():
     if "--ids-file" in sys.argv:
         path = _flag_value("--ids-file")
         with open(path) as f:
-            # a Verify outdir listing carries non-query sidecars
-            # (oracle_sql.json, oracle_literals.b64) — keep only
-            # query-id-shaped names
+            # a Verify outdir listing carries a non-query sidecar
+            # (oracle_sql.json) — keep only query-id-shaped names
             rendered = set(l.strip() for l in f
                            if re.fullmatch(r"[a-z][a-z0-9_]+", l.strip()))
         static = set(ids)
