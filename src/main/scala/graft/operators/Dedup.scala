@@ -285,9 +285,9 @@ object Dedup {
     * ([[graft.Materialize.observed]]) — the iterative-Spark plan-growth
     * failure mode. Rounds are bounded by
     * `spark.sql.cteRecursionLevelLimit` (-1: unlimited), the limit
-    * [[RecursiveCte.fixpoint]] reads. For graphs with long chains (not the dedup shape) a
-    * large-star/small-star variant would cut rounds to O(log n);
-    * diameter-bound propagation is the right trade here.
+    * [[RecursiveCte.fixpoint]] reads. For graphs with long chains (not
+    * the dedup shape) a large-star/small-star variant would cut rounds to
+    * O(log n); diameter-bound propagation is the right trade here.
     *
     * Returns one row per node that appears in any edge:
     * (node, component) with component = min node id in the cluster. */

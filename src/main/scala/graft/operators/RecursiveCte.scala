@@ -25,7 +25,8 @@ import org.apache.spark.sql.functions.{count, lit}
   */
 object RecursiveCte {
 
-  /** The conf bounding every driver-side fixpoint loop's rounds. */
+  /** The conf bounding the rounds of [[fixpoint]] and
+    * [[Dedup.connectedComponents]], as it bounds Spark's own recursion. */
   val LevelLimit = "spark.sql.cteRecursionLevelLimit"
 
   /** Round bound read from [[LevelLimit]]; -1 there means unlimited. */
