@@ -24,17 +24,57 @@ class StreamingSpec extends SparkSpec {
     assert(out.map(_.getLong(2)).sum == 4)
   }
 
-  test("session_window splits on inactivity gap: exact sessions (batch)") {
-    val sessions = EventPipeline.sessionWindowAgg(batch.toDF(), "30 minutes")
+  private val gapMs = 30 * 60 * 1000L
+
+  /** `sessionWindowAgg`'s rows as (user, start, end, n_events, total),
+    * ordered by user and start. */
+  private def sessionRows(events: Seq[Event]) =
+    EventPipeline.sessionWindowAgg(events.toDF(), "30 minutes")
       .collect().map(r => (r.getLong(0), r.getTimestamp(1),
         r.getTimestamp(2), r.getLong(3), r.getDouble(4)))
-      .sortBy(s => (s._1, s._2.getTime))
+      .sortBy(s => (s._1, s._2.getTime)).toSeq
+
+  /** Driver-side gap sessionizer: per user, in time order, an event at
+    * most the gap after the previous one extends its session (touching
+    * windows merge); a session ends at its last event + gap. */
+  private def referenceSessions(events: Seq[Event]) =
+    events.groupBy(_.user_id).toSeq.flatMap { case (user, es) =>
+      es.map(e => (e.t.getTime, e.value)).sorted
+        .foldLeft(List.empty[(Long, Long, Long, Double)]) {
+          case ((start, last, n, total) :: done, (t, v))
+              if t - last <= gapMs => (start, t, n + 1, total + v) :: done
+          case (done, (t, v)) => (t, t, 1L, v) :: done
+        }
+        .map { case (start, last, n, total) =>
+          (user, new Timestamp(start), new Timestamp(last + gapMs), n, total)
+        }
+    }.sortBy(s => (s._1, s._2.getTime))
+
+  test("sessionize splits on inactivity gap (batch mode)") {
     // end = last event + gap (Spark's session_window semantics)
-    def plusGap(t: Timestamp) = new Timestamp(t.getTime + 30 * 60 * 1000L)
-    assert(sessions.toSeq == Seq(
+    def plusGap(t: Timestamp) = new Timestamp(t.getTime + gapMs)
+    assert(sessionRows(batch) == Seq(
       (1L, ts(0), plusGap(ts(5)), 2L, 3.0),
       (1L, ts(50), plusGap(ts(50)), 1L, 4.0),
       (2L, ts(10), plusGap(ts(10)), 1L, 8.0)))
+  }
+
+  test("native session_window agrees with the custom sessionizer (batch)") {
+    // gaps just under, at and over 30 minutes, ties included; integer
+    // values keep every sum exact in any order
+    val rnd = new scala.util.Random(17)
+    val steps = Seq(0, 1, 12, 29, 30, 31, 45, 90)
+    val base = ts(0).getTime
+    val events = (1L to 4L).flatMap { user =>
+      val offsets = Seq.fill(15)(steps(rnd.nextInt(steps.length)))
+        .scanLeft(rnd.nextInt(20))(_ + _)
+      offsets.map(m => Event(user, "click",
+        new Timestamp(base + m * 60 * 1000L), rnd.nextInt(10).toDouble))
+    }
+    val expected = referenceSessions(events)
+    // the gaps split every user's events into several sessions
+    assert(expected.groupBy(_._1).values.forall(_.length > 1))
+    assert(sessionRows(events) == expected)
   }
 
   test("session_window aggregation over an unbounded stream") {
