@@ -313,6 +313,21 @@ class GraftPythonSurface(unittest.TestCase):
         ).fetchall()
         self.assertEqual(rows, [(11.0,)])
 
+    def test_connect_sorts_small_result_in_place(self):
+        # connect() installs GraftExtensions through spark.sql.extensions,
+        # so its SortInPlace rule sorts a small aggregate in one partition
+        # instead of range-partitioning it
+        from pyspark.sql import functions as F
+        df = (self.conn.spark.range(0, 400, 1, 4)
+              .groupBy((F.col("id") % 37).alias("k"))
+              .agg(F.sum("id").alias("s"))
+              .orderBy("s"))
+        rows = df.collect()
+        self.assertEqual(len(rows), 37)
+        self.assertEqual([r.s for r in rows], sorted(r.s for r in rows))
+        plan = df._jdf.queryExecution().executedPlan().executedPlan()
+        self.assertNotIn("rangepartitioning", plan.toString())
+
     def test_incremental_matview_through_cursor(self):
         cur = self.conn.cursor()
         cur.execute("CREATE TABLE imv_base (lang STRING, n BIGINT)")

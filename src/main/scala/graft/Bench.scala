@@ -1,13 +1,18 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
 
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":...,"queries":{...}}. Each query is
   * timed through [[sink]], the full-materialization action; the full
   * line also carries each query's `count()` time as `queries_count`, the
   * figure earlier rounds recorded, so old and new readings can be
-  * compared.
+  * compared, and the Spark jobs of each query's timed sink run as
+  * `queries_jobs` (-1 for a failed query).
   *
   * Profiling hooks (local dev, driver never sets them):
   *   SPARK_GRAFT_ONLY=s1[,s2…] — run only queries whose name contains any
@@ -35,6 +40,48 @@ object Bench {
     if (ok.nonEmpty) ok.min else -1.0
   }
 
+  /** Counts the Spark jobs of tagged runs through one SparkListener:
+    * [[record]] tags every job its body starts with a local property, and
+    * [[jobs]] reads the count of a name's last run that returned. */
+  final class JobCounter(spark: SparkSession) extends SparkListener {
+    private val started = new ConcurrentHashMap[String, AtomicInteger]()
+    private val lastOk = new ConcurrentHashMap[String, String]()
+    private val runs = new AtomicLong()
+    spark.sparkContext.addSparkListener(this)
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      Option(e.properties).flatMap(p => Option(p.getProperty(JobCounter.Key)))
+        .foreach(started.computeIfAbsent(_, _ => new AtomicInteger())
+          .incrementAndGet())
+
+    def record(name: String)(run: => Unit): Unit = {
+      val tag = s"$name#${runs.incrementAndGet()}"
+      val sc = spark.sparkContext
+      sc.setLocalProperty(JobCounter.Key, tag)
+      try run finally sc.setLocalProperty(JobCounter.Key, null)
+      lastOk.put(name, tag)
+    }
+
+    /** Jobs of `name`'s last run that returned, or -1 if none did. */
+    def jobs(name: String): Int = Option(lastOk.get(name)).fold(-1) { tag =>
+      GraftSqlShim.drainListenerBus(spark)
+      Option(started.get(tag)).fold(0)(_.get)
+    }
+
+    def close(): Unit = spark.sparkContext.removeSparkListener(this)
+  }
+
+  object JobCounter {
+    val Key = "graft.bench.run"
+  }
+
+  /** [[bestTime]] of `run`, and the jobs its last successful attempt
+    * started (-1 iff every attempt threw). */
+  def timeAndJobs(counter: JobCounter, repeat: Int, name: String)(
+      run: () => Unit): (Double, Int) =
+    (bestTime(repeat, name)(() => counter.record(name)(run())),
+      counter.jobs(name))
+
   /** The timed action: writes `df` to the `noop` sink, which evaluates
     * every output column and ships nothing — the sink perfbench times
     * through. `count()` is not used: Catalyst prunes every projection
@@ -49,6 +96,7 @@ object Bench {
     val explain = sys.env.contains("SPARK_GRAFT_EXPLAIN")
     val repeat = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "1").toInt
     val spark = LocalSession(defaultCpus = 32)
+    val counter = new JobCounter(spark)
     // Untimed warmup: JIT + codegen + parquet footer caches, so the first
     // timed query isn't charged for session startup.
     try {
@@ -71,25 +119,27 @@ object Bench {
       // A failed run records -1, NOT its time-to-exception: BENCH_r08
       // recorded crashed queries as 0.088 s "runtimes", which reads as a
       // speedup. best = -1 iff every attempt failed.
-      val best = bestTime(repeat, name)(() => sink(fn(spark, sfDir)))
+      val (best, jobs) =
+        timeAndJobs(counter, repeat, name)(() => sink(fn(spark, sfDir)))
       val counted = bestTime(repeat, name)(() => fn(spark, sfDir).count())
       System.err.println(
-        f"[bench] $name%-24s $best%8.3f s (count() $counted%.3f s)")
-      (name, best, counted)
+        f"[bench] $name%-24s $best%8.3f s, $jobs jobs (count() $counted%.3f s)")
+      (name, best, counted, jobs)
     }
     val failed = results.filter(_._2 < 0).map(_._1)
     if (failed.nonEmpty)
       System.err.println(
         s"[bench] ${failed.size} queries FAILED (recorded -1): " +
           failed.mkString(", "))
-    def timings(pick: ((String, Double, Double)) => Double): String =
+    def perQuery(pick: ((String, Double, Double, Int)) => Any): String =
       results.map(r => "\"" + r._1 + "\":" + pick(r)).mkString("{", ",", "}")
-    val qs = timings(_._2)
-    val qsCount = timings(_._3)
+    val qs = perQuery(_._2)
+    val qsCount = perQuery(_._3)
+    val qsJobs = perQuery(_._4)
     val total = results.map(_._2).filter(_ >= 0).sum
     val fullLine =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-        s""""queries_count":$qsCount,"sf":"$sfDir"}"""
+        s""""queries_count":$qsCount,"queries_jobs":$qsJobs,"sf":"$sfDir"}"""
     // Full map to stdout FIRST (complete in any full-stdout capture) …
     println(fullLine)
     // … and to a file — the driver's stdout capture keeps only the LAST

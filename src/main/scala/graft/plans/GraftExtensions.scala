@@ -13,10 +13,19 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * `graft_*` routine. Verify/Bench/test sessions install it with
   * `.withExtensions(new GraftExtensions)`, the Python `connect()` and any
   * other session with `spark.sql.extensions=graft.plans.GraftExtensions`.
+  *
+  * It also adds one AQE query-stage preparation rule, [[SortInPlace]]: a
+  * global sort's `ENSURE_REQUIREMENTS` range exchange becomes
+  * `CoalesceExec(1)` when its input is a chain of operators that never
+  * add rows over materialized shuffle stages that Spark's own
+  * `CoalesceShufflePartitions` reads as one partition — no range-sampling
+  * job and no extra shuffle stage on small results, the plan unchanged
+  * everywhere else.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => new TopKStrategy)
+    ext.injectQueryStagePrepRule(SortInPlace(_))
     ext.injectFunction((
       new FunctionIdentifier("graft_dot"),
       new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),

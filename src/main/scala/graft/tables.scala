@@ -24,7 +24,11 @@ object Spread {
     * with the cluster and low-core local runs stay at their core count.
     * Caller contract (ADVICE r19): sessions must size
     * spark.sql.shuffle.partitions to their core count, as Bench/Verify
-    * do — a default-200 session pins 200 tasks under every barrier. */
+    * do — a default-200 session pins 200 tasks under every barrier.
+    * The barrier's origin is `REPARTITION_BY_NUM`, which AQE never
+    * coalesces, so [[graft.plans.SortInPlace]] never sorts over it in
+    * place: a global sort above it keeps its range exchange and the
+    * pinned width. */
   def by(df: DataFrame, key: Column): DataFrame =
     df.repartition(count(df), key)
 

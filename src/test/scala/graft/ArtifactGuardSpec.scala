@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Pins the loud-failure contract of the driver artifacts (VERDICT r8 #6):
   * a query that throws must surface as a RED row in CORRECTNESS (sentinel
@@ -53,5 +54,18 @@ class ArtifactGuardSpec extends SparkSpec {
       if (first) { first = false; sys.error("cold start") }
     }
     assert(t >= 0.0)
+  }
+
+  test("Bench records a sorted query's jobs and -1 jobs for a failed query") {
+    val counter = new Bench.JobCounter(spark)
+    try {
+      val sorted = spark.range(100).groupBy((col("id") % 7).as("k")).count()
+        .orderBy(col("k"))
+      val (t, jobs) = Bench.timeAndJobs(counter, 1, "sorted")(
+        () => Bench.sink(sorted))
+      assert(t >= 0.0 && jobs >= 1, s"t=$t jobs=$jobs")
+      assert(Bench.timeAndJobs(counter, 2, "broken")(
+        () => sys.error("no")) == ((-1.0, -1)))
+    } finally counter.close()
   }
 }

@@ -528,4 +528,75 @@ class RandomizedPropertySpec extends SparkSpec {
         s"seed=$seed: $c")
     }
   }
+
+  test("in-place sort == AQE-off sort on NULL/NaN/-0.0/duplicate keys") {
+    // graft.plans.SortInPlace sorts a small aggregate's output in one
+    // partition; Spark without AQE range-partitions it. Both must put the
+    // rows in Spark's order — NULLs where asked, NaN above +Infinity,
+    // -0.0 tied with 0.0 — so the in-place output is sorted by its keys
+    // and is the AQE-off output as a multiset; with the unique id as the
+    // last key, the two are equal row for row.
+    val ds: Seq[Option[Double]] = Seq(None, Some(Double.NaN), Some(-0.0),
+      Some(0.0), Some(1.5), Some(-1.5), Some(Double.PositiveInfinity),
+      Some(Double.NegativeInfinity))
+    val ss: Seq[Option[String]] = Seq(None, Some(""), Some("a"), Some("ab"),
+      Some("b"))
+    val ls: Seq[Option[Long]] = Seq(None, Some(-1L), Some(0L), Some(1L))
+    def cmpValue(a: Any, b: Any): Int = (a, b) match {
+      case (x: Double, y: Double) =>
+        if (x.isNaN || y.isNaN) java.lang.Boolean.compare(x.isNaN, y.isNaN)
+        else if (x == y) 0 else if (x < y) -1 else 1
+      case (x: String, y: String) => x.compareTo(y)
+      case (x: Long, y: Long) => java.lang.Long.compare(x, y)
+    }
+    def text(r: org.apache.spark.sql.Row): String =
+      r.toSeq.map(String.valueOf).mkString("|")
+    for (seed <- 1 to 4) {
+      val r = new scala.util.Random(1200 + seed)
+      val rows = (0 until 80).map(i => (i.toLong, ds(r.nextInt(ds.size)),
+        ss(r.nextInt(ss.size)), ls(r.nextInt(ls.size))))
+      // (column, ascending, nulls first) in a seeded order
+      val keys = r.shuffle(List("d", "s", "l"))
+        .map(c => (c, r.nextBoolean(), r.nextBoolean()))
+      def frame(withId: Boolean) = {
+        val order = (keys ++ (if (withId) Seq(("id", true, true)) else Nil))
+          .map { case (c, asc, nf) =>
+            (asc, nf) match {
+              case (true, true) => col(c).asc_nulls_first
+              case (true, false) => col(c).asc_nulls_last
+              case (false, true) => col(c).desc_nulls_first
+              case (false, false) => col(c).desc_nulls_last
+            }
+          }
+        rows.toDF("id", "d", "s", "l").groupBy(col("id"))
+          .agg(first(col("d")).as("d"), first(col("s")).as("s"),
+            first(col("l")).as("l"))
+          .filter(col("id") % 5 =!= 2)
+          .orderBy(order: _*)
+      }
+      def aqeOff(withId: Boolean): Seq[org.apache.spark.sql.Row] =
+        withConf("spark.sql.adaptive.enabled" -> "false")(
+          frame(withId).collect().toSeq)
+      val inPlace = frame(withId = false)
+      assert(!finalPlan(inPlace).contains("rangepartitioning"), s"seed=$seed")
+      val got = inPlace.collect().toSeq
+      val sorted = got.sliding(2).forall {
+        case Seq(a, b) =>
+          keys.iterator.map { case (c, asc, nf) =>
+            (a.getAs[Any](c), b.getAs[Any](c)) match {
+              case (null, null) => 0
+              case (null, _) => if (nf) -1 else 1
+              case (_, null) => if (nf) 1 else -1
+              case (x, y) => if (asc) cmpValue(x, y) else cmpValue(y, x)
+            }
+          }.find(_ != 0).getOrElse(0) <= 0
+        case _ => true
+      }
+      assert(sorted, s"seed=$seed keys=$keys: ${got.map(text)}")
+      assert(got.map(text).sorted == aqeOff(withId = false).map(text).sorted,
+        s"seed=$seed keys=$keys")
+      assert(frame(withId = true).collect().toSeq.map(text) ==
+        aqeOff(withId = true).map(text), s"seed=$seed keys=$keys")
+    }
+  }
 }

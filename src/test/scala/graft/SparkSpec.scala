@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session keeps the
@@ -25,6 +26,21 @@ object SharedSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SharedSpark.spark
   lazy val sf: String = "/root/testdata/sf0.001"
+
+  /** Runs `body` with the session confs `kvs` set, and unsets them after. */
+  def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally kvs.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
+  /** Runs `df` and returns the physical plan it ran: AQE's final plan. */
+  def finalPlan(df: DataFrame): String = {
+    df.collect()
+    df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan.toString
+      case p => p.toString
+    }
+  }
 
   /** Number of Spark jobs `body` launches, counted through a job group
     * named `group` (use a name unique to the test). */
